@@ -90,8 +90,9 @@ object Bench {
     * 1 MB: 1 MB of compressed packed longs is millions of rows); at
     * sf10 (2.1 GB) the small floor is actively harmful (q160 65.7 s
     * @ 256k vs 37.7 s @ 1m, tight spreads) — hence the clamp to
-    * Spark's default at ≥64 MB of input. Env-overridable
-    * (SPARK_GRAFT_MIN_COALESCE) for A/B.
+    * Spark's default at ≥64 MB of input. An input that cannot be
+    * sized (missing or unreadable) gets Spark's default too, never the
+    * small floor. Env-overridable (SPARK_GRAFT_MIN_COALESCE) for A/B.
     */
   def coalesceFloor(sfDir: String): String =
     sys.env.getOrElse("SPARK_GRAFT_MIN_COALESCE", {
@@ -100,24 +101,14 @@ object Bench {
           val d = new java.io.File(sfDir)
           def size(f: java.io.File): Long =
             if (f.isDirectory) f.listFiles().map(size).sum else f.length()
-          size(d)
+          if (d.exists) size(d) else Long.MaxValue
         } catch { case _: Exception => Long.MaxValue }
       math.min(math.max(bytes / 64, 65536L), 1048576L).toString
     })
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // input-size-derived AQE coalescing floor — see [[coalesceFloor]]
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        coalesceFloor(sfDir))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.builder(sfDir).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     def materialize(name: String): Unit =
@@ -151,19 +142,10 @@ object Bench {
     val names = Q.registry.filter(_.bench).map(_.name)
       .filter(n => only.forall(_.contains(n))).sorted
     val failed = scala.collection.mutable.LinkedHashSet.empty[String]
-    // Queries are self-contained, so their pinned blocks (cache +
-    // localCheckpoint RDDs) are dead weight once timed; dropping them
-    // BETWEEN timed runs keeps a 179-query sweep's storage footprint
-    // flat instead of letting earlier queries' blocks squeeze later
-    // queries' execution memory (q142 OOM'd mid-sweep at sf10).
-    // Outside the timed region: block bookkeeping isn't query cost.
-    def dropPinned(): Unit = {
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-    }
     val results = names.map { name =>
       val times = (1 to runs).map { _ =>
-        dropPinned()
+        // outside the timed region: block bookkeeping isn't query cost
+        Session.releasePins(spark)
         val t0 = System.nanoTime()
         try materialize(name)
         catch { case e: Throwable =>

@@ -4,7 +4,6 @@ import java.nio.file.Files
 
 import graft.catalog.Warehouse
 import graft.ingest.CsvIngest
-import org.apache.spark.sql.SparkSession
 
 /** Runnable tour of the engine facade — the reference's REST surface
   * (process-csv → tables → info → query → drop, reference
@@ -13,29 +12,27 @@ import org.apache.spark.sql.SparkSession
   */
 object EngineDemo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
+    val dir = Files.createTempDirectory("graft-demo")
+    val spark = Session.builder(dir.toString)
       .appName("graft-demo")
       .withExtensions(new graft.plans.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .config("spark.sql.warehouse.dir",
         s"${System.getProperty("java.io.tmpdir")}/graft-demo-warehouse")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     // 1. "upload": a CSV lands somewhere reachable
-    val dir = Files.createTempDirectory("graft-demo")
     val csv = dir.resolve("sales.csv")
     Files.writeString(csv,
       "region;amount;when\nasia;10.5;2024-01-01\nasia;4.5;2024-01-02\neu;7.25;2024-01-01\n")
 
-    // 2. process-csv: normalize upload layout, then sniff + infer + register
-    val loc = CsvIngest.normalizeUploadLayout(csv.toString)
+    // 2. process-csv: normalize upload layout, then sniff + infer +
+    //    salvaging parse + register
+    val loc = CsvIngest.normalizeUploadLayoutFs(spark, csv.toString)
     println(s"[demo] upload normalized into dir=$loc")
-    val r = CsvIngest.ingest(spark, loc, "Sales Upload!")
-    println(s"[demo] ingested table=${r.table} delim='${r.delimiter}' rows=${r.rowCount}")
+    val r = CsvIngest.ingestSalvaged(spark, loc, "Sales Upload!")
+    println(s"[demo] ingested table=${r.table} delim='${r.delimiter}' " +
+      s"rows=${r.rowCount} bad=${r.badRowCount}")
     r.columns.foreach { case (n, t) => println(s"[demo]   column $n: $t") }
 
     // 3. catalog: external table + info, after the deploy smoke probe

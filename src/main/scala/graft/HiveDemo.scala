@@ -3,7 +3,6 @@ package graft
 import java.nio.file.Files
 
 import graft.catalog.Warehouse
-import org.apache.spark.sql.SparkSession
 
 /** Production-mode proof: the SAME Warehouse facade the harness
   * exercises against Spark's in-memory catalog, driven against a REAL
@@ -21,11 +20,8 @@ object HiveDemo {
   def main(args: Array[String]): Unit = {
     val wh = Files.createTempDirectory("graft-hive-wh")
     val ms = Files.createTempDirectory("graft-hive-ms")
-    val spark = SparkSession.builder()
-      .master("local[4]")
+    val spark = Session.builder(wh.toString)
       .appName("graft-hive-demo")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.warehouse.dir", wh.toString)
       .config("javax.jdo.option.ConnectionURL",
         s"jdbc:derby:;databaseName=$ms/metastore_db;create=true")

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Deterministic fixture scale-up: blow the sf0.1 tables up `copies`×
@@ -39,13 +39,7 @@ object ScaleUp {
     require(copies >= 1 && copies <= 128,
       s"copies must be in [1, 128] (got $copies): the embedding " +
         "decorrelation scheme is only valid to 128 copies")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.builder(src).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
 
@@ -66,7 +60,7 @@ object ScaleUp {
         df.withColumn(k, col(k) + c.cast("long") * off)
       }
       val outDf = post(shifted).drop("__copy")
-      outDf.repartition(cpus.toInt)
+      outDf.repartition(Session.cpus)
         .write.mode("overwrite").parquet(s"$dst/$name.parquet")
       println(s"[scaleup] $name -> ${spark.read.parquet(s"$dst/$name.parquet").count()} rows")
     }

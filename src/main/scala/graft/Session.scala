@@ -1,0 +1,39 @@
+package graft
+
+import org.apache.spark.sql.SparkSession
+
+/** The one session factory: every main in this project starts Spark
+  * here, on the settings `Bench` measures with — `local[cpus]`,
+  * shuffle partitions = cpus, UTC, AQE on with the input-size-derived
+  * coalescing floor ([[Bench.coalesceFloor]]). It returns a builder so
+  * a caller can add what only it needs (Hive support, extensions, a
+  * warehouse dir) before `getOrCreate()`.
+  */
+object Session {
+
+  /** Worker threads: SPARK_GRAFT_CPUS, else this host's cores. */
+  def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").flatMap(_.toIntOption)
+    .filter(_ >= 1).getOrElse(Runtime.getRuntime.availableProcessors)
+
+  /** `inputDir` is what the session will read; it sizes the floor. */
+  def builder(inputDir: String): SparkSession.Builder =
+    SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus.toString)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
+        Bench.coalesceFloor(inputDir))
+      .config("spark.ui.enabled", "false")
+
+  /** Drop every cached plan and persisted RDD (cache + localCheckpoint
+    * pins). Registry queries are self-contained, so a harness that runs
+    * them one after another calls this between them: otherwise earlier
+    * queries' blocks squeeze later queries' execution memory (q142
+    * OOM'd mid-sweep at sf10 before this).
+    */
+  def releasePins(spark: SparkSession): Unit = {
+    spark.sharedState.cacheManager.clearCache()
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+  }
+}

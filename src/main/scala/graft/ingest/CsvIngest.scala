@@ -1,7 +1,7 @@
 package graft.ingest
 
 import graft.types.Types
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.types.StructType
 
 /** CSV ingestion: delimiter sniffing + sample-bounded schema
@@ -26,34 +26,14 @@ object CsvIngest {
     * a root-level upload `<dir>/<id>.csv` is moved into its own
     * directory `<dir>/<id>/<id>.csv` so the directory can serve as a
     * table LOCATION. Returns the directory path. No-op if already
-    * nested.
-    */
-  def normalizeUploadLayout(path: String): String = {
-    // absolute form so a bare relative filename still has a parent
-    val p = java.nio.file.Paths.get(path).toAbsolutePath
-    val parent = p.getParent
-    val stem = p.getFileName.toString.replaceAll("\\.[^.]+$", "")
-    if (parent != null && parent.getFileName != null &&
-      parent.getFileName.toString == stem) {
-      parent.toString // already <id>/<id>.csv
-    } else {
-      val dir = parent.resolve(stem)
-      java.nio.file.Files.createDirectories(dir)
-      java.nio.file.Files.move(p, dir.resolve(p.getFileName),
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      dir.toString
-    }
-  }
-
-  /** The same layout normalization over the Hadoop FileSystem API, so
-    * it works against ANY scheme Spark can read — in particular the
-    * object-store locations the reference actually uses
+    * nested. Goes through the Hadoop FileSystem API, so it works against
+    * ANY scheme Spark can read — local paths and the object-store
+    * locations the reference actually uses
     * (`s3a://bucket/uploads/<id>/<id>.csv`, built at
     * backend/hive_manager.py:94-103; the move itself is the
     * copy_object/delete_object pair at backend/csv_processor.py:43-71).
     * On an object store the "directory" is only a key prefix and the
-    * rename is copy+delete per object — semantics the `java.nio`
-    * variant above cannot express.
+    * rename is copy+delete per object.
     */
   def normalizeUploadLayoutFs(spark: SparkSession, path: String): String = {
     val p = new org.apache.hadoop.fs.Path(path)
@@ -106,31 +86,12 @@ object CsvIngest {
       .schema
   }
 
-  /** Full ingest: sniff → infer on sample → distributed read with the
+  /** Ingest: sniff → infer on sample → distributed read with the
     * fixed schema → register as a catalog view under the sanitized
     * name. Returns the schema payload the reference's API responds
     * with (app.py:100-111 shape).
-    */
-  def ingest(
-      spark: SparkSession, path: String, rawName: String,
-      header: Boolean = true, sampleRows: Int = 1000,
-      suffix: Option[String] = None): IngestResult = {
-    val delim = sniffDelimiter(spark, path)
-    val schema = inferSchema(spark, path, delim, header, sampleRows)
-    val df = spark.read
-      .option("header", header.toString)
-      .option("sep", delim)
-      .schema(schema) // fixed at "DDL time", like the reference
-      .csv(path)
-    val table = Types.sanitizeTableName(rawName, suffix)
-    df.createOrReplaceTempView(table)
-    IngestResult(
-      table, delim, schema,
-      schema.fields.toSeq.map(f => f.name -> Types.hiveName(f.dataType)),
-      df.count())
-  }
-
-  /** Ingest with row salvage — the reference's per-row fallback when a
+    *
+    * Rows are salvaged — the reference's per-row fallback when a
     * batched INSERT fails (hive_manager.py:317-325: the failing batch
     * is retried row by row, keeping the good rows and counting the
     * bad). Spark-native form: PERMISSIVE parsing routes each

@@ -57,9 +57,15 @@ object SearchOps7 {
     graft.pipeline.SemDeDup.cellProbes(VectorOps.emb(s, dir), EvalProbes)
       .localCheckpoint(true)
 
-  /** The shared-quantizer assignment CTE for the oracle: every
-    * (vec_id, cell) with probe rank ≤ 2; rank 1 is the cellAssign
-    * cell.
+  /** The shared-quantizer assignment CTE for the q287 and q292
+    * oracles: every (vec_id, cell) with probe rank ≤ 2; rank 1 is the
+    * cellAssign cell. It ranks each vector's probes over ALL seeds.
+    * The engine does the same only up to 65 536 seeds
+    * (`SemDeDup.cellProbes`' `maxBroadcastSeeds`; the seed count is
+    * ≈ √n, so ~4.3·10⁹ embeddings with dense ids). Above that cutover
+    * `cellProbes` ranks probes only within the vector's super-cell, so
+    * both oracles stop matching the engine there; every fixture SF is
+    * far below it.
     */
   private def assignedSql: String =
     s"""st AS (
@@ -95,7 +101,8 @@ object SearchOps7 {
     * exists in either engine — q284's singleton convention). The
     * remaining cross-cell miss rate is MEASURED by q292 at every SF
     * (single-probe measured 0.33 pair recall at sf0.01; the second
-    * probe exists because of that row).
+    * probe exists because of that row). The oracle holds below
+    * 65 536 seeds only ([[assignedSql]]).
     */
   val q287 = Q(
     "q287_semantic_contamination",
@@ -150,7 +157,8 @@ object SearchOps7 {
     * eval's probes (the only pairs q287 can see). Output: one row —
     * pair-level recall (fraction of true pairs visible to the screen)
     * and flag-level recall (fraction of truly-contaminated panel
-    * evals q287 would still flag).
+    * evals q287 would still flag). The oracle shares q287's
+    * assignment CTE and its 65 536-seed cutover ([[assignedSql]]).
     */
   val q292 = Q(
     "q292_contamination_recall_audit",

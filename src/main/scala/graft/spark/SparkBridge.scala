@@ -21,6 +21,13 @@ object GraftSqlBridge {
       spark.sessionState.functionRegistry.asInstanceOf[
         org.apache.spark.sql.catalyst.analysis.FunctionRegistry])
 
+  /** Block until every event posted so far has reached every
+    * SparkListener, so a listener read right after an action sees that
+    * action's job-end events.
+    */
+  def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
+
   /** Free the storage behind an eagerly `localCheckpoint(true)`'d
     * Dataset. `Dataset.unpersist` only consults the CacheManager, so
     * a checkpoint's MEMORY_AND_DISK blocks otherwise live until the

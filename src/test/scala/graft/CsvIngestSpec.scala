@@ -26,7 +26,7 @@ class CsvIngestSpec extends SparkSpec {
     val path = tmpCsv(
       "id;price;flag;when\n1;1.5;true;2024-01-01\n2;2.5;false;2024-01-02\n",
       "typed.csv")
-    val r = CsvIngest.ingest(spark, path, "My Table!", header = true)
+    val r = CsvIngest.ingestSalvaged(spark, path, "My Table!", header = true)
     assert(r.table == "My_Table_")
     assert(r.delimiter == ";")
     assert(r.rowCount == 2)
@@ -41,10 +41,11 @@ class CsvIngestSpec extends SparkSpec {
   test("schema is fixed by the sample — rows beyond it are parsed with it") {
     // sample of 2 sees only ints; the later 'x' row must not widen the schema
     val path = tmpCsv("a\n1\n2\n3\nx\n", "fixed.csv")
-    val r = CsvIngest.ingest(spark, path, "fixed", sampleRows = 2)
+    val r = CsvIngest.ingestSalvaged(spark, path, "fixed", sampleRows = 2)
     assert(r.schema.fields.head.dataType == IntegerType)
-    // the unparseable row becomes NULL under the fixed schema
-    assert(spark.table("fixed").where("a IS NULL").count() == 1)
+    // the unparseable row is counted as bad, never NULL-filled
+    assert(r.rowCount == 3 && r.badRowCount == 1, r.toString)
+    assert(spark.table("fixed").where("a IS NULL").count() == 0)
   }
 
   test("salvage ingest keeps good rows and counts malformed ones") {
@@ -62,7 +63,7 @@ class CsvIngestSpec extends SparkSpec {
 
   test("headerless files use generated column names") {
     val path = tmpCsv("1,2\n3,4\n", "nohdr.csv")
-    val r = CsvIngest.ingest(spark, path, "nohdr", header = false)
+    val r = CsvIngest.ingestSalvaged(spark, path, "nohdr", header = false)
     assert(r.schema.fieldNames.toSeq == Seq("_c0", "_c1"))
     assert(r.rowCount == 2)
   }
@@ -77,7 +78,7 @@ class CsvIngestSpec extends SparkSpec {
     out.write("id;amt\n1;2.5\n2;3.5\n3;4.0\n".getBytes("UTF-8"))
     out.close()
     assert(CsvIngest.sniffDelimiter(spark, f.toString) == ";")
-    val r = CsvIngest.ingest(spark, f.toString, "gz_sales", header = true)
+    val r = CsvIngest.ingestSalvaged(spark, f.toString, "gz_sales", header = true)
     assert(r.rowCount == 3)
     assert(r.schema("amt").dataType == DoubleType)
     assert(spark.table(r.table).agg(org.apache.spark.sql.functions.sum("amt"))

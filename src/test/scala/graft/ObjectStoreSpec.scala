@@ -70,7 +70,7 @@ class ObjectStoreSpec extends SparkSpec {
     ObjectStoreFileSystem.install(spark)
     putObject("s3a://lake/uploads/semi.csv", "a;b\n1;x\n2;y\n")
     assert(CsvIngest.sniffDelimiter(spark, "s3a://lake/uploads/semi.csv") == ";")
-    val res = CsvIngest.ingest(spark, "s3a://lake/uploads/semi.csv", "semi")
+    val res = CsvIngest.ingestSalvaged(spark, "s3a://lake/uploads/semi.csv", "semi")
     assert(res.delimiter == ";" && res.rowCount == 2)
     assert(res.columns.map(_._1) == Seq("a", "b"))
   }

@@ -66,14 +66,14 @@ class StorageSpec extends SparkSpec {
     val dir = Files.createTempDirectory("graft-upl")
     val f = dir.resolve("table42.csv")
     Files.writeString(f, "a,b\n1,2\n")
-    val loc = CsvIngest.normalizeUploadLayout(f.toString)
+    val loc = CsvIngest.normalizeUploadLayoutFs(spark, f.toString)
     assert(loc == dir.resolve("table42").toString)
     assert(Files.exists(Paths.get(loc, "table42.csv")))
     assert(!Files.exists(f))
     // idempotent: second call recognizes the nested layout
-    assert(CsvIngest.normalizeUploadLayout(s"$loc/table42.csv") == loc)
+    assert(CsvIngest.normalizeUploadLayoutFs(spark, s"$loc/table42.csv") == loc)
     // and the normalized dir ingests as a table location
-    val r = CsvIngest.ingest(spark, loc, "upl42")
+    val r = CsvIngest.ingestSalvaged(spark, loc, "upl42")
     assert(r.rowCount == 1)
   }
 
