@@ -28,6 +28,27 @@ object GraftSqlBridge {
   def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
     sc.listenerBus.waitUntilEmpty()
 
+  /** Run `body` with `spark` active and its SQL conf copied into the
+    * local properties of every job `body` submits, as a Dataset action
+    * does: driver code that reads `SQLConf.get`, and RDD jobs over a
+    * plan's `toRdd`, then see this session's settings.
+    */
+  def withSqlConf[T](spark: SparkSession)(body: => T): T =
+    spark.withActive(execution.SQLExecution.withSQLConfPropagated(
+      spark.asInstanceOf[classic.SparkSession])(body))
+
+  /** `df` as a leaf over `rows`, the RDD of `df`'s executed plan, with
+    * `df`'s statistics. A query over the result reads `rows` whole: no
+    * column pruning or filter pushdown reaches the plan underneath.
+    * Nothing is persisted; every action recomputes `rows`.
+    */
+  def overRdd(
+      df: Dataset[_], rows: org.apache.spark.rdd.RDD[catalyst.InternalRow]): DataFrame = {
+    val ds = df.asInstanceOf[classic.Dataset[_]]
+    classic.Dataset.ofRows(ds.sparkSession,
+      execution.LogicalRDD.fromDataset(rows, ds, isStreaming = false))
+  }
+
   /** Free the storage behind an eagerly `localCheckpoint(true)`'d
     * Dataset. `Dataset.unpersist` only consults the CacheManager, so
     * a checkpoint's MEMORY_AND_DISK blocks otherwise live until the
