@@ -101,7 +101,7 @@ object EngineDemo {
     // 8. skew-safe aggregation
     import org.apache.spark.sql.functions.{round, sum}
     val salted = graft.functions.Skew.saltedAggregate(
-      spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet"),
+      Tables.parquet(spark, "/root/testdata/sf0.001/lineitem.parquet"),
       "l_returnflag", saltBuckets = 8,
       partial = Seq(sum("l_quantity").as("ps")),
       merge = Seq(round(sum("ps"), 2).as("qty")))
@@ -120,10 +120,10 @@ object EngineDemo {
     //     either column map to few files
     val zdir = dir.resolve("orders_z").toString
     graft.layout.ZOrder.cluster(
-      spark.read.parquet("/root/testdata/sf0.001/orders.parquet"),
+      Tables.parquet(spark, "/root/testdata/sf0.001/orders.parquet"),
       Seq("o_custkey", "o_totalprice"), numFiles = 4)
       .write.mode("overwrite").parquet(zdir)
-    println(s"[demo] z-ordered orders into ${spark.read.parquet(zdir)
+    println(s"[demo] z-ordered orders into ${Tables.parquet(spark, zdir)
       .select(org.apache.spark.sql.functions.input_file_name())
       .distinct().count()} files")
 

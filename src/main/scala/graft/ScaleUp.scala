@@ -41,14 +41,13 @@ object ScaleUp {
         "decorrelation scheme is only valid to 128 copies")
     val spark = Session.builder(src).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
 
     // events goes through Tables.events so all three fixture ts
     // layouts (ns-as-long, µs-NTZ, µs-UTC) normalize to TIMESTAMP
     // before the copy shift; everything else is a raw scan
     def read(n: String) =
       if (n == "events") Tables.events(spark, src)
-      else spark.read.parquet(s"$src/$n.parquet")
+      else Tables.parquet(spark, s"$src/$n.parquet")
     val c = col("__copy")
 
     def blow(
@@ -62,7 +61,7 @@ object ScaleUp {
       val outDf = post(shifted).drop("__copy")
       outDf.repartition(Session.cpus)
         .write.mode("overwrite").parquet(s"$dst/$name.parquet")
-      println(s"[scaleup] $name -> ${spark.read.parquet(s"$dst/$name.parquet").count()} rows")
+      println(s"[scaleup] $name -> ${Tables.parquet(spark, s"$dst/$name.parquet").count()} rows")
     }
 
     // fixed-size dims: copied verbatim (their keys are referenced by

@@ -14,10 +14,14 @@ import org.apache.spark.sql.SparkSession
   * (Delta/Iceberg `OPTIMIZE`, Hive concatenate) restores scan
   * efficiency; this is that operation for plain parquet directories.
   *
-  * The rewrite is one `repartition(n)` job — a full shuffle, which is
+  * The rewrite is one `repartition(n)` — a full shuffle, which is
   * deliberate: compaction runs rarely and off the query path, and the
   * shuffle yields evenly sized output files where `coalesce` would
-  * merely glue together whatever co-located partitions it found.
+  * merely glue together whatever co-located partitions it found. It
+  * submits 2 Spark jobs, the shuffle's map stage and the write; the
+  * read resolves its schema from one footer on the driver
+  * ([[graft.Tables.parquet]]), where `spark.read.parquet` added a third,
+  * an inference job.
   * The swap is write-to-temp + delete + rename, the same recipe the
   * reference uses to normalize upload layouts (csv_processor.py:43-71);
   * a transactional table format would replace the rename with a
@@ -36,7 +40,7 @@ object Compaction {
     val totalBytes = files.map(_.getLen).sum
     val n = math.max(1, math.ceil(totalBytes.toDouble / targetBytes).toInt)
     val tmp = new Path(dir.stripSuffix("/") + "_compact_tmp")
-    spark.read.parquet(dir)
+    graft.Tables.parquet(spark, dir)
       .repartition(n)
       .write.mode("overwrite").parquet(tmp.toString)
     if (!fs.delete(path, true))

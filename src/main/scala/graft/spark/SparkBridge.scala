@@ -37,6 +37,27 @@ object GraftSqlBridge {
     spark.withActive(execution.SQLExecution.withSQLConfPropagated(
       spark.asInstanceOf[classic.SparkSession])(body))
 
+  /** The session's Hadoop configuration, as its file sources build it. */
+  def hadoopConf(spark: SparkSession): org.apache.hadoop.conf.Configuration =
+    spark.asInstanceOf[classic.SparkSession].sessionState.newHadoopConf()
+
+  /** Whether Spark's file listing skips an entry of this name (`_SUCCESS`,
+    * `.crc` side files, `._COPYING_` partials; not `_metadata` summaries).
+    */
+  def hiddenPathName(name: String): Boolean =
+    org.apache.spark.util.HadoopFSUtils.shouldFilterOutPathName(name)
+
+  /** The schema Spark's parquet inference takes from one footer: the Spark
+    * schema a Spark writer stored in the file's metadata, else the parquet
+    * schema converted under the session's current conf.
+    */
+  def parquetSchema(
+      spark: SparkSession, footer: org.apache.parquet.hadoop.Footer): types.StructType = {
+    import execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
+    ParquetFileFormat.readSchemaFromFooter(footer, new ParquetToSparkSchemaConverter(
+      spark.asInstanceOf[classic.SparkSession].sessionState.conf))
+  }
+
   /** `df` as a leaf over `rows`, the RDD of `df`'s executed plan, with
     * `df`'s statistics. A query over the result reads `rows` whole: no
     * column pruning or filter pushdown reaches the plan underneath.

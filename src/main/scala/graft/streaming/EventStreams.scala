@@ -14,29 +14,24 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   */
 object EventStreams {
 
-  /** Read the events fixture as a stream (same ns→µs normalization
-    * and layout handling as graft.Tables.events: driver fixtures are
-    * one NANOS file inside the sf dir; ScaleUp fixtures are a
-    * directory of µs-timestamp files).
+  /** Read the events fixture as a stream, with the same ts
+    * normalization as graft.Tables.events.
     */
-  def readEvents(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val src = s"$dir/events.parquet"
-    val raw = spark.read.parquet(src)
-    val reader = spark.readStream.schema(raw.schema)
-    val stream =
-      if (new java.io.File(src).isDirectory) reader.parquet(src)
-      else reader.option("pathGlobFilter", "events.parquet").parquet(dir)
-    raw.schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType =>
-        stream.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
-      case org.apache.spark.sql.types.TimestampNTZType =>
-        // µs-no-UTC-flag fixtures surface as TIMESTAMP_NTZ, which
-        // event-time watermarks reject; UTC session tz makes the
-        // cast the identity reinterpretation (see Tables.events)
-        stream.withColumn("ts", expr("cast(ts as timestamp)"))
-      case _ => stream
-    }
+  def readEvents(spark: SparkSession, dir: String): DataFrame =
+    graft.Tables.eventTs(parquetStream(spark, dir, "events.parquet"))
+
+  /** `dir/file` as a parquet file stream with the batch read's schema.
+    * Driver fixtures are one file inside the sf dir: the stream reads
+    * `dir` filtered to the file's name. ScaleUp fixtures, and tables on
+    * an object store, are a directory of part files: the stream reads
+    * the directory. The location's Hadoop status decides, so an
+    * `s3a://` directory is one too.
+    */
+  private def parquetStream(spark: SparkSession, dir: String, file: String): DataFrame = {
+    val src = graft.Tables.parquetAt(spark, s"$dir/$file")
+    val reader = spark.readStream.schema(src.frame.schema)
+    if (src.root.isDirectory) reader.parquet(s"$dir/$file")
+    else reader.option("pathGlobFilter", file).parquet(dir)
   }
 
   /** Tumbling event-time window counts with a watermark, run to
@@ -142,7 +137,7 @@ object EventStreams {
           batch.write.mode("overwrite").parquet(outPath)
         }
         .queryName(queryName))
-    spark.read.parquet(outPath)
+    graft.Tables.parquet(spark, outPath)
   }
 
   /** T6 stream-stream interval join: purchases join errors from a
@@ -308,13 +303,7 @@ object EventStreams {
   def docBandWinners(
       spark: SparkSession, dir: String, queryName: String): DataFrame = {
     graft.functions.MinHashBands.register(spark)
-    val src = s"$dir/documents.parquet"
-    val raw = spark.read.parquet(src)
-    val reader = spark.readStream.schema(raw.schema)
-    val stream =
-      if (new java.io.File(src).isDirectory) reader.parquet(src)
-      else reader.option("pathGlobFilter", "documents.parquet").parquet(dir)
-    val sigs = stream
+    val sigs = parquetStream(spark, dir, "documents.parquet")
       .select(col("doc_id"), P.tokenSet(col("text")).as("toks"))
       .filter(size(col("toks")) >= 1)
       .select(col("doc_id"), explode(expr("minhash_bands(toks, 2, 8)")).as("sig"))
