@@ -11,13 +11,25 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * ORDER BY (or is a single-row aggregate); float aggregates are
   * rounded; oracle ORDER BYs say NULLS FIRST to match Spark's
   * ascending default.
+  *
+  * `build` may call any kernel of the one SQL kernel table
+  * ([[graft.plans.GraftExtensions.kernels]]) by name: [[fn]] registers
+  * the table on the session it is given before building, so a query
+  * runs on any session, with or without the extension.
   */
 final case class Q(
     name: String,
-    fn: (SparkSession, String) => DataFrame,
+    build: (SparkSession, String) => DataFrame,
     oracle: Option[String] = None,
     /** include in the Bench headline set */
-    bench: Boolean = true)
+    bench: Boolean = true) {
+
+  /** The query's frame over the fixtures in `dir`, built on `spark`. */
+  val fn: (SparkSession, String) => DataFrame = { (spark, dir) =>
+    graft.plans.GraftExtensions.register(spark)
+    build(spark, dir)
+  }
+}
 
 object Q {
 

@@ -171,9 +171,9 @@ object Tables {
 
   /** The embeddings fixture, spread to full parallelism for the same
     * reason as [[docs]]: a single-row-group file that feeds per-row
-    * vector math (dot products, posexplode covariance passes) —
-    * ProfileJobs measured q197's statistics pass as one 2.3 s
-    * single-task stage at sf0.1 before the spread.
+    * vector math (dot products, posexplode covariance passes) — q197's
+    * statistics pass ran as one 2.3 s single-task stage at sf0.1
+    * before the spread.
     */
   def emb(spark: SparkSession, dir: String): DataFrame =
     t(spark, dir, "embeddings")

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -96,13 +95,4 @@ object JlProject {
     }
     new GenericArrayData(out)
   }
-
-  /** Register as `jl_project(embedding, 16)`; the output-dim count
-    * must be an integer literal. Idempotent per session.
-    */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "jl_project",
-      exprs => JlProject(exprs.head, exprs(1).eval().asInstanceOf[Int]),
-      "scala_udf")
 }

@@ -3,7 +3,6 @@ package graft.functions
 import java.nio.ByteBuffer
 import java.security.MessageDigest
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpectsInputTypes, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, LongType, StringType}
@@ -59,11 +58,4 @@ object Md5Long60 {
     val d = md.digest(b)
     ByteBuffer.wrap(d).getLong >>> 4
   }
-
-  /** Register as a SQL function so higher-order-function lambdas can
-    * call `md5long60(...)`. Idempotent per session.
-    */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "md5long60", exprs => Md5Long60(exprs.head), "scala_udf")
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -122,18 +121,6 @@ object MinHashBands {
   private def seedPrefix(sd: Int): Array[Byte] =
     seedPrefixes.computeIfAbsent(sd,
       s => (s.toString + ":").getBytes(java.nio.charset.StandardCharsets.US_ASCII))
-
-  /** Register as a SQL function (`minhash_bands(toks, 2, 8)`); the
-    * band/row counts must be integer literals. Idempotent per session.
-    */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "minhash_bands",
-      exprs => MinHashBands(
-        exprs.head,
-        exprs(1).eval().asInstanceOf[Int],
-        exprs(2).eval().asInstanceOf[Int]),
-      "scala_udf")
 }
 
 /** Codegen'd raw MinHash signature: the `seeds` seeded min-hashes as
@@ -174,15 +161,6 @@ object MinHashSig {
     */
   def sig(toks: ArrayData, seeds: Int): ArrayData =
     new GenericArrayData(MinHashBands.seededMins(toks, seeds))
-
-  /** Register as `minhash_sig(toks, 16)`; seed count must be an
-    * integer literal. Idempotent per session.
-    */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "minhash_sig",
-      exprs => MinHashSig(exprs.head, exprs(1).eval().asInstanceOf[Int]),
-      "scala_udf")
 }
 
 /** Codegen'd 32-bit SimHash over a token array: per token one 60-bit
@@ -241,8 +219,4 @@ object SimHash32 {
     }
     out
   }
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "simhash32", exprs => SimHash32(exprs.head), "scala_udf")
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -72,10 +71,4 @@ object SetOps {
     }
     c
   }
-
-  /** Register as a SQL function (idempotent per session). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "sorted_intersect_count",
-      exprs => SortedIntersectCount(exprs(0), exprs(1)), "scala_udf")
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -344,32 +343,5 @@ object TextKernels {
     }
     if (seen.isEmpty) InternalRow(-1L, 0L)
     else InternalRow(min, seen.size.toLong)
-  }
-
-  /** SQL registration for the expr(...)-based call sites. */
-  def register(spark: SparkSession): Unit = {
-    val r = spark.sessionState.functionRegistry
-    r.createOrReplaceTempFunction("md5_sorted",
-      exprs => Md5Sorted(exprs.head), "scala_udf")
-    r.createOrReplaceTempFunction("bigram_hashes",
-      exprs => BigramHashes(exprs.head), "scala_udf")
-    r.createOrReplaceTempFunction("bigram_strings",
-      exprs => BigramStrings(exprs.head), "scala_udf")
-    r.createOrReplaceTempFunction("distinct_bigram_count",
-      exprs => DistinctBigramCount(exprs.head), "scala_udf")
-    r.createOrReplaceTempFunction("char_shingle_hashes",
-      exprs => CharShingleHashes(exprs.head,
-        exprs(1).eval().asInstanceOf[Int]), "scala_udf")
-    r.createOrReplaceTempFunction("shingle_fingerprint",
-      exprs => ShingleFingerprint(exprs.head,
-        exprs(1).eval().asInstanceOf[Int]), "scala_udf")
-    r.createOrReplaceTempFunction("anchor_shingle_hashes",
-      exprs => AnchorShingleHashes(exprs.head,
-        exprs(1).eval().asInstanceOf[Int],
-        exprs(2).eval().asInstanceOf[Int]), "scala_udf")
-    r.createOrReplaceTempFunction("anchor_shingle_pos",
-      exprs => AnchorShinglePos(exprs.head,
-        exprs(1).eval().asInstanceOf[Int],
-        exprs(2).eval().asInstanceOf[Int]), "scala_udf")
   }
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -112,14 +111,4 @@ object VecMath {
     org.apache.spark.sql.GraftSqlBridge.column(VecDot(
       org.apache.spark.sql.GraftSqlBridge.expression(a),
       org.apache.spark.sql.GraftSqlBridge.expression(b)))
-
-  /** Register as SQL functions (idempotent per session) so the
-    * expressions are callable from `expr(...)` strings and lambdas.
-    */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vecdot", exprs => VecDot(exprs(0), exprs(1)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vecdist2", exprs => VecDist2(exprs(0), exprs(1)), "scala_udf")
-  }
 }

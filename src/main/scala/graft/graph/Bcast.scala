@@ -4,10 +4,9 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.broadcast
 
 /** Broadcast gate for iterative operators' per-round NODE-sized
-  * frames (labels, contributions, degree tables) — the same measured
-  * rationale as [[ConnectedComponents]]'s private bcastMaxNodes,
-  * shared so q142/q220/q286/q201 inherit one policy instead of four
-  * constants: the loop KNOWS the frame is ≤ nodeCount rows of a few
+  * frames (labels, contributions, degree tables), shared so
+  * [[ConnectedComponents]] and q142/q220/q286/q201 inherit one policy
+  * instead of five constants: the loop KNOWS the frame is ≤ nodeCount rows of a few
   * longs — a size the planner cannot estimate through a pinned RDD
   * (guide §3.1/§8, "use what you know that the optimizer does not") —
   * so below the gate every per-round join carries an explicit
@@ -28,9 +27,7 @@ import org.apache.spark.sql.functions.broadcast
   */
 object Bcast {
 
-  /** Override: GRAFT_ITER_BCAST_MAX_NODES. */
-  def maxNodes: Long = sys.env.get("GRAFT_ITER_BCAST_MAX_NODES")
-    .flatMap(_.toLongOption).getOrElse(4000000L)
+  val maxNodes: Long = 4000000L
 
   /** The per-round hint: broadcast `df` iff the observed node count
     * cleared the gate.

@@ -77,27 +77,12 @@ import org.apache.spark.sql.functions._
   */
 object ConnectedComponents {
 
-  /** Node count below which the loop session runs with AQE off —
-    * override with GRAFT_CC_AQE_MIN_NODES. At the default the gate
-    * opens once the label table is ~5M rows (≥ ~50 shuffle partitions
-    * at the 100k/partition sizing), i.e. exactly when per-stage
-    * adaptivity starts having bytes to adapt.
+  /** Node count below which the loop session runs with AQE off: the
+    * gate opens once the label table is ~5M rows (≥ ~50 shuffle
+    * partitions at the 100k/partition sizing), i.e. exactly when
+    * per-stage adaptivity starts having bytes to adapt.
     */
-  private def aqeMinNodes: Long = sys.env.get("GRAFT_CC_AQE_MIN_NODES")
-    .flatMap(_.toLongOption).getOrElse(5000000L)
-
-  /** Node count up to which the per-round label table is joined via
-    * an explicit broadcast hint (override: GRAFT_CC_BCAST_MAX_NODES).
-    * The loop KNOWS the label table is ≤ nodeCnt rows of two longs —
-    * a size the planner cannot see through a pinned RDD (guide §8:
-    * use what you know that the optimizer does not) — so below the
-    * gate every propagate/halve join runs as a broadcast hash join
-    * with NO exchange and no sort on either side. 4M nodes ≈ 64 MB
-    * framed, comfortably under broadcast limits; above the gate the
-    * label side is cluster-scale and the pinned-sym SMJ path applies.
-    */
-  private def bcastMaxNodes: Long = sys.env.get("GRAFT_CC_BCAST_MAX_NODES")
-    .flatMap(_.toLongOption).getOrElse(4000000L)
+  private val aqeMinNodes = 5000000L
 
   /** @param edges undirected edge list with long columns `a`, `b`
     *              (self-loops and duplicates are tolerated)
@@ -142,7 +127,10 @@ object ConnectedComponents {
       symCaller)
     loopSession.conf.set("spark.sql.adaptive.enabled",
       (nodeCnt >= aqeMinNodes).toString)
-    val out = runLoop(sym, sum0, nodeCnt <= bcastMaxNodes, maxIter)
+    // up to Bcast.maxNodes every propagate/halve join broadcasts the
+    // label table (≤ nodeCnt rows of two longs): no exchange and no
+    // sort on either side; above it the pinned-sym SMJ path applies
+    val out = runLoop(sym, sum0, nodeCnt <= Bcast.maxNodes, maxIter)
     // hand the (pinned) result back on the caller's session so it
     // composes with the caller's own frames
     spark.createDataFrame(out.rdd, out.schema)
@@ -219,8 +207,6 @@ object ConnectedComponents {
       done = s2.compareTo(prevSum) == 0
       prevSum = s2
       iter += 1
-      if (sys.env.contains("GRAFT_CC_LOG"))
-        System.err.println(s"[cc] round $iter labelSum=$s2")
     }
     val out = propPin.select(col("node"), col("lab").as("component"))
       .localCheckpoint(true)

@@ -50,29 +50,15 @@ object Rotate {
     * superseded predecessor's blocks. Pass `prev = null` on the
     * first iteration.
     *
-    * `serialized = true` pins MEMORY_AND_DISK_SER instead of the
-    * deserialized default — rule 4, added r11 after ProfileHeap put
-    * q221's deserialized edge pin at ~16–17 GB for ~700 M rows at
-    * sf10: per-row JVM object overhead (~70 B of UnsafeRow + byte[]
-    * headers and array slots around ~20 B of payload) dominates
-    * narrow pinned frames. Serialized blocks store the rows as a few
-    * contiguous byte buffers per partition — no per-row objects.
-    * Measured on q221 (sf10, 48 GB driver, best-of-2 canary-stamped):
-    * storage peak 16.2 → 9.8 GB, but wall 84.6 s @ canary 1.66
-    * (deserialized) vs 97.8 s @ canary 1.10 (serialized) — the
-    * per-scan deserialization pass costs MORE than the saved GC scan
-    * on a 3-round peel, so q221 ships deserialized and this switch
-    * stays available for operators whose heap margin (not wall time)
-    * is the binding constraint — e.g. a refresh loop holding several
-    * edge-scale pins at once.
+    * The pin is deserialized (MEMORY_AND_DISK). A serialized pin
+    * (MEMORY_AND_DISK_SER) was measured on q221 (sf10, 48 GB driver,
+    * best-of-2 canary-stamped): storage peak 16.2 → 9.8 GB, but wall
+    * 84.6 s @ canary 1.66 (deserialized) vs 97.8 s @ canary 1.10
+    * (serialized) — the per-scan deserialization pass costs more than
+    * the saved GC scan on a 3-round peel.
     */
-  def supersede(next: DataFrame, prev: DataFrame,
-      serialized: Boolean = false): DataFrame = {
-    val pinned =
-      if (serialized)
-        next.localCheckpoint(true,
-          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-      else next.localCheckpoint(true)
+  def supersede(next: DataFrame, prev: DataFrame): DataFrame = {
+    val pinned = next.localCheckpoint(true)
     if (prev != null)
       org.apache.spark.sql.GraftSqlBridge.unpersistCheckpoint(prev)
     pinned

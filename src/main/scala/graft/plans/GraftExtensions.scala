@@ -1,53 +1,82 @@
 package graft.plans
 
 import graft.functions._
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-/** SparkSessionExtensions entry point (SURVEY.md §4): registers the
-  * engine's custom Catalyst expressions so any session configured
-  * with `spark.sql.extensions=graft.plans.GraftExtensions` (or
+/** SparkSessionExtensions entry point (SURVEY.md §4): injects every row
+  * of [[GraftExtensions.kernels]], the engine's codegen'd Catalyst
+  * expressions, so any session configured with
+  * `spark.sql.extensions=graft.plans.GraftExtensions` (or
   * `builder.withExtensions(new GraftExtensions)`) gets them in SQL.
   *
   * No custom Rule/SparkStrategy is injected — SURVEY §4's analysis
   * holds: Catalyst's built-ins cover the whole §2 inventory; the only
-  * custom piece we measured a need for is the expression below.
+  * custom pieces we measured a need for are the expressions below.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
+  override def apply(e: SparkSessionExtensions): Unit =
+    GraftExtensions.kernels.foreach(k => e.injectFunction((k.id, k.info, k.build)))
+}
+
+/** The one table of SQL kernels. [[GraftExtensions]] injects it into
+  * sessions built with the extension; [[register]] installs it on any
+  * other session, and `Q` calls that for every registry query, so a
+  * query runs on whatever session it is given. A new kernel is one row.
+  */
+object GraftExtensions {
+
+  /** One SQL function: its name, the expression class it builds, and
+    * the builder from the call's arguments. Integer parameters (band,
+    * row, seed, window and dimension counts) must be literals.
+    */
+  final case class Kernel(
+      name: String, cls: Class[_ <: Expression], build: Seq[Expression] => Expression) {
+    def id: FunctionIdentifier = FunctionIdentifier(name)
+    def info: ExpressionInfo = new ExpressionInfo(cls.getName, name)
+  }
 
   private def intLit(e: Expression): Int = e.eval().asInstanceOf[Int]
 
-  override def apply(e: SparkSessionExtensions): Unit = {
-    def inject(name: String, cls: Class[_])(build: Seq[Expression] => Expression): Unit =
-      e.injectFunction((
-        FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), build))
+  val kernels: Seq[Kernel] = Seq(
+    Kernel("md5long60", classOf[Md5Long60], x => Md5Long60(x.head)),
+    Kernel("vecdot", classOf[VecDot], x => VecDot(x(0), x(1))),
+    Kernel("vecdist2", classOf[VecDist2], x => VecDist2(x(0), x(1))),
+    Kernel("jl_project", classOf[JlProject], x => JlProject(x.head, intLit(x(1)))),
+    Kernel("sorted_intersect_count", classOf[SortedIntersectCount],
+      x => SortedIntersectCount(x(0), x(1))),
+    Kernel("tokens_ws", classOf[TokenizeWs], x => TokenizeWs(x.head, distinct = false)),
+    Kernel("token_set_ws", classOf[TokenizeWs], x => TokenizeWs(x.head, distinct = true)),
+    Kernel("minhash_bands", classOf[MinHashBands],
+      x => MinHashBands(x.head, intLit(x(1)), intLit(x(2)))),
+    Kernel("minhash_sig", classOf[MinHashSig], x => MinHashSig(x.head, intLit(x(1)))),
+    Kernel("simhash32", classOf[SimHash32], x => SimHash32(x.head)),
+    Kernel("ahash32", classOf[AHash32], x => AHash32(x.head)),
+    Kernel("symbol_pairs", classOf[SymbolPairs], x => SymbolPairs(x.head)),
+    Kernel("md5_sorted", classOf[Md5Sorted], x => Md5Sorted(x.head)),
+    Kernel("bigram_hashes", classOf[BigramHashes], x => BigramHashes(x.head)),
+    Kernel("bigram_strings", classOf[BigramStrings], x => BigramStrings(x.head)),
+    Kernel("distinct_bigram_count", classOf[DistinctBigramCount],
+      x => DistinctBigramCount(x.head)),
+    Kernel("char_shingle_hashes", classOf[CharShingleHashes],
+      x => CharShingleHashes(x.head, intLit(x(1)))),
+    Kernel("shingle_fingerprint", classOf[ShingleFingerprint],
+      x => ShingleFingerprint(x.head, intLit(x(1)))),
+    Kernel("anchor_shingle_hashes", classOf[AnchorShingleHashes],
+      x => AnchorShingleHashes(x.head, intLit(x(1)), intLit(x(2)))),
+    Kernel("anchor_shingle_pos", classOf[AnchorShinglePos],
+      x => AnchorShinglePos(x.head, intLit(x(1)), intLit(x(2)))),
+    Kernel("interleave_bits", classOf[InterleaveBits],
+      x => InterleaveBits(x.head, intLit(x(1)))))
 
-    inject("md5long60", classOf[Md5Long60])(x => Md5Long60(x.head))
-    inject("vecdot", classOf[VecDot])(x => VecDot(x(0), x(1)))
-    inject("vecdist2", classOf[VecDist2])(x => VecDist2(x(0), x(1)))
-    inject("sorted_intersect_count", classOf[SortedIntersectCount])(x =>
-      SortedIntersectCount(x(0), x(1)))
-    // the text/signature kernel family (round-2 wave)
-    inject("tokens_ws", classOf[TokenizeWs])(x => TokenizeWs(x.head, distinct = false))
-    inject("token_set_ws", classOf[TokenizeWs])(x => TokenizeWs(x.head, distinct = true))
-    inject("minhash_bands", classOf[MinHashBands])(x =>
-      MinHashBands(x.head, intLit(x(1)), intLit(x(2))))
-    inject("minhash_sig", classOf[MinHashSig])(x =>
-      MinHashSig(x.head, intLit(x(1))))
-    inject("simhash32", classOf[SimHash32])(x => SimHash32(x.head))
-    inject("ahash32", classOf[AHash32])(x => AHash32(x.head))
-    inject("symbol_pairs", classOf[SymbolPairs])(x => SymbolPairs(x.head))
-    inject("md5_sorted", classOf[Md5Sorted])(x => Md5Sorted(x.head))
-    inject("bigram_hashes", classOf[BigramHashes])(x => BigramHashes(x.head))
-    inject("bigram_strings", classOf[BigramStrings])(x => BigramStrings(x.head))
-    inject("distinct_bigram_count", classOf[DistinctBigramCount])(x =>
-      DistinctBigramCount(x.head))
-    inject("char_shingle_hashes", classOf[CharShingleHashes])(x =>
-      CharShingleHashes(x.head, intLit(x(1))))
-    inject("shingle_fingerprint", classOf[ShingleFingerprint])(x =>
-      ShingleFingerprint(x.head, intLit(x(1))))
-    inject("interleave_bits", classOf[InterleaveBits])(x =>
-      InterleaveBits(x.head, intLit(x(1))))
+  /** Install every kernel the session's registry lacks, as the
+    * extension injects it. Idempotent: a session built with the
+    * extension, or registered before, is left as it is.
+    */
+  def register(spark: SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
+    kernels.filterNot(k => registry.functionExists(k.id))
+      .foreach(k => registry.registerFunction(k.id, k.info, k.build))
   }
 }

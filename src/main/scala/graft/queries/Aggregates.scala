@@ -3,7 +3,6 @@ package graft.queries
 import graft.{Q, Tables}
 import graft.functions.{Portable => P}
 import graft.stats.SchemaPreview
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** SURVEY.md §2.4 — grouped aggregation, enhanced aggregates
@@ -12,16 +11,13 @@ import org.apache.spark.sql.functions._
   */
 object Aggregates {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.t(s, dir, n)
-
   /** ROLLUP with grouping id. Catalyst plans this as Expand + one
     * hash aggregate — the rollup does NOT rescan the input.
     */
   val q13 = Q(
     "q13_rollup_orders",
     (s, dir) => {
-      t(s, dir, "orders")
+      Tables.t(s, dir, "orders")
         .withColumn("yr", year(col("o_orderdate")))
         .rollup(col("yr"), col("o_orderpriority"))
         .agg(
@@ -42,7 +38,7 @@ object Aggregates {
   val q14 = Q(
     "q14_cube_orders",
     (s, dir) => {
-      t(s, dir, "orders")
+      Tables.t(s, dir, "orders")
         .cube(col("o_orderstatus"), col("o_orderpriority"))
         .agg(
           count(lit(1)).as("n"),
@@ -80,7 +76,7 @@ object Aggregates {
   val q16 = Q(
     "q16_distinct_aggregates",
     (s, dir) => {
-      t(s, dir, "lineitem")
+      Tables.t(s, dir, "lineitem")
         .groupBy("l_returnflag")
         .agg(
           countDistinct(col("l_suppkey")).as("n_supp"),
@@ -121,7 +117,7 @@ object Aggregates {
   val q18 = Q(
     "q18_collect_set_segments",
     (s, dir) => {
-      t(s, dir, "customer")
+      Tables.t(s, dir, "customer")
         .groupBy("c_nationkey")
         .agg(
           array_join(sort_array(collect_set(col("c_mktsegment"))), ",").as("segments"),
@@ -148,7 +144,7 @@ object Aggregates {
   val q19 = Q(
     "q19_percentiles_quantity",
     (s, dir) => {
-      t(s, dir, "lineitem")
+      Tables.t(s, dir, "lineitem")
         .groupBy("l_returnflag", "l_quantity").agg(count(lit(1)).as("f"))
         .groupBy("l_returnflag")
         .agg(
@@ -172,7 +168,7 @@ object Aggregates {
     */
   val q20 = Q(
     "q20_column_stats_lineitem",
-    (s, dir) => SchemaPreview.columnStats(t(s, dir, "lineitem"), statCols),
+    (s, dir) => SchemaPreview.columnStats(Tables.t(s, dir, "lineitem"), statCols),
     Some(SchemaPreview.columnStatsSql("lineitem", statCols)))
 
   /** Ordered string aggregation (Hive collect_list + concat_ws ≡ SQL
@@ -182,8 +178,8 @@ object Aggregates {
   val q96b = Q(
     "q98_group_concat",
     (s, dir) => {
-      t(s, dir, "nation")
-        .join(t(s, dir, "region"), col("n_regionkey") === col("r_regionkey"))
+      Tables.t(s, dir, "nation")
+        .join(Tables.t(s, dir, "region"), col("n_regionkey") === col("r_regionkey"))
         .groupBy("r_name")
         .agg(
           array_join(array_sort(collect_list(col("n_name"))), ",").as("nations"),

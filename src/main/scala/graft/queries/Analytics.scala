@@ -1,7 +1,6 @@
 package graft.queries
 
 import graft.{Q, Tables}
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -14,16 +13,13 @@ import org.apache.spark.sql.functions._
   */
 object Analytics {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.t(s, dir, n)
-
   /** Ranking trio per group, top-3 rows kept. */
   val q21 = Q(
     "q21_window_rank_top_customers",
     (s, dir) => {
       val w = Window.partitionBy(col("c_nationkey"))
         .orderBy(col("c_acctbal").desc, col("c_custkey"))
-      t(s, dir, "customer")
+      Tables.t(s, dir, "customer")
         .select(col("c_nationkey"), col("c_custkey"), col("c_acctbal"))
         .withColumn("rn", row_number().over(w))
         .withColumn("rnk", rank().over(w))
@@ -49,7 +45,7 @@ object Analytics {
     (s, dir) => {
       val w = Window.partitionBy(col("o_custkey"))
         .orderBy(col("o_orderdate"), col("o_orderkey"))
-      t(s, dir, "orders")
+      Tables.t(s, dir, "orders")
         .select(col("o_custkey"), col("o_orderkey"), col("o_orderdate"), col("o_totalprice"))
         .withColumn("prev_price", lag("o_totalprice", 1).over(w))
         .withColumn("next_price", lead("o_totalprice", 1).over(w))
@@ -75,7 +71,7 @@ object Analytics {
     (s, dir) => {
       val w = Window.partitionBy(col("l_suppkey"))
         .orderBy(col("l_shipdate"), col("l_orderkey"), col("l_linenumber"))
-      t(s, dir, "lineitem")
+      Tables.t(s, dir, "lineitem")
         .filter(col("l_suppkey") <= 20)
         .withColumn("running_qty",
           sum("l_quantity").over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
@@ -105,7 +101,7 @@ object Analytics {
       val w = Window.partitionBy(col("o_orderstatus"))
         .orderBy(col("price_floor"))
         .rangeBetween(-1000L, 0L)
-      t(s, dir, "orders")
+      Tables.t(s, dir, "orders")
         .withColumn("price_floor", floor(col("o_totalprice")))
         .withColumn("n_similar", count(lit(1)).over(w))
         .select(col("o_orderkey"), col("o_orderstatus"), col("price_floor"), col("n_similar"))
@@ -122,7 +118,7 @@ object Analytics {
   val q25 = Q(
     "q25_topk_orders",
     (s, dir) => {
-      t(s, dir, "orders")
+      Tables.t(s, dir, "orders")
         .orderBy(col("o_totalprice").desc, col("o_orderkey"))
         .limit(20)
         .select("o_orderkey", "o_custkey", "o_totalprice")
@@ -140,7 +136,7 @@ object Analytics {
     (s, dir) => {
       val w = Window.partitionBy(col("p_brand"))
         .orderBy(col("p_retailprice").desc, col("p_partkey"))
-      t(s, dir, "part")
+      Tables.t(s, dir, "part")
         .select(col("p_brand"), col("p_partkey"), col("p_retailprice"))
         .withColumn("rn", row_number().over(w))
         .filter(col("rn") <= 2)
@@ -160,7 +156,7 @@ object Analytics {
     (s, dir) => {
       val w = Window.partitionBy(col("c_mktsegment"))
         .orderBy(col("c_acctbal").desc, col("c_custkey"))
-      t(s, dir, "customer")
+      Tables.t(s, dir, "customer")
         .select(col("c_mktsegment"), col("c_custkey"), col("c_acctbal"))
         .withColumn("quartile", ntile(4).over(w))
         .withColumn("pct_rank", round(percent_rank().over(w), 6))

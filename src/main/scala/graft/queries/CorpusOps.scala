@@ -3,7 +3,6 @@ package graft.queries
 import graft.{Q, Tables}
 import graft.functions.{Dist, Portable}
 import graft.graph.ConnectedComponents
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Corpus-preparation operators closing the loop from candidate
@@ -13,9 +12,6 @@ import org.apache.spark.sql.functions._
   * and benchmark-contamination screening.
   */
 object CorpusOps {
-
-  private def docs(s: SparkSession, dir: String): DataFrame =
-    Tables.docs(s, dir)
 
   /** Near-dup CLUSTERS, not pairs: each document hashes into its two
     * LSH band buckets (q41's signatures over the whole corpus), the
@@ -36,12 +32,11 @@ object CorpusOps {
   val q100 = Q(
     "q100_dedup_cc_clusters",
     (s, dir) => {
-      graft.functions.MinHashBands.register(s)
       // localCheckpoint: the signature projection (16 md5 min-hashes
       // per doc, one codegen'd [[MinHashBands]] pass) feeds BOTH the
       // component loop and the final cluster join — without pinning
       // it the heaviest stage runs twice
-      val db = docs(s, dir)
+      val db = Tables.docs(s, dir)
         .select(col("doc_id"), Portable.tokenSet(col("text")).as("toks"))
         .filter(size(col("toks")) >= 1) // token-free docs leave the oracle's unnest too
         .withColumn("bs", expr("minhash_bands(toks, 2, 8)"))
@@ -101,7 +96,7 @@ object CorpusOps {
   val q101 = Q(
     "q101_pack_sequences",
     (s, dir) => {
-      val sized = docs(s, dir)
+      val sized = Tables.docs(s, dir)
         .select(col("doc_id"),
           size(Portable.tokens(col("text"))).cast("long").as("nt"))
         .filter(col("nt") >= 1)
@@ -152,7 +147,7 @@ object CorpusOps {
   val q102 = Q(
     "q102_repetition_stats",
     (s, dir) => {
-      val base = docs(s, dir)
+      val base = Tables.docs(s, dir)
         .select(col("doc_id"), Portable.tokens(col("text")).as("toks"))
         .filter(size(col("toks")) >= 2)
       val tokStats = base
@@ -162,7 +157,6 @@ object CorpusOps {
         .agg(sum("cnt").cast("long").as("nt"),
           count(lit(1)).as("ntypes"),
           max("cnt").cast("long").as("topcnt"))
-      graft.functions.TextKernels.register(s)
       val bigrams = base.select(
         col("doc_id"),
         (size(col("toks")) - 1).cast("long").as("n2"),
@@ -211,8 +205,7 @@ object CorpusOps {
   val q103 = Q(
     "q103_contamination_check",
     (s, dir) => {
-      graft.functions.TextKernels.register(s)
-      val sh = docs(s, dir)
+      val sh = Tables.docs(s, dir)
         .filter(length(col("text")) >= 8)
         .withColumn("is_bench",
           pmod(Portable.md5Long(concat(lit("bench:"), col("doc_id").cast("string"))),
@@ -260,7 +253,7 @@ object CorpusOps {
   val q104 = Q(
     "q104_mixture_weights",
     (s, dir) => {
-      val perSource = docs(s, dir)
+      val perSource = Tables.docs(s, dir)
         .select(col("source"), size(Portable.tokens(col("text"))).cast("long").as("nt"))
         .groupBy("source")
         .agg(count(lit(1)).as("n_docs"), sum("nt").cast("long").as("sum_tokens"))
@@ -304,7 +297,7 @@ object CorpusOps {
     "q105_quality_gate",
     (s, dir) => {
       import org.apache.spark.sql.expressions.Window
-      val d = docs(s, dir)
+      val d = Tables.docs(s, dir)
         .select(col("doc_id"), col("lang"),
           size(Portable.tokens(col("text"))).cast("long").as("nt"),
           size(Portable.tokenSet(col("text"))).cast("long").as("ntypes"))
@@ -354,7 +347,7 @@ object CorpusOps {
   val q107 = Q(
     "q107_corpus_prep_pack",
     (s, dir) => graft.pipeline.CorpusPrep.pack(
-      graft.pipeline.CorpusPrep.prepareSizes(docs(s, dir), minTokens = 5), seqLen = 512),
+      graft.pipeline.CorpusPrep.prepareSizes(Tables.docs(s, dir), minTokens = 5), seqLen = 512),
     Some(s"""WITH RECURSIVE t AS (
       |  SELECT doc_id, text,
       |    CAST(len(${Portable.tokensSql("text")}) AS BIGINT) AS nt

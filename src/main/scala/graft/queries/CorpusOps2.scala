@@ -2,7 +2,6 @@ package graft.queries
 
 import graft.{Q, Tables}
 import graft.functions.{Portable, VectorFunctions => V}
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -13,15 +12,6 @@ import org.apache.spark.sql.functions._
   * first-merge pair mining.
   */
 object CorpusOps2 {
-
-  /** Single-row-group fixture → unsplittable; spread before per-row
-    * heavy compute (same note as TextOps.docs).
-    */
-  private def docs(s: SparkSession, dir: String): DataFrame =
-    Tables.t(s, dir, "documents").repartition(s.sparkContext.defaultParallelism)
-
-  private def emb(s: SparkSession, dir: String): DataFrame =
-    Tables.t(s, dir, "embeddings").repartition(s.sparkContext.defaultParallelism)
 
   /** L6+ weighted sampling, deterministically: Duffield-Lund-Thorup
     * priority sampling with priority = w/u, u a portable-hash uniform
@@ -58,7 +48,7 @@ object CorpusOps2 {
   val q116 = Q(
     "q116_knn_classify",
     (s, dir) => {
-      val wn = emb(s, dir).withColumn("nrm", V.norm("embedding"))
+      val wn = Tables.emb(s, dir).withColumn("nrm", V.norm("embedding"))
       val qs = wn.filter(col("vec_id") < 100).select(
         col("vec_id").as("query_id"), col("label").as("label"),
         col("embedding").as("qe"), col("nrm").as("qn"))
@@ -116,8 +106,7 @@ object CorpusOps2 {
   val q117 = Q(
     "q117_bigram_lm_score",
     (s, dir) => {
-      graft.functions.TextKernels.register(s)
-      val ts = docs(s, dir)
+      val ts = Tables.docs(s, dir)
         .select(col("doc_id"), Portable.tokens(col("text")).as("toks"))
         .filter(size(col("toks")) >= 2)
       // one codegen'd pass per row ([[graft.functions.BigramStrings]])
@@ -170,14 +159,12 @@ object CorpusOps2 {
   val q118 = Q(
     "q118_minhash_estimate_error",
     (s, dir) => {
-      graft.functions.MinHashSig.register(s)
-      graft.functions.SetOps.register(s)
       // pin the token sets and both derived per-doc frames (r10): the
       // plan reads each along two branches (probe side + corpus
       // side), and unpinned the regex tokenization re-ran ~5× and the
       // per-token 16-hash MinHash twice over the full corpus — the
       // q209/q228 recompute pattern
-      val ts = docs(s, dir).filter(col("lang") === "en")
+      val ts = Tables.docs(s, dir).filter(col("lang") === "en")
         .select(col("doc_id"), Portable.tokenSet(col("text")).as("toks"))
         .filter(size(col("toks")) >= 1)
         .localCheckpoint(true)
@@ -249,8 +236,7 @@ object CorpusOps2 {
   val q119 = Q(
     "q119_shingle_novelty",
     (s, dir) => {
-      graft.functions.TextKernels.register(s)
-      val ex = docs(s, dir)
+      val ex = Tables.docs(s, dir)
         .select(col("doc_id"), Portable.tokens(col("text")).as("toks"))
         .filter(size(col("toks")) >= 2)
         .withColumn("hs", expr("bigram_hashes(toks)"))
@@ -285,7 +271,7 @@ object CorpusOps2 {
   val q120 = Q(
     "q120_vocab_coverage",
     (s, dir) => {
-      val tok = docs(s, dir)
+      val tok = Tables.docs(s, dir)
         .select(col("lang"), explode(Portable.tokens(col("text"))).as("tok"))
       val vocab = tok.groupBy("tok").agg(count(lit(1)).as("c"))
         .orderBy(col("c").desc, col("tok")).limit(10)
@@ -378,7 +364,7 @@ object CorpusOps2 {
   val q123 = Q(
     "q123_char_pair_merges",
     (s, dir) => {
-      docs(s, dir)
+      Tables.docs(s, dir)
         .select(explode(Portable.tokens(col("text"))).as("tok"))
         .filter(length(col("tok")) >= 2)
         .select(explode(expr(

@@ -68,7 +68,6 @@ object CorpusOps3 {
   private[queries] def bpeRounds(
       s: SparkSession, corpus0: DataFrame, rounds: Int,
       applyLast: Boolean): (DataFrame, Option[DataFrame]) = {
-    graft.functions.SymbolPairs.register(s)
     def pairCounts(c: DataFrame): DataFrame = c
       .select(explode(expr("symbol_pairs(sy)")).as("pair"))
       .groupBy("pair").agg(count(lit(1)).as("n"))
@@ -149,8 +148,6 @@ object CorpusOps3 {
   val q219 = Q(
     "q219_negative_mining",
     (s, dir) => {
-      graft.functions.Md5Long60.register(s)
-      graft.functions.SetOps.register(s)
       import org.apache.spark.sql.expressions.Window
       val d = Tables.docs(s, dir)
         .select(col("doc_id"), col("lang"), col("n_chars"),

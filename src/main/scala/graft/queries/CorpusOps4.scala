@@ -107,7 +107,6 @@ object CorpusOps4 {
   val q232 = Q(
     "q232_rrf_fusion",
     (s, dir) => {
-      graft.functions.SetOps.register(s)
       val d = Tables.docs(s, dir)
         .join(Tables.emb(s, dir), col("doc_id") === col("vec_id"))
         .select(col("doc_id"), P.md5Sorted(P.tokenSet(col("text"))).as("th"),
@@ -253,8 +252,6 @@ object CorpusOps4 {
   val q234 = Q(
     "q234_containment_dedup",
     (s, dir) => {
-      graft.functions.TextKernels.register(s)
-      graft.functions.SetOps.register(s)
       val docs = Tables.docs(s, dir).filter(col("lang") === "en")
       val toksH = docs
         .select(col("doc_id"), P.md5Sorted(P.tokenSet(col("text"))).as("th"))

@@ -57,7 +57,6 @@ object CorpusOps5 {
   val q266 = Q(
     "q266_cdc_chunk_dedup",
     (s, dir) => {
-      graft.functions.Md5Long60.register(s)
       Tables.docs(s, dir)
         .select(col("lang"), Portable.tokens(col("text")).as("toks"))
         .filter(size(col("toks")) >= 1)

@@ -435,7 +435,6 @@ object CurationOps {
   val q187 = Q(
     "q187_lsh_band_sensitivity",
     (s, dir) => {
-      graft.functions.MinHashBands.register(s)
       // tokenized once, pinned: three band settings re-read the frame
       val toks = Tables.docs(s, dir).filter(col("lang") === "en")
         .select(col("doc_id"), Portable.tokenSet(col("text")).as("toks"))

@@ -38,7 +38,6 @@ object CurationOps13 {
   val q289 = Q(
     "q289_dedup_survivorship",
     (s, dir) => {
-      graft.functions.MinHashBands.register(s)
       // n_chars is coalesced to -1 on BOTH sides (ADVICE r12 #3):
       // Spark's struct ordering sorts a null field FIRST inside
       // min(struct(...)), while DuckDB's row_number ORDER BY n_chars

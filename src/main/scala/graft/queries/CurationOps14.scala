@@ -44,7 +44,6 @@ object CurationOps14 {
     */
   private def keepRanges(s: org.apache.spark.sql.SparkSession,
       dir: String): (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
-      graft.functions.TextKernels.register(s)
       val docs = graft.Tables.docs(s, dir)
         .filter(length(col("text")) >= 40)
         .select(col("doc_id"), length(col("text")).cast("long").as("len"),
@@ -311,7 +310,6 @@ object CurationOps14 {
   val q295 = Q(
     "q295_ingest_admission",
     (s, dir) => {
-      graft.functions.MinHashBands.register(s)
       val sigs = graft.Tables.docs(s, dir)
         .select(col("doc_id"), Portable.tokenSet(col("text")).as("toks"))
         .filter(size(col("toks")) >= 1)

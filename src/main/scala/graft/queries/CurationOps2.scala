@@ -113,7 +113,6 @@ object CurationOps2 {
   val q192 = Q(
     "q192_span_dup_mass",
     (s, dir) => {
-      graft.functions.TextKernels.register(s)
       val sh = Tables.docs(s, dir)
         .filter(length(col("text")) >= 40)
         .select(col("doc_id"),
@@ -170,7 +169,6 @@ object CurationOps2 {
     (s, dir) => {
       val winners = graft.streaming.EventStreams
         .docBandWinners(s, dir, "q193_sink")
-      graft.functions.MinHashBands.register(s)
       val sigs = Tables.docs(s, dir)
         .select(col("doc_id"), Portable.tokenSet(col("text")).as("toks"))
         .filter(size(col("toks")) >= 1)
@@ -219,7 +217,6 @@ object CurationOps2 {
   val q194 = Q(
     "q194_jl_projection_recall",
     (s, dir) => {
-      graft.functions.JlProject.register(s)
       val withProj = Tables.emb(s, dir)
         .select(col("vec_id"), col("embedding"))
         .withColumn("proj", expr("jl_project(embedding, 16)"))

@@ -321,7 +321,6 @@ object CurationOps3 {
       // join) = 33 s of the sf0.1 bench for 5 000 rows. The kernel is
       // bit-identical (KernelPropSpec) and leaves the scan inside
       // whole-stage codegen.
-      graft.functions.AHash32.register(s)
       val sigs = graft.multimodal.MediaPipeline
         .withPayload(Tables.t(s, dir, "documents"))
         .withColumn("sig", expr("ahash32(payload)"))

@@ -2,7 +2,6 @@ package graft.queries
 
 import graft.{Q, Tables}
 import graft.functions.{Portable, VectorFunctions => V}
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -21,9 +20,6 @@ import org.apache.spark.sql.functions._
   */
 object CurationOps4 {
 
-  private def docs(s: SparkSession, dir: String): DataFrame =
-    Tables.docs(s, dir)
-
   /** Count-min-sketch heavy hitters, self-audited (the q60 sketch
     * pattern): the exact top-20 token panel is recomputed alongside a
     * CMS over the full token stream, and each panel row carries a
@@ -40,7 +36,7 @@ object CurationOps4 {
     "q199_heavy_hitters_cms",
     (s, dir) => {
       val eps = 0.001
-      val toks = docs(s, dir)
+      val toks = Tables.docs(s, dir)
         .select(explode(Portable.tokens(col("text"))).as("token"))
       val exact = toks.groupBy("token").agg(count(lit(1)).as("cnt"))
         .orderBy(col("cnt").desc, col("token")).limit(20)
@@ -76,7 +72,7 @@ object CurationOps4 {
   val q200 = Q(
     "q200_charclass_profile",
     (s, dir) => {
-      docs(s, dir)
+      Tables.docs(s, dir)
         .select(col("lang"),
           length(col("text")).as("len"),
           length(regexp_replace(col("text"), "[^a-z]", "")).as("alpha"),
@@ -180,7 +176,7 @@ object CurationOps4 {
   val q202 = Q(
     "q202_curriculum_phases",
     (s, dir) => {
-      val base = docs(s, dir)
+      val base = Tables.docs(s, dir)
         .select(col("doc_id"),
           round(size(array_distinct(Portable.tokens(col("text"))))
             .cast("double") / size(Portable.tokens(col("text"))), 6).as("score"))
@@ -232,7 +228,7 @@ object CurationOps4 {
     "q203_shard_balance",
     (s, dir) => {
       val w = Window.partitionBy(lit(1))
-      docs(s, dir)
+      Tables.docs(s, dir)
         .withColumn("shard",
           pmod(Portable.md5Long(concat(lit("shard:"), col("doc_id").cast("string"))), lit(16)))
         .groupBy("shard")
@@ -266,7 +262,7 @@ object CurationOps4 {
     "q204_stratified_kfold",
     (s, dir) => {
       val w = Window.partitionBy("lang")
-      docs(s, dir)
+      Tables.docs(s, dir)
         .withColumn("fold",
           pmod(Portable.md5Long(concat(lit("fold:"), col("doc_id").cast("string"))), lit(5)))
         .groupBy("lang", "fold")

@@ -2,7 +2,6 @@ package graft.queries
 
 import graft.{Q, Tables}
 import graft.functions.{Portable, VectorFunctions => V}
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Corpus-curation operators, fifth batch: distribution-free
@@ -19,9 +18,6 @@ import org.apache.spark.sql.functions._
   * machinery, so its cost is the q41+q42 cost, never a cross join.
   */
 object CurationOps5 {
-
-  private def docs(s: SparkSession, dir: String): DataFrame =
-    Tables.docs(s, dir)
 
   /** Poisson(1) CDF steps, hard-coded so both engines branch on
     * bit-identical literals.
@@ -230,11 +226,7 @@ object CurationOps5 {
   val q209 = Q(
     "q209_dedup_method_overlap",
     (s, dir) => {
-      graft.functions.Md5Long60.register(s)
-      graft.functions.SetOps.register(s)
-      graft.functions.MinHashBands.register(s)
-      graft.functions.SimHash32.register(s)
-      val en = docs(s, dir).filter(col("lang") === "en")
+      val en = Tables.docs(s, dir).filter(col("lang") === "en")
         .select(col("doc_id"), col("text")).localCheckpoint(true)
       val exd = en.groupBy(sha2(col("text"), 256).as("h"))
         .agg(collect_list("doc_id").as("ids"), count(lit(1)).as("c"))

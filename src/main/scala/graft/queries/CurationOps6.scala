@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.{Q, Tables}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -19,9 +19,6 @@ import org.apache.spark.sql.functions._
   */
 object CurationOps6 {
 
-  private def docs(s: SparkSession, dir: String): DataFrame =
-    Tables.docs(s, dir)
-
   /** Chi-square keyword extraction: the tokens over-represented in
     * each source vs the rest of the corpus — the domain-signature
     * profile a mixture planner reads before weighting sources. The
@@ -34,7 +31,7 @@ object CurationOps6 {
   val q210 = Q(
     "q210_chi2_keywords",
     (s, dir) => {
-      val tok = docs(s, dir)
+      val tok = Tables.docs(s, dir)
         .select(col("source"),
           explode(graft.functions.Portable.tokens(col("text"))).as("token"))
       val bySrcTok = tok.groupBy("source", "token").agg(count(lit(1)).as("a"))
@@ -101,7 +98,7 @@ object CurationOps6 {
   val q211 = Q(
     "q211_cross_source_dups",
     (s, dir) => {
-      val bySrc = docs(s, dir)
+      val bySrc = Tables.docs(s, dir)
         .select(concat_ws(" ",
           slice(graft.functions.Portable.tokens(col("text")), 1, 12)).as("pk"),
           col("source"))
@@ -135,7 +132,7 @@ object CurationOps6 {
   val q212 = Q(
     "q212_mad_length_gate",
     (s, dir) => {
-      val d = docs(s, dir)
+      val d = Tables.docs(s, dir)
       val med = d.groupBy(col("lang"), col("n_chars"))
         .agg(count(lit(1)).as("f"))
         .groupBy("lang")
@@ -199,7 +196,7 @@ object CurationOps6 {
             (col("i0") + 1).as("decile"), round(col("b"), 6).as("boundary"))
       }
       statsOf(Tables.t(s, dir, "lineitem"), "lineitem", "l_quantity")
-        .unionAll(statsOf(docs(s, dir), "documents", "n_chars"))
+        .unionAll(statsOf(Tables.docs(s, dir), "documents", "n_chars"))
         .orderBy("tbl", "col", "decile")
     },
     Some("""WITH li AS (

@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.{Q, Tables}
 import graft.functions.{Portable => P, VectorFunctions => V}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Round-6 curation wave: MMR diversity-aware selection, per-source
@@ -11,9 +11,6 @@ import org.apache.spark.sql.functions._
   * exact-set screen.
   */
 object CurationOps7 {
-
-  private def emb(s: SparkSession, dir: String): DataFrame =
-    Tables.t(s, dir, "embeddings").repartition(s.sparkContext.defaultParallelism)
 
   /** Greedy maximal-marginal-relevance selection: five rounds of
     * argmax λ·rel(c) − (1−λ)·max_{s∈selected} cos(c, s) for the
@@ -31,7 +28,7 @@ object CurationOps7 {
     "q226_mmr_select",
     (s, dir) => {
       val lam = 0.7
-      val wn = emb(s, dir).withColumn("nrm", V.norm("embedding"))
+      val wn = Tables.emb(s, dir).withColumn("nrm", V.norm("embedding"))
       val q0 = wn.filter(col("vec_id") === 0)
         .select(col("embedding").as("qe"), col("nrm").as("qn"))
       val cand = wn.filter(col("vec_id") > 0)
@@ -126,7 +123,7 @@ object CurationOps7 {
     "q227_source_embedding_drift",
     (s, dir) => {
       val de = Tables.t(s, dir, "documents").select("doc_id", "source")
-        .join(emb(s, dir), col("doc_id") === col("vec_id"))
+        .join(Tables.emb(s, dir), col("doc_id") === col("vec_id"))
         .select(col("source"), col("vec_id"), col("embedding"))
       val long = de.select(col("source"), posexplode(col("embedding")))
         .toDF("source", "pos0", "v")

@@ -243,7 +243,6 @@ object CurationOps8 {
         () => CorpusOps4.q234.fn(s, dir)
           .select(col("doc_b").as("doc_id")).distinct(),
         () => {
-          graft.functions.AHash32.register(s)
           val sigs = graft.multimodal.MediaPipeline
             .withPayload(Tables.t(s, dir, "documents"))
             .withColumn("sig", expr("ahash32(payload)"))

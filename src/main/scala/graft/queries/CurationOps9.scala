@@ -37,9 +37,6 @@ object CurationOps9 {
   val q238 = Q(
     "q238_cross_split_contamination",
     (s, dir) => {
-      graft.functions.Md5Long60.register(s)
-      graft.functions.SetOps.register(s)
-      graft.functions.MinHashBands.register(s)
       val base = Tables.docs(s, dir).filter(col("lang") === "en")
         .select(col("doc_id"),
           pmod(P.md5Long(concat(lit("split:"), col("doc_id").cast("string"))),

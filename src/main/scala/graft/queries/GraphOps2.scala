@@ -309,7 +309,6 @@ object GraphOps2 {
   private def bandFrame(s: SparkSession, dir: String,
       flagName: String, flag: org.apache.spark.sql.Column): DataFrame = {
     import graft.functions.{Portable => P}
-    graft.functions.MinHashBands.register(s)
     Tables.docs(s, dir)
       .select(col("doc_id"), P.tokenSet(col("text")).as("toks"))
       .filter(size(col("toks")) >= 1)

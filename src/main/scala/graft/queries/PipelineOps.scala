@@ -2,7 +2,6 @@ package graft.queries
 
 import graft.{Q, Tables}
 import graft.functions.Portable
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -21,9 +20,6 @@ import org.apache.spark.sql.functions._
   */
 object PipelineOps {
 
-  private def docs(s: SparkSession, dir: String): DataFrame =
-    Tables.docs(s, dir)
-
   /** Deterministic train/valid/test split by content-independent hash
     * of the stable document id (80/10/10). Hash-mod splitting is the
     * canonical scale-out form: stateless, shuffle-free (the split
@@ -32,7 +28,7 @@ object PipelineOps {
   val q70 = Q(
     "q70_hash_split",
     (s, dir) => {
-      docs(s, dir)
+      Tables.docs(s, dir)
         .withColumn("b",
           pmod(Portable.md5Long(concat(lit("split:"), col("doc_id").cast("string"))), lit(10)))
         .withColumn("split",
@@ -94,11 +90,11 @@ object PipelineOps {
       // terms — one groupBy shuffle instead of a join shuffle plus a
       // sort-based row_number window. (-score, tok) ascending ≡ the
       // oracle's ORDER BY score DESC, tok (exact double negation).
-      val ex = docs(s, dir)
+      val ex = Tables.docs(s, dir)
         .select(col("doc_id"), Portable.tokens(col("text")).as("toks"))
         .select(col("doc_id"), size(col("toks")).as("nt"), explode(col("toks")).as("tok"))
       val tf = ex.groupBy("doc_id", "nt", "tok").agg(count(lit(1)).as("cnt"))
-      val ndocs = docs(s, dir).agg(countDistinct("doc_id").as("ndocs"))
+      val ndocs = Tables.docs(s, dir).agg(countDistinct("doc_id").as("ndocs"))
       // df as a whole-partition window count over tf: the tokenize+
       // explode+aggregate pipeline runs ONCE (a dfc-subquery join
       // would recompute it for the broadcast side)
@@ -140,8 +136,7 @@ object PipelineOps {
   val q74 = Q(
     "q74_chunk_documents",
     (s, dir) => {
-      graft.functions.Md5Long60.register(s)
-      docs(s, dir)
+      Tables.docs(s, dir)
         .select(col("doc_id"), Portable.tokens(col("text")).as("toks"))
         .withColumn("nt", size(col("toks")))
         .filter(col("nt") >= 1) // sequence(1,0) would be DESCENDING, not empty
@@ -180,7 +175,7 @@ object PipelineOps {
   val q75 = Q(
     "q75_dedup_keep_best",
     (s, dir) => {
-      docs(s, dir)
+      Tables.docs(s, dir)
         .withColumn("ck",
           Portable.md5Long(array_join(array_sort(Portable.tokenSet(col("text"))), " ")))
         .withColumn("keep_id", first_value(col("doc_id")).over(
@@ -210,7 +205,7 @@ object PipelineOps {
   val q81 = Q(
     "q81_dedup_incremental",
     (s, dir) => {
-      val keyed = docs(s, dir)
+      val keyed = Tables.docs(s, dir)
         .withColumn("ck",
           Portable.md5Long(array_join(array_sort(Portable.tokenSet(col("text"))), " ")))
         .withColumn("is_corpus",
@@ -252,7 +247,7 @@ object PipelineOps {
   val q78 = Q(
     "q78_stratified_sample",
     (s, dir) => {
-      docs(s, dir)
+      Tables.docs(s, dir)
         .withColumn("hk",
           Portable.md5Long(concat(lit("samp:"), col("doc_id").cast("string"))))
         .withColumn("rn", row_number().over(
@@ -453,7 +448,7 @@ object PipelineOps {
   val q99 = Q(
     "q99_corpus_report",
     (s, dir) => {
-      val d = docs(s, dir).withColumn("ck",
+      val d = Tables.docs(s, dir).withColumn("ck",
         Portable.md5Long(array_join(array_sort(Portable.tokenSet(col("text"))), " ")))
       val base = d.groupBy("source").agg(
         count(lit(1)).as("n_docs"),

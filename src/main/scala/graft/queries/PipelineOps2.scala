@@ -2,7 +2,6 @@ package graft.queries
 
 import graft.{Q, Tables}
 import graft.functions.Portable
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Round-3 pipeline-observability wave: feature standardization for
@@ -10,12 +9,6 @@ import org.apache.spark.sql.functions._
   * the gate-funnel telemetry every filtering pipeline reports.
   */
 object PipelineOps2 {
-
-  private def docs(s: SparkSession, dir: String): DataFrame =
-    Tables.docs(s, dir) // single-row-group spread, documented there
-
-  private def emb(s: SparkSession, dir: String): DataFrame =
-    Tables.t(s, dir, "embeddings").repartition(s.sparkContext.defaultParallelism)
 
   /** Feature standardization (z-scoring) of the embedding columns —
     * the normalization step in front of any distance-based model.
@@ -27,7 +20,7 @@ object PipelineOps2 {
   val q149 = Q(
     "q149_standardize_embeddings",
     (s, dir) => {
-      val feats = emb(s, dir)
+      val feats = Tables.emb(s, dir)
         .select(col("vec_id"), posexplode(col("embedding")))
         .toDF("vec_id", "pos0", "v")
         .select(col("vec_id"), (col("pos0") + 1).cast("long").as("pos"),
@@ -62,7 +55,7 @@ object PipelineOps2 {
   val q150 = Q(
     "q150_split_leakage",
     (s, dir) => {
-      val split = docs(s, dir)
+      val split = Tables.docs(s, dir)
         .withColumn("b",
           pmod(Portable.md5Long(concat(lit("split:"), col("doc_id").cast("string"))), lit(10)))
         .withColumn("h", Portable.md5Long(col("text")))
@@ -91,7 +84,7 @@ object PipelineOps2 {
   val q151 = Q(
     "q151_gate_funnel",
     (s, dir) => {
-      val flags = docs(s, dir)
+      val flags = Tables.docs(s, dir)
         .select(
           size(Portable.tokens(col("text"))).as("nt"),
           size(Portable.tokenSet(col("text"))).as("nd"),
@@ -140,7 +133,7 @@ object PipelineOps2 {
       val out = s"${System.getProperty("java.io.tmpdir")}/graft_export_" +
         java.lang.Integer.toHexString(dir.hashCode) + "_p" +
         ProcessHandle.current().pid()
-      graft.pipeline.TrainingExport.exportJsonl(docs(s, dir), out, shards = 8)
+      graft.pipeline.TrainingExport.exportJsonl(Tables.docs(s, dir), out, shards = 8)
     },
     Some(graft.pipeline.TrainingExport.manifestOracleSql("documents", shards = 8)))
 

@@ -34,7 +34,6 @@ object PipelineOps3 {
   val q217 = Q(
     "q217_release_manifest",
     (s, dir) => {
-      graft.functions.TextKernels.register(s)
       val base = Tables.docs(s, dir)
         .withColumn("split",
           when(pmod(Portable.md5Long(concat(lit("split:"), col("doc_id").cast("string"))),

@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.{Q, Tables}
 import graft.functions.{Portable => P}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** SURVEY.md §2.2 (filters/predicates), §2.3 (joins), §2.7 (set ops).
@@ -15,16 +15,13 @@ import org.apache.spark.sql.functions._
   */
 object Relational {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.t(s, dir, n)
-
   /** TPC-H Q1-shaped pricing summary: scan → filter → hash agg → sort.
     * Partial aggregation happens map-side; only 4 groups shuffle.
     */
   val q01 = Q(
     "q01_pricing_summary",
     (s, dir) => {
-      t(s, dir, "lineitem")
+      Tables.t(s, dir, "lineitem")
         .filter(col("l_shipdate") <= lit("1998-09-02").cast("timestamp"))
         .groupBy(col("l_returnflag"), col("l_linestatus"))
         // money aggregates accumulate in decimal (Portable.moneySum
@@ -57,7 +54,7 @@ object Relational {
   val q02 = Q(
     "q02_filter_predicates",
     (s, dir) => {
-      t(s, dir, "orders")
+      Tables.t(s, dir, "orders")
         .filter(
           (col("o_orderstatus").isin("O", "F") &&
             col("o_totalprice").between(1000.0, 250000.0) &&
@@ -83,8 +80,8 @@ object Relational {
   val q03 = Q(
     "q03_join_orders_customers",
     (s, dir) => {
-      t(s, dir, "orders")
-        .join(t(s, dir, "customer"), col("o_custkey") === col("c_custkey"))
+      Tables.t(s, dir, "orders")
+        .join(Tables.t(s, dir, "customer"), col("o_custkey") === col("c_custkey"))
         .groupBy("c_mktsegment")
         .agg(
           count(lit(1)).as("n_orders"),
@@ -107,11 +104,11 @@ object Relational {
   val q04 = Q(
     "q04_revenue_by_nation",
     (s, dir) => {
-      t(s, dir, "lineitem")
-        .join(t(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
-        .join(t(s, dir, "customer"), col("o_custkey") === col("c_custkey"))
-        .join(broadcast(t(s, dir, "nation")), col("c_nationkey") === col("n_nationkey"))
-        .join(broadcast(t(s, dir, "region")), col("n_regionkey") === col("r_regionkey"))
+      Tables.t(s, dir, "lineitem")
+        .join(Tables.t(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
+        .join(Tables.t(s, dir, "customer"), col("o_custkey") === col("c_custkey"))
+        .join(broadcast(Tables.t(s, dir, "nation")), col("c_nationkey") === col("n_nationkey"))
+        .join(broadcast(Tables.t(s, dir, "region")), col("n_regionkey") === col("r_regionkey"))
         .filter(
           col("r_name") === "ASIA" &&
             col("o_orderdate") >= lit("1996-01-01").cast("timestamp") &&
@@ -148,8 +145,8 @@ object Relational {
   val q05 = Q(
     "q05_left_join_customer_orders",
     (s, dir) => {
-      t(s, dir, "customer")
-        .join(t(s, dir, "orders"), col("c_custkey") === col("o_custkey"), "left_outer")
+      Tables.t(s, dir, "customer")
+        .join(Tables.t(s, dir, "orders"), col("c_custkey") === col("o_custkey"), "left_outer")
         .groupBy("c_custkey")
         .agg(
           count(col("o_orderkey")).as("n_orders"),
@@ -169,9 +166,9 @@ object Relational {
   val q06 = Q(
     "q06_full_outer_nation_counts",
     (s, dir) => {
-      val c = t(s, dir, "customer").groupBy(col("c_nationkey").as("ck"))
+      val c = Tables.t(s, dir, "customer").groupBy(col("c_nationkey").as("ck"))
         .agg(count(lit(1)).as("n_customers"))
-      val sup = t(s, dir, "supplier").groupBy(col("s_nationkey").as("sk"))
+      val sup = Tables.t(s, dir, "supplier").groupBy(col("s_nationkey").as("sk"))
         .agg(count(lit(1)).as("n_suppliers"))
       c.join(sup, col("ck") === col("sk"), "full_outer")
         .select(
@@ -190,8 +187,8 @@ object Relational {
   val q07 = Q(
     "q07_semi_join_parts_sold",
     (s, dir) => {
-      t(s, dir, "part")
-        .join(t(s, dir, "lineitem"), col("p_partkey") === col("l_partkey"), "left_semi")
+      Tables.t(s, dir, "part")
+        .join(Tables.t(s, dir, "lineitem"), col("p_partkey") === col("l_partkey"), "left_semi")
         .groupBy("p_brand")
         .agg(count(lit(1)).as("n_parts"))
         .orderBy("p_brand")
@@ -206,8 +203,8 @@ object Relational {
   val q08 = Q(
     "q08_anti_join_idle_customers",
     (s, dir) => {
-      t(s, dir, "customer")
-        .join(t(s, dir, "orders"), col("c_custkey") === col("o_custkey"), "left_anti")
+      Tables.t(s, dir, "customer")
+        .join(Tables.t(s, dir, "orders"), col("c_custkey") === col("o_custkey"), "left_anti")
         .groupBy("c_nationkey")
         .agg(count(lit(1)).as("n_idle"))
         .orderBy("c_nationkey")
@@ -222,8 +219,8 @@ object Relational {
   val q09 = Q(
     "q09_cross_join_regions",
     (s, dir) => {
-      val r1 = t(s, dir, "region").select(col("r_name").as("r1"))
-      val r2 = t(s, dir, "region").select(col("r_name").as("r2"))
+      val r1 = Tables.t(s, dir, "region").select(col("r_name").as("r1"))
+      val r2 = Tables.t(s, dir, "region").select(col("r_name").as("r2"))
       r1.crossJoin(r2).orderBy("r1", "r2")
     },
     Some("""SELECT a.r_name AS r1, b.r_name AS r2
@@ -234,9 +231,9 @@ object Relational {
   val q10 = Q(
     "q10_nonequi_nation_pairs",
     (s, dir) => {
-      val n1 = t(s, dir, "nation").select(
+      val n1 = Tables.t(s, dir, "nation").select(
         col("n_nationkey").as("k1"), col("n_regionkey").as("rk1"))
-      val n2 = t(s, dir, "nation").select(
+      val n2 = Tables.t(s, dir, "nation").select(
         col("n_nationkey").as("k2"), col("n_regionkey").as("rk2"))
       n1.join(n2, col("rk1") === col("rk2") && col("k1") < col("k2"))
         .groupBy(col("rk1").as("regionkey"))
@@ -253,9 +250,9 @@ object Relational {
   val q11 = Q(
     "q11_range_join_ship_lag",
     (s, dir) => {
-      t(s, dir, "lineitem")
+      Tables.t(s, dir, "lineitem")
         .join(
-          t(s, dir, "orders"),
+          Tables.t(s, dir, "orders"),
           col("l_orderkey") === col("o_orderkey") &&
             col("l_shipdate") >= col("o_orderdate") &&
             col("l_shipdate") <= col("o_orderdate") + expr("INTERVAL 90 DAYS"))
@@ -285,8 +282,8 @@ object Relational {
   val q12 = Q(
     "q12_set_operations",
     (s, dir) => {
-      val c = t(s, dir, "customer").select(col("c_nationkey").as("k"))
-      val sup = t(s, dir, "supplier").select(col("s_nationkey").as("k"))
+      val c = Tables.t(s, dir, "customer").select(col("c_nationkey").as("k"))
+      val sup = Tables.t(s, dir, "supplier").select(col("s_nationkey").as("k"))
       val u = c.union(sup).distinct().withColumn("op", lit("union"))
       val i = c.intersect(sup).withColumn("op", lit("intersect"))
       val e = c.except(sup).withColumn("op", lit("except"))

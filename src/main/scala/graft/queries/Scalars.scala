@@ -2,7 +2,6 @@ package graft.queries
 
 import graft.{Q, Tables}
 import graft.functions.Portable
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** SURVEY.md §2.8 — the scalar function library (HiveQL ∩ Spark),
@@ -15,13 +14,10 @@ import org.apache.spark.sql.functions._
   */
 object Scalars {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.t(s, dir, n)
-
   val q28 = Q(
     "q28_string_functions",
     (s, dir) => {
-      t(s, dir, "part")
+      Tables.t(s, dir, "part")
         .select(
           col("p_partkey"),
           upper(col("p_name")).as("uname"),
@@ -59,7 +55,7 @@ object Scalars {
   val q29 = Q(
     "q29_datetime_functions",
     (s, dir) => {
-      t(s, dir, "orders")
+      Tables.t(s, dir, "orders")
         .select(
           col("o_orderkey"),
           year(col("o_orderdate")).as("yr"),
@@ -95,7 +91,7 @@ object Scalars {
   val q30 = Q(
     "q30_math_functions",
     (s, dir) => {
-      t(s, dir, "lineitem")
+      Tables.t(s, dir, "lineitem")
         .filter(col("l_orderkey") < 1000)
         .select(
           col("l_orderkey"), col("l_linenumber"),
@@ -140,7 +136,7 @@ object Scalars {
   val q31 = Q(
     "q31_conditional_buckets",
     (s, dir) => {
-      t(s, dir, "orders")
+      Tables.t(s, dir, "orders")
         .withColumn("bucket",
           when(col("o_totalprice") < 50000, "small")
             .when(col("o_totalprice") < 150000, "medium")
@@ -169,7 +165,7 @@ object Scalars {
     "q32_json_extract_events",
     (s, dir) => {
       // events fixture is one unsplittable parquet file; spread before
-      // the per-row JSON parse (same note as TextOps.docs)
+      // the per-row JSON parse (same note as Tables.docs)
       Tables.events(s, dir).repartition(s.sparkContext.defaultParallelism)
         .withColumn("k", get_json_object(col("props"), "$.k").cast("int"))
         .groupBy("event_type")
@@ -194,7 +190,7 @@ object Scalars {
   val q33 = Q(
     "q33_hash_functions",
     (s, dir) => {
-      t(s, dir, "customer")
+      Tables.t(s, dir, "customer")
         .filter(col("c_custkey") <= 100)
         .select(
           col("c_custkey"),
@@ -218,7 +214,7 @@ object Scalars {
   val q96 = Q(
     "q96_regexp_extract_groups",
     (s, dir) => {
-      t(s, dir, "customer")
+      Tables.t(s, dir, "customer")
         .select(
           col("c_custkey"),
           regexp_extract(col("c_name"), "Customer#(\\d+)", 1).as("id_str"),
@@ -271,7 +267,7 @@ object Scalars {
       // weigh, and the sf-small file is a handful of row groups — so
       // the scan stage serializes the compute. Repartition the narrow
       // input BEFORE the kernels; the orderBy re-shuffles anyway.
-      t(s, dir, "orders")
+      Tables.t(s, dir, "orders")
         .select("o_orderkey", "o_orderpriority", "o_orderstatus",
           "o_totalprice", "o_orderdate")
         .repartition(s.sparkContext.defaultParallelism)

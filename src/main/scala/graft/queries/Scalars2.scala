@@ -153,7 +153,6 @@ object Scalars2 {
   val q175 = Q(
     "q175_pmi_collocations",
     (s, dir) => {
-      graft.functions.TextKernels.register(s)
       val ts = Tables.docs(s, dir)
         .select(col("doc_id"), Portable.tokens(col("text")).as("toks"))
         .filter(size(col("toks")) >= 2)

@@ -17,15 +17,9 @@ import org.apache.spark.sql.functions._
   */
 object SearchOps {
 
-  private def docs(s: SparkSession, dir: String): DataFrame =
-    Tables.docs(s, dir) // single-row-group spread, documented there
-
-  private def emb(s: SparkSession, dir: String): DataFrame =
-    Tables.t(s, dir, "embeddings").repartition(s.sparkContext.defaultParallelism)
-
   /** Non-distinct token stream: one row per token occurrence. */
   private def toks(s: SparkSession, dir: String): DataFrame =
-    docs(s, dir).select(col("doc_id"), col("lang"),
+    Tables.docs(s, dir).select(col("doc_id"), col("lang"),
       explode(Portable.tokens(col("text"))).as("tok"))
 
   private val toksSqlCte =
@@ -229,7 +223,7 @@ object SearchOps {
   val q132 = Q(
     "q132_int8_quant_recall",
     (s, dir) => {
-      val base = emb(s, dir)
+      val base = Tables.emb(s, dir)
         .withColumn("scale",
           greatest(array_max(col("embedding")), -array_min(col("embedding")))
             .cast("double") / 127.0)

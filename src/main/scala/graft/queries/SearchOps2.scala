@@ -48,8 +48,6 @@ object SearchOps2 {
   val q235 = Q(
     "q235_fused_retrieval_indexed",
     (s, dir) => {
-      graft.functions.SetOps.register(s)
-      graft.functions.TextKernels.register(s)
       val d = Tables.docs(s, dir)
         .join(Tables.emb(s, dir), col("doc_id") === col("vec_id"))
         .select(col("doc_id"), P.md5Sorted(P.tokenSet(col("text"))).as("th"),

@@ -24,9 +24,6 @@ import org.apache.spark.sql.functions._
   */
 object SearchOps3 {
 
-  private def emb(s: org.apache.spark.sql.SparkSession, dir: String) =
-    Tables.emb(s, dir)
-
   /** MaxSim token reshape (q263/q265): 64-dim embedding → 8 token
     * sub-vectors of 8 dims, with per-sub-vector norms.
     */
@@ -82,7 +79,7 @@ object SearchOps3 {
   val q244 = Q(
     "q244_nn_descent_round",
     (s, dir) => {
-      val vecs = emb(s, dir)
+      val vecs = Tables.emb(s, dir)
         .select(col("vec_id"), col("embedding"), V.norm("embedding").as("nrm"))
         .localCheckpoint(true) // seeds blocks, scoring, and ground truth
       val ranked = Dist.globalRank(
@@ -239,7 +236,7 @@ object SearchOps3 {
         (0 to 31).map(b =>
           when(element_at(c, b + off + 1) >= 0f, lit(1L << b)).otherwise(lit(0L)))
           .reduce(_ + _)
-      val vecs = emb(s, dir)
+      val vecs = Tables.emb(s, dir)
         .select(col("vec_id"), col("embedding"), V.norm("embedding").as("nrm"),
           word(col("embedding"), 0).as("w0"),
           word(col("embedding"), 32).as("w1"))
@@ -365,7 +362,7 @@ object SearchOps3 {
   val q254 = Q(
     "q254_nn_descent_converged",
     (s, dir) => {
-      val vecs = emb(s, dir)
+      val vecs = Tables.emb(s, dir)
         .select(col("vec_id"), col("embedding"), V.norm("embedding").as("nrm"))
         .localCheckpoint(true) // seeds blocks, scoring, and ground truth
       def blocks(salt: String): DataFrame =
@@ -567,7 +564,7 @@ object SearchOps3 {
       val dims = Seq(8, 16, 32, 64)
       def norms(pfx: String, c: String) = dims.map(d =>
         V.norm(s"slice($c, 1, $d)").as(s"${pfx}n$d"))
-      val vecs = emb(s, dir)
+      val vecs = Tables.emb(s, dir)
         .select(col("vec_id") +: col("embedding") +: norms("", "embedding"): _*)
         .localCheckpoint(true)
       val probes = vecs.filter(col("vec_id") < 40)
@@ -656,7 +653,7 @@ object SearchOps3 {
   val q263 = Q(
     "q263_late_interaction_maxsim",
     (s, dir) => {
-      val vecs = emb(s, dir).select("vec_id", "embedding")
+      val vecs = Tables.emb(s, dir).select("vec_id", "embedding")
         .localCheckpoint(true) // feeds tokens + the pooled audit
       val probeToks = maxsimToks(vecs.filter(col("vec_id") < 8),
         "query_id", "qt", "qsv", "qn")
@@ -789,7 +786,7 @@ object SearchOps3 {
   val q265 = Q(
     "q265_cascade_ann_maxsim",
     (s, dir) => {
-      val vecs = emb(s, dir).select(col("vec_id"), col("embedding"))
+      val vecs = Tables.emb(s, dir).select(col("vec_id"), col("embedding"))
         .localCheckpoint(true) // feeds token explode + audit
       val probeToks = maxsimToks(vecs.filter(col("vec_id") < 8),
         "query_id", "qt", "qsv", "qn")

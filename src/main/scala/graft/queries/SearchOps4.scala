@@ -43,7 +43,7 @@ object SearchOps4 {
       s: org.apache.spark.sql.SparkSession, dir: String) = {
     val byDist = Window.partitionBy("vec_id")
       .orderBy(col("d2"), col("clabel"))
-    VectorOps.emb(s, dir)
+    Tables.emb(s, dir)
       .join(Tables.docs(s, dir).select(col("doc_id"), col("lang")),
         col("doc_id") === col("vec_id"))
       .crossJoin(broadcast(VectorOps.centroidVectors(s, dir)))

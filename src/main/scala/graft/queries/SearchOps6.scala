@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.Q
+import graft.{Q, Tables}
 import graft.functions.{VectorFunctions => V}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -42,7 +42,7 @@ object SearchOps6 {
   val q284 = Q(
     "q284_knn_distance_outliers",
     (s, dir) => {
-      val assigned = graft.pipeline.SemDeDup.cellAssign(VectorOps.emb(s, dir))
+      val assigned = graft.pipeline.SemDeDup.cellAssign(Tables.emb(s, dir))
         .select("vec_id", "cell", "embedding")
         .localCheckpoint(true) // read as BOTH self-join sides
       val a = assigned.select(col("vec_id").as("va"), col("cell"),

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.Q
+import graft.{Q, Tables}
 import graft.functions.{Portable, VectorFunctions => V}
 import org.apache.spark.sql.functions._
 
@@ -54,7 +54,7 @@ object SearchOps7 {
     */
   private[queries] def probed(s: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame =
-    graft.pipeline.SemDeDup.cellProbes(VectorOps.emb(s, dir), EvalProbes)
+    graft.pipeline.SemDeDup.cellProbes(Tables.emb(s, dir), EvalProbes)
       .localCheckpoint(true)
 
   /** The shared-quantizer assignment CTE for the q287 and q292

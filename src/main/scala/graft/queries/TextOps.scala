@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.{Q, Tables}
 import graft.functions.Portable
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -20,14 +20,11 @@ import org.apache.spark.sql.functions._
   */
 object TextOps {
 
-  private def docs(s: SparkSession, dir: String): DataFrame =
-    Tables.docs(s, dir)
-
   /** L1 exact dedup by content hash: one shuffle on sha256(text). */
   val q39 = Q(
     "q39_dedup_exact",
     (s, dir) => {
-      docs(s, dir)
+      Tables.docs(s, dir)
         .groupBy(sha2(col("text"), 256).as("content_hash"))
         .agg(min("doc_id").as("keep_id"), count(lit(1)).as("n_copies"))
         .orderBy("keep_id")
@@ -88,9 +85,7 @@ object TextOps {
   val q40 = Q(
     "q40_dedup_jaccard_blocked",
     (s, dir) => {
-      graft.functions.Md5Long60.register(s)
-      graft.functions.SetOps.register(s)
-      val ex = docs(s, dir)
+      val ex = Tables.docs(s, dir)
         .select(col("doc_id"), blockKey.as("bk"),
           Portable.md5Sorted(Portable.tokenSet(col("text"))).as("toks"))
         .withColumn("n", size(col("toks")))
@@ -130,14 +125,12 @@ object TextOps {
   val q41 = Q(
     "q41_dedup_minhash_lsh",
     (s, dir) => {
-      graft.functions.Md5Long60.register(s)
-      graft.functions.SetOps.register(s)
       // toks/toksH/sigs pinned (r10): each is read along two branches
       // (signature self-join sides, candidate verify endpoints) and
       // unpinned the regex tokenization ran 4× and the per-token
       // MinHash twice — the q209/q228 recompute pattern; all three
       // frames are Θ(docs) rows of ids/hashes
-      val toks = docs(s, dir).filter(col("lang") === "en")
+      val toks = Tables.docs(s, dir).filter(col("lang") === "en")
         .select(col("doc_id"), Portable.tokenSet(col("text")).as("toks"))
         .localCheckpoint(true)
       // verify-side token sets as SORTED 60-bit hashes: set sizes
@@ -157,7 +150,6 @@ object TextOps {
       // Buckets are band-prefixed hashes of the same "b|seed:minh,…"
       // strings the oracle sorts and concatenates, so equality on the
       // bucket value alone IS the (band, signature) match.
-      graft.functions.MinHashBands.register(s)
       val sigs = toks
         .select(col("doc_id"), explode(expr("minhash_bands(toks, 2, 8)")).as("sig"))
         .localCheckpoint(true)
@@ -212,8 +204,7 @@ object TextOps {
       // one codegen'd [[SimHash32]] pass per doc: the exploded
       // formulation shuffles |docs|×|toks|×32 vote rows through two
       // aggregations for what is per-row integer math
-      graft.functions.SimHash32.register(s)
-      val sim = docs(s, dir).filter(col("lang") === "de")
+      val sim = Tables.docs(s, dir).filter(col("lang") === "de")
         .select(col("doc_id"), Portable.tokenSet(col("text")).as("toks"))
         .filter(size(col("toks")) >= 1) // exploded form emits no row for token-free docs
         .select(col("doc_id"), expr("simhash32(toks)").as("simhash"))
@@ -274,8 +265,7 @@ object TextOps {
       // positional element_at in a lambda, which re-evaluates the
       // source array per element) — distinct fixed-width longs, never
       // materialising the bigram strings.
-      graft.functions.TextKernels.register(s)
-      val ex = docs(s, dir)
+      val ex = Tables.docs(s, dir)
         .select(col("doc_id"), blockKey.as("bk"),
           Portable.tokens(col("text")).as("toks"))
         .filter(size(col("toks")) >= 2)
@@ -308,7 +298,7 @@ object TextOps {
   val q44 = Q(
     "q44_token_stats_by_lang",
     (s, dir) => {
-      docs(s, dir)
+      Tables.docs(s, dir)
         // tokenize once; the distinct count derives from the same array
         // (tokens() is two regex passes per call — don't pay it twice)
         .withColumn("toks", Portable.tokens(col("text")))
@@ -348,9 +338,7 @@ object TextOps {
   val q45 = Q(
     "q45_lang_id_profile",
     (s, dir) => {
-      graft.functions.Md5Long60.register(s)
-      graft.functions.SetOps.register(s)
-      val d = docs(s, dir)
+      val d = Tables.docs(s, dir)
       // learn per-language top-20 profiles from ONE exploded pass,
       // collapsed to 5 sorted hash arrays
       val profiles = d
@@ -415,7 +403,7 @@ object TextOps {
   val q46 = Q(
     "q46_quality_score",
     (s, dir) => {
-      val toksDf = docs(s, dir).select(col("doc_id"),
+      val toksDf = Tables.docs(s, dir).select(col("doc_id"),
         Portable.tokens(col("text")).as("toks"))
       // global top-10 via sort+limit (TakeOrderedAndProject: per-
       // partition heaps + a 10-row driver merge), never a partition-
@@ -485,8 +473,7 @@ object TextOps {
       // ([[graft.functions.ShingleFingerprint]]): the exploded form
       // shuffles |corpus chars| rows through a groupBy for what a
       // single text scan computes
-      graft.functions.TextKernels.register(s)
-      docs(s, dir)
+      Tables.docs(s, dir)
         .filter(length(col("text")) >= 8)
         .select(col("doc_id"), expr("shingle_fingerprint(text, 8)").as("fp"))
         .select(col("doc_id"),

@@ -18,18 +18,11 @@ import org.apache.spark.sql.functions._
   */
 object VectorOps {
 
-  /** Single-row-group fixture file → unsplittable scan; repartition
-    * so the 64-wide posexplode/dot-product pipelines use every core
-    * (see the same note in TextOps.docs).
-    */
-  private[queries] def emb(s: SparkSession, dir: String): DataFrame =
-    Tables.t(s, dir, "embeddings").repartition(s.sparkContext.defaultParallelism)
-
   /** Per-label centroid vectors as rounded arrays (shared by q50 and
     * q66; q49 keeps the long format as its output contract).
     */
   private[queries] def centroidVectors(s: SparkSession, dir: String): DataFrame =
-    emb(s, dir)
+    Tables.emb(s, dir)
       .select(col("label"), posexplode(col("embedding")))
       .toDF("label", "pos0", "v")
       .groupBy(col("label").as("clabel"), (col("pos0") + 1).as("pos"))
@@ -57,7 +50,7 @@ object VectorOps {
   val q48 = Q(
     "q48_cosine_topk_bruteforce",
     (s, dir) => {
-      val wn = emb(s, dir)
+      val wn = Tables.emb(s, dir)
         .withColumn("nrm", V.norm("embedding"))
       val qs = wn.filter(col("vec_id") < 20).select(
         col("vec_id").as("query_id"), col("embedding").as("qe"), col("nrm").as("qn"))
@@ -87,7 +80,7 @@ object VectorOps {
   val q49 = Q(
     "q49_label_centroids",
     (s, dir) => {
-      emb(s, dir)
+      Tables.emb(s, dir)
         .select(col("label"), posexplode(col("embedding")))
         .toDF("label", "pos0", "v")
         .groupBy(col("label"), (col("pos0") + 1).as("pos"))
@@ -111,7 +104,7 @@ object VectorOps {
   val q50 = Q(
     "q50_nearest_centroid_confusion",
     (s, dir) => {
-      emb(s, dir).crossJoin(broadcast(centroidVectors(s, dir)))
+      Tables.emb(s, dir).crossJoin(broadcast(centroidVectors(s, dir)))
         .withColumn("d2", round(V.dist2("embedding", "cvec"), 6))
         .groupBy("vec_id", "label")
         .agg(min(struct(col("d2"), col("clabel"))).as("best"))
@@ -183,7 +176,7 @@ object VectorOps {
   val q51 = Q(
     "q51_ann_lsh_hyperplane",
     (s, dir) => {
-      val wn = emb(s, dir)
+      val wn = Tables.emb(s, dir)
         .withColumn("nrm", V.norm("embedding"))
         .withColumn("bucket", hyperplaneBucket("embedding"))
       val qs = wn.filter(col("vec_id") < 20).select(
@@ -219,7 +212,7 @@ object VectorOps {
     "q52_multimodal_join",
     (s, dir) => {
       Tables.t(s, dir, "documents")
-        .join(emb(s, dir), col("doc_id") === col("vec_id"))
+        .join(Tables.emb(s, dir), col("doc_id") === col("vec_id"))
         .select(
           col("doc_id"), col("lang"), col("source"), col("n_chars"), col("label"),
           round(V.norm("embedding"), 6).as("emb_norm"),
@@ -243,7 +236,7 @@ object VectorOps {
     (s, dir) => {
       // same map-side argmin as q50: (d2, clabel) decides before the
       // embedding field is ever compared (clabel is unique per cell)
-      val assigned = emb(s, dir).crossJoin(broadcast(centroidVectors(s, dir)))
+      val assigned = Tables.emb(s, dir).crossJoin(broadcast(centroidVectors(s, dir)))
         .withColumn("d2", round(V.dist2("embedding", "cvec"), 6))
         .groupBy("vec_id")
         .agg(min(struct(col("d2"), col("clabel"), col("embedding"))).as("best"))
@@ -301,7 +294,7 @@ object VectorOps {
   val q67 = Q(
     "q67_dedup_embedding_blocked",
     (s, dir) => {
-      val wn = emb(s, dir).withColumn("nrm", V.norm("embedding"))
+      val wn = Tables.emb(s, dir).withColumn("nrm", V.norm("embedding"))
       wn.select(col("vec_id").as("va"), col("label").as("la"),
           col("embedding").as("ea"), col("nrm").as("na"))
         .join(wn.select(col("vec_id").as("vb"), col("label").as("lb"),
@@ -342,7 +335,7 @@ object VectorOps {
   val q139 = Q(
     "q139_semdedup_cells",
     (s, dir) => {
-      val assigned = emb(s, dir).crossJoin(broadcast(centroidVectors(s, dir)))
+      val assigned = Tables.emb(s, dir).crossJoin(broadcast(centroidVectors(s, dir)))
         .withColumn("d2", round(V.dist2("embedding", "cvec"), 6))
         .groupBy("vec_id")
         .agg(min(struct(col("d2"), col("clabel"), col("embedding"))).as("best"))
@@ -407,7 +400,7 @@ object VectorOps {
       // without the checkpoint each one re-runs the n×k assignment
       // window AND the centroid aggregation (measured ~2× the whole
       // query's cost at sf0.1)
-      val ranked = emb(s, dir).crossJoin(broadcast(centroidVectors(s, dir)))
+      val ranked = Tables.emb(s, dir).crossJoin(broadcast(centroidVectors(s, dir)))
         .withColumn("d2", round(V.dist2("embedding", "cvec"), 6))
         .withColumn("crn", row_number().over(byDist))
         .filter(col("crn") <= 2)
@@ -520,7 +513,7 @@ object VectorOps {
     "q180_semdedup_scaled",
     (s, dir) =>
       graft.pipeline.SemDeDup.dedupReport(
-        graft.pipeline.SemDeDup.cellAssign(emb(s, dir)), 0.35),
+        graft.pipeline.SemDeDup.cellAssign(Tables.emb(s, dir)), 0.35),
     Some(s"""WITH st AS (
       |  SELECT greatest(16, CAST(ceil(sqrt(count(*))) AS BIGINT)) AS step
       |  FROM embeddings),
@@ -563,7 +556,7 @@ object VectorOps {
   val q181 = Q(
     "q181_semdedup_2level",
     (s, dir) => {
-      val e = emb(s, dir)
+      val e = Tables.emb(s, dir)
       graft.pipeline.SemDeDup.dedupReport(
         graft.pipeline.SemDeDup.cellAssignTwoLevel(
           e, graft.pipeline.SemDeDup.steps(e)), 0.35)

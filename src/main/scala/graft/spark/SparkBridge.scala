@@ -11,16 +11,6 @@ object GraftSqlBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
 
-  /** Apply a SparkSessionExtensions' injected functions to a live
-    * session's registry (the hook sessions run at creation; exposed
-    * so specs can exercise the injection path without a fresh JVM).
-    */
-  def registerInjectedFunctions(
-      ext: SparkSessionExtensions, spark: SparkSession): Unit =
-    ext.registerFunctions(
-      spark.sessionState.functionRegistry.asInstanceOf[
-        org.apache.spark.sql.catalyst.analysis.FunctionRegistry])
-
   /** Block until every event posted so far has reached every
     * SparkListener, so a listener read right after an action sees that
     * action's job-end events.

@@ -302,7 +302,6 @@ object EventStreams {
     */
   def docBandWinners(
       spark: SparkSession, dir: String, queryName: String): DataFrame = {
-    graft.functions.MinHashBands.register(spark)
     val sigs = parquetStream(spark, dir, "documents.parquet")
       .select(col("doc_id"), P.tokenSet(col("text")).as("toks"))
       .filter(size(col("toks")) >= 1)

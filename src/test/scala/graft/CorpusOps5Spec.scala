@@ -7,7 +7,6 @@ class CorpusOps5Spec extends SparkSpec {
 
   /** Chunk-hash multiset of one text via the production CDC kernel. */
   private def cdcHashes(text: String): Seq[Long] = {
-    functions.Md5Long60.register(spark)
     Seq(text).toDF("text")
       .select(functions.Portable.tokens(col("text")).as("toks"))
       .withColumn("bnds", expr(queries.CorpusOps5.cdcBoundsExpr("toks")))
@@ -18,7 +17,6 @@ class CorpusOps5Spec extends SparkSpec {
 
   /** q74-style fixed-stride chunk hashes (50-token windows, stride 40). */
   private def fixedHashes(text: String): Seq[Long] = {
-    functions.Md5Long60.register(spark)
     Seq(text).toDF("text")
       .select(functions.Portable.tokens(col("text")).as("toks"))
       .withColumn("nt", size(col("toks")))

@@ -48,7 +48,6 @@ class CurationOps2Spec extends SparkSpec {
       .map(r => (r.getLong(0), (r.getLong(1), r.getLong(2)))).toMap
     // independent path: materialize the anchored windows via
     // higher-order functions (no kernel), then the same >=2-doc count
-    graft.functions.Md5Long60.register(spark)
     val sh = Tables.docs(spark, sf())
       .filter(length(col("text")) >= 40)
       .select(col("doc_id"), explode(expr(
@@ -66,7 +65,6 @@ class CurationOps2Spec extends SparkSpec {
   test("q193 streaming election equals the batch election") {
     val streamed = Q.byName("q193_stream_neardup_filter").fn(spark, sf())
       .collect().map(r => (r.getLong(0), r.getInt(r.fieldIndex("kept")))).toMap
-    graft.functions.MinHashBands.register(spark)
     val sigs = Tables.docs(spark, sf())
       .select(col("doc_id"), graft.functions.Portable.tokenSet(col("text")).as("toks"))
       .filter(size(col("toks")) >= 1)
@@ -83,7 +81,6 @@ class CurationOps2Spec extends SparkSpec {
   }
 
   test("jl_project kernel equals the folded Column formulation") {
-    graft.functions.JlProject.register(spark)
     def sgn(i: Int, j: Int): Double =
       if (graft.functions.Md5Long60.hashBytes(s"jl:$i:$j".getBytes("US-ASCII")) % 2 == 0) 1.0
       else -1.0

@@ -110,7 +110,6 @@ class GraphOps2Spec extends SparkSpec {
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
     // full recompute on the union graph, through the SAME engine CC
-    graft.functions.MinHashBands.register(spark)
     val db = Tables.docs(spark, sf())
       .select(col("doc_id"),
         graft.functions.Portable.tokenSet(col("text")).as("toks"))
@@ -162,7 +161,6 @@ class GraphOps2Spec extends SparkSpec {
   test("q264 delete-aware maintenance == full engine CC over survivors") {
     val inc = Q.byName("q264_cc_delete_maintenance").fn(spark, sf())
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2)))
-    graft.functions.MinHashBands.register(spark)
     val db = Tables.docs(spark, sf())
       .select(col("doc_id"),
         graft.functions.Portable.tokenSet(col("text")).as("toks"))

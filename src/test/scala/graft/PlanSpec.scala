@@ -204,8 +204,6 @@ class PlanSpec extends SparkSpec {
     // checkpoint plan; the sigProbe here additionally pins the
     // directly-built tokenSet→minhash_bands pipeline, and q42's
     // simhash stays pinned through the full query.
-    graft.functions.Md5Long60.register(spark)
-    graft.functions.MinHashBands.register(spark)
     val sigProbe = Tables.docs(spark, sf()).filter(col("lang") === "en")
       .select(col("doc_id"),
         graft.functions.Portable.tokenSet(col("text")).as("toks"))

@@ -108,7 +108,6 @@ class Round12Spec extends SparkSpec {
     val out = Q.byName("q289_dedup_survivorship").fn(spark, sf()).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getString(3),
         r.getLong(4), r.getLong(5), r.getString(6)))
-    graft.functions.MinHashBands.register(spark)
     val db = Tables.docs(spark, sf())
       .select(col("doc_id"), col("source"), col("n_chars").cast("long").as("n_chars"),
         graft.functions.Portable.tokenSet(col("text")).as("toks"))

@@ -138,7 +138,6 @@ class Round13Spec extends SparkSpec {
   }
 
   test("q295 admission equals a driver replay over the band signatures") {
-    graft.functions.MinHashBands.register(spark)
     val sigs = Tables.docs(spark, sf())
       .select(col("doc_id"), graft.functions.Portable.tokenSet(col("text")).as("toks"))
       .filter(size(col("toks")) >= 1)

@@ -1,6 +1,5 @@
 package graft
 
-import graft.functions.{Md5Long60, SetOps}
 import org.apache.spark.sql.functions._
 
 /** The codegen'd merge-scan intersection count must equal the
@@ -9,8 +8,6 @@ import org.apache.spark.sql.functions._
 class SetOpsSpec extends SparkSpec {
 
   test("sorted_intersect_count equals size(array_intersect) on doc pairs") {
-    Md5Long60.register(spark)
-    SetOps.register(spark)
     val t = Tables.t(spark, sf(), "documents")
       .select(col("doc_id"),
         expr("array_sort(transform(array_distinct(filter(split(text, '\\\\s+'), x -> length(x) > 0)), t -> md5long60(t)))").as("toks"))
@@ -27,7 +24,6 @@ class SetOpsSpec extends SparkSpec {
 
   test("edge cases: empty, disjoint, identical") {
     import spark.implicits._
-    SetOps.register(spark)
     val rows = Seq(
       (Array.empty[Long], Array(1L, 2L), 0),
       (Array(1L, 3L, 5L), Array(2L, 4L, 6L), 0),

@@ -1,6 +1,5 @@
 package graft
 
-import graft.functions.VecMath
 import org.apache.spark.sql.functions._
 
 /** The codegen'd VecDot/VecDist2 expressions must be bit-identical to
@@ -9,10 +8,7 @@ import org.apache.spark.sql.functions._
   */
 class VecMathSpec extends SparkSpec {
 
-  private lazy val emb = {
-    VecMath.register(spark)
-    Tables.t(spark, sf(), "embeddings")
-  }
+  private lazy val emb = Tables.t(spark, sf(), "embeddings")
 
   test("vecdot is bit-identical to the aggregate(zip_with) fold") {
     val mismatches = emb
@@ -44,7 +40,6 @@ class VecMathSpec extends SparkSpec {
 
   test("mixed float/double inputs and empty arrays") {
     import spark.implicits._
-    VecMath.register(spark)
     val df = Seq(
       (Array(1.0f, 2.0f, 3.0f), Array(0.5, 0.25, 2.0)),
       (Array.empty[Float], Array.empty[Double]))
@@ -56,7 +51,6 @@ class VecMathSpec extends SparkSpec {
   }
 
   test("vecdot rejects non-array inputs at analysis time") {
-    VecMath.register(spark)
     intercept[Exception] {
       spark.sql("SELECT vecdot('a', 'b')").collect()
     }
