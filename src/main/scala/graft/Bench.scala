@@ -12,7 +12,8 @@ import org.apache.spark.sql.functions._
   * query, not the first-run tax; queries run in sorted name order for
   * stable attribution; results are materialized through the noop sink
   * so sorts/projections are NOT optimized away the way a bare count()
-  * would allow.
+  * would allow. Each run goes through [[Q.run]], which releases the
+  * query's pins after the timer stops; nothing clears the session.
   */
 object Bench {
 
@@ -92,35 +93,40 @@ object Bench {
     * @ 256k vs 37.7 s @ 1m, tight spreads) — hence the clamp to
     * Spark's default at ≥64 MB of input. An input that cannot be
     * sized (missing or unreadable) gets Spark's default too, never the
-    * small floor. Env-overridable (SPARK_GRAFT_MIN_COALESCE) for A/B.
+    * small floor.
     */
-  def coalesceFloor(sfDir: String): String =
-    sys.env.getOrElse("SPARK_GRAFT_MIN_COALESCE", {
-      val bytes =
-        try {
-          val d = new java.io.File(sfDir)
-          def size(f: java.io.File): Long =
-            if (f.isDirectory) f.listFiles().map(size).sum else f.length()
-          if (d.exists) size(d) else Long.MaxValue
-        } catch { case _: Exception => Long.MaxValue }
-      math.min(math.max(bytes / 64, 65536L), 1048576L).toString
-    })
+  def coalesceFloor(sfDir: String): String = {
+    val bytes =
+      try {
+        val d = new java.io.File(sfDir)
+        def size(f: java.io.File): Long =
+          if (f.isDirectory) f.listFiles().map(size).sum else f.length()
+        if (d.exists) size(d) else Long.MaxValue
+      } catch { case _: Exception => Long.MaxValue }
+    math.min(math.max(bytes / 64, 65536L), 1048576L).toString
+  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = Session.builder(sfDir).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    def materialize(name: String): Unit =
-      SparkEntry.queries(name)(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
+    // build and write inside the timer: eager queries (the CC loop,
+    // the streaming twins) do their work while they are built
+    def timed(name: String): Double = {
+      val t0 = System.nanoTime()
+      Q.byName(name).run(spark, sfDir) { df =>
+        df.write.format("noop").mode("overwrite").save()
+        (System.nanoTime() - t0) / 1e9
+      }
+    }
 
     // Warmup: touch every fixture file + run one representative query.
     // Guarded: a broken fixture must not prevent the contract JSON
     // line from being printed.
     try {
       Tables.all.foreach(n => Tables.t(spark, sfDir, n).count())
-      materialize("q01_pricing_summary")
+      timed("q01_pricing_summary")
     } catch { case e: Throwable =>
       System.err.println(s"[bench] warmup failed: ${e.getMessage}")
     }
@@ -144,15 +150,15 @@ object Bench {
     val failed = scala.collection.mutable.LinkedHashSet.empty[String]
     val results = names.map { name =>
       val times = (1 to runs).map { _ =>
-        // outside the timed region: block bookkeeping isn't query cost
-        Session.releasePins(spark)
-        val t0 = System.nanoTime()
-        try materialize(name)
+        // the time stops when the write ends, so the release of the
+        // query's pins by Q.run falls outside it: block bookkeeping
+        // isn't query cost
+        try timed(name)
         catch { case e: Throwable =>
           if (failed.add(name))
             System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
+          -1.0
         }
-        (System.nanoTime() - t0) / 1e9
       }
       // -1 sentinel: a crashed query must not report its (near-zero)
       // failure time as if it ran.

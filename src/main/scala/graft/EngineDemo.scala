@@ -95,7 +95,7 @@ object EngineDemo {
     // 7. streaming: sliding windows over the events fixture, run to
     //    completion through a real MicroBatchExecution
     val sliding = graft.streaming.EventStreams
-      .slidingCounts(spark, "/root/testdata/sf0.001", "demo_sliding")
+      .slidingCounts(spark, "/root/testdata/sf0.001")
     println(s"[demo] streaming sliding windows=${sliding.count()}")
 
     // 8. skew-safe aggregation

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.SparkContext
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
+import org.apache.spark.sql.{GraftSqlBridge, SparkSession}
 import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import scala.collection.mutable
@@ -27,8 +27,8 @@ object Profile {
     try run(spark, args.toSeq, sfDir) finally spark.stop()
   }
 
-  /** Profile on a caller's session; after each query it releases
-    * every pin in the session ([[Session.releasePins]]).
+  /** Profile on a caller's session. Every run goes through [[Q.run]],
+    * so each leaves the session as it found it.
     */
   def run(spark: SparkSession, args: Seq[String], sfDir: String): Unit = {
     val explain = args.contains("--explain")
@@ -42,14 +42,15 @@ object Profile {
     }.getOrElse(2)
     val names0 = args.filterNot(_.startsWith("--"))
     val names = if (names0.nonEmpty) names0 else Q.registry.map(_.name).sorted
-    def build(name: String): DataFrame = Q.byName(name).fn(spark, sfDir)
     // build INSIDE the timer: eager queries (the CC loop, the
     // streaming twins) do their work during construction, so timing
     // only the final write would understate them wildly
     def timed(name: String): Double = {
       val t0 = System.nanoTime()
-      build(name).write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
+      Q.byName(name).run(spark, sfDir) { df =>
+        df.write.format("noop").mode("overwrite").save()
+        (System.nanoTime() - t0) / 1e9
+      }
     }
 
     Tables.all.foreach(n => Tables.t(spark, sfDir, n).count())
@@ -58,7 +59,6 @@ object Profile {
     names.foreach { name =>
       val jobs = new JobLog
       val ts = (1 to runs).map { i =>
-        Session.releasePins(spark)
         val t = if (i < runs) timed(name) else jobs.during(spark.sparkContext)(timed(name))
         println(f"[prof] $name run$i: $t%.2f s")
         t
@@ -66,9 +66,8 @@ object Profile {
       jobs.print(name, ts.last)
       if (runs > 2)
         println(f"[prof] $name best(after-warm)=${ts.drop(1).min}%.3f s")
-      if (explain) {
-        Session.releasePins(spark)
-        val qe = build(name).queryExecution
+      if (explain) Q.byName(name).run(spark, sfDir) { df =>
+        val qe = df.queryExecution
         SQLExecution.withNewExecutionId(qe, Some(name))(qe.toRdd.foreach(_ => ()))
         println(s"==== $name AQE-final plan @ $sfDir ====")
         println(qe.executedPlan match {
@@ -76,7 +75,6 @@ object Profile {
           case p                        => p.toString
         })
       }
-      Session.releasePins(spark)
     }
   }
 

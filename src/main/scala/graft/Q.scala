@@ -16,6 +16,16 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * ([[graft.plans.GraftExtensions.kernels]]) by name: [[fn]] registers
   * the table on the session it is given before building, so a query
   * runs on any session, with or without the extension.
+  *
+  * A query owns what it makes. Run it through [[run]]: the frame is
+  * built and consumed inside one [[Pins.scoped]] scope, which releases
+  * every pin the query made, on any thread it started. SQL-text queries
+  * bind fixture tables inside their plan ([[Tables.sql]]) and streaming
+  * queries drop their sinks ([[graft.streaming.EventStreams]]), so a run
+  * leaves no persisted RDD, temp view or conf change on the session,
+  * and two clients can run queries on one session at once. [[fn]] alone
+  * builds the frame with no scope: its pins live until the caller drops
+  * them.
   */
 final case class Q(
     name: String,
@@ -29,6 +39,12 @@ final case class Q(
     graft.plans.GraftExtensions.register(spark)
     build(spark, dir)
   }
+
+  /** Build the query over `dir`, hand the frame to `consume`, then
+    * release every pin the query made, also when either step throws.
+    */
+  def run[T](spark: SparkSession, dir: String)(consume: DataFrame => T): T =
+    Pins.scoped(spark)(consume(fn(spark, dir)))
 }
 
 object Q {

@@ -8,6 +8,10 @@ import org.apache.spark.sql.SparkSession
   * coalescing floor ([[Bench.coalesceFloor]]). It returns a builder so
   * a caller can add what only it needs (Hive support, extensions, a
   * warehouse dir) before `getOrCreate()`.
+  *
+  * A harness that runs registry queries one after another on one
+  * session runs each through [[Q.run]], which releases the query's pins
+  * when it ends: nothing here, or in the harness, clears the session.
   */
 object Session {
 
@@ -25,15 +29,4 @@ object Session {
       .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
         Bench.coalesceFloor(inputDir))
       .config("spark.ui.enabled", "false")
-
-  /** Drop every cached plan and persisted RDD (cache + localCheckpoint
-    * pins). Registry queries are self-contained, so a harness that runs
-    * them one after another calls this between them: otherwise earlier
-    * queries' blocks squeeze later queries' execution memory (q142
-    * OOM'd mid-sweep at sf10 before this).
-    */
-  def releasePins(spark: SparkSession): Unit = {
-    spark.sharedState.cacheManager.clearCache()
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-  }
 }

@@ -1,5 +1,7 @@
 package graft
 
+import java.util.Locale
+
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
@@ -8,6 +10,8 @@ import org.apache.parquet.hadoop.Footer
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.schema.{LogicalTypeAnnotation, Type}
 import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
+import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, SubqueryAlias, UnresolvedWith}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFooterReader
 import org.apache.spark.sql.functions.expr
 import org.apache.spark.sql.internal.SQLConf
@@ -179,9 +183,27 @@ object Tables {
     t(spark, dir, "embeddings")
       .repartition(spark.sparkContext.defaultParallelism)
 
-  /** Register every fixture table as a temp view (for spark.sql paths).
-    * Idempotent and metadata-only — no data is read until a query runs.
+  /** SQL `text` over the fixture tables of `dir`, with nothing
+    * registered on the session. Each one-part table name in the text
+    * that names a fixture table, in the query, its CTEs and its
+    * subqueries, is bound to that table's frame ([[t]]) under an alias
+    * of its name, which is how the analyzer expands a temp view; so the
+    * plan is the one a view over the frame gives. Two callers on one
+    * session can read different fixture directories at once. A CTE may
+    * not take a fixture table's name.
     */
-  def registerAll(spark: SparkSession, dir: String): Unit =
-    all.foreach(n => t(spark, dir, n).createOrReplaceTempView(n))
+  def sql(spark: SparkSession, dir: String, text: String): DataFrame =
+    GraftSqlBridge.sql(spark, text)(bindFixtures(spark, dir))
+
+  private def bindFixtures(spark: SparkSession, dir: String)(plan: LogicalPlan): LogicalPlan =
+    plan.transformUpWithSubqueries {
+      case UnresolvedRelation(Seq(name), _, _) if all.contains(name.toLowerCase(Locale.ROOT)) =>
+        val table = name.toLowerCase(Locale.ROOT)
+        SubqueryAlias(table, t(spark, dir, table).queryExecution.analyzed)
+      case w: UnresolvedWith =>
+        w.cteRelations.map(_._1).find(n => all.contains(n.toLowerCase(Locale.ROOT)))
+          .foreach(n => throw new IllegalArgumentException(s"CTE $n shadows a fixture table"))
+        w.copy(cteRelations = w.cteRelations.map(c =>
+          c.copy(_2 = bindFixtures(spark, dir)(c._2).asInstanceOf[SubqueryAlias])))
+    }
 }

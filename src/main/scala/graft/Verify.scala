@@ -1,7 +1,9 @@
 package graft
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Driver-run correctness dump: each registry query's result → parquet,
+  * plus oracle_sql.json, for the driver's DuckDB compare. Each query
+  * runs through [[Q.run]], so its pins are gone before the next starts.
+  */
 object Verify {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
@@ -12,15 +14,12 @@ object Verify {
     val spark = Session.builder(sfDir).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+    Q.registry.filter(q => only.forall(_.contains(q.name))).foreach { q =>
+      try q.run(spark, sfDir)(_.coalesce(1).write.mode("overwrite")
+        .parquet(s"$outDir/${q.name}"))
       catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        System.err.println(s"[verify] ${q.name} failed: ${e.getMessage}")
       }
-      Session.releasePins(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

@@ -3,6 +3,7 @@ package graft.functions
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.PinOps
 
 /** Distributed order-statistics helpers.
   *
@@ -88,7 +89,7 @@ object Dist {
     require(buckets >= 1 && values.nonEmpty)
     val ranged = df.repartitionByRange(buckets, order: _*)
       .withColumn("__pid", spark_partition_id())
-      .localCheckpoint(true)
+      .pin
     // coalesce: a bucket whose values are all NULL sums to NULL and
     // would NPE the driver-side getLong below
     val aggs = values.map(v => coalesce(sum(col(v)), lit(0L)).as(v))
@@ -144,7 +145,7 @@ object Dist {
     require(buckets >= 1)
     val ranged = df.repartitionByRange(buckets, order: _*)
       .withColumn("__pid", org.apache.spark.sql.functions.spark_partition_id())
-      .localCheckpoint(true)
+      .pin
     val counts = ranged.groupBy("__pid").count().collect()
       .map(r => r.getInt(0) -> r.getLong(1))
       .sortBy(_._1)

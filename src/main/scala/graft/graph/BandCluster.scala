@@ -3,6 +3,7 @@ package graft.graph
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.PinOps
 
 /** Near-dup cluster assignment over an LSH band-signature table —
   * the shared construction behind q100 and the corpus-prep pipeline
@@ -47,7 +48,7 @@ object BandCluster {
       .join(bc.select(col("band").as("b1"), col("c").as("c1")), Seq("b1"))
       .withColumn("__iso", col("c0") === 1 && col("c1") === 1)
       .drop("c0", "c1")
-      .localCheckpoint(true)
+      .pin
     val cand = marked.filter(!col("__iso")).drop("__iso")
     val comp = ConnectedComponents.run(
       cand.select(col("b0").as("a"), col("b1").as("b")))

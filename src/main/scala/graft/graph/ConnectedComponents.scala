@@ -2,6 +2,7 @@ package graft.graph
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.PinOps
 
 /** Distributed connected components by iterative min-label
   * propagation — the merge step every near-dup dedup pipeline needs
@@ -101,7 +102,7 @@ object ConnectedComponents {
       .union(e.select(col("b").as("a"), col("b").as("b")))
       .repartition(col("b"))
       .distinct()
-      .localCheckpoint(true)
+      .pin
     // nodes ≡ self-loop rows of the pinned sym; count + round-0 label
     // sum (decimal: beats long overflow at 2^60-sized labels × 10⁹
     // nodes) ride one action over the pinned blocks
@@ -209,7 +210,7 @@ object ConnectedComponents {
       iter += 1
     }
     val out = propPin.select(col("node"), col("lab").as("component"))
-      .localCheckpoint(true)
+      .pin
     // the eager output supersedes the loop pins
     org.apache.spark.sql.GraftSqlBridge.unpersistCheckpoint(propPin)
     org.apache.spark.sql.GraftSqlBridge.unpersistCheckpoint(sym)

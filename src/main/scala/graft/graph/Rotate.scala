@@ -1,6 +1,7 @@
 package graft.graph
 
 import org.apache.spark.sql.DataFrame
+import graft.PinOps
 
 /** THE checkpoint-rotation policy for iterative operators
   * (VERDICT r8 #8) — one documented place for the rules q221/q142/
@@ -46,8 +47,9 @@ object Rotate {
   def shrank(prevCount: Long, nextCount: Long): Boolean =
     nextCount < shrinkGate * prevCount
 
-  /** Rule 1: pin `next` (eager localCheckpoint), then release the
-    * superseded predecessor's blocks. Pass `prev = null` on the
+  /** Rule 1: pin `next` ([[graft.Pins.pin]], so the running query's
+    * scope also releases it when the query ends), then release the
+    * superseded predecessor's blocks now. Pass `prev = null` on the
     * first iteration.
     *
     * The pin is deserialized (MEMORY_AND_DISK). A serialized pin
@@ -58,7 +60,7 @@ object Rotate {
     * the saved GC scan on a 3-round peel.
     */
   def supersede(next: DataFrame, prev: DataFrame): DataFrame = {
-    val pinned = next.localCheckpoint(true)
+    val pinned = next.pin
     if (prev != null)
       org.apache.spark.sql.GraftSqlBridge.unpersistCheckpoint(prev)
     pinned

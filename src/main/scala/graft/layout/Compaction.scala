@@ -1,6 +1,8 @@
 package graft.layout
 
-import org.apache.hadoop.fs.Path
+import java.io.IOException
+
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 
 /** Small-file compaction: rewrite a parquet directory into files of
@@ -22,10 +24,15 @@ import org.apache.spark.sql.SparkSession
   * read resolves its schema from one footer on the driver
   * ([[graft.Tables.parquet]]), where `spark.read.parquet` added a third,
   * an inference job.
-  * The swap is write-to-temp + delete + rename, the same recipe the
-  * reference uses to normalize upload layouts (csv_processor.py:43-71);
-  * a transactional table format would replace the rename with a
-  * metadata commit.
+  * The swap is write-to-temp, then two renames: the live directory
+  * aside, the rewrite in; only then is the old copy deleted. If the
+  * rewrite cannot be renamed in, the old directory is renamed back and
+  * `compact` throws, so a failed swap leaves the table as it was. Between
+  * the two renames the table does not exist; on an object store each is
+  * a move of keys, with no data copied. The reference normalizes upload
+  * layouts with the same write-to-temp-and-rename recipe
+  * (csv_processor.py:43-71); a transactional table format would replace
+  * the renames with a metadata commit.
   */
 object Compaction {
 
@@ -40,13 +47,25 @@ object Compaction {
     val totalBytes = files.map(_.getLen).sum
     val n = math.max(1, math.ceil(totalBytes.toDouble / targetBytes).toInt)
     val tmp = new Path(dir.stripSuffix("/") + "_compact_tmp")
+    val old = new Path(dir.stripSuffix("/") + "_compact_old")
     graft.Tables.parquet(spark, dir)
       .repartition(n)
       .write.mode("overwrite").parquet(tmp.toString)
-    if (!fs.delete(path, true))
-      throw new java.io.IOException(s"could not remove $path for swap")
-    if (!fs.rename(tmp, path))
-      throw new java.io.IOException(s"rename $tmp -> $path failed")
+    fs.delete(old, true) // left by a swap that stopped before its delete
+    if (!fs.rename(path, old))
+      throw new IOException(s"could not move $path aside for the swap")
+    val swapped =
+      try fs.rename(tmp, path)
+      catch { case e: IOException => restore(fs, old, path); throw e }
+    if (!swapped) {
+      restore(fs, old, path)
+      throw new IOException(s"rename $tmp -> $path failed; $path is unchanged")
+    }
+    fs.delete(old, true)
     (files.length, n)
   }
+
+  private def restore(fs: FileSystem, old: Path, path: Path): Unit =
+    if (!fs.rename(old, path))
+      throw new IOException(s"swap failed and $old could not be moved back to $path")
 }

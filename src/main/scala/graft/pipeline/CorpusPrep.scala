@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.{Dist, MinHashBands, Portable}
 import graft.graph.BandCluster
+import graft.PinOps
 
 /** The end-to-end corpus-preparation pipeline a training-data run
   * actually executes, composed from this engine's operators:
@@ -77,7 +78,7 @@ object CorpusPrep {
             Portable.tokenSet(col("text"))), 2, 8)).as("bs"))
       .select(col("doc_id"), col("nt"),
         col("bs").getItem(0).as("b0"), col("bs").getItem(1).as("b1"))
-      .localCheckpoint(true)
+      .pin
     // near-dup clusters via the shared band-graph construction
     // ([[graft.graph.BandCluster]] — candidate bypass + connected
     // components); the cluster head (min doc_id) survives, exactly
@@ -111,7 +112,7 @@ object CorpusPrep {
       .filter(col("nt") >= 1)
       .withColumn("hk",
         Portable.md5Long(concat(lit("pack:"), col("doc_id").cast("string"))))
-      .localCheckpoint(true)
+      .pin
     Dist.globalCumsum(sized, "hk", Seq("doc_id"), "nt", "cum",
       spark.sparkContext.defaultParallelism)
       .withColumn("st", col("cum") - col("nt"))

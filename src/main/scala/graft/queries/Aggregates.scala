@@ -56,14 +56,12 @@ object Aggregates {
   /** GROUPING SETS via SQL (Spark SQL and DuckDB share the syntax). */
   val q15 = Q(
     "q15_grouping_sets_customer",
-    (s, dir) => {
-      Tables.registerAll(s, dir)
-      s.sql("""SELECT c_mktsegment, c_nationkey, count(*) AS n,
+    (s, dir) =>
+      Tables.sql(s, dir, """SELECT c_mktsegment, c_nationkey, count(*) AS n,
         |  CAST(grouping_id() AS INT) AS gid
         |FROM customer
         |GROUP BY GROUPING SETS ((c_mktsegment), (c_nationkey), ())
-        |ORDER BY gid, c_mktsegment, c_nationkey""".stripMargin)
-    },
+        |ORDER BY gid, c_mktsegment, c_nationkey""".stripMargin),
     Some("""SELECT c_mktsegment, c_nationkey, count(*) AS n,
       |  CAST(2 * GROUPING(c_mktsegment) + GROUPING(c_nationkey) AS INTEGER) AS gid
       |FROM customer
@@ -97,14 +95,12 @@ object Aggregates {
     */
   val q17 = Q(
     "q17_having_brand_share",
-    (s, dir) => {
-      Tables.registerAll(s, dir)
-      s.sql("""SELECT p_brand, count(*) AS n
+    (s, dir) =>
+      Tables.sql(s, dir, """SELECT p_brand, count(*) AS n
         |FROM part
         |GROUP BY p_brand
         |HAVING count(*) * 30 > (SELECT count(*) FROM part)
-        |ORDER BY p_brand""".stripMargin)
-    },
+        |ORDER BY p_brand""".stripMargin),
     Some("""SELECT p_brand, count(*) AS n
       |FROM part
       |GROUP BY p_brand

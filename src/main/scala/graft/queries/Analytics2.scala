@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{Q, Tables}
+import graft.{PinOps, Q, Tables}
 import graft.functions.{Portable => P}
 import graft.functions.Dist
 import org.apache.spark.sql.expressions.Window
@@ -440,7 +440,7 @@ object Analytics2 {
         .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
         .repartition(s.sparkContext.defaultParallelism, col("ok"))
         .distinct()
-        .localCheckpoint(true)
+        .pin
       val e = graft.graph.Rotate.supersede(
         li.join(li.select(col("ok").as("ok2"), col("pk").as("pk2")),
             col("ok") === col("ok2") && col("pk") < col("pk2"))
@@ -487,7 +487,7 @@ object Analytics2 {
         .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
         .repartition(s.sparkContext.defaultParallelism, col("ok"))
         .distinct()
-        .localCheckpoint(true)
+        .pin
       val e = graft.graph.Rotate.supersede(
         li.join(li.select(col("ok").as("ok2"), col("pk").as("pk2")),
             col("ok") === col("ok2") && col("pk") < col("pk2"))
@@ -569,7 +569,7 @@ object Analytics2 {
         .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
         .repartition(s.sparkContext.defaultParallelism, col("ok"))
         .distinct()
-        .localCheckpoint(true)
+        .pin
       val pairs = li.join(li.select(col("ok").as("ok2"), col("pk").as("pk2")),
           col("ok") === col("ok2") && col("pk") < col("pk2"))
         .groupBy(col("pk").as("pa"), col("pk2").as("pb"))

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{Q, Tables}
+import graft.{PinOps, Q, Tables}
 import graft.functions.Dist
 import org.apache.spark.sql.functions._
 
@@ -85,7 +85,7 @@ object Analytics3 {
       val li = Tables.t(s, dir, "lineitem")
         .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
         .distinct()
-        .localCheckpoint(true)
+        .pin
       val nOrders = li.select("ok").distinct().count()
       val item = li.groupBy(col("pk")).agg(count(lit(1)).as("n_item"))
       val pairs = li.join(li.select(col("ok").as("ok2"), col("pk").as("pk2")),

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{Q, Tables}
+import graft.{PinOps, Q, Tables}
 import graft.functions.{Portable => P}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
@@ -121,7 +121,7 @@ object Analytics5 {
           .otherwise(col("c_mktsegment")))
         .select((col("c_custkey") + 10000000L).as("b_id"), col("b_name"),
           col("c_nationkey").as("b_nat"), col("b_seg"), col("b_bal"), col("cls"))
-        .localCheckpoint(true) // feeds key-explode and class totals
+        .pin // feeds key-explode and class totals
       // One pass from block join to best match — no distinct, no
       // payload joins, no window sort. ProfileEr at sf10 attributed
       // the old shape's 47 s to exactly those three (22.5 s distinct
@@ -305,7 +305,7 @@ object Analytics5 {
         .select(col("c_mktsegment").as("seg"), col("o_totalprice").as("y"),
           (pmod(P.md5Long(concat(lit("conf:"), col("o_orderkey").cast("string"))),
             lit(2)) === 0).as("is_cal"))
-        .localCheckpoint(true) // feeds the fit, the rank, and the audit
+        .pin // feeds the fit, the rank, and the audit
       val mu = o.filter(col("is_cal")).groupBy("seg")
         .agg(P.moneyAvg(col("y")).as("mu"), count(lit(1)).as("n_cal"))
       val resid = o.filter(col("is_cal")).join(broadcast(mu), "seg")

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{Q, Tables}
+import graft.{PinOps, Q, Tables}
 import graft.functions.{Dist, Portable}
 import graft.graph.ConnectedComponents
 import org.apache.spark.sql.functions._
@@ -42,7 +42,7 @@ object CorpusOps {
         .withColumn("bs", expr("minhash_bands(toks, 2, 8)"))
         .select(col("doc_id"),
           col("bs").getItem(0).as("b0"), col("bs").getItem(1).as("b1"))
-        .localCheckpoint(true)
+        .pin
       // shared band-graph clustering (candidate bypass + CC) — see
       // graph.BandCluster; isolated docs become their own n_docs=1
       // clusters without entering the component loop

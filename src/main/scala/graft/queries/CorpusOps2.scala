@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{Q, Tables}
+import graft.{PinOps, Q, Tables}
 import graft.functions.{Portable, VectorFunctions => V}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -167,11 +167,11 @@ object CorpusOps2 {
       val ts = Tables.docs(s, dir).filter(col("lang") === "en")
         .select(col("doc_id"), Portable.tokenSet(col("text")).as("toks"))
         .filter(size(col("toks")) >= 1)
-        .localCheckpoint(true)
+        .pin
       val sigs = ts.select(col("doc_id"), expr("minhash_sig(toks, 16)").as("sig"))
-        .localCheckpoint(true)
+        .pin
       val th = ts.select(col("doc_id"), Portable.md5Sorted(col("toks")).as("th"))
-        .localCheckpoint(true)
+        .pin
       // The probe side is a FIXED-SIZE sample (~300 docs), not a
       // fixed fraction: `doc_id % 20` made the pair space 0.05·n² —
       // quadratic, measured 16x cost at 10x data. The modulus scales

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{Q, Tables}
+import graft.{PinOps, Q, Tables}
 import graft.functions.{Portable => P, VectorFunctions => V}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -37,7 +37,7 @@ object CorpusOps4 {
         // cannot serialize the pair expansion
         .repartition(s.sparkContext.defaultParallelism, col("o"))
         .distinct()
-        .localCheckpoint(true)
+        .pin
       val l1 = items.groupBy("p").agg(count(lit(1)).as("n"))
         .filter(col("n") >= 4).select("p")
       val fi = graft.graph.Rotate.supersede(
@@ -47,7 +47,7 @@ object CorpusOps4 {
         .select(col("a.o").as("o"), col("a.p").as("x"), col("b.p").as("y"))
       val l2 = pairs.groupBy("x", "y").agg(count(lit(1)).as("n"))
         .filter(col("n") >= 2).select("x", "y")
-        .localCheckpoint(true) // three semi-join probes below
+        .pin // three semi-join probes below
       // the (x,y) L2 prune stays POST-extend with the other two: the
       // pair stream leaves its generation keyed by o, which is
       // exactly the extend join's key — pruning it first was measured
@@ -255,7 +255,7 @@ object CorpusOps4 {
       val docs = Tables.docs(s, dir).filter(col("lang") === "en")
       val toksH = docs
         .select(col("doc_id"), P.md5Sorted(P.tokenSet(col("text"))).as("th"))
-        .localCheckpoint(true)
+        .pin
       val sh = docs.filter(length(col("text")) >= 8)
         .select(col("doc_id"), explode(expr("char_shingle_hashes(text, 8)")).as("h"))
       val rare = sh.groupBy("h").agg(count(lit(1)).as("df"))
@@ -267,7 +267,7 @@ object CorpusOps4 {
       // codegen'd shingle kernel recomputes cheaper than that spills;
       // it is derived exactly twice (df counts + anchor filter).
       val anchored = sh.join(rare, Seq("h"), "left_semi")
-        .localCheckpoint(true)
+        .pin
       val cand = anchored.alias("a")
         .join(anchored.alias("b"),
           col("a.h") === col("b.h") && col("a.doc_id") < col("b.doc_id"))

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{Q, Tables}
+import graft.{PinOps, Q, Tables}
 import graft.functions.{Portable, VectorFunctions => V}
 import org.apache.spark.sql.functions._
 
@@ -438,7 +438,7 @@ object CurationOps {
       // tokenized once, pinned: three band settings re-read the frame
       val toks = Tables.docs(s, dir).filter(col("lang") === "en")
         .select(col("doc_id"), Portable.tokenSet(col("text")).as("toks"))
-        .localCheckpoint()
+        .pin
       val settings = Seq((2, 8), (4, 4), (8, 2))
       settings.map { case (b, r) =>
         val sigs = toks.select(col("doc_id"),

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{Q, Tables}
+import graft.{PinOps, Q, Tables}
 import graft.functions.Portable
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -155,7 +155,7 @@ object CurationOps10 {
       val avail = Tables.docs(s, dir)
         .select(col("source"), size(Portable.tokens(col("text"))).as("nt"))
         .groupBy("source").agg(sum(col("nt").cast("long")).as("avail"))
-        .localCheckpoint(true)
+        .pin
       val w = Window.orderBy(col("avail"), col("source"))
       val ranked = avail
         .withColumn("rn", row_number().over(w))

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{Q, Tables}
+import graft.{PinOps, Q, Tables}
 import graft.functions.Portable
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -61,7 +61,7 @@ object CurationOps11 {
           col("c_mktsegment").as("segment"),
           col("o_orderpriority").as("sens"))
         .agg(count(lit(1)).as("cnt"))
-        .localCheckpoint(true) // feeds global dist + groups + fill
+        .pin // feeds global dist + groups + fill
       val glob = cells.groupBy("sens").agg(sum("cnt").as("g"))
         .withColumn("g_cum", sum("g").over(
           Window.orderBy("sens").rowsBetween(Window.unboundedPreceding, 0)))

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{Q, Tables}
+import graft.{PinOps, Q, Tables}
 import graft.functions.Portable
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -41,7 +41,7 @@ object CurationOps12 {
         .select(col("doc_id"), col("lang"),
           size(Portable.tokens(col("text"))).cast("long").as("toks"),
           size(Portable.tokenSet(col("text"))).cast("long").as("types"))
-        .localCheckpoint(true) // feeds cells + the membership join
+        .pin // feeds cells + the membership join
       val cells = perDoc.groupBy("lang", "toks").agg(max("types").as("types"))
       val wLonger = Window.partitionBy("lang").orderBy(col("toks").desc)
         .rowsBetween(Window.unboundedPreceding, -1)

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.Q
+import graft.{PinOps, Q}
 import graft.functions.Portable
 import org.apache.spark.sql.functions._
 
@@ -53,7 +53,7 @@ object CurationOps13 {
         .withColumn("bs", expr("minhash_bands(toks, 2, 8)"))
         .select(col("doc_id"), col("source"), col("n_chars"),
           col("bs").getItem(0).as("b0"), col("bs").getItem(1).as("b1"))
-        .localCheckpoint(true)
+        .pin
       graft.graph.BandCluster.assign(db)
         .groupBy("cluster")
         .agg(count(lit(1)).as("n_docs"),

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.Q
+import graft.{PinOps, Q}
 import graft.functions.Portable
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -48,7 +48,7 @@ object CurationOps14 {
         .filter(length(col("text")) >= 40)
         .select(col("doc_id"), length(col("text")).cast("long").as("len"),
           col("text"))
-        .localCheckpoint(true) // read twice: window source + untouched docs
+        .pin // read twice: window source + untouched docs
       val sh = docs
         .select(col("doc_id"), col("len"),
           explode(expr("anchor_shingle_pos(text, 40, 4)")).as("w"))
@@ -68,7 +68,7 @@ object CurationOps14 {
       // subtrees differ after column pruning and can't share a scan)
       val spans = sh.join(dup, Seq("h"), "left_semi")
         .select(col("doc_id"), col("len"), col("s"), (col("s") + 39L).as("e"))
-        .localCheckpoint(true)
+        .pin
       // classic interval merge: an excision starts a new island unless
       // it overlaps or touches the running max end of its predecessors
       val ord = Window.partitionBy("doc_id").orderBy("s", "e")
@@ -182,7 +182,7 @@ object CurationOps14 {
         docs, Seq(col("source"), col("h"), col("doc_id")), "gr",
         s.sparkContext.defaultParallelism)
       val counts = ranked.groupBy("source").agg(count(lit(1)).as("n"))
-        .localCheckpoint(true) // S rows; read as offsets AND interleave table
+        .pin // S rows; read as offsets AND interleave table
       val offs = counts.alias("a")
         .join(counts.alias("b"), col("b.source") < col("a.source"), "left_outer")
         .groupBy(col("a.source").as("source"))

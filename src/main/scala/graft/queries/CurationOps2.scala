@@ -168,7 +168,7 @@ object CurationOps2 {
     "q193_stream_neardup_filter",
     (s, dir) => {
       val winners = graft.streaming.EventStreams
-        .docBandWinners(s, dir, "q193_sink")
+        .docBandWinners(s, dir)
       val sigs = Tables.docs(s, dir)
         .select(col("doc_id"), Portable.tokenSet(col("text")).as("toks"))
         .filter(size(col("toks")) >= 1)

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{Q, Tables}
+import graft.{PinOps, Q, Tables}
 import graft.functions.{Portable, VectorFunctions => V}
 import org.apache.spark.sql.functions._
 
@@ -174,7 +174,7 @@ object CurationOps5 {
       var m = e.crossJoin(broadcast(seed.select(col("embedding").as("se"))))
         .select(col("vec_id"), col("embedding"),
           round(V.dist2("embedding", "se"), 6).as("md"))
-        .localCheckpoint(true)
+        .pin
       val picked = Seq.newBuilder[(Int, Long, Double)]
       picked += ((0, seed.head().getLong(0), 0.0))
       for (r <- 1 to 7) {
@@ -187,7 +187,7 @@ object CurationOps5 {
         m = m.crossJoin(broadcast(selVec))
           .select(col("vec_id"), col("embedding"),
             least(col("md"), round(V.dist2("embedding", "se"), 6)).as("md"))
-          .localCheckpoint(true)
+          .pin
       }
       import s.implicits._
       picked.result().toDF("r", "vec_id", "radius").orderBy("r")
@@ -227,7 +227,7 @@ object CurationOps5 {
     "q209_dedup_method_overlap",
     (s, dir) => {
       val en = Tables.docs(s, dir).filter(col("lang") === "en")
-        .select(col("doc_id"), col("text")).localCheckpoint(true)
+        .select(col("doc_id"), col("text")).pin
       val exd = en.groupBy(sha2(col("text"), 256).as("h"))
         .agg(collect_list("doc_id").as("ids"), count(lit(1)).as("c"))
         .filter(col("c") >= 2)
@@ -241,21 +241,21 @@ object CurationOps5 {
       // exchange subtrees differ). Each pinned frame is Θ(docs) rows
       // of ids/hashes, the same block-manager class as `en` itself.
       val toks = en.select(col("doc_id"), Portable.tokenSet(col("text")).as("toks"))
-        .localCheckpoint(true)
+        .pin
       // toksH / sigs / banded are independent siblings off the pinned
       // toks — overlap their pin jobs (guide §2.6) instead of paying
       // three serial straggler tails; frames are construction-identical
       val Seq(toksH, sigs, banded) = graft.functions.Overlap.par(s)(
         () => toks.select(col("doc_id"), Portable.md5Sorted(col("toks")).as("th"))
-          .localCheckpoint(true),
+          .pin,
         () => toks
           .select(col("doc_id"), explode(expr("minhash_bands(toks, 2, 8)")).as("sig"))
-          .localCheckpoint(true),
+          .pin,
         () => toks.filter(size(col("toks")) >= 1)
           .select(col("doc_id"), expr("simhash32(toks)").as("sh"))
           .withColumn("band", explode(sequence(lit(0), lit(3))))
           .withColumn("byte", expr("(sh div CAST(pow(2, band * 8) AS BIGINT)) % 256"))
-          .localCheckpoint(true)) // both sides of the byte-bucket self-join
+          .pin) // both sides of the byte-bucket self-join
       val mpairs = sigs.alias("sa").hint("shuffle_hash")
         .join(sigs.alias("sb"),
           col("sa.sig") === col("sb.sig") && col("sa.doc_id") < col("sb.doc_id"))

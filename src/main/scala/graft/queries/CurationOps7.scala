@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{Q, Tables}
+import graft.{PinOps, Q, Tables}
 import graft.functions.{Portable => P, VectorFunctions => V}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -35,7 +35,7 @@ object CurationOps7 {
         .crossJoin(broadcast(q0))
         .select(col("vec_id"), col("embedding").as("ce"), col("nrm").as("cn"),
           round(V.dot("embedding", "qe") / (col("nrm") * col("qn")), 6).as("rel"))
-        .localCheckpoint(true)
+        .pin
       var out: DataFrame = null
       var selIds: DataFrame = null
       var selVecs: DataFrame = null
@@ -56,7 +56,7 @@ object CurationOps7 {
         val win = scored
           .orderBy(col("score").desc, col("vec_id")).limit(1)
           .select(lit(r).as("round"), col("vec_id"), col("rel"), col("score"))
-          .localCheckpoint(true) // 1 row — pins the round's pick
+          .pin // 1 row — pins the round's pick
         out = if (out == null) win else out.unionAll(win)
         selIds = out.select("vec_id")
         selVecs = cand.join(broadcast(selIds), Seq("vec_id"), "left_semi")
@@ -220,7 +220,7 @@ object CurationOps7 {
           .as("g"))
         .select(col("doc_id"), P.md5Long(col("g")).as("h"))
         .distinct()
-        .localCheckpoint(true)
+        .pin
       // true integer bit extraction (h is a non-negative 60-bit
       // hash): shiftright+mask, never `/` — both engines' `/`
       // promote to IEEE double, whose 53-bit mantissa would bend

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{Q, Tables}
+import graft.{PinOps, Q, Tables}
 import graft.functions.{Dist, Portable => P}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -132,7 +132,7 @@ object CurationOps9 {
         .select(col("doc_id"),
           size(P.tokens(col("text"))).cast("long").as("n_toks"),
           P.md5Long(concat(lit("pack:"), col("doc_id").cast("string"))).as("hk"))
-        .localCheckpoint(true) // both strategies rank the same frame
+        .pin // both strategies rank the same frame
       def audit(strategy: String, order: Seq[org.apache.spark.sql.Column]) =
         Dist.globalRank(lens, order, "rnk", 32)
           .withColumn("batch", floor((col("rnk") - 1) / 16))

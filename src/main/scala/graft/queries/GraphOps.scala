@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{Q, Tables}
+import graft.{PinOps, Q, Tables}
 import org.apache.spark.sql.functions._
 
 /** Graph analytics over warehouse relations (SURVEY §2.13 extension
@@ -48,7 +48,7 @@ object GraphOps {
         .observe(obs,
           approx_count_distinct(col("src")).as("nc"),
           approx_count_distinct(col("dst")).as("ns"))
-        .localCheckpoint(true)
+        .pin
       val m = obs.getAsJava
       val small = m.get("nc").asInstanceOf[Long] +
         m.get("ns").asInstanceOf[Long] <= graft.graph.Bcast.maxNodes
@@ -84,7 +84,7 @@ object GraphOps {
       val obsN = org.apache.spark.sql.Observation()
       val deg = sym.groupBy("src").agg(count(lit(1)).as("deg"))
         .observe(obsN, count(lit(1)).as("n"))
-        .localCheckpoint(true) // pin: node-sized, seeds pr0 and n
+        .pin // pin: node-sized, seeds pr0 and n
       // node count rides the deg pin action (replaces the old
       // crossJoin'd 1-row nFrame — two BroadcastNestedLoopJoins out
       // of every plan); n < 2^53 so the double is exact

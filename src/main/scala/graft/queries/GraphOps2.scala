@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{Q, Tables}
+import graft.{PinOps, Q, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -101,7 +101,7 @@ object GraphOps2 {
         .observe(obs,
           approx_count_distinct(graft.graph.PackedEdge.x(col("e"))).as("nu"),
           approx_count_distinct(col("e").bitwiseAND(lit(0xFFFFFFFFL))).as("np"))
-        .localCheckpoint(true)
+        .pin
       val m = obs.getAsJava
       val small = math.max(m.get("nu").asInstanceOf[Long],
         m.get("np").asInstanceOf[Long]) <= graft.graph.Bcast.maxNodes
@@ -180,7 +180,7 @@ object GraphOps2 {
       // max 2·10⁶ at sf10; a >2³²-part catalog fails loudly at the
       // PackedEdge.pack guard and would need the two-column form
       // back).
-      val itemsP = items.localCheckpoint(true)
+      val itemsP = items.pin
       val packedX = graft.graph.PackedEdge.x(col("e"))
       val packedY = col("e").bitwiseAND(lit(0xFFFFFFFFL))
       var pe = graft.graph.Rotate.supersede(
@@ -200,7 +200,7 @@ object GraphOps2 {
       // degree is a straight count over pe (saves two joins of the
       // largest round; the pe scan itself is the irreducible cost)
       var alive: DataFrame = degrees(pe)
-        .filter(col("deg") >= 60).select("node").localCheckpoint(true)
+        .filter(col("deg") >= 60).select("node").pin
       // ADAPTIVE frontier rotation (r8, measured; policy codified in
       // [[graft.graph.Rotate]] as of r9): round 7
       // unconditionally filtered the edge set to alive–alive edges
@@ -223,7 +223,7 @@ object GraphOps2 {
       var aliveCnt = alive.count()
       for (_ <- 2 to 3) {
         val nextAlive = degrees(surviving(pe, alive))
-          .filter(col("deg") >= 60).select("node").localCheckpoint(true)
+          .filter(col("deg") >= 60).select("node").pin
         val nextCnt = nextAlive.count()
         if (graft.graph.Rotate.shrank(aliveCnt, nextCnt)) {
           pe = graft.graph.Rotate.supersede(
@@ -316,7 +316,7 @@ object GraphOps2 {
       .select(col("doc_id"),
         col("bs").getItem(0).as("b0"), col("bs").getItem(1).as("b1"),
         flag.as(flagName))
-      .localCheckpoint(true)
+      .pin
   }
 
   val q262 = Q(

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{Q, Tables}
+import graft.{PinOps, Q, Tables}
 import org.apache.spark.sql.functions._
 
 /** Graph analytics, third batch (round 10): partition-quality scoring
@@ -47,7 +47,7 @@ object GraphOps3 {
       val items = Tables.t(s, dir, "lineitem")
         .select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
         .repartition(s.sparkContext.defaultParallelism, col("o")).distinct()
-        .localCheckpoint(true)
+        .pin
       val pairs = graft.graph.Rotate.supersede(
         items.alias("a")
           .join(items.alias("b"), col("a.o") === col("b.o") && col("a.p") < col("b.p"))
@@ -128,7 +128,7 @@ object GraphOps3 {
       val items = Tables.t(s, dir, "lineitem")
         .select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
         .repartition(s.sparkContext.defaultParallelism, col("o")).distinct()
-        .localCheckpoint(true)
+        .pin
       val weighted = graft.graph.Rotate.supersede(
         items
           .join(items.groupBy("o").agg(count(lit(1)).as("bsz"))

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{Q, Tables}
+import graft.{PinOps, Q, Tables}
 import graft.graph.PackedEdge
 import org.apache.spark.sql.functions._
 
@@ -58,7 +58,7 @@ object GraphOps4 {
         .observe(obs,
           approx_count_distinct(PackedEdge.x(col("e"))).as("nc"),
           approx_count_distinct(PackedEdge.y(col("e"))).as("np"))
-        .localCheckpoint(true) // scanned 2× per round (contrib join sides)
+        .pin // scanned 2× per round (contrib join sides)
       val mGate = obs.getAsJava
       val small = mGate.get("nc").asInstanceOf[Long] +
         mGate.get("np").asInstanceOf[Long] <= graft.graph.Bcast.maxNodes
@@ -72,14 +72,14 @@ object GraphOps4 {
       // unambiguous without dataset-qualified refs
       val deg = sym.groupBy("src").agg(count(lit(1)).as("deg"))
         .select(col("src").as("dnode"), col("deg"))
-        .localCheckpoint(true) // node-sized, read every round
+        .pin // node-sized, read every round
       val seeds = Tables.t(s, dir, "customer")
         .filter(col("c_nationkey") === 7)
         .select((col("c_custkey").cast("long") * 2).as("node"))
       val seedMass = seeds
         .crossJoin(broadcast(seeds.agg(count(lit(1)).as("ns"))))
         .select(col("node"), expr("1000000000000L div ns").as("mass"))
-        .localCheckpoint(true) // node-sized, read every round (teleport)
+        .pin // node-sized, read every round (teleport)
       // teleport frame under its OWN column names: pr's lineage also
       // roots at seedMass, so a dataset-qualified seedMass("node") in
       // the per-round full outer would be an ambiguous self-join

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{Q, Tables}
+import graft.{PinOps, Q, Tables}
 import graft.functions.Portable
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -139,7 +139,7 @@ object IvmOps {
         .agg(min("us").as("s_start"), max("us").as("s_end"),
           count(lit(1)).as("n_events"))
         .select("user_id", "s_start", "s_end", "n_events")
-        .localCheckpoint(true) // the artifact: built once, read twice below
+        .pin // the artifact: built once, read twice below
       val late = ev.filter(!col("is_snap"))
         .select(col("user_id"), col("us").as("s_start"),
           col("us").as("s_end"), lit(1L).as("n_events"))
@@ -205,7 +205,7 @@ object IvmOps {
         .groupBy(col("pr"), col("is_snap"),
           expr("bitmap_bucket_number(ck)").as("bkt"))
         .agg(expr("bitmap_construct_agg(bitmap_bit_position(ck))").as("bm"))
-        .localCheckpoint(true) // read 3×: both half counts + the merge
+        .pin // read 3×: both half counts + the merge
       def halfCount(snap: Boolean) = state
         .filter(col("is_snap") === snap)
         .groupBy("pr")

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{Q, Tables}
+import graft.{PinOps, Q, Tables}
 import graft.functions.Portable
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -41,7 +41,7 @@ object PipelineOps3 {
             .when(pmod(Portable.md5Long(concat(lit("split:"), col("doc_id").cast("string"))),
               lit(10)) === 8, "valid")
             .otherwise("test"))
-        .localCheckpoint(true)
+        .pin
       val sh = base.filter(length(col("text")) >= 24)
         .select(col("doc_id"), col("split"),
           explode(expr("char_shingle_hashes(text, 24)")).as("h"))
@@ -54,10 +54,10 @@ object PipelineOps3 {
         .groupBy("doc_id")
         .agg((sum(coalesce(col("hit"), lit(0L))) / count(lit(1)) >= 0.6).as("bad"))
         .filter(col("bad")).select("doc_id")
-        .localCheckpoint(true)
+        .pin
       val cleanTrain = base.filter(col("split") === "train")
         .join(contam.withColumn("c", lit(1)), Seq("doc_id"), "left_anti")
-        .localCheckpoint(true)
+        .pin
       val keep = cleanTrain
         .groupBy(sha2(col("text"), 256).as("hh"))
         .agg(min("doc_id").as("doc_id"))

@@ -66,23 +66,21 @@ object Relational2 {
     */
   val q64 = Q(
     "q64_correlated_subquery",
-    (s, dir) => {
-      Tables.registerAll(s, dir)
+    (s, dir) =>
       // avg_above sums in decimal (exact, fold-order-free) and divides
       // once, with NO rounding: sum(2-dp values)/count lands exactly on
       // half-boundaries (e.g. S/320 terminates in …5 at the 5th
       // decimal), where Spark's BigDecimal HALF_UP and the oracle's
       // scaled-multiply rounding disagree; the unrounded quotient is
       // the same IEEE double in both engines.
-      s.sql("""SELECT c_nationkey, count(*) AS n_above,
+      Tables.sql(s, dir, """SELECT c_nationkey, count(*) AS n_above,
         |  CAST(sum(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE)
         |        / count(*) AS avg_above
         |FROM customer c
         |WHERE c_acctbal > (SELECT avg(c2.c_acctbal) FROM customer c2
         |                   WHERE c2.c_nationkey = c.c_nationkey)
         |GROUP BY c_nationkey
-        |ORDER BY c_nationkey""".stripMargin)
-    },
+        |ORDER BY c_nationkey""".stripMargin),
     Some("""SELECT c_nationkey, count(*) AS n_above,
       |  CAST(sum(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE)
       |        / count(*) AS avg_above
@@ -97,15 +95,13 @@ object Relational2 {
     */
   val q65 = Q(
     "q65_lateral_view_explode",
-    (s, dir) => {
-      Tables.registerAll(s, dir)
-      s.sql("""SELECT tok, count(*) AS n, count(DISTINCT lang) AS n_langs
+    (s, dir) =>
+      Tables.sql(s, dir, """SELECT tok, count(*) AS n, count(DISTINCT lang) AS n_langs
         |FROM documents
         |LATERAL VIEW explode(split(text, ' ')) t AS tok
         |WHERE tok != ''
         |GROUP BY tok
-        |ORDER BY tok""".stripMargin)
-    },
+        |ORDER BY tok""".stripMargin),
     Some("""SELECT tok, count(*) AS n, count(DISTINCT lang) AS n_langs
       |FROM (SELECT lang, unnest(string_split(text, ' ')) AS tok FROM documents)
       |WHERE tok != ''

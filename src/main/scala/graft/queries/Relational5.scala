@@ -72,10 +72,8 @@ object Relational5 {
     */
   val q133 = Q(
     "q133_notin_null_semantics",
-    (s, dir) => {
-      Tables.t(s, dir, "customer").createOrReplaceTempView("customer")
-      Tables.t(s, dir, "orders").createOrReplaceTempView("orders")
-      s.sql("""SELECT * FROM (
+    (s, dir) =>
+      Tables.sql(s, dir, """SELECT * FROM (
         SELECT 'no_big_order' AS branch, c_custkey, c_name FROM customer
         WHERE c_custkey NOT IN
           (SELECT o_custkey FROM orders WHERE o_totalprice > 400000)
@@ -83,8 +81,7 @@ object Relational5 {
         SELECT 'null_poisoned' AS branch, c_custkey, c_name FROM customer
         WHERE c_custkey NOT IN
           (SELECT nullif(o_custkey, 7) FROM orders WHERE o_totalprice > 400000))
-        ORDER BY branch, c_custkey""")
-    },
+        ORDER BY branch, c_custkey"""),
     Some("""SELECT * FROM (
       |  SELECT 'no_big_order' AS branch, c_custkey, c_name FROM customer
       |  WHERE c_custkey NOT IN
@@ -96,18 +93,15 @@ object Relational5 {
       |ORDER BY branch, c_custkey""".stripMargin))
 
   /** The HiveQL text surface end-to-end: a CTE + 3-table join +
-    * windowed top-3-per-month, issued as one SQL string over
-    * registered views — the exact shape a reference user types at
+    * windowed top-3-per-month, issued as one SQL string over the
+    * fixture tables ([[graft.Tables.sql]]) — the exact shape a reference user types at
     * HiveServer2. Revenue is rounded BEFORE ranking so the window
     * order (and thus the rn<=3 cut) is reproducible cross-engine.
     */
   val q134 = Q(
     "q134_sql_text_surface",
-    (s, dir) => {
-      Tables.t(s, dir, "orders").createOrReplaceTempView("orders")
-      Tables.t(s, dir, "customer").createOrReplaceTempView("customer")
-      Tables.t(s, dir, "nation").createOrReplaceTempView("nation")
-      s.sql(s"""WITH rev AS (
+    (s, dir) =>
+      Tables.sql(s, dir, s"""WITH rev AS (
         SELECT n_name, CAST(date_trunc('month', o_orderdate) AS DATE) AS mon,
           ${P.moneySumSql("o_totalprice")} AS rev
         FROM orders
@@ -119,8 +113,7 @@ object Relational5 {
           row_number() OVER (PARTITION BY mon ORDER BY rev DESC, n_name) AS rn
         FROM rev)
       SELECT mon, rn, n_name, rev FROM ranked WHERE rn <= 3
-      ORDER BY mon, rn""")
-    },
+      ORDER BY mon, rn"""),
     Some(s"""WITH rev AS (
       |  SELECT n_name, CAST(date_trunc('month', o_orderdate) AS DATE) AS mon,
       |    ${P.moneySumSql("o_totalprice")} AS rev
@@ -185,13 +178,12 @@ object Relational5 {
     */
   val q136 = Q(
     "q136_interval_range_frame",
-    (s, dir) => {
-      Tables.t(s, dir, "orders").createOrReplaceTempView("orders")
+    (s, dir) =>
       // the daily rev is a decimal sum in BOTH texts (same fold-order
       // rationale as Portable.moneySum); the 7-day window then
       // averages ≤7 identical exact doubles — deterministic, and /7
       // can't land on a rounding half-boundary
-      s.sql(s"""WITH d AS (
+      Tables.sql(s, dir, s"""WITH d AS (
         SELECT CAST(o_orderdate AS DATE) AS day,
           ${P.moneySumSql("o_totalprice")} AS rev, count(*) AS n
         FROM orders GROUP BY 1)
@@ -199,8 +191,7 @@ object Relational5 {
         round(avg(rev) OVER (ORDER BY day
           RANGE BETWEEN INTERVAL 6 DAYS PRECEDING AND CURRENT ROW), 2)
           AS avg_7d
-      FROM d ORDER BY day""")
-    },
+      FROM d ORDER BY day"""),
     Some(s"""WITH d AS (
       |  SELECT CAST(o_orderdate AS DATE) AS day,
       |    ${P.moneySumSql("o_totalprice")} AS rev, count(*) AS n
@@ -220,16 +211,14 @@ object Relational5 {
     */
   val q137 = Q(
     "q137_group_share_threshold",
-    (s, dir) => {
-      Tables.t(s, dir, "lineitem").createOrReplaceTempView("lineitem")
-      s.sql(s"""SELECT l_partkey,
+    (s, dir) =>
+      Tables.sql(s, dir, s"""SELECT l_partkey,
         ${P.moneySumSql("l_extendedprice * l_quantity")} AS val
       FROM lineitem
       GROUP BY l_partkey
       HAVING sum(l_extendedprice * l_quantity) >
         (SELECT sum(l_extendedprice * l_quantity) * 0.00058 FROM lineitem)
-      ORDER BY val DESC, l_partkey""")
-    },
+      ORDER BY val DESC, l_partkey"""),
     Some(s"""SELECT l_partkey,
       |  ${P.moneySumSql("l_extendedprice * l_quantity")} AS val
       |FROM lineitem
@@ -326,17 +315,13 @@ object Relational5 {
     */
   val q143 = Q(
     "q143_select_scalar_subquery",
-    (s, dir) => {
-      Tables.t(s, dir, "nation").createOrReplaceTempView("nation")
-      Tables.t(s, dir, "customer").createOrReplaceTempView("customer")
-      Tables.t(s, dir, "supplier").createOrReplaceTempView("supplier")
-      s.sql("""SELECT n_name,
+    (s, dir) =>
+      Tables.sql(s, dir, """SELECT n_name,
         (SELECT count(*) FROM customer
          WHERE c_nationkey = n_nationkey) AS n_cust,
         EXISTS (SELECT 1 FROM supplier
                 WHERE s_nationkey = n_nationkey) AS has_supp
-      FROM nation ORDER BY n_name""")
-    },
+      FROM nation ORDER BY n_name"""),
     Some("""SELECT n_name,
       |  (SELECT count(*) FROM customer
       |   WHERE c_nationkey = n_nationkey) AS n_cust,
@@ -472,12 +457,10 @@ object Relational5 {
     */
   val q148 = Q(
     "q148_group_order_by_all",
-    (s, dir) => {
-      Tables.t(s, dir, "documents").createOrReplaceTempView("documents")
-      s.sql("""SELECT lang, source, count(*) AS n,
+    (s, dir) =>
+      Tables.sql(s, dir, """SELECT lang, source, count(*) AS n,
         sum(n_chars) AS chars
-      FROM documents GROUP BY ALL ORDER BY ALL""")
-    },
+      FROM documents GROUP BY ALL ORDER BY ALL"""),
     Some("""SELECT lang, source, count(*) AS n,
       |  CAST(sum(n_chars) AS BIGINT) AS chars
       |FROM documents GROUP BY ALL ORDER BY ALL""".stripMargin))

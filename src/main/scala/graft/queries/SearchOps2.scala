@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{Q, Tables}
+import graft.{PinOps, Q, Tables}
 import graft.functions.{Portable => P, VectorFunctions => V}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -53,7 +53,7 @@ object SearchOps2 {
         .select(col("doc_id"), P.md5Sorted(P.tokenSet(col("text"))).as("th"),
           col("embedding"), V.norm("embedding").as("nrm"),
           VectorOps.hyperplaneBucket("embedding").as("bucket"))
-        .localCheckpoint(true) // feeds both index paths + the audit
+        .pin // feeds both index paths + the audit
       val qs = d.filter(col("doc_id") < 5).select(
         col("doc_id").as("query_id"), col("th").as("qth"),
         col("embedding").as("qe"), col("nrm").as("qn"),

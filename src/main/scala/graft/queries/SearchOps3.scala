@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{Q, Tables}
+import graft.{PinOps, Q, Tables}
 import graft.functions.{Dist, Portable => P, VectorFunctions => V}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
@@ -81,7 +81,7 @@ object SearchOps3 {
     (s, dir) => {
       val vecs = Tables.emb(s, dir)
         .select(col("vec_id"), col("embedding"), V.norm("embedding").as("nrm"))
-        .localCheckpoint(true) // seeds blocks, scoring, and ground truth
+        .pin // seeds blocks, scoring, and ground truth
       val ranked = Dist.globalRank(
         vecs.select(col("vec_id"),
           P.md5Long(concat(lit("nnd:"), col("vec_id").cast("string")))
@@ -105,10 +105,10 @@ object SearchOps3 {
           col("a.blk") === col("b.blk") && col("a.vec_id") < col("b.vec_id"))
         .select(col("a.vec_id").as("node"), col("b.vec_id").as("nbr"))
       // score each a<b pair once, then mirror — never score twice
-      val halfScored = score(half).localCheckpoint(true)
+      val halfScored = score(half).pin
       val init = topk(halfScored.unionByName(
         halfScored.select(col("nbr").as("node"), col("node").as("nbr"),
-          col("cos")))).localCheckpoint(true)
+          col("cos")))).pin
       val undirected = init.select("node", "nbr")
         .unionByName(init.select(col("nbr").as("node"), col("node").as("nbr")))
         .distinct()
@@ -240,7 +240,7 @@ object SearchOps3 {
         .select(col("vec_id"), col("embedding"), V.norm("embedding").as("nrm"),
           word(col("embedding"), 0).as("w0"),
           word(col("embedding"), 32).as("w1"))
-        .localCheckpoint(true)
+        .pin
       val qs = vecs.filter(col("vec_id") < 10)
         .select(col("vec_id").as("query_id"), col("embedding").as("qe"),
           col("nrm").as("qn"), col("w0").as("q0"), col("w1").as("q1"))
@@ -364,7 +364,7 @@ object SearchOps3 {
     (s, dir) => {
       val vecs = Tables.emb(s, dir)
         .select(col("vec_id"), col("embedding"), V.norm("embedding").as("nrm"))
-        .localCheckpoint(true) // seeds blocks, scoring, and ground truth
+        .pin // seeds blocks, scoring, and ground truth
       def blocks(salt: String): DataFrame =
         Dist.globalRank(
           vecs.select(col("vec_id"),
@@ -394,7 +394,7 @@ object SearchOps3 {
       // union twice with an identical cos — distinct before scoring
       val halfScored = score(
         half("nnd1").unionByName(half("nnd2")).distinct())
-        .localCheckpoint(true)
+        .pin
       val probes = vecs.filter(col("vec_id") < 40)
         .select(col("vec_id").as("node"), col("embedding").as("ea"),
           col("nrm").as("na"))
@@ -406,7 +406,7 @@ object SearchOps3 {
         .withColumn("rr", row_number().over(
           Window.partitionBy("node").orderBy(col("cos").desc, col("nbr"))))
         .filter(col("rr") <= 5).select("node", "nbr")
-        .localCheckpoint(true)
+        .pin
       def phaseRow(graph: DataFrame, prev: Option[DataFrame],
           phase: String): DataFrame = {
         val nNew = prev match {
@@ -430,7 +430,7 @@ object SearchOps3 {
       }
       var cur = topk(halfScored.unionByName(
         halfScored.select(col("nbr").as("node"), col("node").as("nbr"),
-          col("cos")))).localCheckpoint(true)
+          col("cos")))).pin
       var out = phaseRow(cur, None, "r0_seed")
       for (r <- 1 to 2) {
         val undirected = cur.select("node", "nbr")
@@ -442,7 +442,7 @@ object SearchOps3 {
           .filter(col("node") =!= col("nbr"))
           .distinct()
           .join(cur.select("node", "nbr"), Seq("node", "nbr"), "left_anti")
-        val next = topk(score(fresh).unionByName(cur)).localCheckpoint(true)
+        val next = topk(score(fresh).unionByName(cur)).pin
         out = out.unionByName(phaseRow(next, Some(cur), s"r${r}_descent"))
         cur = next
       }
@@ -566,7 +566,7 @@ object SearchOps3 {
         V.norm(s"slice($c, 1, $d)").as(s"${pfx}n$d"))
       val vecs = Tables.emb(s, dir)
         .select(col("vec_id") +: col("embedding") +: norms("", "embedding"): _*)
-        .localCheckpoint(true)
+        .pin
       val probes = vecs.filter(col("vec_id") < 40)
         .select(col("vec_id").as("node") +: col("embedding").as("pe") +:
           dims.map(d => col(s"n$d").as(s"pn$d")): _*)
@@ -578,12 +578,12 @@ object SearchOps3 {
         .select(col("node") +: col("nbr") +: dims.map(d =>
           round(V.dot(s"slice(pe, 1, $d)", s"slice(ce, 1, $d)") /
             (col(s"pn$d") * col(s"cn$d")), 6).as(s"cos$d")): _*)
-        .localCheckpoint(true) // one scoring pass feeds all 4 audits
+        .pin // one scoring pass feeds all 4 audits
       def top5(d: Int): DataFrame =
         scored.withColumn("rr", row_number().over(
             Window.partitionBy("node").orderBy(col(s"cos$d").desc, col("nbr"))))
           .filter(col("rr") <= 5).select("node", "nbr")
-      val gt = top5(64).localCheckpoint(true)
+      val gt = top5(64).pin
       dims.map { d =>
         val hits = top5(d).join(gt, Seq("node", "nbr"), "left_semi")
           .groupBy("node").agg(count(lit(1)).as("hits"))
@@ -654,7 +654,7 @@ object SearchOps3 {
     "q263_late_interaction_maxsim",
     (s, dir) => {
       val vecs = Tables.emb(s, dir).select("vec_id", "embedding")
-        .localCheckpoint(true) // feeds tokens + the pooled audit
+        .pin // feeds tokens + the pooled audit
       val probeToks = maxsimToks(vecs.filter(col("vec_id") < 8),
         "query_id", "qt", "qsv", "qn")
       val corpusToks = maxsimToks(vecs, "doc_id", "dt", "dsv", "dn")
@@ -787,11 +787,11 @@ object SearchOps3 {
     "q265_cascade_ann_maxsim",
     (s, dir) => {
       val vecs = Tables.emb(s, dir).select(col("vec_id"), col("embedding"))
-        .localCheckpoint(true) // feeds token explode + audit
+        .pin // feeds token explode + audit
       val probeToks = maxsimToks(vecs.filter(col("vec_id") < 8),
         "query_id", "qt", "qsv", "qn")
       val corpusToks = maxsimToks(vecs, "doc_id", "dt", "dsv", "dn")
-        .localCheckpoint(true) // feeds buckets, candidate scoring, audit
+        .pin // feeds buckets, candidate scoring, audit
       // token-level index: distinct (doc, bucket) posting pairs join
       // distinct (query, bucket) probes on bucket EQUALITY
       val postings = corpusToks

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{Q, Tables}
+import graft.{PinOps, Q, Tables}
 import graft.functions.{VectorFunctions => V}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -53,7 +53,7 @@ object SearchOps4 {
       .select(col("vec_id"), col("embedding"), col("lang"),
         col("clabel").as("cell"), col("crn"))
       .withColumn("nrm", V.norm("embedding"))
-      .localCheckpoint()
+      .pin
   }
 
   val q268 = Q(

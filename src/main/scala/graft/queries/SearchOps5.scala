@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{Q, Tables}
+import graft.{PinOps, Q, Tables}
 import graft.functions.{VectorFunctions => V}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -56,7 +56,7 @@ object SearchOps5 {
           when(col("cl") === col("ql"), 2)
             .when(abs(col("cl") - col("ql")) === 1, 1).otherwise(0).as("rel"),
           round(V.dot("ce", "qe") / (col("cn") * col("qn")), 6).as("cos"))
-        .localCheckpoint(true)
+        .pin
       // top-10 by rounded cosine (InferWindowGroupLimit keeps this a
       // per-partition partial top-k, the q232 plan shape)
       val ranked = graded

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{Q, Tables}
+import graft.{PinOps, Q, Tables}
 import graft.functions.{VectorFunctions => V}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -44,7 +44,7 @@ object SearchOps6 {
     (s, dir) => {
       val assigned = graft.pipeline.SemDeDup.cellAssign(Tables.emb(s, dir))
         .select("vec_id", "cell", "embedding")
-        .localCheckpoint(true) // read as BOTH self-join sides
+        .pin // read as BOTH self-join sides
       val a = assigned.select(col("vec_id").as("va"), col("cell"),
         col("embedding").as("ea"))
       val b = assigned.select(col("vec_id").as("vb"), col("cell"),

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{Q, Tables}
+import graft.{PinOps, Q, Tables}
 import graft.functions.{Portable => P}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -49,7 +49,7 @@ object SketchOps {
         // count (ONE at sf0.1 — single row group) and feeds 3
         // md5-dense sketch passes + the flag pass (Tables.docs rule)
         .repartition(s.sparkContext.defaultParallelism)
-        .localCheckpoint(true) // feeds 3 sketches + the flag pass
+        .pin // feeds 3 sketches + the flag pass
       val pKeys = Tables.t(s, dir, "part").filter(col("p_size") < 15)
         .select(col("p_partkey").as("dk"))
       val sKeys = Tables.t(s, dir, "supplier").filter(col("s_nationkey") < 10)
@@ -85,7 +85,7 @@ object SketchOps {
       val stats = flags
         .crossJoin(est(pKeys, "pk")).crossJoin(est(sKeys, "sk"))
         .crossJoin(est(oKeys, "ok"))
-        .localCheckpoint(true) // 1 row
+        .pin // 1 row
       val perms = Seq(
         ("part>supplier>orders", "p", "s"), ("part>orders>supplier", "p", "o"),
         ("supplier>part>orders", "s", "p"), ("supplier>orders>part", "s", "o"),
@@ -195,10 +195,10 @@ object SketchOps {
       val act = Tables.events(s, dir)
         .select(col("user_id"),
           floor(unix_timestamp(col("ts")) / 86400).cast("long").as("day"))
-        .localCheckpoint(true) // one events scan feeds sketch + exact
+        .pin // one events scan feeds sketch + exact
       val daily = act.groupBy("day")
         .agg(expr("hll_sketch_agg(user_id, 12)").as("sk"))
-        .localCheckpoint(true) // ≤#days rows
+        .pin // ≤#days rows
       val days = daily.select(col("day").as("d"))
       val est = daily.join(days,
           daily("day").between(col("d") - 6, col("d")))
@@ -246,7 +246,7 @@ object SketchOps {
       val st = Tables.t(s, dir, "documents")
         .select(col("source"), explode(P.tokenSet(col("text"))).as("tok"))
         .distinct()
-        .localCheckpoint(true) // one corpus scan feeds sketches + exact
+        .pin // one corpus scan feeds sketches + exact
       val per = st.groupBy("source")
         .agg(expr("hll_sketch_agg(tok, 12)").as("sk"),
           count(lit(1)).as("vocab"))
@@ -336,7 +336,7 @@ object SketchOps {
         .join(broadcast(dim), col("o_custkey") === col("c_custkey"))
         .select(col("n_name"), year(col("o_orderdate")).as("o_year"),
           col("o_custkey"), (col("o_orderdate") < cut).as("is_snap"))
-        .localCheckpoint(true) // one fact scan feeds sketches + exact
+        .pin // one fact scan feeds sketches + exact
       val parts = keyed.groupBy("n_name", "o_year", "is_snap")
         .agg(expr("hll_sketch_agg(o_custkey, 12)").as("sk"))
       val merged = parts.groupBy("n_name", "o_year")

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{Q, Tables}
+import graft.{PinOps, Q, Tables}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -174,7 +174,7 @@ object StorageOps {
           (col("o_totalprice").cast("decimal(18,4)") * 100)
             .cast("long").as("cts"), // exact integer cents
           (col("o_orderdate") < cut).as("is_snap"))
-        .localCheckpoint(true) // one fact scan feeds histogram + exact
+        .pin // one fact scan feeds histogram + exact
       val halves = keyed
         .select(col("pr"), col("is_snap"),
           expr("cts div 200000").as("bin")) // 2000-dollar bins, exact

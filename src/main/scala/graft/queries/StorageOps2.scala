@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{Q, Tables}
+import graft.{PinOps, Q, Tables}
 import graft.functions.Portable
 import org.apache.spark.sql.functions._
 
@@ -42,7 +42,7 @@ object StorageOps2 {
         .select(col("doc_id"), col("h"),
           least(floor(col("doc_id") * 16 / (col("mx") + 1)), lit(15L))
             .cast("long").as("shard"))
-        .localCheckpoint(true) // one scan feeds index build + probes
+        .pin // one scan feeds index build + probes
       val zones = sharded.groupBy("shard")
         .agg(min("h").as("zlo"), max("h").as("zhi"))
       val bloom = sharded // map-side distinct: <= shards x 4096 rows survive

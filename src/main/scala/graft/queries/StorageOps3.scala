@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{Q, Tables}
+import graft.{PinOps, Q, Tables}
 import graft.functions.{Portable => P}
 import org.apache.spark.sql.functions._
 
@@ -53,7 +53,7 @@ object StorageOps3 {
         .select(col("doc_id"), col("source"),
           shiftright(P.md5Long(concat(lit("shuf1:"),
             col("doc_id").cast("string"))), 56).as("shard"))
-        .localCheckpoint(true)
+        .pin
       val total = sharded.count()
       // all shares in integer basis points via `div` — exact integer
       // division in both engines, no float ever

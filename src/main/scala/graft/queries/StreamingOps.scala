@@ -15,7 +15,7 @@ object StreamingOps {
   val q56 = Q(
     "q56_stream_tumbling_counts",
     (s, dir) =>
-      EventStreams.tumblingCounts(s, dir, "q56_sink")
+      EventStreams.tumblingCounts(s, dir)
         .orderBy("wstart", "event_type"),
     // the batch tumbling oracle IS the streaming oracle — unified model
     Events.q34.oracle)
@@ -27,7 +27,7 @@ object StreamingOps {
   val q80 = Q(
     "q80_stream_sliding_counts",
     (s, dir) =>
-      EventStreams.slidingCounts(s, dir, "q80_sink")
+      EventStreams.slidingCounts(s, dir)
         .orderBy("wstart"),
     Events.q35.oracle)
 
@@ -40,7 +40,7 @@ object StreamingOps {
   val q91 = Q(
     "q91_stream_enriched_counts",
     (s, dir) =>
-      EventStreams.enrichedTumblingCounts(s, dir, "q91_sink")
+      EventStreams.enrichedTumblingCounts(s, dir)
         .orderBy("wstart", "segment"),
     Some(s"""SELECT CAST(floor(epoch(ts) / 3600) AS BIGINT) * 3600 AS wstart,
       |  CAST(seg_user % 3 AS INTEGER) AS segment,
@@ -59,7 +59,7 @@ object StreamingOps {
   val q124 = Q(
     "q124_stream_stream_join",
     (s, dir) =>
-      EventStreams.purchaseErrorJoin(s, dir, "q124_sink")
+      EventStreams.purchaseErrorJoin(s, dir)
         .orderBy("p_id", "e_id"),
     Some("""SELECT p.event_id AS p_id, e.event_id AS e_id, p.user_id
       |FROM events p JOIN events e

@@ -21,7 +21,7 @@ object StreamingOps2 {
     "q218_stream_heavy_hitters",
     (s, dir) => {
       val eps = 0.001
-      val row = EventStreams.cmsOverStream(s, dir, "q218_sink").head()
+      val row = EventStreams.cmsOverStream(s, dir).head()
       val cms = org.apache.spark.util.sketch.CountMinSketch.readFrom(
         new java.io.ByteArrayInputStream(row.getAs[Array[Byte]]("cms")))
       val n = row.getAs[Long]("n")
@@ -55,7 +55,7 @@ object StreamingOps2 {
   val q230 = Q(
     "q230_stream_distinct_parity",
     (s, dir) => {
-      val streamRow = EventStreams.hllOverStream(s, dir, "q230_sink").head()
+      val streamRow = EventStreams.hllOverStream(s, dir).head()
       val streamEst = streamRow.getAs[Long]("est")
       val batch = Tables.events(s, dir)
         .select(concat(col("user_id").cast("string"), lit(":"),

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{Q, Tables}
+import graft.{PinOps, Q, Tables}
 import graft.functions.Portable
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
@@ -132,7 +132,7 @@ object TextOps {
       // frames are Θ(docs) rows of ids/hashes
       val toks = Tables.docs(s, dir).filter(col("lang") === "en")
         .select(col("doc_id"), Portable.tokenSet(col("text")).as("toks"))
-        .localCheckpoint(true)
+        .pin
       // verify-side token sets as SORTED 60-bit hashes: set sizes
       // (and thus Jaccard) are unchanged, but the 520k-pair verify
       // stage becomes one codegen'd merge scan per pair over
@@ -141,7 +141,7 @@ object TextOps {
       // the whole pipeline at sf0.1)
       val toksH = toks.select(col("doc_id"),
         Portable.md5Sorted(col("toks")).as("toks"))
-        .localCheckpoint(true)
+        .pin
       // The whole signature matrix (16 min-hashes → 2 band sigs) is
       // ONE codegen'd pass per row ([[graft.functions.MinHashBands]]
       // — the HOF formulation interprets ~16×|toks| lambdas per doc):
@@ -152,7 +152,7 @@ object TextOps {
       // bucket value alone IS the (band, signature) match.
       val sigs = toks
         .select(col("doc_id"), explode(expr("minhash_bands(toks, 2, 8)")).as("sig"))
-        .localCheckpoint(true)
+        .pin
       val cand = sigs.alias("sa").hint("shuffle_hash")
         .join(sigs.alias("sb"),
           col("sa.sig") === col("sb.sig") &&

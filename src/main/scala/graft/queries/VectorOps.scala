@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{Q, Tables}
+import graft.{PinOps, Q, Tables}
 import graft.functions.{Portable, VectorFunctions => V}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -407,7 +407,7 @@ object VectorOps {
         .select(col("vec_id"), col("embedding"), col("clabel").as("cell"),
           col("crn"))
         .withColumn("nrm", V.norm("embedding"))
-        .localCheckpoint()
+        .pin
       val cand = ranked.filter(col("crn") === 1).select(
         col("vec_id").as("cand_id"), col("embedding").as("ce"),
         col("nrm").as("cn"), col("cell"))

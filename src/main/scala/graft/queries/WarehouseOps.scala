@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{Q, Tables}
+import graft.{PinOps, Q, Tables}
 import graft.functions.{Dist, Portable => P}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -142,7 +142,7 @@ object WarehouseOps {
           col("c_custkey").cast("string"))), lit(97)) === 0)
         .select(col("c_custkey").as("fk"))
       val delOrders = o.join(forget, col("o_custkey") === col("fk"), "left_semi")
-        .select(col("o_orderkey").as("dok")).localCheckpoint(true)
+        .select(col("o_orderkey").as("dok")).pin
       def n(df: DataFrame, as: String): DataFrame =
         df.agg(count(lit(1)).as(as))
       val stats = n(c, "c_before")
@@ -156,7 +156,7 @@ object WarehouseOps {
           "left_anti"), "o_orphans"))
         .crossJoin(n(li.join(o, col("l_orderkey") === col("o_orderkey"),
           "left_anti"), "l_orphans"))
-        .localCheckpoint(true) // 1 row
+        .pin // 1 row
       stats.select(lit("1_customer").as("table_name"),
           col("c_before").as("rows_before"), col("c_del").as("rows_deleted"),
           (col("c_before") - col("c_del")).as("rows_after"),

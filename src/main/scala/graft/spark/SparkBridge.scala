@@ -27,6 +27,16 @@ object GraftSqlBridge {
     spark.withActive(execution.SQLExecution.withSQLConfPropagated(
       spark.asInstanceOf[classic.SparkSession])(body))
 
+  /** SQL `text`, parsed by the session's parser, with `bind` applied to
+    * the parsed plan before analysis: how [[graft.Tables.sql]] puts
+    * tables into a plan without registering them on the session.
+    */
+  def sql(spark: SparkSession, text: String)(
+      bind: catalyst.plans.logical.LogicalPlan => catalyst.plans.logical.LogicalPlan): DataFrame = {
+    val s = spark.asInstanceOf[classic.SparkSession]
+    s.withActive(classic.Dataset.ofRows(s, bind(s.sessionState.sqlParser.parsePlan(text))))
+  }
+
   /** The session's Hadoop configuration, as its file sources build it. */
   def hadoopConf(spark: SparkSession): org.apache.hadoop.conf.Configuration =
     spark.asInstanceOf[classic.SparkSession].sessionState.newHadoopConf()

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import graft.functions.{Portable => P}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.types.{BinaryType, LongType, StringType, StructField, StructType}
 
 /** Structured Streaming forms of the §2.9 event-time operators. The
   * aggregation expressions are identical to the batch versions in
@@ -11,6 +12,12 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * groupBy(window(...)) plan runs incrementally with state + a
   * watermark. The parquet fixture drives the stream (file source),
   * a memory sink collects the result synchronously for verification.
+  *
+  * A run leaves nothing on the session: the memory sink's view is named
+  * for the run and dropped once its rows are bound, so callers name no
+  * sink and two clients can run the same stream on one session at once.
+  * The view twins pin through [[graft.Pins]] on the stream's
+  * `foreachBatch` thread, which inherits the caller's pin scope.
   */
 object EventStreams {
 
@@ -37,24 +44,24 @@ object EventStreams {
   /** Tumbling event-time window counts with a watermark, run to
     * completion over the fixture and returned as a static DataFrame.
     */
-  def tumblingCounts(spark: SparkSession, dir: String, queryName: String): DataFrame = {
+  def tumblingCounts(spark: SparkSession, dir: String): DataFrame = {
     val agg = readEvents(spark, dir)
       .withWatermark("ts", "10 minutes")
       .groupBy(window(col("ts"), "5 minutes"), col("event_type"))
       .agg(count(lit(1)).as("n"), P.moneySum(col("value")).as("sum_value"))
-    runToCompletion(agg, "complete", queryName)
+    runToCompletion(agg, "complete")
       .select(
         unix_timestamp(col("window.start")).as("wstart"),
         col("event_type"), col("n"), col("sum_value"))
   }
 
   /** Sliding event-time window (T2), streaming form of q35. */
-  def slidingCounts(spark: SparkSession, dir: String, queryName: String): DataFrame = {
+  def slidingCounts(spark: SparkSession, dir: String): DataFrame = {
     val agg = readEvents(spark, dir)
       .withWatermark("ts", "10 minutes")
       .groupBy(window(col("ts"), "10 minutes", "5 minutes"))
       .agg(count(lit(1)).as("n"), P.moneySum(col("value")).as("sum_value"))
-    runToCompletion(agg, "complete", queryName)
+    runToCompletion(agg, "complete")
       .select(unix_timestamp(col("window.start")).as("wstart"), col("n"), col("sum_value"))
   }
 
@@ -62,12 +69,12 @@ object EventStreams {
     * the watermark has closed — a strict subset of the batch result
     * (the trailing open session per user stays in state).
     */
-  def sessionCounts(spark: SparkSession, dir: String, queryName: String): DataFrame = {
+  def sessionCounts(spark: SparkSession, dir: String): DataFrame = {
     val agg = readEvents(spark, dir)
       .withWatermark("ts", "30 minutes")
       .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
       .agg(count(lit(1)).as("n_events"), P.moneySum(col("value")).as("sum_value"))
-    runToCompletion(agg, "append", queryName)
+    runToCompletion(agg, "append")
       .select(
         col("user_id"),
         unix_timestamp(col("session_window.start")).as("sstart"),
@@ -81,7 +88,7 @@ object EventStreams {
     * way to enrich a stream without a second stateful operator.
     */
   def enrichedTumblingCounts(
-      spark: SparkSession, dir: String, queryName: String): DataFrame = {
+      spark: SparkSession, dir: String): DataFrame = {
     val segments = spark.range(0, 100)
       .select(col("id").as("seg_user"),
         (col("id") % 3).cast("int").as("segment"))
@@ -91,7 +98,7 @@ object EventStreams {
         col("user_id") === col("seg_user"))
       .groupBy(window(col("ts"), "60 minutes"), col("segment"))
       .agg(count(lit(1)).as("n"), P.moneySum(col("value")).as("sum_value"))
-    runToCompletion(agg, "complete", queryName)
+    runToCompletion(agg, "complete")
       .select(
         unix_timestamp(col("window.start")).as("wstart"),
         col("segment"), col("n"), col("sum_value"))
@@ -105,12 +112,12 @@ object EventStreams {
     * EVICTED — an unbounded dropDuplicates would grow state forever
     * on an infinite stream).
     */
-  def dedupFirstPerUserType(spark: SparkSession, dir: String, queryName: String): DataFrame = {
+  def dedupFirstPerUserType(spark: SparkSession, dir: String): DataFrame = {
     val deduped = readEvents(spark, dir)
       .withWatermark("ts", "10 minutes")
       .dropDuplicatesWithinWatermark("user_id", "event_type")
       .select(col("user_id"), col("event_type"), col("event_id"))
-    runToCompletion(deduped, "append", queryName)
+    runToCompletion(deduped, "append")
   }
 
   /** foreachBatch sink — the production pattern for sinks Spark has
@@ -122,7 +129,7 @@ object EventStreams {
     * batch answer — asserted by StreamingSpec.
     */
   def tumblingCountsToParquet(
-      spark: SparkSession, dir: String, outPath: String, queryName: String): DataFrame = {
+      spark: SparkSession, dir: String, outPath: String): DataFrame = {
     val agg = readEvents(spark, dir)
       .withWatermark("ts", "10 minutes")
       .groupBy(window(col("ts"), "5 minutes"), col("event_type"))
@@ -135,8 +142,7 @@ object EventStreams {
         .outputMode("complete")
         .foreachBatch { (batch: DataFrame, _: Long) =>
           batch.write.mode("overwrite").parquet(outPath)
-        }
-        .queryName(queryName))
+        })
     graft.Tables.parquet(spark, outPath)
   }
 
@@ -149,7 +155,7 @@ object EventStreams {
     * append mode emits every match exactly once.
     */
   def purchaseErrorJoin(
-      spark: SparkSession, dir: String, queryName: String): DataFrame = {
+      spark: SparkSession, dir: String): DataFrame = {
     val purchases = readEvents(spark, dir)
       .filter(col("event_type") === "purchase")
       .select(col("event_id").as("p_id"), col("user_id").as("p_user"),
@@ -164,7 +170,7 @@ object EventStreams {
       expr("p_user = e_user AND e_ts >= p_ts AND e_ts <= p_ts + INTERVAL 30 MINUTES"))
     runToCompletion(
       joined.select(col("p_id"), col("e_id"), col("p_user").as("user_id")),
-      "append", queryName)
+      "append")
   }
 
   /** Event for the custom-state sessionizer. `ts` carries the
@@ -301,13 +307,13 @@ object EventStreams {
     * runs in update mode into a keyed store the ingest path probes.
     */
   def docBandWinners(
-      spark: SparkSession, dir: String, queryName: String): DataFrame = {
+      spark: SparkSession, dir: String): DataFrame = {
     val sigs = parquetStream(spark, dir, "documents.parquet")
       .select(col("doc_id"), P.tokenSet(col("text")).as("toks"))
       .filter(size(col("toks")) >= 1)
       .select(col("doc_id"), explode(expr("minhash_bands(toks, 2, 8)")).as("sig"))
     val winners = sigs.groupBy("sig").agg(min("doc_id").as("winner"))
-    runToCompletion(winners, "complete", queryName)
+    runToCompletion(winners, "complete")
   }
 
   private val ProviderKey = "spark.sql.streaming.stateStore.providerClass"
@@ -381,27 +387,19 @@ object EventStreams {
     */
   private val statePartitions = 4
 
-  /** Start under the state-sized shuffle setting, drain, stop.
-    * start() clones the session (StreamExecution constructor), so the
-    * conf only needs to hold across the start call; the swap-and-
-    * restore is synchronized so concurrent callers on one session
-    * can't capture each other's temporary value as the "batch"
-    * setting. Every run-to-completion path goes through here so the
-    * state-sizing rule lives in exactly one place.
-    */
   /** Global count-min sketch over the stream (complete mode): the
     * sketch aggregation buffer IS the streaming state, merged across
     * micro-batches — the mergeability q199's batch form relies on,
     * exercised through the streaming engine. Returns one row
     * (sketch bytes, total count).
     */
-  def cmsOverStream(spark: SparkSession, dir: String, queryName: String): DataFrame = {
+  def cmsOverStream(spark: SparkSession, dir: String): DataFrame = {
     val agg = readEvents(spark, dir)
       .select(get_json_object(col("props"), "$.k").as("k"))
       .groupBy()
       .agg(expr("count_min_sketch(k, 0.001d, 0.99d, 42)").as("cms"),
         count(lit(1)).as("n"))
-    runToCompletion(agg, "complete", queryName)
+    runToCompletion(agg, "complete")
   }
 
   /** Global HLL sketch of (user, event_type) pairs over the stream
@@ -410,14 +408,14 @@ object EventStreams {
     * the streamed estimate must equal the batch estimate exactly
     * (q230 asserts it).
     */
-  def hllOverStream(spark: SparkSession, dir: String, queryName: String): DataFrame = {
+  def hllOverStream(spark: SparkSession, dir: String): DataFrame = {
     val agg = readEvents(spark, dir)
       .select(concat(col("user_id").cast("string"), lit(":"),
         col("event_type")).as("k"))
       .groupBy()
       .agg(expr("hll_sketch_estimate(hll_sketch_agg(k, 12))").as("est"),
         count(lit(1)).as("n"))
-    runToCompletion(agg, "complete", queryName)
+    runToCompletion(agg, "complete")
   }
 
   /** Streaming twin of q255's HLL-merge view maintenance (VERDICT r8
@@ -444,41 +442,17 @@ object EventStreams {
     *               and `v` (the value whose distincts are counted)
     * @return (final stored view (k, sk binary), non-empty batches)
     */
-  def hllViewMaintenance(stream: DataFrame): (DataFrame, Int) = {
-    val spark = stream.sparkSession
-    import org.apache.spark.sql.types._
-    // Atomics, not captured vars: the foreachBatch closure runs on the
-    // stream-execution thread while the caller reads the final state
-    // after drain(); the atomics make the cross-thread publish explicit
-    // rather than relying on awaitTermination's incidental locking.
-    val stored = new java.util.concurrent.atomic.AtomicReference[DataFrame](
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(Seq(StructField("k", StringType), StructField("sk", BinaryType)))))
-    val pinned = new java.util.concurrent.atomic.AtomicReference[DataFrame](null)
-    val batches = new java.util.concurrent.atomic.AtomicInteger(0)
-    val writer = stream.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          batches.incrementAndGet()
-          val part = batch.groupBy("k")
-            .agg(expr("hll_sketch_agg(v, 12)").as("bsk"))
-          // supersede-don't-accumulate (graft.graph.Rotate rule 1):
-          // the view chain would otherwise pin one frame per batch
-          stored.set(graft.graph.Rotate.supersede(
-            stored.get.join(part, Seq("k"), "full_outer")
-              .select(col("k"),
-                when(col("sk").isNotNull && col("bsk").isNotNull,
-                  expr("hll_union(sk, bsk, true)"))
-                  .otherwise(coalesce(col("sk"), col("bsk"))).as("sk")),
-            pinned.get))
-          pinned.set(stored.get)
-        }
-        ()
-      }
-    drain(spark, writer)
-    (stored.get, batches.get)
-  }
+  def hllViewMaintenance(stream: DataFrame): (DataFrame, Int) =
+    maintainView(stream, StructType(Seq(
+      StructField("k", StringType), StructField("sk", BinaryType)))) { (stored, batch) =>
+      val part = batch.groupBy("k")
+        .agg(expr("hll_sketch_agg(v, 12)").as("bsk"))
+      stored.join(part, Seq("k"), "full_outer")
+        .select(col("k"),
+          when(col("sk").isNotNull && col("bsk").isNotNull,
+            expr("hll_union(sk, bsk, true)"))
+            .otherwise(coalesce(col("sk"), col("bsk"))).as("sk"))
+    }
 
   /** q260's streaming twin (completes the IVM streaming pairings:
     * q230 sketches, q255 HLL views, and now the quantile histogram):
@@ -495,35 +469,15 @@ object EventStreams {
     * @return (final stored view (k, bin, c), non-empty batches)
     */
   def histogramViewMaintenance(
-      stream: DataFrame, binWidthCents: Long): (DataFrame, Int) = {
-    val spark = stream.sparkSession
-    import org.apache.spark.sql.types._
-    // same explicit cross-thread publish discipline as hllViewMaintenance
-    val stored = new java.util.concurrent.atomic.AtomicReference[DataFrame](
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(Seq(StructField("k", StringType),
-          StructField("bin", LongType), StructField("c", LongType)))))
-    val pinned = new java.util.concurrent.atomic.AtomicReference[DataFrame](null)
-    val batches = new java.util.concurrent.atomic.AtomicInteger(0)
-    val writer = stream.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          batches.incrementAndGet()
-          val part = batch
-            .select(col("k"), expr(s"cts div $binWidthCents").as("bin"))
-            .groupBy("k", "bin").agg(count(lit(1)).as("c"))
-          stored.set(graft.graph.Rotate.supersede(
-            stored.get.unionByName(part)
-              .groupBy("k", "bin").agg(sum("c").as("c")),
-            pinned.get))
-          pinned.set(stored.get)
-        }
-        ()
-      }
-    drain(spark, writer)
-    (stored.get, batches.get)
-  }
+      stream: DataFrame, binWidthCents: Long): (DataFrame, Int) =
+    maintainView(stream, StructType(Seq(StructField("k", StringType),
+      StructField("bin", LongType), StructField("c", LongType)))) { (stored, batch) =>
+      val part = batch
+        .select(col("k"), expr(s"cts div $binWidthCents").as("bin"))
+        .groupBy("k", "bin").agg(count(lit(1)).as("c"))
+      stored.unionByName(part)
+        .groupBy("k", "bin").agg(sum("c").as("c"))
+    }
 
   /** q267's streaming twin (VERDICT r9 #3, completing the IVM
     * streaming pairings alongside q255-HLL and q260-histogram): a
@@ -541,33 +495,15 @@ object EventStreams {
     * @return (final stored view (k, id, cts), non-empty batches)
     */
   def topkViewMaintenance(stream: DataFrame, k: Int): (DataFrame, Int) = {
-    val spark = stream.sparkSession
-    import org.apache.spark.sql.types._
-    val stored = new java.util.concurrent.atomic.AtomicReference[DataFrame](
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(Seq(StructField("k", StringType),
-          StructField("id", LongType), StructField("cts", LongType)))))
-    val pinned = new java.util.concurrent.atomic.AtomicReference[DataFrame](null)
-    val batches = new java.util.concurrent.atomic.AtomicInteger(0)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("k").orderBy(col("cts").desc, col("id"))
     def topk(df: DataFrame): DataFrame = df
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") <= k).drop("rn")
-    val writer = stream.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          batches.incrementAndGet()
-          stored.set(graft.graph.Rotate.supersede(
-            topk(stored.get.unionByName(topk(batch.select("k", "id", "cts")))),
-            pinned.get))
-          pinned.set(stored.get)
-        }
-        ()
-      }
-    drain(spark, writer)
-    (stored.get, batches.get)
+    maintainView(stream, StructType(Seq(StructField("k", StringType),
+      StructField("id", LongType), StructField("cts", LongType)))) { (stored, batch) =>
+      topk(stored.unionByName(topk(batch.select("k", "id", "cts"))))
+    }
   }
 
   /** q269's streaming twin: gap-based sessions maintained under
@@ -585,36 +521,59 @@ object EventStreams {
     * @return (final stored view (user_id, s_start, s_end, n_events),
     *         non-empty batches)
     */
-  def sessionViewMaintenance(stream: DataFrame, gapUs: Long): (DataFrame, Int) = {
+  def sessionViewMaintenance(stream: DataFrame, gapUs: Long): (DataFrame, Int) =
+    maintainView(stream, StructType(Seq(StructField("user_id", LongType),
+      StructField("s_start", LongType), StructField("s_end", LongType),
+      StructField("n_events", LongType)))) { (stored, batch) =>
+      val pts = batch.select(col("user_id"), col("us").as("s_start"),
+        col("us").as("s_end"), lit(1L).as("n_events"))
+      val merged = graft.queries.IvmOps.mergeSessions(stored, pts, gapUs)
+      val untouched = stored.join(
+        pts.select("user_id").distinct(), Seq("user_id"), "left_anti")
+      untouched.unionByName(merged)
+    }
+
+  /** The loop the four view twins share. The stored view starts as an
+    * empty frame of `schema`; each non-empty micro-batch is folded into
+    * it by `merge(stored, batch)`, and the result is pinned and
+    * supersedes its predecessor (graft.graph.Rotate rule 1), so the view
+    * chain holds one pin, not one per batch.
+    *
+    * @return (final stored view, non-empty batches)
+    */
+  private def maintainView(stream: DataFrame, schema: StructType)(
+      merge: (DataFrame, DataFrame) => DataFrame): (DataFrame, Int) = {
     val spark = stream.sparkSession
-    import org.apache.spark.sql.types._
-    val stored = new java.util.concurrent.atomic.AtomicReference[DataFrame](
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(Seq(StructField("user_id", LongType),
-          StructField("s_start", LongType), StructField("s_end", LongType),
-          StructField("n_events", LongType)))))
+    val empty = spark.createDataFrame(
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+    // Atomics, not captured vars: the foreachBatch closure runs on the
+    // stream-execution thread while the caller reads the final state
+    // after drain(); the atomics make the cross-thread publish explicit
+    // rather than relying on awaitTermination's incidental locking.
     val pinned = new java.util.concurrent.atomic.AtomicReference[DataFrame](null)
     val batches = new java.util.concurrent.atomic.AtomicInteger(0)
     val writer = stream.writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
         if (!batch.isEmpty) {
           batches.incrementAndGet()
-          val pts = batch.select(col("user_id"), col("us").as("s_start"),
-            col("us").as("s_end"), lit(1L).as("n_events"))
-          val merged = graft.queries.IvmOps.mergeSessions(stored.get, pts, gapUs)
-          val untouched = stored.get.join(
-            pts.select("user_id").distinct(), Seq("user_id"), "left_anti")
-          stored.set(graft.graph.Rotate.supersede(
-            untouched.unionByName(merged), pinned.get))
-          pinned.set(stored.get)
+          val prev = pinned.get
+          pinned.set(graft.graph.Rotate.supersede(
+            merge(if (prev == null) empty else prev, batch), prev))
         }
         ()
       }
     drain(spark, writer)
-    (stored.get, batches.get)
+    (Option(pinned.get).getOrElse(empty), batches.get)
   }
 
+  /** Start under the state-sized shuffle setting, drain, stop.
+    * start() clones the session (StreamExecution constructor), so the
+    * conf only needs to hold across the start call; the swap-and-
+    * restore is synchronized so concurrent callers on one session
+    * can't capture each other's temporary value as the "batch"
+    * setting. Every run-to-completion path goes through here so the
+    * state-sizing rule lives in exactly one place.
+    */
   private def drain(
       spark: SparkSession,
       writer: org.apache.spark.sql.streaming.DataStreamWriter[
@@ -629,11 +588,20 @@ object EventStreams {
     finally q.stop()
   }
 
-  private def runToCompletion(
-      agg: DataFrame, mode: String, queryName: String): DataFrame = {
+  private val sinkIds = new java.util.concurrent.atomic.AtomicLong
+
+  /** Run `agg` to the end into a memory sink and return its rows. The
+    * sink's view has a name of this run's own, and is dropped once the
+    * result is bound: the frame keeps its analyzed plan over the sink,
+    * the session keeps no view, and two callers can run the same stream
+    * on one session at once.
+    */
+  private def runToCompletion(agg: DataFrame, mode: String): DataFrame = {
     val spark = agg.sparkSession
-    drain(spark,
-      agg.writeStream.outputMode(mode).format("memory").queryName(queryName))
-    spark.table(queryName)
+    val sink = s"graft_sink_${sinkIds.incrementAndGet()}"
+    try {
+      drain(spark, agg.writeStream.outputMode(mode).format("memory").queryName(sink))
+      spark.table(sink)
+    } finally spark.catalog.dropTempView(sink)
   }
 }

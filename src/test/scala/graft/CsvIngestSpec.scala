@@ -143,13 +143,18 @@ class CsvIngestSpec extends SparkSpec {
   }
 
   test("ingest leaves no RDD persisted and no plan cached") {
-    Session.releasePins(spark)
-    (1 to 3).foreach { i =>
+    // compared with the state before, not with an empty context: nothing
+    // clears the session between tests
+    val persisted = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val tables = (1 to 3).map { i =>
       CsvIngest.ingestSalvaged(spark,
-        tmpCsv(s"id;v\n$i;1.5\nx;2\n", s"leak$i.csv"), s"leak$i")
+        tmpCsv(s"id;v\n$i;1.5\nx;2\n", s"leak$i.csv"), s"leak$i").table
     }
-    assert(spark.sparkContext.getPersistentRDDs.isEmpty)
-    assert(spark.sharedState.cacheManager.isEmpty)
+    assert(spark.sparkContext.getPersistentRDDs.keySet.toSet == persisted)
+    tables.foreach { t =>
+      val view = spark.table(t).asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
+      assert(spark.sharedState.cacheManager.lookupCachedData(view).isEmpty, t)
+    }
   }
 
   test("sniff and inference run no Spark job; a salvaging ingest runs one") {

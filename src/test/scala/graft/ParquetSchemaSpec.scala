@@ -176,7 +176,7 @@ class ParquetSchemaSpec extends SparkSpec {
     ObjectStoreFileSystem.clearBucket("pqlake")
     val dir = "s3a://pqlake/sf"
     Tables.events(spark, sf()).write.parquet(s"$dir/events.parquet")
-    val streamed = EventStreams.tumblingCounts(spark, dir, "pq_s3a_tumbling")
+    val streamed = EventStreams.tumblingCounts(spark, dir)
       .agg(sum("n")).head.getLong(0)
     assert(streamed == Tables.events(spark, sf()).count())
     ObjectStoreFileSystem.clearBucket("pqlake")

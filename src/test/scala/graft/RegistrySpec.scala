@@ -67,9 +67,22 @@ class RegistrySpec extends SparkSpec {
   }
 
   test("every query runs and is non-degenerate on sf0.001") {
+    // each query runs as a harness runs it, through Q.run, and must
+    // leave the session as it found it: no persisted RDD, temp view,
+    // conf change or running stream of its own
+    val sc = spark.sparkContext
+    def views = spark.catalog.listTables().collect().filter(_.isTemporary).map(_.name).toSet
     val failures = Q.registry.flatMap { q =>
+      val (rdds, vs, conf) = (sc.getPersistentRDDs.keySet.toSet, views, spark.conf.getAll)
       try {
-        q.fn(spark, sf()).count(); None
+        q.run(spark, sf())(_.count())
+        val left = Seq(
+          "persisted RDDs" -> (sc.getPersistentRDDs.keySet.toSet -- rdds),
+          "temp views" -> (views -- vs),
+          "conf" -> { val now = spark.conf.getAll.toSet; (now -- conf) ++ (conf.toSet -- now) },
+          "streams" -> spark.streams.active.map(_.name).toSet)
+          .collect { case (what, extra) if extra.nonEmpty => s"$what ${extra.mkString(",")}" }
+        if (left.isEmpty) None else Some(s"${q.name} left ${left.mkString("; ")}")
       } catch { case e: Throwable => Some(s"${q.name}: ${e.getMessage.take(120)}") }
     }
     assert(failures.isEmpty, failures.mkString("\n"))

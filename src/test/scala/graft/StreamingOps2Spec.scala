@@ -14,7 +14,7 @@ class StreamingOps2Spec extends SparkSpec {
     // must equal one batch-built sketch bit for bit (cell adds are
     // commutative integer sums)
     val streamed = graft.streaming.EventStreams
-      .cmsOverStream(spark, sf(), "q218_spec_sink").head()
+      .cmsOverStream(spark, sf()).head()
     val batch = Tables.events(spark, sf())
       .select(get_json_object(col("props"), "$.k").as("k"))
       .agg(expr("count_min_sketch(k, 0.001d, 0.99d, 42)").as("cms"),

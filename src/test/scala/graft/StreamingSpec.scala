@@ -11,7 +11,7 @@ class StreamingSpec extends SparkSpec {
     Q.registry.find(_.name == name).get.fn(spark, sf())
 
   test("streaming sliding windows equal the batch result") {
-    val stream = EventStreams.slidingCounts(spark, sf(), "spec_sliding")
+    val stream = EventStreams.slidingCounts(spark, sf())
     val b = batch("q35_sliding_window")
     assert(stream.count() == b.count())
     assert(stream.exceptAll(b.select("wstart", "n", "sum_value")).isEmpty)
@@ -19,7 +19,7 @@ class StreamingSpec extends SparkSpec {
 
   test("stream-static enrichment join equals its batch twin") {
     import org.apache.spark.sql.functions._
-    val stream = EventStreams.enrichedTumblingCounts(spark, sf(), "spec_enriched")
+    val stream = EventStreams.enrichedTumblingCounts(spark, sf())
     val segments = spark.range(0, 100)
       .select(col("id").as("seg_user"), (col("id") % 3).cast("int").as("segment"))
     val b = Tables.events(spark, sf())
@@ -34,7 +34,7 @@ class StreamingSpec extends SparkSpec {
 
   test("foreachBatch parquet sink snapshot equals the batch result") {
     val out = java.nio.file.Files.createTempDirectory("graft-feb").toString + "/snap"
-    val snap = EventStreams.tumblingCountsToParquet(spark, sf(), out, "spec_feb")
+    val snap = EventStreams.tumblingCountsToParquet(spark, sf(), out)
     val b = batch("q34_tumbling_window")
     assert(snap.count() == b.count())
     assert(snap.exceptAll(b.select("wstart", "event_type", "n", "sum_value")).isEmpty)
@@ -42,7 +42,7 @@ class StreamingSpec extends SparkSpec {
 
   test("dropDuplicatesWithinWatermark keeps one event per key in-window") {
     import org.apache.spark.sql.functions._
-    val stream = EventStreams.dedupFirstPerUserType(spark, sf(), "spec_dedup")
+    val stream = EventStreams.dedupFirstPerUserType(spark, sf())
     val keys = Tables.events(spark, sf())
       .select("user_id", "event_type").distinct().count()
     // exactly-once per key within the watermark: with the whole fixture
@@ -53,7 +53,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("streaming sessionization emits a closed subset of batch sessions") {
-    val stream = EventStreams.sessionCounts(spark, sf(), "spec_session")
+    val stream = EventStreams.sessionCounts(spark, sf())
     val b = batch("q36_session_window").select("user_id", "sstart", "n_events", "sum_value")
     val emitted = stream.count()
     assert(emitted > 0, "watermark should close most sessions over a 30-day fixture")
