@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.PinOps
+import graft.Pins
 
 /** Distributed order-statistics helpers.
   *
@@ -87,9 +87,8 @@ object Dist {
       values: Seq[String],
       buckets: Int): DataFrame = {
     require(buckets >= 1 && values.nonEmpty)
-    val ranged = df.repartitionByRange(buckets, order: _*)
-      .withColumn("__pid", spark_partition_id())
-      .pin
+    val ranged = Pins.pin(df.repartitionByRange(buckets, order: _*)
+      .withColumn("__pid", spark_partition_id()))
     // coalesce: a bucket whose values are all NULL sums to NULL and
     // would NPE the driver-side getLong below
     val aggs = values.map(v => coalesce(sum(col(v)), lit(0L)).as(v))
@@ -143,9 +142,8 @@ object Dist {
       out: String,
       buckets: Int): DataFrame = {
     require(buckets >= 1)
-    val ranged = df.repartitionByRange(buckets, order: _*)
-      .withColumn("__pid", org.apache.spark.sql.functions.spark_partition_id())
-      .pin
+    val ranged = Pins.pin(df.repartitionByRange(buckets, order: _*)
+      .withColumn("__pid", org.apache.spark.sql.functions.spark_partition_id()))
     val counts = ranged.groupBy("__pid").count().collect()
       .map(r => r.getInt(0) -> r.getLong(1))
       .sortBy(_._1)

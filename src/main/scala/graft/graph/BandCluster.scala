@@ -3,7 +3,7 @@ package graft.graph
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.PinOps
+import graft.Pins
 
 /** Near-dup cluster assignment over an LSH band-signature table —
   * the shared construction behind q100 and the corpus-prep pipeline
@@ -43,12 +43,11 @@ object BandCluster {
     // pinned: the marked frame feeds the candidate edges, the
     // candidate cluster join AND the isolated-doc arm — a handful of
     // longs per doc, never any payload column heavier than the input
-    val marked = db
+    val marked = Pins.pin(db
       .join(bc.select(col("band").as("b0"), col("c").as("c0")), Seq("b0"))
       .join(bc.select(col("band").as("b1"), col("c").as("c1")), Seq("b1"))
       .withColumn("__iso", col("c0") === 1 && col("c1") === 1)
-      .drop("c0", "c1")
-      .pin
+      .drop("c0", "c1"))
     val cand = marked.filter(!col("__iso")).drop("__iso")
     val comp = ConnectedComponents.run(
       cand.select(col("b0").as("a"), col("b1").as("b")))

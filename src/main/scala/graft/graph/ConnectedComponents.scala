@@ -2,7 +2,7 @@ package graft.graph
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.PinOps
+import graft.Pins
 
 /** Distributed connected components by iterative min-label
   * propagation — the merge step every near-dup dedup pipeline needs
@@ -96,13 +96,12 @@ object ConnectedComponents {
     // plus (x, x) self-loops, deduped; repartition BEFORE distinct so
     // one exchange serves both (subset rule)
     val e = edges.select(col("a"), col("b"))
-    val symCaller = e
+    val symCaller = Pins.pin(e
       .union(e.select(col("b").as("a"), col("a").as("b")))
       .union(e.select(col("a"), col("a").as("b")))
       .union(e.select(col("b").as("a"), col("b").as("b")))
       .repartition(col("b"))
-      .distinct()
-      .pin
+      .distinct())
     // nodes ≡ self-loop rows of the pinned sym; count + round-0 label
     // sum (decimal: beats long overflow at 2^60-sized labels × 10⁹
     // nodes) ride one action over the pinned blocks
@@ -209,8 +208,7 @@ object ConnectedComponents {
       prevSum = s2
       iter += 1
     }
-    val out = propPin.select(col("node"), col("lab").as("component"))
-      .pin
+    val out = Pins.pin(propPin.select(col("node"), col("lab").as("component")))
     // the eager output supersedes the loop pins
     org.apache.spark.sql.GraftSqlBridge.unpersistCheckpoint(propPin)
     org.apache.spark.sql.GraftSqlBridge.unpersistCheckpoint(sym)

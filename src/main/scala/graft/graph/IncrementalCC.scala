@@ -2,7 +2,7 @@ package graft.graph
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.PinOps
+import graft.Pins
 
 /** Delete-aware incremental connected-components maintenance
   * (VERDICT r8 #4) — the missing half of q262's insert-only IVM:
@@ -92,16 +92,15 @@ object IncrementalCC {
     // stored state: in production this frame is persisted at
     // snapshot-build time and read back here; recomputing it in the
     // operator keeps the query self-contained (q262's convention)
-    val ef = edgeFlags.pin
+    val ef = Pins.pin(edgeFlags)
     // CC.run's output is already an eager checkpoint crossing back on
     // the caller's session — no re-pin (the r13 double pin cost a
     // full extra label pass per call)
     val snap = ConnectedComponents.run(ef.select("a", "b"))
-    val affected = ef.filter(col("lost"))
+    val affected = Pins.pin(ef.filter(col("lost"))
       .select(explode(array(col("a"), col("b"))).as("node")).distinct()
       .join(snap, "node")
-      .select(col("component").as("aff")).distinct()
-      .pin // bounded by #touched components
+      .select(col("component").as("aff")).distinct()) // bounded by #touched components
     val surv = ef.filter(!col("lost"))
     // surviving edges inside affected components; both endpoints of
     // a snapshot edge share a label, so tagging via `a` suffices
@@ -126,7 +125,7 @@ object IncrementalCC {
       // refresh-loop mode: materialize the refreshed labels, then
       // release every intermediate pin (Rotate rule 1 — valid only
       // once the sole consumer, the output, has materialized)
-      val pinned = out.pin
+      val pinned = Pins.pin(out)
       org.apache.spark.sql.GraftSqlBridge.unpersistCheckpoint(ef)
       org.apache.spark.sql.GraftSqlBridge.unpersistCheckpoint(snap)
       org.apache.spark.sql.GraftSqlBridge.unpersistCheckpoint(affected)

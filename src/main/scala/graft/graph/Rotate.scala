@@ -1,7 +1,7 @@
 package graft.graph
 
 import org.apache.spark.sql.DataFrame
-import graft.PinOps
+import graft.Pins
 
 /** THE checkpoint-rotation policy for iterative operators
   * (VERDICT r8 #8) — one documented place for the rules q221/q142/
@@ -60,7 +60,7 @@ object Rotate {
     * the saved GC scan on a 3-round peel.
     */
   def supersede(next: DataFrame, prev: DataFrame): DataFrame = {
-    val pinned = next.pin
+    val pinned = Pins.pin(next)
     if (prev != null)
       org.apache.spark.sql.GraftSqlBridge.unpersistCheckpoint(prev)
     pinned

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.{Dist, MinHashBands, Portable}
 import graft.graph.BandCluster
-import graft.PinOps
+import graft.Pins
 
 /** The end-to-end corpus-preparation pipeline a training-data run
   * actually executes, composed from this engine's operators:
@@ -71,14 +71,13 @@ object CorpusPrep {
     // what lets the pack path run WITHOUT a second tokenize+hash+
     // window pass over the text: every downstream stage that needs
     // sizes reads them from this pinned frame.
-    val sigs = exact
+    val sigs = Pins.pin(exact
       .select(col("doc_id"), col("nt"),
         org.apache.spark.sql.GraftSqlBridge.column(MinHashBands(
           org.apache.spark.sql.GraftSqlBridge.expression(
             Portable.tokenSet(col("text"))), 2, 8)).as("bs"))
       .select(col("doc_id"), col("nt"),
-        col("bs").getItem(0).as("b0"), col("bs").getItem(1).as("b1"))
-      .pin
+        col("bs").getItem(0).as("b0"), col("bs").getItem(1).as("b1")))
     // near-dup clusters via the shared band-graph construction
     // ([[graft.graph.BandCluster]] — candidate bypass + connected
     // components); the cluster head (min doc_id) survives, exactly
@@ -107,12 +106,11 @@ object CorpusPrep {
     // fraction of block-manager memory), vs re-running the dedup
     // pipeline; on a multi-hour run swap localCheckpoint for
     // reliable checkpoint.
-    val sized = prepared
+    val sized = Pins.pin(prepared
       .select(col("doc_id"), col("nt"))
       .filter(col("nt") >= 1)
       .withColumn("hk",
-        Portable.md5Long(concat(lit("pack:"), col("doc_id").cast("string"))))
-      .pin
+        Portable.md5Long(concat(lit("pack:"), col("doc_id").cast("string")))))
     Dist.globalCumsum(sized, "hk", Seq("doc_id"), "nt", "cum",
       spark.sparkContext.defaultParallelism)
       .withColumn("st", col("cum") - col("nt"))

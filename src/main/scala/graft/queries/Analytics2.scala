@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{PinOps, Q, Tables}
+import graft.{Pins, Q, Tables}
 import graft.functions.{Portable => P}
 import graft.functions.Dist
 import org.apache.spark.sql.expressions.Window
@@ -436,11 +436,10 @@ object Analytics2 {
       // ok-only partitioning satisfies the distinct AND survives the
       // localCheckpoint (LogicalRDD keeps outputPartitioning), so the
       // self-join on ok adds ZERO exchange over the pinned blocks
-      val li = Tables.t(s, dir, "lineitem")
+      val li = Pins.pin(Tables.t(s, dir, "lineitem")
         .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
         .repartition(s.sparkContext.defaultParallelism, col("ok"))
-        .distinct()
-        .pin
+        .distinct())
       val e = graft.graph.Rotate.supersede(
         li.join(li.select(col("ok").as("ok2"), col("pk").as("pk2")),
             col("ok") === col("ok2") && col("pk") < col("pk2"))
@@ -483,11 +482,10 @@ object Analytics2 {
       // dedup AND the pair self-join in one exchange, at an explicit
       // cluster-derived count so AQE byte-coalescing cannot serialize
       // the CPU-dense pair expansion
-      val li = Tables.t(s, dir, "lineitem")
+      val li = Pins.pin(Tables.t(s, dir, "lineitem")
         .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
         .repartition(s.sparkContext.defaultParallelism, col("ok"))
-        .distinct()
-        .pin
+        .distinct())
       val e = graft.graph.Rotate.supersede(
         li.join(li.select(col("ok").as("ok2"), col("pk").as("pk2")),
             col("ok") === col("ok2") && col("pk") < col("pk2"))
@@ -565,11 +563,10 @@ object Analytics2 {
       // of li; the explicit cluster-derived count keeps the CPU-dense
       // pair expansion at session parallelism instead of an AQE
       // byte-coalesced handful of tasks.
-      val li = Tables.t(s, dir, "lineitem")
+      val li = Pins.pin(Tables.t(s, dir, "lineitem")
         .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
         .repartition(s.sparkContext.defaultParallelism, col("ok"))
-        .distinct()
-        .pin
+        .distinct())
       val pairs = li.join(li.select(col("ok").as("ok2"), col("pk").as("pk2")),
           col("ok") === col("ok2") && col("pk") < col("pk2"))
         .groupBy(col("pk").as("pa"), col("pk2").as("pb"))

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{PinOps, Q, Tables}
+import graft.{Pins, Q, Tables}
 import graft.functions.Dist
 import org.apache.spark.sql.functions._
 
@@ -82,10 +82,9 @@ object Analytics3 {
       // order count, the per-item supports, and BOTH sides of the
       // within-order self-join — unpinned, the fact-table distinct
       // (the query's dominant shuffle) re-ran four times
-      val li = Tables.t(s, dir, "lineitem")
+      val li = Pins.pin(Tables.t(s, dir, "lineitem")
         .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
-        .distinct()
-        .pin
+        .distinct())
       val nOrders = li.select("ok").distinct().count()
       val item = li.groupBy(col("pk")).agg(count(lit(1)).as("n_item"))
       val pairs = li.join(li.select(col("ok").as("ok2"), col("pk").as("pk2")),

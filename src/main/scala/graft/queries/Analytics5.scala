@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{PinOps, Q, Tables}
+import graft.{Pins, Q, Tables}
 import graft.functions.{Portable => P}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
@@ -102,7 +102,8 @@ object Analytics5 {
         .select(col("c_custkey").as("a_id"), col("c_name").as("a_name"),
           col("c_nationkey").as("a_nat"), col("c_mktsegment").as("a_seg"),
           col("c_acctbal").as("a_bal"))
-      val b = Tables.t(s, dir, "customer")
+      // feeds key-explode and class totals
+      val b = Pins.pin(Tables.t(s, dir, "customer")
         .withColumn("h1", P.md5Long(concat(lit("erd:"), col("c_custkey").cast("string"))))
         .withColumn("h2", P.md5Long(concat(lit("erb:"), col("c_custkey").cast("string"))))
         .withColumn("h3", P.md5Long(concat(lit("ers:"), col("c_custkey").cast("string"))))
@@ -120,8 +121,7 @@ object Analytics5 {
         .withColumn("b_seg", when(pmod(col("h3"), lit(5)) === 0, lit("UNKNOWN"))
           .otherwise(col("c_mktsegment")))
         .select((col("c_custkey") + 10000000L).as("b_id"), col("b_name"),
-          col("c_nationkey").as("b_nat"), col("b_seg"), col("b_bal"), col("cls"))
-        .pin // feeds key-explode and class totals
+          col("c_nationkey").as("b_nat"), col("b_seg"), col("b_bal"), col("cls")))
       // One pass from block join to best match — no distinct, no
       // payload joins, no window sort. ProfileEr at sf10 attributed
       // the old shape's 47 s to exactly those three (22.5 s distinct
@@ -299,13 +299,12 @@ object Analytics5 {
   val q253 = Q(
     "q253_conformal_coverage",
     (s, dir) => {
-      val o = Tables.t(s, dir, "orders")
+      val o = Pins.pin(Tables.t(s, dir, "orders")
         .join(Tables.t(s, dir, "customer"),
           col("o_custkey") === col("c_custkey"))
         .select(col("c_mktsegment").as("seg"), col("o_totalprice").as("y"),
           (pmod(P.md5Long(concat(lit("conf:"), col("o_orderkey").cast("string"))),
-            lit(2)) === 0).as("is_cal"))
-        .pin // feeds the fit, the rank, and the audit
+            lit(2)) === 0).as("is_cal"))) // feeds the fit, the rank, and the audit
       val mu = o.filter(col("is_cal")).groupBy("seg")
         .agg(P.moneyAvg(col("y")).as("mu"), count(lit(1)).as("n_cal"))
       val resid = o.filter(col("is_cal")).join(broadcast(mu), "seg")

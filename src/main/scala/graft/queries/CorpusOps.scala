@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{PinOps, Q, Tables}
+import graft.{Pins, Q, Tables}
 import graft.functions.{Dist, Portable}
 import graft.graph.ConnectedComponents
 import org.apache.spark.sql.functions._
@@ -36,13 +36,12 @@ object CorpusOps {
       // per doc, one codegen'd [[MinHashBands]] pass) feeds BOTH the
       // component loop and the final cluster join — without pinning
       // it the heaviest stage runs twice
-      val db = Tables.docs(s, dir)
+      val db = Pins.pin(Tables.docs(s, dir)
         .select(col("doc_id"), Portable.tokenSet(col("text")).as("toks"))
         .filter(size(col("toks")) >= 1) // token-free docs leave the oracle's unnest too
         .withColumn("bs", expr("minhash_bands(toks, 2, 8)"))
         .select(col("doc_id"),
-          col("bs").getItem(0).as("b0"), col("bs").getItem(1).as("b1"))
-        .pin
+          col("bs").getItem(0).as("b0"), col("bs").getItem(1).as("b1")))
       // shared band-graph clustering (candidate bypass + CC) — see
       // graph.BandCluster; isolated docs become their own n_docs=1
       // clusters without entering the component loop

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{PinOps, Q, Tables}
+import graft.{Pins, Q, Tables}
 import graft.functions.{Portable, VectorFunctions => V}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -164,14 +164,11 @@ object CorpusOps2 {
       // side), and unpinned the regex tokenization re-ran ~5× and the
       // per-token 16-hash MinHash twice over the full corpus — the
       // q209/q228 recompute pattern
-      val ts = Tables.docs(s, dir).filter(col("lang") === "en")
+      val ts = Pins.pin(Tables.docs(s, dir).filter(col("lang") === "en")
         .select(col("doc_id"), Portable.tokenSet(col("text")).as("toks"))
-        .filter(size(col("toks")) >= 1)
-        .pin
-      val sigs = ts.select(col("doc_id"), expr("minhash_sig(toks, 16)").as("sig"))
-        .pin
-      val th = ts.select(col("doc_id"), Portable.md5Sorted(col("toks")).as("th"))
-        .pin
+        .filter(size(col("toks")) >= 1))
+      val sigs = Pins.pin(ts.select(col("doc_id"), expr("minhash_sig(toks, 16)").as("sig")))
+      val th = Pins.pin(ts.select(col("doc_id"), Portable.md5Sorted(col("toks")).as("th")))
       // The probe side is a FIXED-SIZE sample (~300 docs), not a
       // fixed fraction: `doc_id % 20` made the pair space 0.05·n² —
       // quadratic, measured 16x cost at 10x data. The modulus scales

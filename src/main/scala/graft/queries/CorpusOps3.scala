@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{PinOps, Q, Tables}
+import graft.{Pins, Q, Tables}
 import graft.functions.Portable
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -71,13 +71,12 @@ object CorpusOps3 {
     def pairCounts(c: DataFrame): DataFrame = c
       .select(explode(expr("symbol_pairs(sy)")).as("pair"))
       .groupBy("pair").agg(count(lit(1)).as("n"))
-    var corpus = corpus0.pin
+    var corpus = Pins.pin(corpus0)
     var merges: DataFrame = null
     for (r <- 1 to rounds) {
-      val top = pairCounts(corpus)
+      val top = Pins.pin(pairCounts(corpus)
         .orderBy(col("n").desc, col("pair")).limit(1)
-        .select(lit(r).as("round"), col("pair"), col("n"))
-        .pin // 1 row — pins the round's rule
+        .select(lit(r).as("round"), col("pair"), col("n"))) // 1 row — pins the round's rule
       merges = if (merges == null) top else merges.unionAll(top)
       if (r < rounds || applyLast) {
         // 1-row read off the pinned frame; the merge applies lazily

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{PinOps, Q, Tables}
+import graft.{Pins, Q, Tables}
 import graft.functions.{Portable => P, VectorFunctions => V}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -29,15 +29,14 @@ object CorpusOps4 {
       // subset from it (the fact-table distinct otherwise runs twice),
       // then release the pin once fi — the only frame scanned after
       // this point — has materialized (Rotate rule 1)
-      val items = Tables.t(s, dir, "lineitem")
+      val items = Pins.pin(Tables.t(s, dir, "lineitem")
         .select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
         // the q160 shape (r14): o-partitioning serves the distinct,
         // the pair self-join AND the extend join in ONE exchange, at
         // an explicit cluster-derived count so AQE byte-coalescing
         // cannot serialize the pair expansion
         .repartition(s.sparkContext.defaultParallelism, col("o"))
-        .distinct()
-        .pin
+        .distinct())
       val l1 = items.groupBy("p").agg(count(lit(1)).as("n"))
         .filter(col("n") >= 4).select("p")
       val fi = graft.graph.Rotate.supersede(
@@ -45,9 +44,8 @@ object CorpusOps4 {
       val pairs = fi.alias("a")
         .join(fi.alias("b"), col("a.o") === col("b.o") && col("a.p") < col("b.p"))
         .select(col("a.o").as("o"), col("a.p").as("x"), col("b.p").as("y"))
-      val l2 = pairs.groupBy("x", "y").agg(count(lit(1)).as("n"))
-        .filter(col("n") >= 2).select("x", "y")
-        .pin // three semi-join probes below
+      val l2 = Pins.pin(pairs.groupBy("x", "y").agg(count(lit(1)).as("n"))
+        .filter(col("n") >= 2).select("x", "y")) // three semi-join probes below
       // the (x,y) L2 prune stays POST-extend with the other two: the
       // pair stream leaves its generation keyed by o, which is
       // exactly the extend join's key — pruning it first was measured
@@ -253,9 +251,8 @@ object CorpusOps4 {
     "q234_containment_dedup",
     (s, dir) => {
       val docs = Tables.docs(s, dir).filter(col("lang") === "en")
-      val toksH = docs
-        .select(col("doc_id"), P.md5Sorted(P.tokenSet(col("text"))).as("th"))
-        .pin
+      val toksH = Pins.pin(docs
+        .select(col("doc_id"), P.md5Sorted(P.tokenSet(col("text"))).as("th")))
       val sh = docs.filter(length(col("text")) >= 8)
         .select(col("doc_id"), explode(expr("char_shingle_hashes(text, 8)")).as("h"))
       val rare = sh.groupBy("h").agg(count(lit(1)).as("df"))
@@ -266,8 +263,7 @@ object CorpusOps4 {
       // choice: at corpus scale it is Θ(total chars) rows and the
       // codegen'd shingle kernel recomputes cheaper than that spills;
       // it is derived exactly twice (df counts + anchor filter).
-      val anchored = sh.join(rare, Seq("h"), "left_semi")
-        .pin
+      val anchored = Pins.pin(sh.join(rare, Seq("h"), "left_semi"))
       val cand = anchored.alias("a")
         .join(anchored.alias("b"),
           col("a.h") === col("b.h") && col("a.doc_id") < col("b.doc_id"))

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{PinOps, Q, Tables}
+import graft.{Pins, Q, Tables}
 import graft.functions.{Portable, VectorFunctions => V}
 import org.apache.spark.sql.functions._
 
@@ -436,9 +436,8 @@ object CurationOps {
     "q187_lsh_band_sensitivity",
     (s, dir) => {
       // tokenized once, pinned: three band settings re-read the frame
-      val toks = Tables.docs(s, dir).filter(col("lang") === "en")
-        .select(col("doc_id"), Portable.tokenSet(col("text")).as("toks"))
-        .pin
+      val toks = Pins.pin(Tables.docs(s, dir).filter(col("lang") === "en")
+        .select(col("doc_id"), Portable.tokenSet(col("text")).as("toks")))
       val settings = Seq((2, 8), (4, 4), (8, 2))
       settings.map { case (b, r) =>
         val sigs = toks.select(col("doc_id"),

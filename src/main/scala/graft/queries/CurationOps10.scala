@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{PinOps, Q, Tables}
+import graft.{Pins, Q, Tables}
 import graft.functions.Portable
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -152,10 +152,9 @@ object CurationOps10 {
       // pin the #sources-row aggregate: it feeds BOTH the ranked
       // window chain and the broadcast totals crossJoin — unpinned,
       // the dominant corpus tokenization scan would run twice
-      val avail = Tables.docs(s, dir)
+      val avail = Pins.pin(Tables.docs(s, dir)
         .select(col("source"), size(Portable.tokens(col("text"))).as("nt"))
-        .groupBy("source").agg(sum(col("nt").cast("long")).as("avail"))
-        .pin
+        .groupBy("source").agg(sum(col("nt").cast("long")).as("avail")))
       val w = Window.orderBy(col("avail"), col("source"))
       val ranked = avail
         .withColumn("rn", row_number().over(w))

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{PinOps, Q, Tables}
+import graft.{Pins, Q, Tables}
 import graft.functions.Portable
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -54,14 +54,13 @@ object CurationOps11 {
   val q282 = Q(
     "q282_t_closeness_audit",
     (s, dir) => {
-      val cells = Tables.t(s, dir, "orders")
+      val cells = Pins.pin(Tables.t(s, dir, "orders")
         .join(Tables.t(s, dir, "customer"),
           col("o_custkey") === col("c_custkey"))
         .groupBy(col("c_nationkey").as("nation"),
           col("c_mktsegment").as("segment"),
           col("o_orderpriority").as("sens"))
-        .agg(count(lit(1)).as("cnt"))
-        .pin // feeds global dist + groups + fill
+        .agg(count(lit(1)).as("cnt"))) // feeds global dist + groups + fill
       val glob = cells.groupBy("sens").agg(sum("cnt").as("g"))
         .withColumn("g_cum", sum("g").over(
           Window.orderBy("sens").rowsBetween(Window.unboundedPreceding, 0)))

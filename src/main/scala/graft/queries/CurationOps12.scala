@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{PinOps, Q, Tables}
+import graft.{Pins, Q, Tables}
 import graft.functions.Portable
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -37,11 +37,11 @@ object CurationOps12 {
   val q288 = Q(
     "q288_pareto_frontier",
     (s, dir) => {
-      val perDoc = Tables.docs(s, dir)
+      // feeds cells + the membership join
+      val perDoc = Pins.pin(Tables.docs(s, dir)
         .select(col("doc_id"), col("lang"),
           size(Portable.tokens(col("text"))).cast("long").as("toks"),
-          size(Portable.tokenSet(col("text"))).cast("long").as("types"))
-        .pin // feeds cells + the membership join
+          size(Portable.tokenSet(col("text"))).cast("long").as("types")))
       val cells = perDoc.groupBy("lang", "toks").agg(max("types").as("types"))
       val wLonger = Window.partitionBy("lang").orderBy(col("toks").desc)
         .rowsBetween(Window.unboundedPreceding, -1)

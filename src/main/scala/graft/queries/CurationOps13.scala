@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{PinOps, Q}
+import graft.{Pins, Q}
 import graft.functions.Portable
 import org.apache.spark.sql.functions._
 
@@ -45,15 +45,14 @@ object CurationOps13 {
       // engines pick different survivors. With the sentinel, a
       // null-chars doc always loses to any real (>= 0) length in both
       // engines, and ties fall through to doc_id identically.
-      val db = graft.Tables.docs(s, dir)
+      val db = Pins.pin(graft.Tables.docs(s, dir)
         .select(col("doc_id"), col("source"),
           coalesce(col("n_chars").cast("long"), lit(-1L)).as("n_chars"),
           Portable.tokenSet(col("text")).as("toks"))
         .filter(size(col("toks")) >= 1) // token-free docs leave the oracle's unnest too
         .withColumn("bs", expr("minhash_bands(toks, 2, 8)"))
         .select(col("doc_id"), col("source"), col("n_chars"),
-          col("bs").getItem(0).as("b0"), col("bs").getItem(1).as("b1"))
-        .pin
+          col("bs").getItem(0).as("b0"), col("bs").getItem(1).as("b1")))
       graft.graph.BandCluster.assign(db)
         .groupBy("cluster")
         .agg(count(lit(1)).as("n_docs"),

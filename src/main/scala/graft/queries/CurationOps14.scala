@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{PinOps, Q}
+import graft.{Pins, Q}
 import graft.functions.Portable
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -44,11 +44,10 @@ object CurationOps14 {
     */
   private def keepRanges(s: org.apache.spark.sql.SparkSession,
       dir: String): (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
-      val docs = graft.Tables.docs(s, dir)
+      val docs = Pins.pin(graft.Tables.docs(s, dir)
         .filter(length(col("text")) >= 40)
         .select(col("doc_id"), length(col("text")).cast("long").as("len"),
-          col("text"))
-        .pin // read twice: window source + untouched docs
+          col("text"))) // read twice: window source + untouched docs
       val sh = docs
         .select(col("doc_id"), col("len"),
           explode(expr("anchor_shingle_pos(text, 40, 4)")).as("w"))
@@ -66,9 +65,8 @@ object CurationOps14 {
       // occurrences only), and pinning it caps the kernel at the two
       // irreducible passes (position stream + dup-hash groupBy, whose
       // subtrees differ after column pruning and can't share a scan)
-      val spans = sh.join(dup, Seq("h"), "left_semi")
-        .select(col("doc_id"), col("len"), col("s"), (col("s") + 39L).as("e"))
-        .pin
+      val spans = Pins.pin(sh.join(dup, Seq("h"), "left_semi")
+        .select(col("doc_id"), col("len"), col("s"), (col("s") + 39L).as("e")))
       // classic interval merge: an excision starts a new island unless
       // it overlaps or touches the running max end of its predecessors
       val ord = Window.partitionBy("doc_id").orderBy("s", "e")
@@ -181,8 +179,8 @@ object CurationOps14 {
       val ranked = graft.functions.Dist.globalRank(
         docs, Seq(col("source"), col("h"), col("doc_id")), "gr",
         s.sparkContext.defaultParallelism)
-      val counts = ranked.groupBy("source").agg(count(lit(1)).as("n"))
-        .pin // S rows; read as offsets AND interleave table
+      // S rows; read as offsets AND interleave table
+      val counts = Pins.pin(ranked.groupBy("source").agg(count(lit(1)).as("n")))
       val offs = counts.alias("a")
         .join(counts.alias("b"), col("b.source") < col("a.source"), "left_outer")
         .groupBy(col("a.source").as("source"))

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{PinOps, Q, Tables}
+import graft.{Pins, Q, Tables}
 import graft.functions.{Portable, VectorFunctions => V}
 import org.apache.spark.sql.functions._
 
@@ -171,10 +171,9 @@ object CurationOps5 {
     (s, dir) => {
       val e = Tables.emb(s, dir).select("vec_id", "embedding")
       val seed = e.orderBy("vec_id").limit(1)
-      var m = e.crossJoin(broadcast(seed.select(col("embedding").as("se"))))
+      var m = Pins.pin(e.crossJoin(broadcast(seed.select(col("embedding").as("se"))))
         .select(col("vec_id"), col("embedding"),
-          round(V.dist2("embedding", "se"), 6).as("md"))
-        .pin
+          round(V.dist2("embedding", "se"), 6).as("md")))
       val picked = Seq.newBuilder[(Int, Long, Double)]
       picked += ((0, seed.head().getLong(0), 0.0))
       for (r <- 1 to 7) {
@@ -184,10 +183,9 @@ object CurationOps5 {
           .select(col("embedding").as("se"))
         // eager checkpoint per round: each round is one O(n) pass
         // instead of re-deriving all prior rounds' distance updates
-        m = m.crossJoin(broadcast(selVec))
+        m = Pins.pin(m.crossJoin(broadcast(selVec))
           .select(col("vec_id"), col("embedding"),
-            least(col("md"), round(V.dist2("embedding", "se"), 6)).as("md"))
-          .pin
+            least(col("md"), round(V.dist2("embedding", "se"), 6)).as("md")))
       }
       import s.implicits._
       picked.result().toDF("r", "vec_id", "radius").orderBy("r")
@@ -226,8 +224,8 @@ object CurationOps5 {
   val q209 = Q(
     "q209_dedup_method_overlap",
     (s, dir) => {
-      val en = Tables.docs(s, dir).filter(col("lang") === "en")
-        .select(col("doc_id"), col("text")).pin
+      val en = Pins.pin(Tables.docs(s, dir).filter(col("lang") === "en")
+        .select(col("doc_id"), col("text")))
       val exd = en.groupBy(sha2(col("text"), 256).as("h"))
         .agg(collect_list("doc_id").as("ids"), count(lit(1)).as("c"))
         .filter(col("c") >= 2)
@@ -240,22 +238,19 @@ object CurationOps5 {
       // twice — all recompute, no ReusedExchange (the branches'
       // exchange subtrees differ). Each pinned frame is Θ(docs) rows
       // of ids/hashes, the same block-manager class as `en` itself.
-      val toks = en.select(col("doc_id"), Portable.tokenSet(col("text")).as("toks"))
-        .pin
+      val toks = Pins.pin(en.select(col("doc_id"), Portable.tokenSet(col("text")).as("toks")))
       // toksH / sigs / banded are independent siblings off the pinned
       // toks — overlap their pin jobs (guide §2.6) instead of paying
       // three serial straggler tails; frames are construction-identical
       val Seq(toksH, sigs, banded) = graft.functions.Overlap.par(s)(
-        () => toks.select(col("doc_id"), Portable.md5Sorted(col("toks")).as("th"))
-          .pin,
-        () => toks
-          .select(col("doc_id"), explode(expr("minhash_bands(toks, 2, 8)")).as("sig"))
-          .pin,
-        () => toks.filter(size(col("toks")) >= 1)
+        () => Pins.pin(toks.select(col("doc_id"), Portable.md5Sorted(col("toks")).as("th"))),
+        () => Pins.pin(toks
+          .select(col("doc_id"), explode(expr("minhash_bands(toks, 2, 8)")).as("sig"))),
+        // both sides of the byte-bucket self-join
+        () => Pins.pin(toks.filter(size(col("toks")) >= 1)
           .select(col("doc_id"), expr("simhash32(toks)").as("sh"))
           .withColumn("band", explode(sequence(lit(0), lit(3))))
-          .withColumn("byte", expr("(sh div CAST(pow(2, band * 8) AS BIGINT)) % 256"))
-          .pin) // both sides of the byte-bucket self-join
+          .withColumn("byte", expr("(sh div CAST(pow(2, band * 8) AS BIGINT)) % 256"))))
       val mpairs = sigs.alias("sa").hint("shuffle_hash")
         .join(sigs.alias("sb"),
           col("sa.sig") === col("sb.sig") && col("sa.doc_id") < col("sb.doc_id"))

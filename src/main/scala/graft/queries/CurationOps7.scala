@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{PinOps, Q, Tables}
+import graft.{Pins, Q, Tables}
 import graft.functions.{Portable => P, VectorFunctions => V}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -31,11 +31,10 @@ object CurationOps7 {
       val wn = Tables.emb(s, dir).withColumn("nrm", V.norm("embedding"))
       val q0 = wn.filter(col("vec_id") === 0)
         .select(col("embedding").as("qe"), col("nrm").as("qn"))
-      val cand = wn.filter(col("vec_id") > 0)
+      val cand = Pins.pin(wn.filter(col("vec_id") > 0)
         .crossJoin(broadcast(q0))
         .select(col("vec_id"), col("embedding").as("ce"), col("nrm").as("cn"),
-          round(V.dot("embedding", "qe") / (col("nrm") * col("qn")), 6).as("rel"))
-        .pin
+          round(V.dot("embedding", "qe") / (col("nrm") * col("qn")), 6).as("rel")))
       var out: DataFrame = null
       var selIds: DataFrame = null
       var selVecs: DataFrame = null
@@ -53,10 +52,10 @@ object CurationOps7 {
               .agg(max("rel").as("rel"), max("p").as("pen"))
               .withColumn("score",
                 round(col("rel") * lam - col("pen") * (1 - lam), 6))
-        val win = scored
+        // 1 row — pins the round's pick
+        val win = Pins.pin(scored
           .orderBy(col("score").desc, col("vec_id")).limit(1)
-          .select(lit(r).as("round"), col("vec_id"), col("rel"), col("score"))
-          .pin // 1 row — pins the round's pick
+          .select(lit(r).as("round"), col("vec_id"), col("rel"), col("score")))
         out = if (out == null) win else out.unionAll(win)
         selIds = out.select("vec_id")
         selVecs = cand.join(broadcast(selIds), Seq("vec_id"), "left_semi")
@@ -212,15 +211,14 @@ object CurationOps7 {
       // the exchange subtrees never match). Only (doc_id, h) is
       // pinned; the bloom bit columns are two-instruction bit ops
       // recomputed per scan of the cached blocks.
-      val sh0 = Tables.docs(s, dir)
+      val sh0 = Pins.pin(Tables.docs(s, dir)
         .select(col("doc_id"), P.tokens(col("text")).as("toks"))
         .filter(size(col("toks")) >= 5)
         .select(col("doc_id"), explode(expr(
           "transform(sequence(1, size(toks) - 4), i -> concat_ws(' ', slice(toks, i, 5)))"))
           .as("g"))
         .select(col("doc_id"), P.md5Long(col("g")).as("h"))
-        .distinct()
-        .pin
+        .distinct())
       // true integer bit extraction (h is a non-negative 60-bit
       // hash): shiftright+mask, never `/` — both engines' `/`
       // promote to IEEE double, whose 53-bit mantissa would bend

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{PinOps, Q, Tables}
+import graft.{Pins, Q, Tables}
 import graft.functions.{Dist, Portable => P}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -128,11 +128,11 @@ object CurationOps9 {
   val q239 = Q(
     "q239_padding_waste_audit",
     (s, dir) => {
-      val lens = Tables.docs(s, dir)
+      // both strategies rank the same frame
+      val lens = Pins.pin(Tables.docs(s, dir)
         .select(col("doc_id"),
           size(P.tokens(col("text"))).cast("long").as("n_toks"),
-          P.md5Long(concat(lit("pack:"), col("doc_id").cast("string"))).as("hk"))
-        .pin // both strategies rank the same frame
+          P.md5Long(concat(lit("pack:"), col("doc_id").cast("string"))).as("hk")))
       def audit(strategy: String, order: Seq[org.apache.spark.sql.Column]) =
         Dist.globalRank(lens, order, "rnk", 32)
           .withColumn("batch", floor((col("rnk") - 1) / 16))

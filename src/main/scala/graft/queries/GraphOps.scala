@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{PinOps, Q, Tables}
+import graft.{Pins, Q, Tables}
 import org.apache.spark.sql.functions._
 
 /** Graph analytics over warehouse relations (SURVEY §2.13 extension
@@ -38,7 +38,7 @@ object GraphOps {
       // re-run the join+distinct); endpoint counts for the broadcast
       // gate ride the pin action as observed metrics
       val obs = org.apache.spark.sql.Observation()
-      val e = Tables.t(s, dir, "orders")
+      val e = Pins.pin(Tables.t(s, dir, "orders")
         .join(Tables.t(s, dir, "lineitem"),
           col("o_orderkey") === col("l_orderkey"))
         .select(
@@ -47,8 +47,7 @@ object GraphOps {
         .distinct()
         .observe(obs,
           approx_count_distinct(col("src")).as("nc"),
-          approx_count_distinct(col("dst")).as("ns"))
-        .pin
+          approx_count_distinct(col("dst")).as("ns")))
       val m = obs.getAsJava
       val small = m.get("nc").asInstanceOf[Long] +
         m.get("ns").asInstanceOf[Long] <= graft.graph.Bcast.maxNodes
@@ -82,9 +81,8 @@ object GraphOps {
           freshInstance(e).select(col("dst").as("src"), col("src").as("dst")))
         else freshInstance(symPinned)
       val obsN = org.apache.spark.sql.Observation()
-      val deg = sym.groupBy("src").agg(count(lit(1)).as("deg"))
-        .observe(obsN, count(lit(1)).as("n"))
-        .pin // pin: node-sized, seeds pr0 and n
+      val deg = Pins.pin(sym.groupBy("src").agg(count(lit(1)).as("deg"))
+        .observe(obsN, count(lit(1)).as("n"))) // pin: node-sized, seeds pr0 and n
       // node count rides the deg pin action (replaces the old
       // crossJoin'd 1-row nFrame — two BroadcastNestedLoopJoins out
       // of every plan); n < 2^53 so the double is exact

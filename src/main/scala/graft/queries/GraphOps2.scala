@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{PinOps, Q, Tables}
+import graft.{Pins, Q, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -93,15 +93,14 @@ object GraphOps2 {
       // node counts for the broadcast gate ride the pin action as
       // observed metrics (approx — a perf gate, never semantics)
       val obs = org.apache.spark.sql.Observation()
-      val packed = Tables.t(s, dir, "lineitem")
+      val packed = Pins.pin(Tables.t(s, dir, "lineitem")
         .join(Tables.t(s, dir, "orders"),
           col("l_orderkey") === col("o_orderkey"))
         .select(graft.graph.PackedEdge.pack(col("o_custkey"), col("l_partkey")).as("e"))
         .distinct()
         .observe(obs,
           approx_count_distinct(graft.graph.PackedEdge.x(col("e"))).as("nu"),
-          approx_count_distinct(col("e").bitwiseAND(lit(0xFFFFFFFFL))).as("np"))
-        .pin
+          approx_count_distinct(col("e").bitwiseAND(lit(0xFFFFFFFFL))).as("np")))
       val m = obs.getAsJava
       val small = math.max(m.get("nu").asInstanceOf[Long],
         m.get("np").asInstanceOf[Long]) <= graft.graph.Bcast.maxNodes
@@ -180,7 +179,7 @@ object GraphOps2 {
       // max 2·10⁶ at sf10; a >2³²-part catalog fails loudly at the
       // PackedEdge.pack guard and would need the two-column form
       // back).
-      val itemsP = items.pin
+      val itemsP = Pins.pin(items)
       val packedX = graft.graph.PackedEdge.x(col("e"))
       val packedY = col("e").bitwiseAND(lit(0xFFFFFFFFL))
       var pe = graft.graph.Rotate.supersede(
@@ -199,8 +198,8 @@ object GraphOps2 {
       // round 1: alive = every node, so both semi-joins are no-ops —
       // degree is a straight count over pe (saves two joins of the
       // largest round; the pe scan itself is the irreducible cost)
-      var alive: DataFrame = degrees(pe)
-        .filter(col("deg") >= 60).select("node").pin
+      var alive: DataFrame = Pins.pin(degrees(pe)
+        .filter(col("deg") >= 60).select("node"))
       // ADAPTIVE frontier rotation (r8, measured; policy codified in
       // [[graft.graph.Rotate]] as of r9): round 7
       // unconditionally filtered the edge set to alive–alive edges
@@ -222,8 +221,8 @@ object GraphOps2 {
       // applies; on this one it stays shut and round cost matches r6.
       var aliveCnt = alive.count()
       for (_ <- 2 to 3) {
-        val nextAlive = degrees(surviving(pe, alive))
-          .filter(col("deg") >= 60).select("node").pin
+        val nextAlive = Pins.pin(degrees(surviving(pe, alive))
+          .filter(col("deg") >= 60).select("node"))
         val nextCnt = nextAlive.count()
         if (graft.graph.Rotate.shrank(aliveCnt, nextCnt)) {
           pe = graft.graph.Rotate.supersede(
@@ -309,14 +308,13 @@ object GraphOps2 {
   private def bandFrame(s: SparkSession, dir: String,
       flagName: String, flag: org.apache.spark.sql.Column): DataFrame = {
     import graft.functions.{Portable => P}
-    Tables.docs(s, dir)
+    Pins.pin(Tables.docs(s, dir)
       .select(col("doc_id"), P.tokenSet(col("text")).as("toks"))
       .filter(size(col("toks")) >= 1)
       .withColumn("bs", expr("minhash_bands(toks, 2, 8)"))
       .select(col("doc_id"),
         col("bs").getItem(0).as("b0"), col("bs").getItem(1).as("b1"),
-        flag.as(flagName))
-      .pin
+        flag.as(flagName)))
   }
 
   val q262 = Q(

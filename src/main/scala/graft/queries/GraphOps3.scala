@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{PinOps, Q, Tables}
+import graft.{Pins, Q, Tables}
 import org.apache.spark.sql.functions._
 
 /** Graph analytics, third batch (round 10): partition-quality scoring
@@ -44,10 +44,9 @@ object GraphOps3 {
       // codegen'd bit ops (part keys are dense 32-bit at every SF).
       // repartition by o BEFORE the distinct (q160's r13 shape): one
       // exchange serves the distinct and the pair self-join
-      val items = Tables.t(s, dir, "lineitem")
+      val items = Pins.pin(Tables.t(s, dir, "lineitem")
         .select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
-        .repartition(s.sparkContext.defaultParallelism, col("o")).distinct()
-        .pin
+        .repartition(s.sparkContext.defaultParallelism, col("o")).distinct())
       val pairs = graft.graph.Rotate.supersede(
         items.alias("a")
           .join(items.alias("b"), col("a.o") === col("b.o") && col("a.p") < col("b.p"))
@@ -125,10 +124,9 @@ object GraphOps3 {
       // distinct (q160's r13 shape): the o-partitioning rides the pin
       // through the bsz groupBy, the items⋈bsz join AND the weighted
       // self-join — one exchange where the naive plan pays three
-      val items = Tables.t(s, dir, "lineitem")
+      val items = Pins.pin(Tables.t(s, dir, "lineitem")
         .select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
-        .repartition(s.sparkContext.defaultParallelism, col("o")).distinct()
-        .pin
+        .repartition(s.sparkContext.defaultParallelism, col("o")).distinct())
       val weighted = graft.graph.Rotate.supersede(
         items
           .join(items.groupBy("o").agg(count(lit(1)).as("bsz"))

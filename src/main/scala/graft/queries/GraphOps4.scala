@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{PinOps, Q, Tables}
+import graft.{Pins, Q, Tables}
 import graft.graph.PackedEdge
 import org.apache.spark.sql.functions._
 
@@ -48,7 +48,8 @@ object GraphOps4 {
     (s, dir) => {
       // endpoint counts for the broadcast gate ride the pin action
       val obs = org.apache.spark.sql.Observation()
-      val packed = Tables.t(s, dir, "lineitem")
+      // scanned 2× per round (contrib join sides)
+      val packed = Pins.pin(Tables.t(s, dir, "lineitem")
         .join(Tables.t(s, dir, "orders"),
           col("l_orderkey") === col("o_orderkey"))
         .select(PackedEdge.pack(
@@ -57,8 +58,7 @@ object GraphOps4 {
         .distinct()
         .observe(obs,
           approx_count_distinct(PackedEdge.x(col("e"))).as("nc"),
-          approx_count_distinct(PackedEdge.y(col("e"))).as("np"))
-        .pin // scanned 2× per round (contrib join sides)
+          approx_count_distinct(PackedEdge.y(col("e"))).as("np")))
       val mGate = obs.getAsJava
       val small = mGate.get("nc").asInstanceOf[Long] +
         mGate.get("np").asInstanceOf[Long] <= graft.graph.Bcast.maxNodes
@@ -70,16 +70,15 @@ object GraphOps4 {
       // whose lineage already contains deg — back onto deg, so
       // output-name uniqueness is what keeps the self-join
       // unambiguous without dataset-qualified refs
-      val deg = sym.groupBy("src").agg(count(lit(1)).as("deg"))
-        .select(col("src").as("dnode"), col("deg"))
-        .pin // node-sized, read every round
+      val deg = Pins.pin(sym.groupBy("src").agg(count(lit(1)).as("deg"))
+        .select(col("src").as("dnode"), col("deg"))) // node-sized, read every round
       val seeds = Tables.t(s, dir, "customer")
         .filter(col("c_nationkey") === 7)
         .select((col("c_custkey").cast("long") * 2).as("node"))
-      val seedMass = seeds
+      // node-sized, read every round (teleport)
+      val seedMass = Pins.pin(seeds
         .crossJoin(broadcast(seeds.agg(count(lit(1)).as("ns"))))
-        .select(col("node"), expr("1000000000000L div ns").as("mass"))
-        .pin // node-sized, read every round (teleport)
+        .select(col("node"), expr("1000000000000L div ns").as("mass")))
       // teleport frame under its OWN column names: pr's lineage also
       // roots at seedMass, so a dataset-qualified seedMass("node") in
       // the per-round full outer would be an ambiguous self-join

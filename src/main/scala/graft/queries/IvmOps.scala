@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{PinOps, Q, Tables}
+import graft.{Pins, Q, Tables}
 import graft.functions.Portable
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -130,7 +130,8 @@ object IvmOps {
             concat(lit("late:"), col("event_id").cast("string"))), lit(10)) < 9)
       // the stored view: sessionize the snapshot half once
       val wo = Window.partitionBy("user_id").orderBy(col("us"), col("event_id"))
-      val stored = ev.filter(col("is_snap"))
+      // the artifact: built once, read twice below
+      val stored = Pins.pin(ev.filter(col("is_snap"))
         .withColumn("nf", when(lag("us", 1).over(wo).isNull ||
           col("us") - lag("us", 1).over(wo) > gapUs, 1).otherwise(0))
         .withColumn("sid", sum("nf").over(
@@ -138,8 +139,7 @@ object IvmOps {
         .groupBy("user_id", "sid")
         .agg(min("us").as("s_start"), max("us").as("s_end"),
           count(lit(1)).as("n_events"))
-        .select("user_id", "s_start", "s_end", "n_events")
-        .pin // the artifact: built once, read twice below
+        .select("user_id", "s_start", "s_end", "n_events"))
       val late = ev.filter(!col("is_snap"))
         .select(col("user_id"), col("us").as("s_start"),
           col("us").as("s_end"), lit(1L).as("n_events"))
@@ -201,11 +201,11 @@ object IvmOps {
         .select(col("o_orderpriority").as("pr"), col("o_custkey").as("ck"),
           (col("o_orderdate") < cut).as("is_snap"))
       // per-half bitmap state: one bitmap per (key, half, id-bucket)
-      val state = keyed
+      // read 3×: both half counts + the merge
+      val state = Pins.pin(keyed
         .groupBy(col("pr"), col("is_snap"),
           expr("bitmap_bucket_number(ck)").as("bkt"))
-        .agg(expr("bitmap_construct_agg(bitmap_bit_position(ck))").as("bm"))
-        .pin // read 3×: both half counts + the merge
+        .agg(expr("bitmap_construct_agg(bitmap_bit_position(ck))").as("bm")))
       def halfCount(snap: Boolean) = state
         .filter(col("is_snap") === snap)
         .groupBy("pr")

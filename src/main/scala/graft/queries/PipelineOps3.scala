@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{PinOps, Q, Tables}
+import graft.{Pins, Q, Tables}
 import graft.functions.Portable
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -34,14 +34,13 @@ object PipelineOps3 {
   val q217 = Q(
     "q217_release_manifest",
     (s, dir) => {
-      val base = Tables.docs(s, dir)
+      val base = Pins.pin(Tables.docs(s, dir)
         .withColumn("split",
           when(pmod(Portable.md5Long(concat(lit("split:"), col("doc_id").cast("string"))),
             lit(10)) < 8, "train")
             .when(pmod(Portable.md5Long(concat(lit("split:"), col("doc_id").cast("string"))),
               lit(10)) === 8, "valid")
-            .otherwise("test"))
-        .pin
+            .otherwise("test")))
       val sh = base.filter(length(col("text")) >= 24)
         .select(col("doc_id"), col("split"),
           explode(expr("char_shingle_hashes(text, 24)")).as("h"))
@@ -49,15 +48,13 @@ object PipelineOps3 {
       // pinned: the manifest reads contam twice and cleanTrain three
       // times (dup-dropped / final / keep); without the pin each
       // branch re-runs the whole shingle join
-      val contam = sh.filter(col("split") === "train")
+      val contam = Pins.pin(sh.filter(col("split") === "train")
         .join(evalH.withColumn("hit", lit(1L)), Seq("h"), "left")
         .groupBy("doc_id")
         .agg((sum(coalesce(col("hit"), lit(0L))) / count(lit(1)) >= 0.6).as("bad"))
-        .filter(col("bad")).select("doc_id")
-        .pin
-      val cleanTrain = base.filter(col("split") === "train")
-        .join(contam.withColumn("c", lit(1)), Seq("doc_id"), "left_anti")
-        .pin
+        .filter(col("bad")).select("doc_id"))
+      val cleanTrain = Pins.pin(base.filter(col("split") === "train")
+        .join(contam.withColumn("c", lit(1)), Seq("doc_id"), "left_anti"))
       val keep = cleanTrain
         .groupBy(sha2(col("text"), 256).as("hh"))
         .agg(min("doc_id").as("doc_id"))

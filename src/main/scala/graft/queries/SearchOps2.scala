@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{PinOps, Q, Tables}
+import graft.{Pins, Q, Tables}
 import graft.functions.{Portable => P, VectorFunctions => V}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -48,12 +48,12 @@ object SearchOps2 {
   val q235 = Q(
     "q235_fused_retrieval_indexed",
     (s, dir) => {
-      val d = Tables.docs(s, dir)
+      // feeds both index paths + the audit
+      val d = Pins.pin(Tables.docs(s, dir)
         .join(Tables.emb(s, dir), col("doc_id") === col("vec_id"))
         .select(col("doc_id"), P.md5Sorted(P.tokenSet(col("text"))).as("th"),
           col("embedding"), V.norm("embedding").as("nrm"),
-          VectorOps.hyperplaneBucket("embedding").as("bucket"))
-        .pin // feeds both index paths + the audit
+          VectorOps.hyperplaneBucket("embedding").as("bucket")))
       val qs = d.filter(col("doc_id") < 5).select(
         col("doc_id").as("query_id"), col("th").as("qth"),
         col("embedding").as("qe"), col("nrm").as("qn"),

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{PinOps, Q, Tables}
+import graft.{Pins, Q, Tables}
 import graft.functions.{Dist, Portable => P, VectorFunctions => V}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
@@ -79,9 +79,9 @@ object SearchOps3 {
   val q244 = Q(
     "q244_nn_descent_round",
     (s, dir) => {
-      val vecs = Tables.emb(s, dir)
-        .select(col("vec_id"), col("embedding"), V.norm("embedding").as("nrm"))
-        .pin // seeds blocks, scoring, and ground truth
+      // seeds blocks, scoring, and ground truth
+      val vecs = Pins.pin(Tables.emb(s, dir)
+        .select(col("vec_id"), col("embedding"), V.norm("embedding").as("nrm")))
       val ranked = Dist.globalRank(
         vecs.select(col("vec_id"),
           P.md5Long(concat(lit("nnd:"), col("vec_id").cast("string")))
@@ -105,10 +105,10 @@ object SearchOps3 {
           col("a.blk") === col("b.blk") && col("a.vec_id") < col("b.vec_id"))
         .select(col("a.vec_id").as("node"), col("b.vec_id").as("nbr"))
       // score each a<b pair once, then mirror — never score twice
-      val halfScored = score(half).pin
-      val init = topk(halfScored.unionByName(
+      val halfScored = Pins.pin(score(half))
+      val init = Pins.pin(topk(halfScored.unionByName(
         halfScored.select(col("nbr").as("node"), col("node").as("nbr"),
-          col("cos")))).pin
+          col("cos")))))
       val undirected = init.select("node", "nbr")
         .unionByName(init.select(col("nbr").as("node"), col("node").as("nbr")))
         .distinct()
@@ -236,11 +236,10 @@ object SearchOps3 {
         (0 to 31).map(b =>
           when(element_at(c, b + off + 1) >= 0f, lit(1L << b)).otherwise(lit(0L)))
           .reduce(_ + _)
-      val vecs = Tables.emb(s, dir)
+      val vecs = Pins.pin(Tables.emb(s, dir)
         .select(col("vec_id"), col("embedding"), V.norm("embedding").as("nrm"),
           word(col("embedding"), 0).as("w0"),
-          word(col("embedding"), 32).as("w1"))
-        .pin
+          word(col("embedding"), 32).as("w1")))
       val qs = vecs.filter(col("vec_id") < 10)
         .select(col("vec_id").as("query_id"), col("embedding").as("qe"),
           col("nrm").as("qn"), col("w0").as("q0"), col("w1").as("q1"))
@@ -362,9 +361,9 @@ object SearchOps3 {
   val q254 = Q(
     "q254_nn_descent_converged",
     (s, dir) => {
-      val vecs = Tables.emb(s, dir)
-        .select(col("vec_id"), col("embedding"), V.norm("embedding").as("nrm"))
-        .pin // seeds blocks, scoring, and ground truth
+      // seeds blocks, scoring, and ground truth
+      val vecs = Pins.pin(Tables.emb(s, dir)
+        .select(col("vec_id"), col("embedding"), V.norm("embedding").as("nrm")))
       def blocks(salt: String): DataFrame =
         Dist.globalRank(
           vecs.select(col("vec_id"),
@@ -392,21 +391,19 @@ object SearchOps3 {
       }
       // a pair inside the same block under BOTH salts would enter the
       // union twice with an identical cos — distinct before scoring
-      val halfScored = score(
-        half("nnd1").unionByName(half("nnd2")).distinct())
-        .pin
+      val halfScored = Pins.pin(score(
+        half("nnd1").unionByName(half("nnd2")).distinct()))
       val probes = vecs.filter(col("vec_id") < 40)
         .select(col("vec_id").as("node"), col("embedding").as("ea"),
           col("nrm").as("na"))
-      val gt = probes.crossJoin(
+      val gt = Pins.pin(probes.crossJoin(
           vecs.select(col("vec_id").as("nbr"), col("embedding").as("eb"),
             col("nrm").as("nb")))
         .filter(col("node") =!= col("nbr"))
         .withColumn("cos", round(V.dot("ea", "eb") / (col("na") * col("nb")), 6))
         .withColumn("rr", row_number().over(
           Window.partitionBy("node").orderBy(col("cos").desc, col("nbr"))))
-        .filter(col("rr") <= 5).select("node", "nbr")
-        .pin
+        .filter(col("rr") <= 5).select("node", "nbr"))
       def phaseRow(graph: DataFrame, prev: Option[DataFrame],
           phase: String): DataFrame = {
         val nNew = prev match {
@@ -428,9 +425,9 @@ object SearchOps3 {
             round(col("h").cast("double") / (lit(5) * col("np")), 4)
               .as("mean_recall5"))
       }
-      var cur = topk(halfScored.unionByName(
+      var cur = Pins.pin(topk(halfScored.unionByName(
         halfScored.select(col("nbr").as("node"), col("node").as("nbr"),
-          col("cos")))).pin
+          col("cos")))))
       var out = phaseRow(cur, None, "r0_seed")
       for (r <- 1 to 2) {
         val undirected = cur.select("node", "nbr")
@@ -442,7 +439,7 @@ object SearchOps3 {
           .filter(col("node") =!= col("nbr"))
           .distinct()
           .join(cur.select("node", "nbr"), Seq("node", "nbr"), "left_anti")
-        val next = topk(score(fresh).unionByName(cur)).pin
+        val next = Pins.pin(topk(score(fresh).unionByName(cur)))
         out = out.unionByName(phaseRow(next, Some(cur), s"r${r}_descent"))
         cur = next
       }
@@ -564,26 +561,25 @@ object SearchOps3 {
       val dims = Seq(8, 16, 32, 64)
       def norms(pfx: String, c: String) = dims.map(d =>
         V.norm(s"slice($c, 1, $d)").as(s"${pfx}n$d"))
-      val vecs = Tables.emb(s, dir)
-        .select(col("vec_id") +: col("embedding") +: norms("", "embedding"): _*)
-        .pin
+      val vecs = Pins.pin(Tables.emb(s, dir)
+        .select(col("vec_id") +: col("embedding") +: norms("", "embedding"): _*))
       val probes = vecs.filter(col("vec_id") < 40)
         .select(col("vec_id").as("node") +: col("embedding").as("pe") +:
           dims.map(d => col(s"n$d").as(s"pn$d")): _*)
       val corpus = vecs
         .select(col("vec_id").as("nbr") +: col("embedding").as("ce") +:
           dims.map(d => col(s"n$d").as(s"cn$d")): _*)
-      val scored = probes.crossJoin(corpus)
+      // one scoring pass feeds all 4 audits
+      val scored = Pins.pin(probes.crossJoin(corpus)
         .filter(col("node") =!= col("nbr"))
         .select(col("node") +: col("nbr") +: dims.map(d =>
           round(V.dot(s"slice(pe, 1, $d)", s"slice(ce, 1, $d)") /
-            (col(s"pn$d") * col(s"cn$d")), 6).as(s"cos$d")): _*)
-        .pin // one scoring pass feeds all 4 audits
+            (col(s"pn$d") * col(s"cn$d")), 6).as(s"cos$d")): _*))
       def top5(d: Int): DataFrame =
         scored.withColumn("rr", row_number().over(
             Window.partitionBy("node").orderBy(col(s"cos$d").desc, col("nbr"))))
           .filter(col("rr") <= 5).select("node", "nbr")
-      val gt = top5(64).pin
+      val gt = Pins.pin(top5(64))
       dims.map { d =>
         val hits = top5(d).join(gt, Seq("node", "nbr"), "left_semi")
           .groupBy("node").agg(count(lit(1)).as("hits"))
@@ -653,8 +649,8 @@ object SearchOps3 {
   val q263 = Q(
     "q263_late_interaction_maxsim",
     (s, dir) => {
-      val vecs = Tables.emb(s, dir).select("vec_id", "embedding")
-        .pin // feeds tokens + the pooled audit
+      // feeds tokens + the pooled audit
+      val vecs = Pins.pin(Tables.emb(s, dir).select("vec_id", "embedding"))
       val probeToks = maxsimToks(vecs.filter(col("vec_id") < 8),
         "query_id", "qt", "qsv", "qn")
       val corpusToks = maxsimToks(vecs, "doc_id", "dt", "dsv", "dn")
@@ -786,12 +782,12 @@ object SearchOps3 {
   val q265 = Q(
     "q265_cascade_ann_maxsim",
     (s, dir) => {
-      val vecs = Tables.emb(s, dir).select(col("vec_id"), col("embedding"))
-        .pin // feeds token explode + audit
+      // feeds token explode + audit
+      val vecs = Pins.pin(Tables.emb(s, dir).select(col("vec_id"), col("embedding")))
       val probeToks = maxsimToks(vecs.filter(col("vec_id") < 8),
         "query_id", "qt", "qsv", "qn")
-      val corpusToks = maxsimToks(vecs, "doc_id", "dt", "dsv", "dn")
-        .pin // feeds buckets, candidate scoring, audit
+      // feeds buckets, candidate scoring, audit
+      val corpusToks = Pins.pin(maxsimToks(vecs, "doc_id", "dt", "dsv", "dn"))
       // token-level index: distinct (doc, bucket) posting pairs join
       // distinct (query, bucket) probes on bucket EQUALITY
       val postings = corpusToks

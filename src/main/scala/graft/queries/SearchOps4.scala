@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{PinOps, Q, Tables}
+import graft.{Pins, Q, Tables}
 import graft.functions.{VectorFunctions => V}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -43,7 +43,7 @@ object SearchOps4 {
       s: org.apache.spark.sql.SparkSession, dir: String) = {
     val byDist = Window.partitionBy("vec_id")
       .orderBy(col("d2"), col("clabel"))
-    Tables.emb(s, dir)
+    Pins.pin(Tables.emb(s, dir)
       .join(Tables.docs(s, dir).select(col("doc_id"), col("lang")),
         col("doc_id") === col("vec_id"))
       .crossJoin(broadcast(VectorOps.centroidVectors(s, dir)))
@@ -52,8 +52,7 @@ object SearchOps4 {
       .filter(col("crn") <= 2)
       .select(col("vec_id"), col("embedding"), col("lang"),
         col("clabel").as("cell"), col("crn"))
-      .withColumn("nrm", V.norm("embedding"))
-      .pin
+      .withColumn("nrm", V.norm("embedding")))
   }
 
   val q268 = Q(

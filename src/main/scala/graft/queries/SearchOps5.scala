@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{PinOps, Q, Tables}
+import graft.{Pins, Q, Tables}
 import graft.functions.{VectorFunctions => V}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -51,12 +51,11 @@ object SearchOps5 {
       // (query_id, cand_id, rel, cos) frame is pinned — it feeds two
       // branches (ranked→dcg and the grade-count aggregate), and
       // without the pin the pool scan + cosine grading ran twice
-      val graded = pool.crossJoin(broadcast(qs))
+      val graded = Pins.pin(pool.crossJoin(broadcast(qs))
         .select(col("query_id"), col("cand_id"),
           when(col("cl") === col("ql"), 2)
             .when(abs(col("cl") - col("ql")) === 1, 1).otherwise(0).as("rel"),
-          round(V.dot("ce", "qe") / (col("cn") * col("qn")), 6).as("cos"))
-        .pin
+          round(V.dot("ce", "qe") / (col("cn") * col("qn")), 6).as("cos")))
       // top-10 by rounded cosine (InferWindowGroupLimit keeps this a
       // per-partition partial top-k, the q232 plan shape)
       val ranked = graded

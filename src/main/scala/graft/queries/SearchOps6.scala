@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{PinOps, Q, Tables}
+import graft.{Pins, Q, Tables}
 import graft.functions.{VectorFunctions => V}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -42,9 +42,8 @@ object SearchOps6 {
   val q284 = Q(
     "q284_knn_distance_outliers",
     (s, dir) => {
-      val assigned = graft.pipeline.SemDeDup.cellAssign(Tables.emb(s, dir))
-        .select("vec_id", "cell", "embedding")
-        .pin // read as BOTH self-join sides
+      val assigned = Pins.pin(graft.pipeline.SemDeDup.cellAssign(Tables.emb(s, dir))
+        .select("vec_id", "cell", "embedding")) // read as BOTH self-join sides
       val a = assigned.select(col("vec_id").as("va"), col("cell"),
         col("embedding").as("ea"))
       val b = assigned.select(col("vec_id").as("vb"), col("cell"),

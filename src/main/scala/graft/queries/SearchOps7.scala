@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{PinOps, Q, Tables}
+import graft.{Pins, Q, Tables}
 import graft.functions.{Portable, VectorFunctions => V}
 import org.apache.spark.sql.functions._
 
@@ -54,8 +54,7 @@ object SearchOps7 {
     */
   private[queries] def probed(s: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame =
-    graft.pipeline.SemDeDup.cellProbes(Tables.emb(s, dir), EvalProbes)
-      .pin
+    Pins.pin(graft.pipeline.SemDeDup.cellProbes(Tables.emb(s, dir), EvalProbes))
 
   /** The shared-quantizer assignment CTE for the q287 and q292
     * oracles: every (vec_id, cell) with probe rank ≤ 2; rank 1 is the

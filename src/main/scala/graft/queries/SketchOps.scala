@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{PinOps, Q, Tables}
+import graft.{Pins, Q, Tables}
 import graft.functions.{Portable => P}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -42,14 +42,13 @@ object SketchOps {
     "q250_join_order_from_sketches",
     (s, dir) => {
       import s.implicits._
-      val li = Tables.t(s, dir, "lineitem")
+      val li = Pins.pin(Tables.t(s, dir, "lineitem")
         .select(col("l_partkey").as("pk"), col("l_suppkey").as("sk"),
           col("l_orderkey").as("ok"))
         // spread before the pin: the pin inherits the scan's split
         // count (ONE at sf0.1 — single row group) and feeds 3
         // md5-dense sketch passes + the flag pass (Tables.docs rule)
-        .repartition(s.sparkContext.defaultParallelism)
-        .pin // feeds 3 sketches + the flag pass
+        .repartition(s.sparkContext.defaultParallelism)) // feeds 3 sketches + the flag pass
       val pKeys = Tables.t(s, dir, "part").filter(col("p_size") < 15)
         .select(col("p_partkey").as("dk"))
       val sKeys = Tables.t(s, dir, "supplier").filter(col("s_nationkey") < 10)
@@ -82,10 +81,9 @@ object SketchOps {
           sum(coalesce(col("fp") * col("fs"), lit(0L))).as("cps"),
           sum(coalesce(col("fp") * col("fo"), lit(0L))).as("cpo"),
           sum(coalesce(col("fs") * col("fo"), lit(0L))).as("cso"))
-      val stats = flags
+      val stats = Pins.pin(flags
         .crossJoin(est(pKeys, "pk")).crossJoin(est(sKeys, "sk"))
-        .crossJoin(est(oKeys, "ok"))
-        .pin // 1 row
+        .crossJoin(est(oKeys, "ok"))) // 1 row
       val perms = Seq(
         ("part>supplier>orders", "p", "s"), ("part>orders>supplier", "p", "o"),
         ("supplier>part>orders", "s", "p"), ("supplier>orders>part", "s", "o"),
@@ -192,13 +190,12 @@ object SketchOps {
   val q251 = Q(
     "q251_rolling_distinct_hll",
     (s, dir) => {
-      val act = Tables.events(s, dir)
+      // one events scan feeds sketch + exact
+      val act = Pins.pin(Tables.events(s, dir)
         .select(col("user_id"),
-          floor(unix_timestamp(col("ts")) / 86400).cast("long").as("day"))
-        .pin // one events scan feeds sketch + exact
-      val daily = act.groupBy("day")
-        .agg(expr("hll_sketch_agg(user_id, 12)").as("sk"))
-        .pin // ≤#days rows
+          floor(unix_timestamp(col("ts")) / 86400).cast("long").as("day")))
+      val daily = Pins.pin(act.groupBy("day")
+        .agg(expr("hll_sketch_agg(user_id, 12)").as("sk"))) // ≤#days rows
       val days = daily.select(col("day").as("d"))
       val est = daily.join(days,
           daily("day").between(col("d") - 6, col("d")))
@@ -243,10 +240,9 @@ object SketchOps {
   val q252 = Q(
     "q252_vocab_overlap_hll",
     (s, dir) => {
-      val st = Tables.t(s, dir, "documents")
+      val st = Pins.pin(Tables.t(s, dir, "documents")
         .select(col("source"), explode(P.tokenSet(col("text"))).as("tok"))
-        .distinct()
-        .pin // one corpus scan feeds sketches + exact
+        .distinct()) // one corpus scan feeds sketches + exact
       val per = st.groupBy("source")
         .agg(expr("hll_sketch_agg(tok, 12)").as("sk"),
           count(lit(1)).as("vocab"))
@@ -331,12 +327,12 @@ object SketchOps {
         .join(Tables.t(s, dir, "nation"),
           col("c_nationkey") === col("n_nationkey"))
         .select(col("c_custkey"), col("n_name"))
-      val keyed = Tables.t(s, dir, "orders")
+      // one fact scan feeds sketches + exact
+      val keyed = Pins.pin(Tables.t(s, dir, "orders")
         .select(col("o_custkey"), col("o_orderdate"))
         .join(broadcast(dim), col("o_custkey") === col("c_custkey"))
         .select(col("n_name"), year(col("o_orderdate")).as("o_year"),
-          col("o_custkey"), (col("o_orderdate") < cut).as("is_snap"))
-        .pin // one fact scan feeds sketches + exact
+          col("o_custkey"), (col("o_orderdate") < cut).as("is_snap")))
       val parts = keyed.groupBy("n_name", "o_year", "is_snap")
         .agg(expr("hll_sketch_agg(o_custkey, 12)").as("sk"))
       val merged = parts.groupBy("n_name", "o_year")

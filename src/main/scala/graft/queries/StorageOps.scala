@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{PinOps, Q, Tables}
+import graft.{Pins, Q, Tables}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -169,12 +169,11 @@ object StorageOps {
     "q260_quantile_view_maintenance",
     (s, dir) => {
       val cut = to_date(lit("1997-07-01"))
-      val keyed = Tables.t(s, dir, "orders")
+      val keyed = Pins.pin(Tables.t(s, dir, "orders")
         .select(col("o_orderpriority").as("pr"),
           (col("o_totalprice").cast("decimal(18,4)") * 100)
             .cast("long").as("cts"), // exact integer cents
-          (col("o_orderdate") < cut).as("is_snap"))
-        .pin // one fact scan feeds histogram + exact
+          (col("o_orderdate") < cut).as("is_snap"))) // one fact scan feeds histogram + exact
       val halves = keyed
         .select(col("pr"), col("is_snap"),
           expr("cts div 200000").as("bin")) // 2000-dollar bins, exact

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{PinOps, Q, Tables}
+import graft.{Pins, Q, Tables}
 import graft.functions.Portable
 import org.apache.spark.sql.functions._
 
@@ -38,11 +38,10 @@ object StorageOps2 {
         .select(col("doc_id"), Portable.md5Long(col("text")).as("h"))
       // 16 layout shards by doc_id range (the zone-map-friendly order)
       val mx = hashed.agg(max("doc_id").as("mx"))
-      val sharded = hashed.crossJoin(broadcast(mx))
+      val sharded = Pins.pin(hashed.crossJoin(broadcast(mx))
         .select(col("doc_id"), col("h"),
           least(floor(col("doc_id") * 16 / (col("mx") + 1)), lit(15L))
-            .cast("long").as("shard"))
-        .pin // one scan feeds index build + probes
+            .cast("long").as("shard"))) // one scan feeds index build + probes
       val zones = sharded.groupBy("shard")
         .agg(min("h").as("zlo"), max("h").as("zhi"))
       val bloom = sharded // map-side distinct: <= shards x 4096 rows survive

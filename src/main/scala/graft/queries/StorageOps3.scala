@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{PinOps, Q, Tables}
+import graft.{Pins, Q, Tables}
 import graft.functions.{Portable => P}
 import org.apache.spark.sql.functions._
 
@@ -49,11 +49,10 @@ object StorageOps3 {
     (s, dir) => {
       // pinned: the audit reads the assignment along four branches
       // (total, global mix, shard sizes, shard × source cells)
-      val sharded = Tables.docs(s, dir)
+      val sharded = Pins.pin(Tables.docs(s, dir)
         .select(col("doc_id"), col("source"),
           shiftright(P.md5Long(concat(lit("shuf1:"),
-            col("doc_id").cast("string"))), 56).as("shard"))
-        .pin
+            col("doc_id").cast("string"))), 56).as("shard")))
       val total = sharded.count()
       // all shares in integer basis points via `div` — exact integer
       // division in both engines, no float ever

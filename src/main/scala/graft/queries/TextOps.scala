@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{PinOps, Q, Tables}
+import graft.{Pins, Q, Tables}
 import graft.functions.Portable
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
@@ -130,18 +130,16 @@ object TextOps {
       // unpinned the regex tokenization ran 4× and the per-token
       // MinHash twice — the q209/q228 recompute pattern; all three
       // frames are Θ(docs) rows of ids/hashes
-      val toks = Tables.docs(s, dir).filter(col("lang") === "en")
-        .select(col("doc_id"), Portable.tokenSet(col("text")).as("toks"))
-        .pin
+      val toks = Pins.pin(Tables.docs(s, dir).filter(col("lang") === "en")
+        .select(col("doc_id"), Portable.tokenSet(col("text")).as("toks")))
       // verify-side token sets as SORTED 60-bit hashes: set sizes
       // (and thus Jaccard) are unchanged, but the 520k-pair verify
       // stage becomes one codegen'd merge scan per pair over
       // fixed-width longs (array_intersect/array_union would build
       // two interpreted hash sets per pair — the dominant cost of
       // the whole pipeline at sf0.1)
-      val toksH = toks.select(col("doc_id"),
-        Portable.md5Sorted(col("toks")).as("toks"))
-        .pin
+      val toksH = Pins.pin(toks.select(col("doc_id"),
+        Portable.md5Sorted(col("toks")).as("toks")))
       // The whole signature matrix (16 min-hashes → 2 band sigs) is
       // ONE codegen'd pass per row ([[graft.functions.MinHashBands]]
       // — the HOF formulation interprets ~16×|toks| lambdas per doc):
@@ -150,9 +148,8 @@ object TextOps {
       // Buckets are band-prefixed hashes of the same "b|seed:minh,…"
       // strings the oracle sorts and concatenates, so equality on the
       // bucket value alone IS the (band, signature) match.
-      val sigs = toks
-        .select(col("doc_id"), explode(expr("minhash_bands(toks, 2, 8)")).as("sig"))
-        .pin
+      val sigs = Pins.pin(toks
+        .select(col("doc_id"), explode(expr("minhash_bands(toks, 2, 8)")).as("sig")))
       val cand = sigs.alias("sa").hint("shuffle_hash")
         .join(sigs.alias("sb"),
           col("sa.sig") === col("sb.sig") &&

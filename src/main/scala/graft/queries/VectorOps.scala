@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{PinOps, Q, Tables}
+import graft.{Pins, Q, Tables}
 import graft.functions.{Portable, VectorFunctions => V}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -400,14 +400,13 @@ object VectorOps {
       // without the checkpoint each one re-runs the n×k assignment
       // window AND the centroid aggregation (measured ~2× the whole
       // query's cost at sf0.1)
-      val ranked = Tables.emb(s, dir).crossJoin(broadcast(centroidVectors(s, dir)))
+      val ranked = Pins.pin(Tables.emb(s, dir).crossJoin(broadcast(centroidVectors(s, dir)))
         .withColumn("d2", round(V.dist2("embedding", "cvec"), 6))
         .withColumn("crn", row_number().over(byDist))
         .filter(col("crn") <= 2)
         .select(col("vec_id"), col("embedding"), col("clabel").as("cell"),
           col("crn"))
-        .withColumn("nrm", V.norm("embedding"))
-        .pin
+        .withColumn("nrm", V.norm("embedding")))
       val cand = ranked.filter(col("crn") === 1).select(
         col("vec_id").as("cand_id"), col("embedding").as("ce"),
         col("nrm").as("cn"), col("cell"))

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{PinOps, Q, Tables}
+import graft.{Pins, Q, Tables}
 import graft.functions.{Dist, Portable => P}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -141,11 +141,11 @@ object WarehouseOps {
       val forget = c.filter(pmod(P.md5Long(concat(lit("forget:"),
           col("c_custkey").cast("string"))), lit(97)) === 0)
         .select(col("c_custkey").as("fk"))
-      val delOrders = o.join(forget, col("o_custkey") === col("fk"), "left_semi")
-        .select(col("o_orderkey").as("dok")).pin
+      val delOrders = Pins.pin(o.join(forget, col("o_custkey") === col("fk"), "left_semi")
+        .select(col("o_orderkey").as("dok")))
       def n(df: DataFrame, as: String): DataFrame =
         df.agg(count(lit(1)).as(as))
-      val stats = n(c, "c_before")
+      val stats = Pins.pin(n(c, "c_before")
         .crossJoin(n(forget, "c_del"))
         .crossJoin(n(o, "o_before"))
         .crossJoin(n(delOrders, "o_del"))
@@ -155,8 +155,7 @@ object WarehouseOps {
         .crossJoin(n(o.join(c, col("o_custkey") === col("c_custkey"),
           "left_anti"), "o_orphans"))
         .crossJoin(n(li.join(o, col("l_orderkey") === col("o_orderkey"),
-          "left_anti"), "l_orphans"))
-        .pin // 1 row
+          "left_anti"), "l_orphans"))) // 1 row
       stats.select(lit("1_customer").as("table_name"),
           col("c_before").as("rows_before"), col("c_del").as("rows_deleted"),
           (col("c_before") - col("c_del")).as("rows_after"),

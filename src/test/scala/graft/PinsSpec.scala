@@ -23,12 +23,13 @@ class PinsSpec extends SparkSpec {
 
   test("a scope unpersists the pins made inside it, on every thread it starts, and no others") {
     val before = persisted
-    val outside = frame(10).pin
+    val outside = Pins.pin(frame(10))
     val kept = persisted -- before
     assert(kept.size == 1)
     var inner: Seq[DataFrame] = Nil
     Pins.scoped(spark) {
-      inner = frame(20).pin +: Overlap.par(spark)(() => frame(30).pin, () => frame(40).pin)
+      inner = Pins.pin(frame(20)) +:
+        Overlap.par(spark)(() => Pins.pin(frame(30)), () => Pins.pin(frame(40)))
       assert((persisted -- before -- kept).size == 3)
       assert(inner.map(_.count()) == Seq(20L, 30L, 40L))
     }
@@ -42,7 +43,7 @@ class PinsSpec extends SparkSpec {
     val before = persisted
     val e = intercept[IllegalStateException] {
       Pins.scoped(spark) {
-        frame(10).pin
+        Pins.pin(frame(10))
         assert(persisted != before)
         throw new IllegalStateException("query failed")
       }
@@ -63,7 +64,7 @@ class PinsSpec extends SparkSpec {
       var stale: DataFrame = null
       Pins.scoped(spark) {
         stale = pool.submit(new java.util.concurrent.Callable[DataFrame] {
-          def call(): DataFrame = frame(10).pin
+          def call(): DataFrame = Pins.pin(frame(10))
         }).get()
       }
       val left = persisted -- before
