@@ -30,9 +30,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 final case class Q(
     name: String,
     build: (SparkSession, String) => DataFrame,
-    oracle: Option[String] = None,
-    /** include in the Bench headline set */
-    bench: Boolean = true) {
+    oracle: Option[String] = None) {
 
   /** The query's frame over the fixtures in `dir`, built on `spark`. */
   val fn: (SparkSession, String) => DataFrame = { (spark, dir) =>

@@ -121,6 +121,43 @@ object MinHashBands {
   private def seedPrefix(sd: Int): Array[Byte] =
     seedPrefixes.computeIfAbsent(sd,
       s => (s.toString + ":").getBytes(java.nio.charset.StandardCharsets.US_ASCII))
+
+  /** DuckDB form of [[seededMins]] with 16 seeds, over a relation
+    * `src(keys…, toks)`: CTEs `ex` (one row per token) and
+    * `mh(keys…, seed, minh)`.
+    */
+  def minsSql(src: String, keys: String = "doc_id"): String =
+    s"""ex AS (SELECT $keys, unnest(toks) AS tok FROM $src),
+       |mh AS (
+       |  SELECT $keys, seed, min(${Portable.md5LongSql("concat(seed, ':', tok)")}) AS minh
+       |  FROM ex CROSS JOIN (SELECT unnest(range(16)) AS seed) seeds
+       |  GROUP BY $keys, seed)""".stripMargin
+
+  /** A query over `mh`: each (keys…, band)'s sorted `seed:minh` list
+    * as `sig`, `rows` seeds to a band.
+    */
+  def bandListSql(rows: Int, keys: String = "doc_id"): String =
+    s"""SELECT $keys, seed // $rows AS band,
+       |  string_agg(concat(seed, ':', minh), ',' ORDER BY concat(seed, ':', minh)) AS sig
+       |FROM mh GROUP BY $keys, seed // $rows""".stripMargin
+
+  /** [[minsSql]] plus `sigs(keys…, band, sig)`: 2 bands of 8 seeds. */
+  def sigsSql(src: String, keys: String = "doc_id"): String =
+    s"${minsSql(src, keys)},\nsigs AS (\n${bandListSql(8, keys)})"
+
+  /** [[minsSql]] plus `db(doc_id, b0, b1)`: each doc's two band
+    * buckets, hashed as [[bandSigs]] hashes them with 2 bands × 8 rows.
+    */
+  def bucketsSql(src: String): String =
+    s"""${minsSql(src)},
+       |db AS (
+       |  SELECT doc_id,
+       |    min(CASE WHEN band = 0 THEN bucket END) AS b0,
+       |    min(CASE WHEN band = 1 THEN bucket END) AS b1
+       |  FROM (
+       |    SELECT doc_id, band, ${Portable.md5LongSql("concat(band, '|', sig)")} AS bucket
+       |    FROM (${bandListSql(8)}))
+       |  GROUP BY doc_id)""".stripMargin
 }
 
 /** Codegen'd raw MinHash signature: the `seeds` seeded min-hashes as

@@ -59,4 +59,18 @@ object BandCluster {
       marked.filter(col("__iso")).drop("__iso")
         .withColumn("cluster", col("doc_id")))
   }
+
+  /** DuckDB form of the band graph's components over a relation
+    * `src(b0, b1, …)`, for a `WITH RECURSIVE` oracle: CTEs `edges`,
+    * `nodes`, `reach` and `comp(node, cl)`, where `cl` is the min band
+    * node of `node`'s component.
+    */
+  def componentsSql(src: String = "db"): String =
+    s"""edges AS (SELECT b0 AS a, b1 AS b FROM $src UNION SELECT b1, b0 FROM $src),
+       |nodes AS (SELECT DISTINCT b0 AS node FROM $src UNION SELECT DISTINCT b1 FROM $src),
+       |reach AS (
+       |  SELECT node, node AS lab FROM nodes
+       |  UNION
+       |  SELECT e.a AS node, r.lab FROM edges e JOIN reach r ON r.node = e.b),
+       |comp AS (SELECT node, min(lab) AS cl FROM reach GROUP BY node)""".stripMargin
 }

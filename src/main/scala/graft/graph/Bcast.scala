@@ -1,7 +1,8 @@
 package graft.graph
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.broadcast
+import graft.Pins
+import org.apache.spark.sql.{Column, DataFrame, Observation}
+import org.apache.spark.sql.functions.{approx_count_distinct, broadcast}
 
 /** Broadcast gate for iterative operators' per-round NODE-sized
   * frames (labels, contributions, degree tables), shared so
@@ -34,4 +35,17 @@ object Bcast {
     */
   def hint(df: DataFrame, small: Boolean): DataFrame =
     if (small) broadcast(df) else df
+
+  /** Pin an edge frame and observe, on that pin's one action, the
+    * approximate distinct counts of its two endpoint columns: returns
+    * (pinned edges, count of `a`, count of `b`). Each caller turns the
+    * counts into its own gate against [[maxNodes]].
+    */
+  def pinCounted(edges: DataFrame, a: Column, b: Column): (DataFrame, Long, Long) = {
+    val obs = Observation()
+    val e = Pins.pin(edges.observe(obs,
+      approx_count_distinct(a).as("na"), approx_count_distinct(b).as("nb")))
+    val m = obs.getAsJava
+    (e, m.get("na").asInstanceOf[Long], m.get("nb").asInstanceOf[Long])
+  }
 }

@@ -93,6 +93,20 @@ final class ObjectStoreFileSystem extends FileSystem {
     ceil != null && ceil.startsWith(k + "/")
   }
 
+  /** Every object key under `prefix`, in key order: one ordered scan
+    * from the prefix that stops at the first key outside it.
+    */
+  private def keysUnder(b: Bucket, prefix: String): java.util.ArrayList[String] = {
+    val keys = new java.util.ArrayList[String]()
+    val it = b.objects.tailMap(prefix, false).keySet().iterator()
+    var scanning = true
+    while (scanning && it.hasNext) {
+      val k0 = it.next()
+      if (k0.startsWith(prefix)) keys.add(k0) else scanning = false
+    }
+    keys
+  }
+
   override def getFileStatus(f: Path): FileStatus = {
     val b = bucket
     val k = key(f)
@@ -184,13 +198,7 @@ final class ObjectStoreFileSystem extends FileSystem {
       true
     } else if (isDirPrefix(b, sk)) { // prefix: move every key under it
       val prefix = sk + "/"
-      val keys = new java.util.ArrayList[String]()
-      val it = b.objects.tailMap(prefix, false).keySet().iterator()
-      var scanning = true
-      while (scanning && it.hasNext) {
-        val k0 = it.next()
-        if (k0.startsWith(prefix)) keys.add(k0) else scanning = false
-      }
+      val keys = keysUnder(b, prefix)
       keys.forEach { k0 =>
         b.objects.put(dk + "/" + k0.substring(prefix.length), b.objects.get(k0))
         b.objects.remove(k0)
@@ -212,13 +220,7 @@ final class ObjectStoreFileSystem extends FileSystem {
     if (b.objects.remove(k) != null) { b.dirMarkers.remove(k); return true }
     if (!isDirPrefix(b, k) || k.isEmpty) return b.dirMarkers.remove(k)
     val prefix = k + "/"
-    val keys = new java.util.ArrayList[String]()
-    val it = b.objects.tailMap(prefix, false).keySet().iterator()
-    var scanning = true
-    while (scanning && it.hasNext) {
-      val k0 = it.next()
-      if (k0.startsWith(prefix)) keys.add(k0) else scanning = false
-    }
+    val keys = keysUnder(b, prefix)
     if (!keys.isEmpty && !recursive)
       throw new IOException(s"non-empty directory prefix: $f")
     keys.forEach(k0 => b.objects.remove(k0))

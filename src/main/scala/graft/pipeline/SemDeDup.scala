@@ -66,25 +66,48 @@ object SemDeDup {
   }
 
   /** k ≤ maxBroadcastSeeds: broadcast all seeds, one pass. */
-  def cellAssignOneLevel(e: DataFrame, st: Steps): DataFrame = {
-    val seeds = e.filter(pmod(col("vec_id"), lit(st.step)) === 0)
-      .select(col("vec_id").as("seed_id"), col("embedding").as("svec"))
-    e.crossJoin(broadcast(seeds))
-      .withColumn("d2", round(V.dist2("embedding", "svec"), 6))
-      .groupBy("vec_id")
-      .agg(min(struct(col("d2"), col("seed_id"), col("embedding"))).as("best"))
-      .select(col("vec_id"), col("best.embedding").as("embedding"),
-        col("best.seed_id").as("cell"))
-      .withColumn("nrm", V.norm("embedding"))
-  }
+  def cellAssignOneLevel(e: DataFrame, st: Steps): DataFrame =
+    nearestCell(oneLevelCandidates(e, st), "seed_id")
 
   /** k > maxBroadcastSeeds: recurse the quantizer once — broadcast
     * only the super-seeds, reach the seeds through an equi-join on
     * the super-cell key.
     */
-  def cellAssignTwoLevel(e: DataFrame, st: Steps): DataFrame = {
-    val seeds = e.filter(pmod(col("vec_id"), lit(st.step)) === 0)
+  def cellAssignTwoLevel(e: DataFrame, st: Steps): DataFrame =
+    nearestCell(twoLevelCandidates(e, st), "seed_id")
+
+  /** The nearest candidate cell of each vector: rows (vec_id,
+    * embedding, `id`, d2) → (vec_id, embedding, cell, nrm). The argmin
+    * is min(struct(d2, id, embedding)), which aggregates map-side;
+    * ties break on the cell id, as the oracle's ORDER BY d2, id does.
+    */
+  def nearestCell(scored: DataFrame, id: String): DataFrame =
+    scored
+      .groupBy("vec_id")
+      .agg(min(struct(col("d2"), col(id), col("embedding"))).as("best"))
+      .select(col("vec_id"), col("best.embedding").as("embedding"),
+        col(s"best.$id").as("cell"))
+      .withColumn("nrm", V.norm("embedding"))
+
+  /** `pairs` plus `d2`: round(d², 6) from `embedding` to `vec`. */
+  def withD2(pairs: DataFrame, vec: String): DataFrame =
+    pairs.withColumn("d2", round(V.dist2("embedding", vec), 6))
+
+  private def seedsOf(e: DataFrame, st: Steps): DataFrame =
+    e.filter(pmod(col("vec_id"), lit(st.step)) === 0)
       .select(col("vec_id").as("seed_id"), col("embedding").as("svec"))
+
+  /** One-level candidates: every vector against every broadcast seed,
+    * rows (vec_id, embedding, seed_id, svec, d2).
+    */
+  private def oneLevelCandidates(e: DataFrame, st: Steps): DataFrame =
+    withD2(e.crossJoin(broadcast(seedsOf(e, st))), "svec")
+
+  /** Two-level candidates: every vector against the seeds of its
+    * super-cell only, rows (scell, vec_id, embedding, seed_id, svec, d2).
+    */
+  private def twoLevelCandidates(e: DataFrame, st: Steps): DataFrame = {
+    val seeds = seedsOf(e, st)
     // super-seeds are seeds whose seed INDEX is a multiple of m —
     // i.e. vec_id % (step·m) == 0, a subset of the seeds, so every
     // super-cell contains at least its own super-seed
@@ -106,13 +129,7 @@ object SemDeDup {
         col("b.ss_id").as("scell"))
     // level C (n·k/k₂ work, ZERO broadcast of the seed set): nearest
     // seed within the super-cell via a plain equi-join on scell
-    vecSuper.join(seedCells, "scell")
-      .withColumn("d2", round(V.dist2("embedding", "svec"), 6))
-      .groupBy("vec_id")
-      .agg(min(struct(col("d2"), col("seed_id"), col("embedding"))).as("best"))
-      .select(col("vec_id"), col("best.embedding").as("embedding"),
-        col("best.seed_id").as("cell"))
-      .withColumn("nrm", V.norm("embedding"))
+    withD2(vecSuper.join(seedCells, "scell"), "svec")
   }
 
   /** MULTI-PROBE assignment: each vector's `p` NEAREST cells as an
@@ -136,30 +153,9 @@ object SemDeDup {
       maxBroadcastSeeds: Long = 65536L): DataFrame = {
     val st = steps(e)
     val scored =
-      if (st.k <= maxBroadcastSeeds) {
-        val seeds = e.filter(pmod(col("vec_id"), lit(st.step)) === 0)
-          .select(col("vec_id").as("seed_id"), col("embedding").as("svec"))
-        e.crossJoin(broadcast(seeds))
-      } else {
-        val seeds = e.filter(pmod(col("vec_id"), lit(st.step)) === 0)
-          .select(col("vec_id").as("seed_id"), col("embedding").as("svec"))
-        val superSeeds = seeds.filter(pmod(col("seed_id"), lit(st.superStep)) === 0)
-          .select(col("seed_id").as("ss_id"), col("svec").as("ssvec"))
-        val seedCells = seeds.crossJoin(broadcast(superSeeds))
-          .withColumn("d2", round(V.dist2("svec", "ssvec"), 6))
-          .groupBy("seed_id")
-          .agg(min(struct(col("d2"), col("ss_id"), col("svec"))).as("b"))
-          .select(col("b.ss_id").as("scell"), col("seed_id"), col("b.svec").as("svec"))
-        val vecSuper = e.crossJoin(broadcast(superSeeds))
-          .withColumn("d2", round(V.dist2("embedding", "ssvec"), 6))
-          .groupBy("vec_id")
-          .agg(min(struct(col("d2"), col("ss_id"), col("embedding"))).as("b"))
-          .select(col("vec_id"), col("b.embedding").as("embedding"),
-            col("b.ss_id").as("scell"))
-        vecSuper.join(seedCells, "scell")
-      }
+      if (st.k <= maxBroadcastSeeds) oneLevelCandidates(e, st)
+      else twoLevelCandidates(e, st)
     scored
-      .withColumn("d2", round(V.dist2("embedding", "svec"), 6))
       .groupBy("vec_id")
       .agg(
         slice(array_sort(collect_list(struct(col("d2"), col("seed_id")))),
@@ -170,9 +166,10 @@ object SemDeDup {
         transform(col("top"), t => t.getField("seed_id")).as("probes"))
   }
 
-  /** Cell-scoped near-dup pairs → keeper policy, shared by the q180 /
-    * q181 registry forms: exact cosine within a cell, keep the lowest
-    * vec_id, report each dropped member with its best keeper score.
+  /** Cell-scoped near-dup pairs → keeper policy, shared by q180,
+    * q181 and the q139 baseline: exact cosine within a cell, keep the
+    * lowest vec_id, report each dropped member with its best keeper
+    * score.
     */
   def dedupReport(assigned: DataFrame, threshold: Double): DataFrame = {
     val a = assigned.select(col("vec_id").as("keeper_cand"), col("cell"),
@@ -189,4 +186,81 @@ object SemDeDup {
         count(lit(1)).as("n_dups"))
       .orderBy("dropped")
   }
+
+  /** DuckDB form of [[dedupReport]] over CTE `assigned(vec_id,
+    * embedding, cell, nrm)`: CTE `pairs`, then the report query.
+    */
+  def dedupReportSql(threshold: Double): String =
+    s"""pairs AS (
+       |  SELECT a.vec_id AS keeper_cand, b.vec_id AS dropped,
+       |    round(${V.dotSql("a.embedding", "b.embedding")} / (a.nrm * b.nrm), 6) AS cos
+       |  FROM assigned a JOIN assigned b
+       |    ON a.cell = b.cell AND a.vec_id < b.vec_id)
+       |SELECT dropped, min(keeper_cand) AS keeper, max(cos) AS max_cos,
+       |  count(*) AS n_dups
+       |FROM pairs WHERE cos >= $threshold
+       |GROUP BY dropped ORDER BY dropped""".stripMargin
+
+  /** DuckDB form of the sampled quantizer's seeds over `src(vec_id,
+    * embedding)`: CTEs `st(step)` ([[steps]]' seed step) and
+    * `seeds(seed_id, svec)`.
+    */
+  def seedsSql(src: String = "embeddings"): String =
+    s"""st AS (
+       |  SELECT greatest(16, CAST(ceil(sqrt(count(*))) AS BIGINT)) AS step
+       |  FROM $src),
+       |seeds AS MATERIALIZED (
+       |  SELECT vec_id AS seed_id, embedding AS svec
+       |  FROM $src CROSS JOIN st WHERE vec_id % st.step = 0)""".stripMargin
+
+  /** DuckDB form of [[nearestCell]]: CTE `assigned(vec_id, embedding,
+    * cell, nrm)`, each embedding's nearest row of `cells(id, vec)`.
+    */
+  def nearestCellSql(cells: String, id: String, vec: String): String =
+    s"""assigned AS MATERIALIZED (
+       |  SELECT vec_id, embedding, cell,
+       |    sqrt(${V.dotSql("embedding", "embedding")}) AS nrm
+       |  FROM (
+       |    SELECT e.vec_id, e.embedding, c.$id AS cell,
+       |      row_number() OVER (PARTITION BY e.vec_id
+       |        ORDER BY round(${V.dist2Sql("e.embedding", s"c.$vec")}, 6), c.$id) AS rn
+       |    FROM embeddings e CROSS JOIN $cells c)
+       |  WHERE rn = 1)""".stripMargin
+
+  /** DuckDB form of [[cellAssignTwoLevel]]: [[seedsSql]] plus CTEs
+    * `kc`, `ss`, `seedcell`, `vecsuper` and `assigned(vec_id,
+    * embedding, cell, nrm)`.
+    */
+  def twoLevelSql: String =
+    s"""${seedsSql()},
+       |kc AS (
+       |  SELECT greatest(2, CAST(ceil(sqrt(count(*))) AS BIGINT)) AS m
+       |  FROM seeds),
+       |ss AS (
+       |  SELECT seed_id AS ss_id, svec AS ssvec
+       |  FROM seeds CROSS JOIN st CROSS JOIN kc
+       |  WHERE seed_id % (st.step * kc.m) = 0),
+       |seedcell AS MATERIALIZED (
+       |  SELECT scell, seed_id, svec FROM (
+       |    SELECT s.seed_id, s.svec, x.ss_id AS scell,
+       |      row_number() OVER (PARTITION BY s.seed_id
+       |        ORDER BY round(${V.dist2Sql("s.svec", "x.ssvec")}, 6), x.ss_id) AS rn
+       |    FROM seeds s CROSS JOIN ss x)
+       |  WHERE rn = 1),
+       |vecsuper AS MATERIALIZED (
+       |  SELECT vec_id, embedding, scell FROM (
+       |    SELECT e.vec_id, e.embedding, x.ss_id AS scell,
+       |      row_number() OVER (PARTITION BY e.vec_id
+       |        ORDER BY round(${V.dist2Sql("e.embedding", "x.ssvec")}, 6), x.ss_id) AS rn
+       |    FROM embeddings e CROSS JOIN ss x)
+       |  WHERE rn = 1),
+       |assigned AS MATERIALIZED (
+       |  SELECT vec_id, embedding, cell,
+       |    sqrt(${V.dotSql("embedding", "embedding")}) AS nrm
+       |  FROM (
+       |    SELECT v.vec_id, v.embedding, c.seed_id AS cell,
+       |      row_number() OVER (PARTITION BY v.vec_id
+       |        ORDER BY round(${V.dist2Sql("v.embedding", "c.svec")}, 6), c.seed_id) AS rn
+       |    FROM vecsuper v JOIN seedcell c ON v.scell = c.scell)
+       |  WHERE rn = 1)""".stripMargin
 }

@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.graph.Baskets
 import graft.{Pins, Q, Tables}
 import graft.functions.{Portable => P}
 import graft.functions.Dist
@@ -266,6 +267,19 @@ object Analytics2 {
       |FROM orders LEFT JOIN detail ON o_orderkey = l_orderkey
       |GROUP BY 1 ORDER BY verdict""".stripMargin))
 
+  /** DuckDB CTEs of q159's exact rolling window: `act(user_id, day)`,
+    * each user's distinct epoch days, and `cov(user_id, d)`, the 7
+    * report days each activity day covers.
+    */
+  private[queries] def weekCoverSql: String =
+    """act AS (
+      |  SELECT DISTINCT user_id,
+      |    CAST(floor(epoch(ts) / 86400) AS BIGINT) AS day
+      |  FROM events),
+      |cov AS (
+      |  SELECT user_id, unnest(generate_series(day, day + 6)) AS d
+      |  FROM act)""".stripMargin
+
   /** Rolling 7-day active users (WAU per day) — the distinct-count-
     * over-sliding-window op a dashboard needs, WITHOUT a distinct
     * window aggregate (Spark has none) and WITHOUT a range join (a
@@ -292,13 +306,7 @@ object Analytics2 {
         .agg(countDistinct(col("user_id")).as("wau"))
         .orderBy("d")
     },
-    Some("""WITH act AS (
-      |  SELECT DISTINCT user_id,
-      |    CAST(floor(epoch(ts) / 86400) AS BIGINT) AS day
-      |  FROM events),
-      |cov AS (
-      |  SELECT user_id, unnest(generate_series(day, day + 6)) AS d
-      |  FROM act)
+    Some(s"""WITH $weekCoverSql
       |SELECT d, count(DISTINCT user_id) AS wau
       |FROM cov WHERE d IN (SELECT day FROM act)
       |GROUP BY d ORDER BY d""".stripMargin))
@@ -312,23 +320,9 @@ object Analytics2 {
   val q160 = Q(
     "q160_basket_pairs",
     (s, dir) => {
-      // repartition by ok BEFORE the distinct (r13, the q160 root-
-      // cause work): HashPartitioning(ok) satisfies the distinct's
-      // ClusteredDistribution(ok, pk) (subset rule) AND the self-join's
-      // requirement on ok, so ONE exchange serves both. The naive
-      // distinct() partitions by (ok, pk), which the join can't use —
-      // at sf10 that costs a second full 60M-row exchange (reused
-      // across the two aliases, but still written+read once) before
-      // the join. Per-order line counts are tiny and uniform, so
-      // ok-only partitioning carries no skew risk.
-      val li = Tables.t(s, dir, "lineitem")
-        .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
-        .repartition(s.sparkContext.defaultParallelism, col("ok"))
-        .distinct()
-      li.join(li.select(col("ok").as("ok2"), col("pk").as("pk2")),
-          col("ok") === col("ok2") && col("pk") < col("pk2"))
-        .groupBy(col("pk").as("part_a"), col("pk2").as("part_b"))
-        .agg(count(lit(1)).as("n_orders"))
+      // one exchange serves the distinct and the self-join (at sf10
+      // the naive distinct cost a second full 60M-row exchange)
+      Baskets.pairCounts(Baskets.items(s, dir), "part_a", "part_b", "n_orders")
         .orderBy(col("n_orders").desc, col("part_a"), col("part_b"))
         .limit(20)
     },
@@ -420,6 +414,28 @@ object Analytics2 {
       |GROUP BY 1, 2, 3
       |ORDER BY recency, frequency, monetary""".stripMargin))
 
+  /** The support ≥ 2 co-purchase edges `(pa, pb)`, pa < pb, pinned.
+    * The items are pinned before the self-join (both sides otherwise
+    * re-run the fact-table distinct) and the pin rotates onto the
+    * edges; the items' o-partitioning survives the pin, so the
+    * self-join adds ZERO exchange over the pinned blocks.
+    */
+  private def supportEdges(s: org.apache.spark.sql.SparkSession, dir: String) = {
+    val li = Pins.pin(Baskets.items(s, dir))
+    graft.graph.Rotate.supersede(
+      Baskets.pairCounts(li, "pa", "pb", "n")
+        .filter(col("n") >= 2)
+        .select("pa", "pb"),
+      li) // three self-references in triangles
+  }
+
+  /** Each triangle of the edge frame `e` once, as `(pa, pb, qb)`. */
+  private def triangles(e: org.apache.spark.sql.DataFrame) =
+    e.join(e.select(col("pa").as("qa"), col("pb").as("qb")),
+        col("pb") === col("qa"))
+      .join(e.select(col("pa").as("ra"), col("pb").as("rb")),
+        col("ra") === col("pa") && col("rb") === col("qb"), "left_semi")
+
   /** Triangle enumeration on the co-purchase graph (support ≥ 2
     * edges from q160's basket pairs): the canonical a<b<c edge-edge-
     * edge join, the building block of clustering-coefficient and
@@ -430,28 +446,7 @@ object Analytics2 {
   val q162 = Q(
     "q162_triangle_count",
     (s, dir) => {
-      // pin li before the self-join (both aliases otherwise re-run
-      // the fact-table distinct), rotate the pin onto the edge frame.
-      // repartition by ok BEFORE the distinct (q160's r13 shape): the
-      // ok-only partitioning satisfies the distinct AND survives the
-      // localCheckpoint (LogicalRDD keeps outputPartitioning), so the
-      // self-join on ok adds ZERO exchange over the pinned blocks
-      val li = Pins.pin(Tables.t(s, dir, "lineitem")
-        .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
-        .repartition(s.sparkContext.defaultParallelism, col("ok"))
-        .distinct())
-      val e = graft.graph.Rotate.supersede(
-        li.join(li.select(col("ok").as("ok2"), col("pk").as("pk2")),
-            col("ok") === col("ok2") && col("pk") < col("pk2"))
-          .groupBy(col("pk").as("pa"), col("pk2").as("pb"))
-          .agg(count(lit(1)).as("n"))
-          .filter(col("n") >= 2)
-          .select("pa", "pb"),
-        li) // three self-references below
-      e.join(e.select(col("pa").as("qa"), col("pb").as("qb")),
-          col("pb") === col("qa"))
-        .join(e.select(col("pa").as("ra"), col("pb").as("rb")),
-          col("ra") === col("pa") && col("rb") === col("qb"), "left_semi")
+      triangles(supportEdges(s, dir))
         .select(col("pa").as("part_a"), col("pb").as("part_b"),
           col("qb").as("part_c"))
         .orderBy("part_a", "part_b", "part_c")
@@ -477,27 +472,8 @@ object Analytics2 {
   val q163 = Q(
     "q163_clustering_coefficient",
     (s, dir) => {
-      // q162's pin+rotate discipline, same graph — incl. the q160
-      // shape (r14): ok-partitioning BEFORE the distinct serves the
-      // dedup AND the pair self-join in one exchange, at an explicit
-      // cluster-derived count so AQE byte-coalescing cannot serialize
-      // the CPU-dense pair expansion
-      val li = Pins.pin(Tables.t(s, dir, "lineitem")
-        .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
-        .repartition(s.sparkContext.defaultParallelism, col("ok"))
-        .distinct())
-      val e = graft.graph.Rotate.supersede(
-        li.join(li.select(col("ok").as("ok2"), col("pk").as("pk2")),
-            col("ok") === col("ok2") && col("pk") < col("pk2"))
-          .groupBy(col("pk").as("pa"), col("pk2").as("pb"))
-          .agg(count(lit(1)).as("n"))
-          .filter(col("n") >= 2)
-          .select("pa", "pb"),
-        li)
-      val tri = e.join(e.select(col("pa").as("qa"), col("pb").as("qb")),
-          col("pb") === col("qa"))
-        .join(e.select(col("pa").as("ra"), col("pb").as("rb")),
-          col("ra") === col("pa") && col("rb") === col("qb"), "left_semi")
+      val e = supportEdges(s, dir)
+      val tri = triangles(e)
         .select(col("pa").as("x"), col("pb").as("y"), col("qb").as("z"))
       val triCnt = tri.select(explode(array(col("x"), col("y"), col("z"))).as("part"))
         .groupBy("part").agg(count(lit(1)).as("n_tri"))
@@ -555,27 +531,16 @@ object Analytics2 {
     "q164_item_similarity",
     (s, dir) => {
       // pinned WITHOUT rotation: li is read again after the pair
-      // build (the per-part counts), so the pin must outlive it.
-      // r14: repartitioned on ok BEFORE the distinct (the q160/q275
-      // family rule) — the ok-only partitioning serves both the
-      // (ok, pk) dedup (subset rule) and the self-join, so the pair
-      // build starts from the pinned blocks with NO further exchange
-      // of li; the explicit cluster-derived count keeps the CPU-dense
-      // pair expansion at session parallelism instead of an AQE
-      // byte-coalesced handful of tasks.
-      val li = Pins.pin(Tables.t(s, dir, "lineitem")
-        .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
-        .repartition(s.sparkContext.defaultParallelism, col("ok"))
-        .distinct())
-      val pairs = li.join(li.select(col("ok").as("ok2"), col("pk").as("pk2")),
-          col("ok") === col("ok2") && col("pk") < col("pk2"))
-        .groupBy(col("pk").as("pa"), col("pk2").as("pb"))
-        .agg(count(lit(1)).as("nab"))
+      // build (the per-part counts), so the pin must outlive it; the
+      // pair build starts from the pinned blocks with NO further
+      // exchange of li
+      val li = Pins.pin(Baskets.items(s, dir))
+      val pairs = Baskets.pairCounts(li, "pa", "pb", "nab")
         .filter(col("nab") >= 2)
-      val cnt = li.groupBy(col("pk")).agg(count(lit(1)).as("n"))
+      val cnt = li.groupBy(col("p")).agg(count(lit(1)).as("n"))
       pairs
-        .join(cnt.select(col("pk").as("ka"), col("n").as("na")), col("pa") === col("ka"))
-        .join(cnt.select(col("pk").as("kb"), col("n").as("nb")), col("pb") === col("kb"))
+        .join(cnt.select(col("p").as("ka"), col("n").as("na")), col("pa") === col("ka"))
+        .join(cnt.select(col("p").as("kb"), col("n").as("nb")), col("pb") === col("kb"))
         .select(col("pa").as("part_a"), col("pb").as("part_b"), col("nab"),
           round(col("nab").cast("double") / (col("na") + col("nb") - col("nab")), 5)
             .as("jaccard"))

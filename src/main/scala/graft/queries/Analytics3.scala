@@ -83,22 +83,19 @@ object Analytics3 {
       // within-order self-join — unpinned, the fact-table distinct
       // (the query's dominant shuffle) re-ran four times
       val li = Pins.pin(Tables.t(s, dir, "lineitem")
-        .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
+        .select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
         .distinct())
-      val nOrders = li.select("ok").distinct().count()
-      val item = li.groupBy(col("pk")).agg(count(lit(1)).as("n_item"))
-      val pairs = li.join(li.select(col("ok").as("ok2"), col("pk").as("pk2")),
-          col("ok") === col("ok2") && col("pk") < col("pk2"))
-        .groupBy(col("pk").as("part_a"), col("pk2").as("part_b"))
-        .agg(count(lit(1)).as("n_pair"))
+      val nOrders = li.select("o").distinct().count()
+      val item = li.groupBy(col("p")).agg(count(lit(1)).as("n_item"))
+      val pairs = graft.graph.Baskets.pairCounts(li, "part_a", "part_b", "n_pair")
         .filter(col("n_pair") >= 2)
       // no forced broadcast: the item-count table is #parts rows —
       // dimension-sized today, but at 1000× it outgrows broadcast
       // comfort; AQE picks broadcast while it fits and falls back to
       // a key-partitioned join when it doesn't
       pairs
-        .join(item.select(col("pk").as("part_a"), col("n_item").as("n_a")), "part_a")
-        .join(item.select(col("pk").as("part_b"), col("n_item").as("n_b")), "part_b")
+        .join(item.select(col("p").as("part_a"), col("n_item").as("n_a")), "part_a")
+        .join(item.select(col("p").as("part_b"), col("n_item").as("n_b")), "part_b")
         .withColumn("confidence", round(col("n_pair").cast("double") / col("n_a"), 6))
         .withColumn("lift", round(
           (col("n_pair") * lit(nOrders)).cast("double") / (col("n_a") * col("n_b")), 6))

@@ -52,27 +52,8 @@ object CorpusOps {
     },
     Some(s"""WITH RECURSIVE toks AS (
       |  SELECT doc_id, ${Portable.tokenSetSql("text")} AS toks FROM documents),
-      |ex AS (SELECT doc_id, unnest(toks) AS tok FROM toks),
-      |mh AS (
-      |  SELECT doc_id, seed, min(${Portable.md5LongSql("concat(seed, ':', tok)")}) AS minh
-      |  FROM ex CROSS JOIN (SELECT unnest(range(16)) AS seed) seeds
-      |  GROUP BY 1, 2),
-      |db AS (
-      |  SELECT doc_id,
-      |    min(CASE WHEN band = 0 THEN bucket END) AS b0,
-      |    min(CASE WHEN band = 1 THEN bucket END) AS b1
-      |  FROM (
-      |    SELECT doc_id, seed // 8 AS band,
-      |      ${Portable.md5LongSql("concat(seed // 8, '|', string_agg(concat(seed, ':', minh), ',' ORDER BY concat(seed, ':', minh)))")} AS bucket
-      |    FROM mh GROUP BY doc_id, seed // 8)
-      |  GROUP BY doc_id),
-      |edges AS (SELECT b0 AS a, b1 AS b FROM db UNION SELECT b1, b0 FROM db),
-      |nodes AS (SELECT DISTINCT b0 AS node FROM db UNION SELECT DISTINCT b1 FROM db),
-      |reach AS (
-      |  SELECT node, node AS lab FROM nodes
-      |  UNION
-      |  SELECT e.a AS node, r.lab FROM edges e JOIN reach r ON r.node = e.b),
-      |comp AS (SELECT node, min(lab) AS cl FROM reach GROUP BY node)
+      |${graft.functions.MinHashBands.bucketsSql("toks")},
+      |${graft.graph.BandCluster.componentsSql()}
       |SELECT min(doc_id) AS cluster, count(*) AS n_docs
       |FROM db JOIN comp c ON db.b0 = c.node
       |GROUP BY c.cl
@@ -359,27 +340,8 @@ object CorpusOps {
       |        ORDER BY doc_id) AS rn
       |    FROM g) WHERE rn = 1),
       |toks AS (SELECT doc_id, ${Portable.tokenSetSql("text")} AS toks FROM exd),
-      |ex AS (SELECT doc_id, unnest(toks) AS tok FROM toks),
-      |mh AS (
-      |  SELECT doc_id, seed, min(${Portable.md5LongSql("concat(seed, ':', tok)")}) AS minh
-      |  FROM ex CROSS JOIN (SELECT unnest(range(16)) AS seed) seeds
-      |  GROUP BY 1, 2),
-      |db AS (
-      |  SELECT doc_id,
-      |    min(CASE WHEN band = 0 THEN bucket END) AS b0,
-      |    min(CASE WHEN band = 1 THEN bucket END) AS b1
-      |  FROM (
-      |    SELECT doc_id, seed // 8 AS band,
-      |      ${Portable.md5LongSql("concat(seed // 8, '|', string_agg(concat(seed, ':', minh), ',' ORDER BY concat(seed, ':', minh)))")} AS bucket
-      |    FROM mh GROUP BY doc_id, seed // 8)
-      |  GROUP BY doc_id),
-      |edges AS (SELECT b0 AS a, b1 AS b FROM db UNION SELECT b1, b0 FROM db),
-      |nodes AS (SELECT DISTINCT b0 AS node FROM db UNION SELECT DISTINCT b1 FROM db),
-      |reach AS (
-      |  SELECT node, node AS lab FROM nodes
-      |  UNION
-      |  SELECT e.a AS node, r.lab FROM edges e JOIN reach r ON r.node = e.b),
-      |comp AS (SELECT node, min(lab) AS cl FROM reach GROUP BY node),
+      |${graft.functions.MinHashBands.bucketsSql("toks")},
+      |${graft.graph.BandCluster.componentsSql()},
       |keep AS (
       |  SELECT doc_id FROM (
       |    SELECT db.doc_id,

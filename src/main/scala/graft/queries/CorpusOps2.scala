@@ -199,11 +199,7 @@ object CorpusOps2 {
       |    SELECT doc_id, ${Portable.tokenSetSql("text")} AS toks
       |    FROM documents WHERE lang = 'en')
       |  WHERE len(toks) >= 1),
-      |ex AS (SELECT doc_id, unnest(toks) AS tok FROM ts),
-      |mh AS (
-      |  SELECT doc_id, seed, min(${Portable.md5LongSql("concat(seed, ':', tok)")}) AS minh
-      |  FROM ex CROSS JOIN (SELECT unnest(range(16)) AS seed) seeds
-      |  GROUP BY 1, 2),
+      |${graft.functions.MinHashBands.minsSql("ts")},
       |md AS (SELECT greatest(20, CAST(ceil(count(*) / 300.0) AS BIGINT)) AS m FROM ts),
       |pairs AS (
       |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,

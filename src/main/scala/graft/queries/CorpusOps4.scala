@@ -29,20 +29,14 @@ object CorpusOps4 {
       // subset from it (the fact-table distinct otherwise runs twice),
       // then release the pin once fi — the only frame scanned after
       // this point — has materialized (Rotate rule 1)
-      val items = Pins.pin(Tables.t(s, dir, "lineitem")
-        .select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
-        // the q160 shape (r14): o-partitioning serves the distinct,
-        // the pair self-join AND the extend join in ONE exchange, at
-        // an explicit cluster-derived count so AQE byte-coalescing
-        // cannot serialize the pair expansion
-        .repartition(s.sparkContext.defaultParallelism, col("o"))
-        .distinct())
+      // the items' o-partitioning serves the distinct, the pair
+      // self-join AND the extend join in ONE exchange
+      val items = Pins.pin(graft.graph.Baskets.items(s, dir))
       val l1 = items.groupBy("p").agg(count(lit(1)).as("n"))
         .filter(col("n") >= 4).select("p")
       val fi = graft.graph.Rotate.supersede(
         items.join(l1, Seq("p"), "left_semi"), items) // scanned three times below
-      val pairs = fi.alias("a")
-        .join(fi.alias("b"), col("a.o") === col("b.o") && col("a.p") < col("b.p"))
+      val pairs = graft.graph.Baskets.pairs(fi)
         .select(col("a.o").as("o"), col("a.p").as("x"), col("b.p").as("y"))
       val l2 = Pins.pin(pairs.groupBy("x", "y").agg(count(lit(1)).as("n"))
         .filter(col("n") >= 2).select("x", "y")) // three semi-join probes below
@@ -87,6 +81,76 @@ object CorpusOps4 {
       |FROM triples GROUP BY 1, 2, 3
       |ORDER BY support DESC, pa, pb, pc LIMIT 10""".stripMargin))
 
+  /** q232's lexical list over (query, doc) pairs carrying the sorted
+    * token hashes `th`/`qth`: each query's top 100 by rounded Jaccard,
+    * `(query_id, doc_id, r_lex)`.
+    */
+  private[queries] def lexRanks(pairs: DataFrame): DataFrame =
+    pairs
+      .withColumn("c", expr("sorted_intersect_count(th, qth)"))
+      .withColumn("jac",
+        round(col("c") / (size(col("th")) + size(col("qth")) - col("c")), 6))
+      .withColumn("r", row_number().over(
+        Window.partitionBy("query_id").orderBy(col("jac").desc, col("doc_id"))))
+      .filter(col("r") <= 100)
+      .select(col("query_id"), col("doc_id"), col("r").as("r_lex"))
+
+  /** q232's vector list over pairs carrying (embedding, nrm) and
+    * (qe, qn): each query's top 100 by rounded cosine, `r_vec`.
+    */
+  private[queries] def vecRanks(pairs: DataFrame): DataFrame =
+    pairs
+      .withColumn("cos",
+        round(V.dot("embedding", "qe") / (col("nrm") * col("qn")), 6))
+      .withColumn("r", row_number().over(
+        Window.partitionBy("query_id").orderBy(col("cos").desc, col("doc_id"))))
+      .filter(col("r") <= 100)
+      .select(col("query_id"), col("doc_id"), col("r").as("r_vec"))
+
+  /** Reciprocal-rank fusion of the two lists, Σ 1/(60 + rank): each
+    * query's top 5 by `rrf`, with its `rank`.
+    */
+  private[queries] def rrfTop5(lex: DataFrame, vec: DataFrame): DataFrame =
+    lex.join(vec, Seq("query_id", "doc_id"), "full_outer")
+      .withColumn("rrf", round(
+        coalesce(lit(1.0) / (lit(60) + col("r_lex")), lit(0.0)) +
+          coalesce(lit(1.0) / (lit(60) + col("r_vec")), lit(0.0)), 6))
+      .withColumn("rank", row_number().over(
+        Window.partitionBy("query_id").orderBy(col("rrf").desc, col("doc_id"))))
+      .filter(col("rank") <= 5)
+
+  /** DuckDB twins of [[lexRanks]] and [[vecRanks]] over CTE `pairs`:
+    * CTEs `lex` and `vec`.
+    */
+  private[queries] def ranksSql(lex: String, vec: String): String =
+    s"""$lex AS (
+       |  SELECT query_id, doc_id, CAST(r AS INTEGER) AS r_lex FROM (
+       |    SELECT query_id, doc_id, row_number() OVER (
+       |      PARTITION BY query_id ORDER BY
+       |        round(len(list_intersect(th, qth)) /
+       |          (len(th) + len(qth) - len(list_intersect(th, qth))), 6) DESC,
+       |        doc_id) AS r
+       |    FROM pairs) WHERE r <= 100),
+       |$vec AS (
+       |  SELECT query_id, doc_id, CAST(r AS INTEGER) AS r_vec FROM (
+       |    SELECT query_id, doc_id, row_number() OVER (
+       |      PARTITION BY query_id ORDER BY
+       |        round(${V.dotSql("embedding", "qe")} / (nrm * qn), 6) DESC,
+       |        doc_id) AS r
+       |    FROM pairs) WHERE r <= 100)""".stripMargin
+
+  /** DuckDB twin of [[rrfTop5]] before the cut: every fused row of
+    * `lex` ⟗ `vec` with its `rrf` and `rank`.
+    */
+  private[queries] def rrfSql(lex: String, vec: String): String =
+    s"""SELECT query_id, doc_id, r_lex, r_vec,
+       |    round(coalesce(1.0 / (60 + r_lex), 0) +
+       |          coalesce(1.0 / (60 + r_vec), 0), 6) AS rrf,
+       |    row_number() OVER (PARTITION BY query_id ORDER BY
+       |      round(coalesce(1.0 / (60 + r_lex), 0) +
+       |            coalesce(1.0 / (60 + r_vec), 0), 6) DESC, doc_id) AS rank
+       |  FROM $lex FULL OUTER JOIN $vec USING (query_id, doc_id)""".stripMargin
+
   /** Reciprocal-rank fusion of two retrieval modalities — the
     * standard hybrid-search combiner: per query (docs 0-4), the
     * top-100 lexical list (token-set Jaccard, codegen'd merge-scan
@@ -113,29 +177,7 @@ object CorpusOps4 {
         col("doc_id").as("query_id"), col("th").as("qth"),
         col("embedding").as("qe"), col("nrm").as("qn"))
       val pairs = d.filter(col("doc_id") >= 5).crossJoin(broadcast(qs))
-      val w = Window.partitionBy("query_id")
-      val lex = pairs
-        .withColumn("c", expr("sorted_intersect_count(th, qth)"))
-        .withColumn("jac",
-          round(col("c") / (size(col("th")) + size(col("qth")) - col("c")), 6))
-        .withColumn("r", row_number().over(
-          w.orderBy(col("jac").desc, col("doc_id"))))
-        .filter(col("r") <= 100)
-        .select(col("query_id"), col("doc_id"), col("r").as("r_lex"))
-      val vec = pairs
-        .withColumn("cos",
-          round(V.dot("embedding", "qe") / (col("nrm") * col("qn")), 6))
-        .withColumn("r", row_number().over(
-          w.orderBy(col("cos").desc, col("doc_id"))))
-        .filter(col("r") <= 100)
-        .select(col("query_id"), col("doc_id"), col("r").as("r_vec"))
-      lex.join(vec, Seq("query_id", "doc_id"), "full_outer")
-        .withColumn("rrf", round(
-          coalesce(lit(1.0) / (lit(60) + col("r_lex")), lit(0.0)) +
-            coalesce(lit(1.0) / (lit(60) + col("r_vec")), lit(0.0)), 6))
-        .withColumn("rank", row_number().over(
-          w.orderBy(col("rrf").desc, col("doc_id"))))
-        .filter(col("rank") <= 5)
+      rrfTop5(lexRanks(pairs), vecRanks(pairs))
         .select(col("query_id"), col("doc_id"), col("r_lex"), col("r_vec"),
           col("rrf"), col("rank"))
         .orderBy("query_id", "rank")
@@ -150,30 +192,9 @@ object CorpusOps4 {
       |pairs AS MATERIALIZED (
       |  SELECT d.doc_id, d.th, d.embedding, d.nrm, qs.*
       |  FROM d CROSS JOIN qs WHERE d.doc_id >= 5),
-      |lex AS (
-      |  SELECT query_id, doc_id, CAST(r AS INTEGER) AS r_lex FROM (
-      |    SELECT query_id, doc_id, row_number() OVER (
-      |      PARTITION BY query_id ORDER BY
-      |        round(len(list_intersect(th, qth)) /
-      |          (len(th) + len(qth) - len(list_intersect(th, qth))), 6) DESC,
-      |        doc_id) AS r
-      |    FROM pairs) WHERE r <= 100),
-      |vec AS (
-      |  SELECT query_id, doc_id, CAST(r AS INTEGER) AS r_vec FROM (
-      |    SELECT query_id, doc_id, row_number() OVER (
-      |      PARTITION BY query_id ORDER BY
-      |        round(${V.dotSql("embedding", "qe")} / (nrm * qn), 6) DESC,
-      |        doc_id) AS r
-      |    FROM pairs) WHERE r <= 100)
+      |${ranksSql("lex", "vec")}
       |SELECT query_id, doc_id, r_lex, r_vec, rrf, CAST(rank AS INTEGER) AS rank
-      |FROM (
-      |  SELECT query_id, doc_id, r_lex, r_vec,
-      |    round(coalesce(1.0 / (60 + r_lex), 0) +
-      |          coalesce(1.0 / (60 + r_vec), 0), 6) AS rrf,
-      |    row_number() OVER (PARTITION BY query_id ORDER BY
-      |      round(coalesce(1.0 / (60 + r_lex), 0) +
-      |            coalesce(1.0 / (60 + r_vec), 0), 6) DESC, doc_id) AS rank
-      |  FROM lex FULL OUTER JOIN vec USING (query_id, doc_id))
+      |FROM (${rrfSql("lex", "vec")})
       |WHERE rank <= 5
       |ORDER BY query_id, rank""".stripMargin))
 

@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.{Pins, Q, Tables}
 import graft.functions.{Portable, VectorFunctions => V}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Round-5 curation tail — the remaining large-corpus preparation
@@ -156,6 +157,33 @@ object CurationOps {
       |FROM rates r LEFT JOIN kept k ON r.lang = k.lang
       |ORDER BY r.lang""".stripMargin))
 
+  /** q184's per-doc score `(doc_id, lang, n_toks, wsum, score)`, which
+    * q191 grades by AUC and q283 by calibration.
+    */
+  private[queries] def qualityScore(s: SparkSession, dir: String): DataFrame =
+    Tables.docs(s, dir)
+      .select(col("doc_id"), col("lang"),
+        explode(Portable.tokens(col("text"))).as("tok"))
+      .withColumn("w",
+        (pmod(Portable.md5Long(col("tok")), lit(64)) * 37 + 11) % 97 - 48)
+      .groupBy("doc_id", "lang")
+      .agg(count(lit(1)).as("n_toks"), sum(col("w")).as("wsum"))
+      .withColumn("score", round(
+        col("wsum").cast("double") / (col("n_toks").cast("double") * 97.0), 6))
+
+  /** DuckDB twin of [[qualityScore]] before the score: CTEs `toks` and
+    * `scored(doc_id, lang, n_toks, wsum)`.
+    */
+  private[queries] def qualityScoreSql: String =
+    s"""toks AS (
+       |  SELECT doc_id, lang, unnest(${Portable.tokensSql("text")}) AS tok
+       |  FROM documents),
+       |scored AS (
+       |  SELECT doc_id, lang, count(*) AS n_toks,
+       |    CAST(sum(((${Portable.md5LongSql("tok")} % 64) * 37 + 11) % 97 - 48)
+       |      AS BIGINT) AS wsum
+       |  FROM toks GROUP BY 1, 2)""".stripMargin
+
   /** Learned linear quality classifier with feature hashing — the
     * fasttext-style model-based filter of the GPT-3/LLaMA data
     * recipes, re-expressed as a pure dataflow: tokens hash into 64
@@ -174,27 +202,12 @@ object CurationOps {
   val q184 = Q(
     "q184_quality_classifier",
     (s, dir) => {
-      Tables.docs(s, dir)
-        .select(col("doc_id"), col("lang"),
-          explode(Portable.tokens(col("text"))).as("tok"))
-        .withColumn("w",
-          (pmod(Portable.md5Long(col("tok")), lit(64)) * 37 + 11) % 97 - 48)
-        .groupBy("doc_id", "lang")
-        .agg(count(lit(1)).as("n_toks"), sum(col("w")).as("wsum"))
-        .withColumn("score", round(
-          col("wsum").cast("double") / (col("n_toks").cast("double") * 97.0), 6))
+      qualityScore(s, dir)
         .withColumn("keep", when(col("score") > 0, 1).otherwise(0))
         .select("doc_id", "lang", "n_toks", "score", "keep")
         .orderBy("doc_id")
     },
-    Some(s"""WITH toks AS (
-      |  SELECT doc_id, lang, unnest(${Portable.tokensSql("text")}) AS tok
-      |  FROM documents),
-      |scored AS (
-      |  SELECT doc_id, lang, count(*) AS n_toks,
-      |    CAST(sum(((${Portable.md5LongSql("tok")} % 64) * 37 + 11) % 97 - 48)
-      |      AS BIGINT) AS wsum
-      |  FROM toks GROUP BY 1, 2),
+    Some(s"""WITH $qualityScoreSql,
       |final AS (
       |  SELECT doc_id, lang, n_toks,
       |    round(CAST(wsum AS DOUBLE) / (CAST(n_toks AS DOUBLE) * 97.0), 6) AS score
@@ -458,25 +471,15 @@ object CurationOps {
         s"""WITH toks AS (
            |  SELECT doc_id, ${Portable.tokenSetSql("text")} AS toks
            |  FROM documents WHERE lang = 'en'),
-           |ex AS (SELECT doc_id, unnest(toks) AS tok FROM toks),
-           |mh AS (
-           |  SELECT doc_id, seed,
-           |    min(${Portable.md5LongSql("concat(seed, ':', tok)")}) AS minh
-           |  FROM ex CROSS JOIN (SELECT unnest(range(16)) AS seed) seeds
-           |  GROUP BY 1, 2)""".stripMargin
+           |${graft.functions.MinHashBands.minsSql("toks")}""".stripMargin
       val per = Seq((2, 8), (4, 4), (8, 2)).map { case (b, r) =>
+        val sig = graft.functions.MinHashBands.bandListSql(r)
         s"""SELECT $b AS bands, $r AS rows_per_band, buckets_gt1, cand_pairs,
            |  (SELECT count(DISTINCT s.doc_id)
-           |   FROM (SELECT doc_id, seed // $r AS band,
-           |           string_agg(concat(seed, ':', minh), ','
-           |             ORDER BY concat(seed, ':', minh)) AS sig
-           |         FROM mh GROUP BY 1, 2) s
+           |   FROM ($sig) s
            |   JOIN (SELECT band, sig FROM (
            |           SELECT band, sig, count(*) AS n
-           |           FROM (SELECT doc_id, seed // $r AS band,
-           |                   string_agg(concat(seed, ':', minh), ','
-           |                     ORDER BY concat(seed, ':', minh)) AS sig
-           |                 FROM mh GROUP BY 1, 2) x
+           |           FROM ($sig) x
            |           GROUP BY 1, 2) y WHERE n > 1) bb
            |     ON s.band = bb.band AND s.sig = bb.sig) AS docs_in_cand
            |FROM (
@@ -484,11 +487,7 @@ object CurationOps {
            |           AS buckets_gt1,
            |    CAST(sum(n * (n - 1)) / 2 AS BIGINT) AS cand_pairs
            |  FROM (
-           |    SELECT band, sig, count(*) AS n FROM (
-           |      SELECT doc_id, seed // $r AS band,
-           |        string_agg(concat(seed, ':', minh), ','
-           |          ORDER BY concat(seed, ':', minh)) AS sig
-           |      FROM mh GROUP BY 1, 2) x
+           |    SELECT band, sig, count(*) AS n FROM ($sig) x
            |    GROUP BY 1, 2) z) agg""".stripMargin
       }.mkString("\nUNION ALL\n")
       s"$mh\n$per\nORDER BY bands"
@@ -656,12 +655,7 @@ object CurationOps {
     Some(s"""WITH base AS (
       |  SELECT vec_id, embedding FROM embeddings
       |  WHERE ${Portable.md5LongSql("'b:' || CAST(vec_id AS VARCHAR)")} % 10 < 9),
-      |st AS (
-      |  SELECT greatest(16, CAST(ceil(sqrt(count(*))) AS BIGINT)) AS step
-      |  FROM base),
-      |seeds AS (
-      |  SELECT vec_id AS seed_id, embedding AS svec
-      |  FROM base CROSS JOIN st WHERE vec_id % st.step = 0),
+      |${graft.pipeline.SemDeDup.seedsSql("base")},
       |un AS (
       |  SELECT vec_id, embedding,
       |    CASE WHEN ${Portable.md5LongSql("'b:' || CAST(vec_id AS VARCHAR)")} % 10 < 9

@@ -142,15 +142,7 @@ object CurationOps11 {
     (s, dir) => {
       val s2 = s
       import s2.implicits._
-      val scored = Tables.docs(s, dir)
-        .select(col("doc_id"), col("lang"),
-          explode(Portable.tokens(col("text"))).as("tok"))
-        .withColumn("w",
-          (pmod(Portable.md5Long(col("tok")), lit(64)) * 37 + 11) % 97 - 48)
-        .groupBy("doc_id", "lang")
-        .agg(count(lit(1)).as("n_toks"), sum(col("w")).as("wsum"))
-        .withColumn("score", round(
-          col("wsum").cast("double") / (col("n_toks").cast("double") * 97.0), 6))
+      val scored = CurationOps.qualityScore(s, dir)
         .select(
           (round(col("score") * 1e6, 0).cast("long") + 500000L).as("pm"),
           (col("lang") === "en").cast("long").as("pos"))
@@ -178,14 +170,7 @@ object CurationOps11 {
             / (col("big_n").cast("double") * 1e6), 8).as("ece_contrib"))
         .orderBy("bin")
     },
-    Some(s"""WITH toks AS (
-      |  SELECT doc_id, lang, unnest(${Portable.tokensSql("text")}) AS tok
-      |  FROM documents),
-      |scored AS (
-      |  SELECT doc_id, lang, count(*) AS n_toks,
-      |    CAST(sum(((${Portable.md5LongSql("tok")} % 64) * 37 + 11) % 97 - 48)
-      |      AS BIGINT) AS wsum
-      |  FROM toks GROUP BY 1, 2),
+    Some(s"""WITH ${CurationOps.qualityScoreSql},
       |pm AS (
       |  SELECT CAST(round(round(CAST(wsum AS DOUBLE)
       |      / (CAST(n_toks AS DOUBLE) * 97.0), 6) * 1e6) AS BIGINT) + 500000 AS pm,

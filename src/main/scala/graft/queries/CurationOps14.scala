@@ -95,6 +95,52 @@ object CurationOps14 {
       (docs, touched.unionAll(untouched))
   }
 
+  /** DuckDB twin of [[keepRanges]]: CTEs through `keep(doc_id, ks,
+    * ke)`, whose rows with ks > ke are empty ranges.
+    */
+  private def keepRangesSql: String =
+    s"""d AS (
+       |  SELECT doc_id, CAST(length(text) AS BIGINT) AS len, text
+       |  FROM documents WHERE length(text) >= 40),
+       |ex AS (
+       |  SELECT doc_id, len,
+       |    unnest(range(1, len - 38)) AS pos, text
+       |  FROM d),
+       |sh AS (
+       |  SELECT doc_id, len, pos AS s,
+       |    ${Portable.md5LongSql("substr(text, CAST(pos AS INTEGER), 40)")} AS h
+       |  FROM ex),
+       |an AS (SELECT * FROM sh WHERE h % 4 = 0),
+       |dup AS (SELECT h FROM an GROUP BY h HAVING count(DISTINCT doc_id) >= 2),
+       |spans AS (SELECT doc_id, len, s, s + 39 AS e FROM an JOIN dup USING (h)),
+       |isl AS (
+       |  SELECT doc_id, len, s, e,
+       |    CASE WHEN max(e) OVER w IS NULL OR s > max(e) OVER w + 1
+       |         THEN 1 ELSE 0 END AS ni
+       |  FROM spans
+       |  WINDOW w AS (PARTITION BY doc_id ORDER BY s, e
+       |               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)),
+       |isl2 AS (
+       |  SELECT doc_id, len, s, e,
+       |    sum(ni) OVER (PARTITION BY doc_id ORDER BY s, e
+       |                  ROWS UNBOUNDED PRECEDING) AS isl
+       |  FROM isl),
+       |merged AS (
+       |  SELECT doc_id, len, isl, min(s) AS xs, max(e) AS xe
+       |  FROM isl2 GROUP BY 1, 2, 3),
+       |g AS (
+       |  SELECT doc_id, len, xs, xe,
+       |    coalesce(lag(xe) OVER (PARTITION BY doc_id ORDER BY xs), 0) AS prev_end,
+       |    xs = max(xs) OVER (PARTITION BY doc_id) AS is_last
+       |  FROM merged),
+       |keep AS (
+       |  SELECT doc_id, prev_end + 1 AS ks, xs - 1 AS ke FROM g
+       |  UNION ALL
+       |  SELECT doc_id, xe + 1, len FROM g WHERE is_last
+       |  UNION ALL
+       |  SELECT doc_id, 1, len FROM d
+       |  WHERE doc_id NOT IN (SELECT doc_id FROM spans))""".stripMargin
+
   val q291 = Q(
     "q291_span_excision",
     (s, dir) =>
@@ -102,47 +148,7 @@ object CurationOps14 {
         .select(col("doc_id"), col("ks").as("keep_start"), col("ke").as("keep_end"),
           (col("ke") - col("ks") + 1L).as("keep_len"))
         .orderBy("doc_id", "keep_start"),
-    Some(s"""WITH d AS (
-      |  SELECT doc_id, CAST(length(text) AS BIGINT) AS len, text
-      |  FROM documents WHERE length(text) >= 40),
-      |ex AS (
-      |  SELECT doc_id, len,
-      |    unnest(range(1, len - 38)) AS pos, text
-      |  FROM d),
-      |sh AS (
-      |  SELECT doc_id, len, pos AS s,
-      |    ${Portable.md5LongSql("substr(text, CAST(pos AS INTEGER), 40)")} AS h
-      |  FROM ex),
-      |an AS (SELECT * FROM sh WHERE h % 4 = 0),
-      |dup AS (SELECT h FROM an GROUP BY h HAVING count(DISTINCT doc_id) >= 2),
-      |spans AS (SELECT doc_id, len, s, s + 39 AS e FROM an JOIN dup USING (h)),
-      |isl AS (
-      |  SELECT doc_id, len, s, e,
-      |    CASE WHEN max(e) OVER w IS NULL OR s > max(e) OVER w + 1
-      |         THEN 1 ELSE 0 END AS ni
-      |  FROM spans
-      |  WINDOW w AS (PARTITION BY doc_id ORDER BY s, e
-      |               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)),
-      |isl2 AS (
-      |  SELECT doc_id, len, s, e,
-      |    sum(ni) OVER (PARTITION BY doc_id ORDER BY s, e
-      |                  ROWS UNBOUNDED PRECEDING) AS isl
-      |  FROM isl),
-      |merged AS (
-      |  SELECT doc_id, len, isl, min(s) AS xs, max(e) AS xe
-      |  FROM isl2 GROUP BY 1, 2, 3),
-      |g AS (
-      |  SELECT doc_id, len, xs, xe,
-      |    coalesce(lag(xe) OVER (PARTITION BY doc_id ORDER BY xs), 0) AS prev_end,
-      |    xs = max(xs) OVER (PARTITION BY doc_id) AS is_last
-      |  FROM merged),
-      |keep AS (
-      |  SELECT doc_id, prev_end + 1 AS ks, xs - 1 AS ke FROM g
-      |  UNION ALL
-      |  SELECT doc_id, xe + 1, len FROM g WHERE is_last
-      |  UNION ALL
-      |  SELECT doc_id, 1, len FROM d
-      |  WHERE doc_id NOT IN (SELECT doc_id FROM spans))
+    Some(s"""WITH $keepRangesSql
       |SELECT doc_id, ks AS keep_start, ke AS keep_end,
       |  ke - ks + 1 AS keep_len
       |FROM keep WHERE ks <= ke
@@ -237,47 +243,7 @@ object CurationOps14 {
           substring(col("clean_text"), 1, 40).as("clean_prefix"))
         .orderBy("doc_id")
     },
-    Some(s"""WITH d AS (
-      |  SELECT doc_id, CAST(length(text) AS BIGINT) AS len, text
-      |  FROM documents WHERE length(text) >= 40),
-      |ex AS (
-      |  SELECT doc_id, len,
-      |    unnest(range(1, len - 38)) AS pos, text
-      |  FROM d),
-      |sh AS (
-      |  SELECT doc_id, len, pos AS s,
-      |    ${Portable.md5LongSql("substr(text, CAST(pos AS INTEGER), 40)")} AS h
-      |  FROM ex),
-      |an AS (SELECT * FROM sh WHERE h % 4 = 0),
-      |dup AS (SELECT h FROM an GROUP BY h HAVING count(DISTINCT doc_id) >= 2),
-      |spans AS (SELECT doc_id, len, s, s + 39 AS e FROM an JOIN dup USING (h)),
-      |isl AS (
-      |  SELECT doc_id, len, s, e,
-      |    CASE WHEN max(e) OVER w IS NULL OR s > max(e) OVER w + 1
-      |         THEN 1 ELSE 0 END AS ni
-      |  FROM spans
-      |  WINDOW w AS (PARTITION BY doc_id ORDER BY s, e
-      |               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)),
-      |isl2 AS (
-      |  SELECT doc_id, len, s, e,
-      |    sum(ni) OVER (PARTITION BY doc_id ORDER BY s, e
-      |                  ROWS UNBOUNDED PRECEDING) AS isl
-      |  FROM isl),
-      |merged AS (
-      |  SELECT doc_id, len, isl, min(s) AS xs, max(e) AS xe
-      |  FROM isl2 GROUP BY 1, 2, 3),
-      |g AS (
-      |  SELECT doc_id, len, xs, xe,
-      |    coalesce(lag(xe) OVER (PARTITION BY doc_id ORDER BY xs), 0) AS prev_end,
-      |    xs = max(xs) OVER (PARTITION BY doc_id) AS is_last
-      |  FROM merged),
-      |keep AS (
-      |  SELECT doc_id, prev_end + 1 AS ks, xs - 1 AS ke FROM g
-      |  UNION ALL
-      |  SELECT doc_id, xe + 1, len FROM g WHERE is_last
-      |  UNION ALL
-      |  SELECT doc_id, 1, len FROM d
-      |  WHERE doc_id NOT IN (SELECT doc_id FROM spans)),
+    Some(s"""WITH $keepRangesSql,
       |kept AS (SELECT doc_id, ks, ke FROM keep WHERE ks <= ke),
       |built AS (
       |  SELECT k.doc_id, count(*) AS n_keep,
@@ -326,15 +292,7 @@ object CurationOps14 {
     Some(s"""WITH toks AS (
       |  SELECT doc_id, ${Portable.tokenSetSql("text")} AS toks FROM documents),
       |tf AS (SELECT doc_id, toks FROM toks WHERE len(toks) >= 1),
-      |ex AS (SELECT doc_id, unnest(toks) AS tok FROM tf),
-      |mh AS (
-      |  SELECT doc_id, seed, min(${Portable.md5LongSql("concat(seed, ':', tok)")}) AS minh
-      |  FROM ex CROSS JOIN (SELECT unnest(range(16)) AS seed) seeds
-      |  GROUP BY 1, 2),
-      |sigs AS (
-      |  SELECT doc_id, seed // 8 AS band,
-      |    string_agg(concat(seed, ':', minh), ',' ORDER BY concat(seed, ':', minh)) AS sig
-      |  FROM mh GROUP BY 1, 2),
+      |${graft.functions.MinHashBands.sigsSql("tf")},
       |standing AS (
       |  SELECT band, sig, min(doc_id) AS rep
       |  FROM sigs WHERE doc_id % 10 <> 7 GROUP BY 1, 2),

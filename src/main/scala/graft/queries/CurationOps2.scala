@@ -33,15 +33,7 @@ object CurationOps2 {
   val q191 = Q(
     "q191_classifier_auc",
     (s, dir) => {
-      val scored = Tables.docs(s, dir)
-        .select(col("doc_id"), col("lang"),
-          explode(Portable.tokens(col("text"))).as("tok"))
-        .withColumn("w",
-          (pmod(Portable.md5Long(col("tok")), lit(64)) * 37 + 11) % 97 - 48)
-        .groupBy("doc_id", "lang")
-        .agg(count(lit(1)).as("n_toks"), sum(col("w")).as("wsum"))
-        .withColumn("score", round(
-          col("wsum").cast("double") / (col("n_toks").cast("double") * 97.0), 6))
+      val scored = CurationOps.qualityScore(s, dir)
         .withColumn("pos", (col("lang") === "en").cast("long"))
       val byScore = scored.groupBy("score")
         .agg(sum(col("pos")).as("n_pos"),
@@ -59,14 +51,7 @@ object CurationOps2 {
             (lit(2.0) * col("np") * col("nn")), 6).as("auc"))
         .withColumn("gini", round(col("auc") * 2 - 1, 6))
     },
-    Some(s"""WITH toks AS (
-      |  SELECT doc_id, lang, unnest(${Portable.tokensSql("text")}) AS tok
-      |  FROM documents),
-      |scored AS (
-      |  SELECT doc_id, lang, count(*) AS n_toks,
-      |    CAST(sum(((${Portable.md5LongSql("tok")} % 64) * 37 + 11) % 97 - 48)
-      |      AS BIGINT) AS wsum
-      |  FROM toks GROUP BY 1, 2),
+    Some(s"""WITH ${CurationOps.qualityScoreSql},
       |sc AS (
       |  SELECT round(CAST(wsum AS DOUBLE) / (CAST(n_toks AS DOUBLE) * 97.0), 6) AS score,
       |    CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS pos
@@ -183,15 +168,7 @@ object CurationOps2 {
     Some(s"""WITH toks AS (
       |  SELECT doc_id, ${Portable.tokenSetSql("text")} AS toks FROM documents),
       |tf AS (SELECT doc_id, toks FROM toks WHERE len(toks) >= 1),
-      |ex AS (SELECT doc_id, unnest(toks) AS tok FROM tf),
-      |mh AS (
-      |  SELECT doc_id, seed, min(${Portable.md5LongSql("concat(seed, ':', tok)")}) AS minh
-      |  FROM ex CROSS JOIN (SELECT unnest(range(16)) AS seed) seeds
-      |  GROUP BY 1, 2),
-      |sigs AS (
-      |  SELECT doc_id, seed // 8 AS band,
-      |    string_agg(concat(seed, ':', minh), ',' ORDER BY concat(seed, ':', minh)) AS sig
-      |  FROM mh GROUP BY 1, 2),
+      |${graft.functions.MinHashBands.sigsSql("tf")},
       |win AS (SELECT band, sig, min(doc_id) AS winner FROM sigs GROUP BY 1, 2)
       |SELECT s.doc_id, count(*) AS n_bands,
       |  CAST(min(CASE WHEN w.winner = s.doc_id THEN 1 ELSE 0 END) AS INTEGER) AS kept

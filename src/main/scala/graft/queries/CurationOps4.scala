@@ -117,8 +117,7 @@ object CurationOps4 {
     (s, dir) => {
       val items = Tables.t(s, dir, "lineitem")
         .select(col("l_orderkey").as("o"), col("l_partkey").as("p")).distinct()
-      val pairs = items.alias("a")
-        .join(items.alias("b"), col("a.o") === col("b.o") && col("a.p") < col("b.p"))
+      val pairs = graft.graph.Baskets.pairs(items)
         .groupBy(col("a.p").as("x"), col("b.p").as("y"))
         .agg(count(lit(1)).as("support"))
         .filter(col("support") >= 2)
@@ -312,17 +311,11 @@ object CurationOps4 {
         .select("label", "vec_id", "d2", "rn")
         .orderBy("label", "rn")
     },
-    Some(s"""WITH cent AS (
-      |  SELECT label, list(c ORDER BY pos) AS cvec FROM (
-      |    SELECT label, i AS pos,
-      |      round(avg(CAST(embedding[i] AS DOUBLE)), 6) AS c
-      |    FROM embeddings, generate_series(1, 64) g(i)
-      |    GROUP BY 1, 2)
-      |  GROUP BY label),
+    Some(s"""WITH ${VectorOps.centroidsSql},
       |d AS (
       |  SELECT e.label, e.vec_id,
       |    round(${V.dist2Sql("e.embedding", "cent.cvec")}, 6) AS d2
-      |  FROM embeddings e JOIN cent USING (label))
+      |  FROM embeddings e JOIN cent ON cent.clabel = e.label)
       |SELECT label, vec_id, d2, rn FROM (
       |  SELECT label, vec_id, d2, CAST(row_number() OVER (
       |      PARTITION BY label ORDER BY d2 DESC, vec_id) AS INTEGER) AS rn

@@ -290,15 +290,7 @@ object CurationOps5 {
       |    SELECT doc_id, count(*) OVER (PARTITION BY sha256(text)) AS c FROM en)
       |  WHERE c >= 2),
       |toks AS (SELECT doc_id, ${Portable.tokenSetSql("text")} AS toks FROM en),
-      |ex AS (SELECT doc_id, unnest(toks) AS tok FROM toks),
-      |mhsig AS (
-      |  SELECT doc_id, seed, min(${Portable.md5LongSql("concat(seed, ':', tok)")}) AS minh
-      |  FROM ex CROSS JOIN (SELECT unnest(range(16)) AS seed) seeds
-      |  GROUP BY 1, 2),
-      |sigs AS (
-      |  SELECT doc_id, seed // 8 AS band,
-      |    string_agg(concat(seed, ':', minh), ',' ORDER BY concat(seed, ':', minh)) AS sig
-      |  FROM mhsig GROUP BY 1, 2),
+      |${graft.functions.MinHashBands.sigsSql("toks")},
       |mcand AS (
       |  SELECT DISTINCT sa.doc_id AS a, sb.doc_id AS b
       |  FROM sigs sa JOIN sigs sb

@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.{Q, Tables}
 import graft.functions.{Portable => P, VectorFunctions => V}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -24,18 +25,10 @@ object CurationOps8 {
       |mh_toks AS (
       |  SELECT doc_id, ${P.tokenSetSql("text")} AS toks
       |  FROM documents WHERE lang = 'en'),
-      |mh_ex AS (SELECT doc_id, unnest(toks) AS tok FROM mh_toks),
-      |mh_mh AS (
-      |  SELECT doc_id, seed, min(${P.md5LongSql("concat(seed, ':', tok)")}) AS minh
-      |  FROM mh_ex CROSS JOIN (SELECT unnest(range(16)) AS seed) seeds
-      |  GROUP BY 1, 2),
-      |mh_sigs AS (
-      |  SELECT doc_id, seed // 8 AS band,
-      |    string_agg(concat(seed, ':', minh), ',' ORDER BY concat(seed, ':', minh)) AS sig
-      |  FROM mh_mh GROUP BY 1, 2),
+      |${graft.functions.MinHashBands.sigsSql("mh_toks")},
       |mh_cand AS (
       |  SELECT DISTINCT sa.doc_id AS doc_a, sb.doc_id AS doc_b
-      |  FROM mh_sigs sa JOIN mh_sigs sb
+      |  FROM sigs sa JOIN sigs sb
       |    ON sa.band = sb.band AND sa.sig = sb.sig AND sa.doc_id < sb.doc_id),
       |mh_drop AS (
       |  SELECT DISTINCT doc_b AS doc_id FROM mh_cand
@@ -43,45 +36,10 @@ object CurationOps8 {
       |  JOIN mh_toks tb ON tb.doc_id = doc_b
       |  WHERE len(list_intersect(ta.toks, tb.toks)) /
       |        len(list_distinct(list_concat(ta.toks, tb.toks))) >= 0.8),
-      |sd_st AS (
-      |  SELECT greatest(16, CAST(ceil(sqrt(count(*))) AS BIGINT)) AS step
-      |  FROM embeddings),
-      |sd_seeds AS MATERIALIZED (
-      |  SELECT vec_id AS seed_id, embedding AS svec
-      |  FROM embeddings CROSS JOIN sd_st WHERE vec_id % sd_st.step = 0),
-      |sd_kc AS (
-      |  SELECT greatest(2, CAST(ceil(sqrt(count(*))) AS BIGINT)) AS m
-      |  FROM sd_seeds),
-      |sd_ss AS (
-      |  SELECT seed_id AS ss_id, svec AS ssvec
-      |  FROM sd_seeds CROSS JOIN sd_st CROSS JOIN sd_kc
-      |  WHERE seed_id % (sd_st.step * sd_kc.m) = 0),
-      |sd_seedcell AS MATERIALIZED (
-      |  SELECT scell, seed_id, svec FROM (
-      |    SELECT s.seed_id, s.svec, x.ss_id AS scell,
-      |      row_number() OVER (PARTITION BY s.seed_id
-      |        ORDER BY round(${V.dist2Sql("s.svec", "x.ssvec")}, 6), x.ss_id) AS rn
-      |    FROM sd_seeds s CROSS JOIN sd_ss x)
-      |  WHERE rn = 1),
-      |sd_vecsuper AS MATERIALIZED (
-      |  SELECT vec_id, embedding, scell FROM (
-      |    SELECT e.vec_id, e.embedding, x.ss_id AS scell,
-      |      row_number() OVER (PARTITION BY e.vec_id
-      |        ORDER BY round(${V.dist2Sql("e.embedding", "x.ssvec")}, 6), x.ss_id) AS rn
-      |    FROM embeddings e CROSS JOIN sd_ss x)
-      |  WHERE rn = 1),
-      |sd_assigned AS MATERIALIZED (
-      |  SELECT vec_id, embedding, cell,
-      |    sqrt(${V.dotSql("embedding", "embedding")}) AS nrm
-      |  FROM (
-      |    SELECT v.vec_id, v.embedding, c.seed_id AS cell,
-      |      row_number() OVER (PARTITION BY v.vec_id
-      |        ORDER BY round(${V.dist2Sql("v.embedding", "c.svec")}, 6), c.seed_id) AS rn
-      |    FROM sd_vecsuper v JOIN sd_seedcell c ON v.scell = c.scell)
-      |  WHERE rn = 1),
+      |${graft.pipeline.SemDeDup.twoLevelSql},
       |sd_drop AS (
       |  SELECT DISTINCT b.vec_id AS doc_id
-      |  FROM sd_assigned a JOIN sd_assigned b
+      |  FROM assigned a JOIN assigned b
       |    ON a.cell = b.cell AND a.vec_id < b.vec_id
       |  WHERE round(${V.dotSql("a.embedding", "b.embedding")} / (a.nrm * b.nrm), 6) >= 0.35),
       |ct_docs AS (SELECT * FROM documents WHERE lang = 'en'),
@@ -105,6 +63,47 @@ object CurationOps8 {
       |  JOIN ct_toks tb ON tb.doc_id = doc_b
       |  WHERE len(list_intersect(ta.toks, tb.toks)) /
       |        least(len(ta.toks), len(tb.toks)) >= 0.7)""".stripMargin
+
+  /** The fuzzy text-side verdict channels, in flag-column order. */
+  private val textChannels = Seq("minhash", "semdedup", "containment")
+
+  /** Each text channel's dropped doc ids, as thunks for
+    * [[graft.functions.Overlap.par]]: the channels are the shipped
+    * q41/q181/q234 query functions, not re-implementations.
+    */
+  private def textDrops(s: SparkSession, dir: String): Seq[() => DataFrame] = Seq(
+        () => TextOps.q41.fn(s, dir)
+          .select(col("doc_b").as("doc_id")).distinct(),
+        () => VectorOps.q181.fn(s, dir)
+          .select(col("dropped").as("doc_id")).distinct(),
+        () => CorpusOps4.q234.fn(s, dir)
+          .select(col("doc_b").as("doc_id")).distinct())
+
+  /** The consensus vote over `docs(doc_id, text)`: one 0/1 flag column
+    * per channel — `exact` (a smaller id has the same text) first,
+    * then each fuzzy channel's drops — and the decision: drop on an
+    * exact match, or when at least two fuzzy channels agree. Returns
+    * the doc count per flag combination.
+    */
+  private def consensus(docs: DataFrame, fuzzy: Seq[(String, DataFrame)]): DataFrame = {
+    val exact = docs
+      .withColumn("keep", min("doc_id").over(
+        Window.partitionBy(sha2(col("text"), 256))))
+      .filter(col("doc_id") =!= col("keep"))
+      .select("doc_id")
+    val channels = ("exact" -> exact) +: fuzzy
+    val names = channels.map(_._1)
+    channels
+      .foldLeft(docs.select("doc_id")) { case (acc, (name, drops)) =>
+        acc.join(drops.withColumn(name, lit(1)), Seq("doc_id"), "left") }
+      .select(col("doc_id") +: names.map(n => coalesce(col(n), lit(0)).as(n)): _*)
+      .withColumn("decision",
+        when(col("exact") === 1 || fuzzy.map(f => col(f._1)).reduce(_ + _) >= 2,
+          lit("drop")).otherwise(lit("keep")))
+      .groupBy((names :+ "decision").map(col): _*)
+      .agg(count(lit(1)).as("n_docs"))
+      .orderBy(names.map(col): _*)
+  }
 
   /** Consensus keeper — the dedup decision a release pipeline
     * actually ships. q209 measures how much the dedup methods
@@ -137,42 +136,13 @@ object CurationOps8 {
     "q236_consensus_keeper",
     (s, dir) => {
       val docs = Tables.docs(s, dir).select("doc_id", "text")
-      val exDrop = docs
-        .withColumn("keep", min("doc_id").over(
-          Window.partitionBy(sha2(col("text"), 256))))
-        .filter(col("doc_id") =!= col("keep"))
-        .select("doc_id")
       // the three fuzzy channels are independent and each pins
       // intermediates eagerly inside its fn — constructed inline their
       // pin jobs run serially; overlapping them (guide §2.6) drops the
       // channel-construction wall from Σ to ~max, with frame-identical
       // results (only job submission order changes)
-      val Seq(mhDrop, sdDrop, ctDrop) = graft.functions.Overlap.par(s)(
-        () => TextOps.q41.fn(s, dir)
-          .select(col("doc_b").as("doc_id")).distinct(),
-        () => VectorOps.q181.fn(s, dir)
-          .select(col("dropped").as("doc_id")).distinct(),
-        () => CorpusOps4.q234.fn(s, dir)
-          .select(col("doc_b").as("doc_id")).distinct())
-      def flag(verdict: org.apache.spark.sql.DataFrame, name: String) =
-        verdict.withColumn(name, lit(1))
-      docs.select("doc_id")
-        .join(flag(exDrop, "exact"), Seq("doc_id"), "left")
-        .join(flag(mhDrop, "minhash"), Seq("doc_id"), "left")
-        .join(flag(sdDrop, "semdedup"), Seq("doc_id"), "left")
-        .join(flag(ctDrop, "containment"), Seq("doc_id"), "left")
-        .select(col("doc_id"),
-          coalesce(col("exact"), lit(0)).as("exact"),
-          coalesce(col("minhash"), lit(0)).as("minhash"),
-          coalesce(col("semdedup"), lit(0)).as("semdedup"),
-          coalesce(col("containment"), lit(0)).as("containment"))
-        .withColumn("decision",
-          when(col("exact") === 1 ||
-            col("minhash") + col("semdedup") + col("containment") >= 2,
-            lit("drop")).otherwise(lit("keep")))
-        .groupBy("exact", "minhash", "semdedup", "containment", "decision")
-        .agg(count(lit(1)).as("n_docs"))
-        .orderBy("exact", "minhash", "semdedup", "containment")
+      consensus(docs, textChannels.zip(graft.functions.Overlap.par(s)(
+        textDrops(s, dir): _*)))
     },
     Some(s"""WITH $verdictCtes,
       |flags AS (
@@ -227,56 +197,22 @@ object CurationOps8 {
     "q256_crossmodal_consensus",
     (s, dir) => {
       val docs = Tables.docs(s, dir).select("doc_id", "text")
-      val exDrop = docs
-        .withColumn("keep", min("doc_id").over(
-          Window.partitionBy(sha2(col("text"), 256))))
-        .filter(col("doc_id") =!= col("keep"))
-        .select("doc_id")
       // all four fuzzy channels are independent — overlap their
       // construction (and the pin jobs inside) on driver threads,
       // guide §2.6; results are frame-identical to serial construction
-      val Seq(mhDrop, sdDrop, ctDrop, mdDrop) = graft.functions.Overlap.par(s)(
-        () => TextOps.q41.fn(s, dir)
-          .select(col("doc_b").as("doc_id")).distinct(),
-        () => VectorOps.q181.fn(s, dir)
-          .select(col("dropped").as("doc_id")).distinct(),
-        () => CorpusOps4.q234.fn(s, dir)
-          .select(col("doc_b").as("doc_id")).distinct(),
-        () => {
-          val sigs = graft.multimodal.MediaPipeline
-            .withPayload(Tables.t(s, dir, "documents"))
-            .withColumn("sig", expr("ahash32(payload)"))
-            .select(col("doc_id"), col("kind"), col("sig"),
-              pmod(col("sig"), lit(256)).as("band"))
-          sigs.alias("a").join(sigs.alias("b"),
-              col("a.kind") === col("b.kind") && col("a.band") === col("b.band") &&
-                col("a.doc_id") < col("b.doc_id") &&
-                expr("bit_count(a.sig ^ b.sig) <= 10"))
-            .select(col("b.doc_id").as("doc_id")).distinct()
-        })
-      def flag(verdict: org.apache.spark.sql.DataFrame, name: String) =
-        verdict.withColumn(name, lit(1))
-      docs.select("doc_id")
-        .join(flag(exDrop, "exact"), Seq("doc_id"), "left")
-        .join(flag(mhDrop, "minhash"), Seq("doc_id"), "left")
-        .join(flag(sdDrop, "semdedup"), Seq("doc_id"), "left")
-        .join(flag(ctDrop, "containment"), Seq("doc_id"), "left")
-        .join(flag(mdDrop, "media"), Seq("doc_id"), "left")
-        .select(col("doc_id"),
-          coalesce(col("exact"), lit(0)).as("exact"),
-          coalesce(col("minhash"), lit(0)).as("minhash"),
-          coalesce(col("semdedup"), lit(0)).as("semdedup"),
-          coalesce(col("containment"), lit(0)).as("containment"),
-          coalesce(col("media"), lit(0)).as("media"))
-        .withColumn("decision",
-          when(col("exact") === 1 ||
-            col("minhash") + col("semdedup") + col("containment") +
-              col("media") >= 2,
-            lit("drop")).otherwise(lit("keep")))
-        .groupBy("exact", "minhash", "semdedup", "containment", "media",
-          "decision")
-        .agg(count(lit(1)).as("n_docs"))
-        .orderBy("exact", "minhash", "semdedup", "containment", "media")
+      val drops = graft.functions.Overlap.par(s)(textDrops(s, dir) :+ { () =>
+        val sigs = graft.multimodal.MediaPipeline
+          .withPayload(Tables.t(s, dir, "documents"))
+          .withColumn("sig", expr("ahash32(payload)"))
+          .select(col("doc_id"), col("kind"), col("sig"),
+            pmod(col("sig"), lit(256)).as("band"))
+        sigs.alias("a").join(sigs.alias("b"),
+            col("a.kind") === col("b.kind") && col("a.band") === col("b.band") &&
+              col("a.doc_id") < col("b.doc_id") &&
+              expr("bit_count(a.sig ^ b.sig) <= 10"))
+          .select(col("b.doc_id").as("doc_id")).distinct()
+      }: _*)
+      consensus(docs, (textChannels :+ "media").zip(drops))
     },
     Some(s"""WITH $verdictCtes,
       |md_p AS (

@@ -80,16 +80,7 @@ object CurationOps9 {
       |  FROM (SELECT doc_id, text,
       |          ${P.md5LongSql("concat('split:', CAST(doc_id AS VARCHAR))")} % 10 AS b
       |        FROM documents WHERE lang = 'en')),
-      |ex AS (SELECT doc_id, stage, unnest(toks) AS tok FROM base),
-      |mh AS (
-      |  SELECT doc_id, stage, seed,
-      |    min(${P.md5LongSql("concat(seed, ':', tok)")}) AS minh
-      |  FROM ex CROSS JOIN (SELECT unnest(range(16)) AS seed) seeds
-      |  GROUP BY 1, 2, 3),
-      |sigs AS (
-      |  SELECT doc_id, stage, seed // 8 AS band,
-      |    string_agg(concat(seed, ':', minh), ',' ORDER BY concat(seed, ':', minh)) AS sig
-      |  FROM mh GROUP BY 1, 2, 3),
+      |${graft.functions.MinHashBands.sigsSql("base", "doc_id, stage")},
       |cand AS (
       |  SELECT DISTINCT sa.doc_id AS doc_a, sb.doc_id AS doc_b,
       |    sa.stage AS st_a, sb.stage AS st_b

@@ -37,20 +37,14 @@ object GraphOps {
       // pinned before the symmetric union (both branches otherwise
       // re-run the join+distinct); endpoint counts for the broadcast
       // gate ride the pin action as observed metrics
-      val obs = org.apache.spark.sql.Observation()
-      val e = Pins.pin(Tables.t(s, dir, "orders")
+      val (e, nc, ns) = graft.graph.Bcast.pinCounted(Tables.t(s, dir, "orders")
         .join(Tables.t(s, dir, "lineitem"),
           col("o_orderkey") === col("l_orderkey"))
         .select(
           (col("o_custkey").cast("long") * 2).as("src"),
           (col("l_suppkey").cast("long") * 2 + 1).as("dst"))
-        .distinct()
-        .observe(obs,
-          approx_count_distinct(col("src")).as("nc"),
-          approx_count_distinct(col("dst")).as("ns")))
-      val m = obs.getAsJava
-      val small = m.get("nc").asInstanceOf[Long] +
-        m.get("ns").asInstanceOf[Long] <= graft.graph.Bcast.maxNodes
+        .distinct(), col("src"), col("dst"))
+      val small = nc + ns <= graft.graph.Bcast.maxNodes
       import org.apache.spark.sql.GraftSqlBridge.{freshInstance, plainInstance}
       // The pinned frame carries ONLY (src, dst): the out-degree no
       // longer rides the edge table (r6 #3 pre-joined it to save a

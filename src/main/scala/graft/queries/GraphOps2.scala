@@ -92,18 +92,13 @@ object GraphOps2 {
       // id outside [0, 2^32) rather than silently merging edges.
       // node counts for the broadcast gate ride the pin action as
       // observed metrics (approx — a perf gate, never semantics)
-      val obs = org.apache.spark.sql.Observation()
-      val packed = Pins.pin(Tables.t(s, dir, "lineitem")
+      val (packed, nu, np) = graft.graph.Bcast.pinCounted(Tables.t(s, dir, "lineitem")
         .join(Tables.t(s, dir, "orders"),
           col("l_orderkey") === col("o_orderkey"))
         .select(graft.graph.PackedEdge.pack(col("o_custkey"), col("l_partkey")).as("e"))
-        .distinct()
-        .observe(obs,
-          approx_count_distinct(graft.graph.PackedEdge.x(col("e"))).as("nu"),
-          approx_count_distinct(col("e").bitwiseAND(lit(0xFFFFFFFFL))).as("np")))
-      val m = obs.getAsJava
-      val small = math.max(m.get("nu").asInstanceOf[Long],
-        m.get("np").asInstanceOf[Long]) <= graft.graph.Bcast.maxNodes
+        .distinct(),
+        graft.graph.PackedEdge.x(col("e")), col("e").bitwiseAND(lit(0xFFFFFFFFL)))
+      val small = math.max(nu, np) <= graft.graph.Bcast.maxNodes
       val e = packed.select(graft.graph.PackedEdge.x(col("e")).as("u"),
         col("e").bitwiseAND(lit(0xFFFFFFFFL)).as("p"))
       hits(e, 3, bcastScores = small)
@@ -183,8 +178,7 @@ object GraphOps2 {
       val packedX = graft.graph.PackedEdge.x(col("e"))
       val packedY = col("e").bitwiseAND(lit(0xFFFFFFFFL))
       var pe = graft.graph.Rotate.supersede(
-        itemsP.alias("a")
-          .join(itemsP.alias("b"), col("a.o") === col("b.o") && col("a.p") < col("b.p"))
+        graft.graph.Baskets.pairs(itemsP)
           .select(graft.graph.PackedEdge.pack(col("a.p"), col("b.p")).as("e")).distinct(),
         itemsP)
       def degrees(p: DataFrame): DataFrame = p
@@ -286,20 +280,7 @@ object GraphOps2 {
     import graft.functions.{Portable => P}
     s"""toks AS (
     |  SELECT doc_id, ${P.tokenSetSql("text")} AS toks FROM documents),
-    |ex AS (SELECT doc_id, unnest(toks) AS tok FROM toks),
-    |mh AS (
-    |  SELECT doc_id, seed, min(${P.md5LongSql("concat(seed, ':', tok)")}) AS minh
-    |  FROM ex CROSS JOIN (SELECT unnest(range(16)) AS seed) seeds
-    |  GROUP BY 1, 2),
-    |db AS (
-    |  SELECT doc_id,
-    |    min(CASE WHEN band = 0 THEN bucket END) AS b0,
-    |    min(CASE WHEN band = 1 THEN bucket END) AS b1
-    |  FROM (
-    |    SELECT doc_id, seed // 8 AS band,
-    |      ${P.md5LongSql("concat(seed // 8, '|', string_agg(concat(seed, ':', minh), ',' ORDER BY concat(seed, ':', minh)))")} AS bucket
-    |    FROM mh GROUP BY doc_id, seed // 8)
-    |  GROUP BY doc_id)""".stripMargin
+    |${graft.functions.MinHashBands.bucketsSql("toks")}""".stripMargin
   }
 
   /** Shared engine prefix: per-doc band nodes (b0, b1) for the

@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.graph.Baskets
 import graft.{Pins, Q, Tables}
 import org.apache.spark.sql.functions._
 
@@ -42,14 +43,10 @@ object GraphOps3 {
       // scanned THREE times below (m, deg, L_c) — narrower blocks cut
       // both the GC scan and the three reads; unpacking is two
       // codegen'd bit ops (part keys are dense 32-bit at every SF).
-      // repartition by o BEFORE the distinct (q160's r13 shape): one
-      // exchange serves the distinct and the pair self-join
-      val items = Pins.pin(Tables.t(s, dir, "lineitem")
-        .select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
-        .repartition(s.sparkContext.defaultParallelism, col("o")).distinct())
+      // one exchange serves the distinct and the pair self-join
+      val items = Pins.pin(Baskets.items(s, dir))
       val pairs = graft.graph.Rotate.supersede(
-        items.alias("a")
-          .join(items.alias("b"), col("a.o") === col("b.o") && col("a.p") < col("b.p"))
+        Baskets.pairs(items)
           .select(graft.graph.PackedEdge.pack(col("a.p"), col("b.p")).as("e")).distinct(),
         items) // consumed 3× below (m, deg, L_c)
       val px = graft.graph.PackedEdge.x(col("e"))
@@ -120,13 +117,10 @@ object GraphOps3 {
     (s, dir) => {
       // pin items (read 3×: basket sizes + both self-join sides via
       // `weighted`), rotate the pin onto the weighted frame the
-      // self-join actually scans. repartition by o BEFORE the
-      // distinct (q160's r13 shape): the o-partitioning rides the pin
-      // through the bsz groupBy, the items⋈bsz join AND the weighted
-      // self-join — one exchange where the naive plan pays three
-      val items = Pins.pin(Tables.t(s, dir, "lineitem")
-        .select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
-        .repartition(s.sparkContext.defaultParallelism, col("o")).distinct())
+      // self-join actually scans. The items' o-partitioning rides the
+      // pin through the bsz groupBy, the items⋈bsz join AND the
+      // weighted self-join — one exchange where the naive plan pays three
+      val items = Pins.pin(Baskets.items(s, dir))
       val weighted = graft.graph.Rotate.supersede(
         items
           .join(items.groupBy("o").agg(count(lit(1)).as("bsz"))
@@ -134,9 +128,7 @@ object GraphOps3 {
           .withColumn("ws",
             round(lit(1e12) / log(col("bsz")), 0).cast("decimal(38,0)")),
         items)
-      weighted.alias("a")
-        .join(weighted.alias("b"),
-          col("a.o") === col("b.o") && col("a.p") < col("b.p"))
+      Baskets.pairs(weighted)
         .groupBy(col("a.p").as("x"), col("b.p").as("y"))
         .agg(count(lit(1)).as("common_orders"), sum(col("a.ws")).as("aa"))
         .select(col("x"), col("y"), col("common_orders"), col("aa"),

@@ -46,22 +46,16 @@ object GraphOps4 {
   val q286 = Q(
     "q286_personalized_pagerank",
     (s, dir) => {
-      // endpoint counts for the broadcast gate ride the pin action
-      val obs = org.apache.spark.sql.Observation()
+      // endpoint counts for the broadcast gate ride the pin action;
       // scanned 2× per round (contrib join sides)
-      val packed = Pins.pin(Tables.t(s, dir, "lineitem")
+      val (packed, nc, np) = graft.graph.Bcast.pinCounted(Tables.t(s, dir, "lineitem")
         .join(Tables.t(s, dir, "orders"),
           col("l_orderkey") === col("o_orderkey"))
         .select(PackedEdge.pack(
           col("o_custkey").cast("long") * 2,
           col("l_partkey").cast("long") * 2 + 1).as("e"))
-        .distinct()
-        .observe(obs,
-          approx_count_distinct(PackedEdge.x(col("e"))).as("nc"),
-          approx_count_distinct(PackedEdge.y(col("e"))).as("np")))
-      val mGate = obs.getAsJava
-      val small = mGate.get("nc").asInstanceOf[Long] +
-        mGate.get("np").asInstanceOf[Long] <= graft.graph.Bcast.maxNodes
+        .distinct(), PackedEdge.x(col("e")), PackedEdge.y(col("e")))
+      val small = nc + np <= graft.graph.Bcast.maxNodes
       def sym = packed
         .select(PackedEdge.x(col("e")).as("src"), PackedEdge.y(col("e")).as("dst"))
         .unionAll(packed

@@ -2,7 +2,6 @@ package graft.queries
 
 import graft.{Pins, Q, Tables}
 import graft.functions.{Portable => P, VectorFunctions => V}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Round-7 retrieval wave: index-backed hybrid fusion (VERDICT r6
@@ -59,7 +58,6 @@ object SearchOps2 {
         col("embedding").as("qe"), col("nrm").as("qn"),
         col("bucket").as("qb"))
       val corpus = d.filter(col("doc_id") >= 5)
-      val w = Window.partitionBy("query_id")
       // vector candidates off the LSH bucket index, multi-probe: the
       // query side expands to its 9 probe buckets (all distinct, so
       // no pair dedup needed) and the corpus joins on bucket EQUALITY
@@ -67,14 +65,8 @@ object SearchOps2 {
         explode(array(
           (col("qb") +: (0 to 7).map(b =>
             col("qb").bitwiseXOR(lit(1L << b)))): _*)).as("pb"))
-      val vec = corpus.join(broadcast(probes),
-          col("bucket") === col("pb"))
-        .withColumn("cos",
-          round(V.dot("embedding", "qe") / (col("nrm") * col("qn")), 6))
-        .withColumn("r", row_number().over(
-          w.orderBy(col("cos").desc, col("doc_id"))))
-        .filter(col("r") <= 100)
-        .select(col("query_id"), col("doc_id"), col("r").as("r_vec"))
+      val vec = CorpusOps4.vecRanks(corpus.join(broadcast(probes),
+          col("bucket") === col("pb")))
       // lexical candidates off the rare-shingle posting lists
       val sh = Tables.docs(s, dir).filter(length(col("text")) >= 8)
         .select(col("doc_id"),
@@ -86,44 +78,14 @@ object SearchOps2 {
         .join(anchored.filter(col("doc_id") < 5)
           .select(col("doc_id").as("query_id"), col("h")), "h")
         .select(col("query_id"), col("doc_id")).distinct()
-      val lex = lexCand
+      val lex = CorpusOps4.lexRanks(lexCand
         .join(corpus.select(col("doc_id"), col("th")), "doc_id")
-        .join(broadcast(qs.select(col("query_id"), col("qth"))), "query_id")
-        .withColumn("c", expr("sorted_intersect_count(th, qth)"))
-        .withColumn("jac",
-          round(col("c") / (size(col("th")) + size(col("qth")) - col("c")), 6))
-        .withColumn("r", row_number().over(
-          w.orderBy(col("jac").desc, col("doc_id"))))
-        .filter(col("r") <= 100)
-        .select(col("query_id"), col("doc_id"), col("r").as("r_lex"))
-      def fuse(l: org.apache.spark.sql.DataFrame,
-               v: org.apache.spark.sql.DataFrame) =
-        l.join(v, Seq("query_id", "doc_id"), "full_outer")
-          .withColumn("rrf", round(
-            coalesce(lit(1.0) / (lit(60) + col("r_lex")), lit(0.0)) +
-              coalesce(lit(1.0) / (lit(60) + col("r_vec")), lit(0.0)), 6))
-          .withColumn("rank", row_number().over(
-            w.orderBy(col("rrf").desc, col("doc_id"))))
-          .filter(col("rank") <= 5)
-      val fused = fuse(lex, vec)
+        .join(broadcast(qs.select(col("query_id"), col("qth"))), "query_id"))
+      val fused = CorpusOps4.rrfTop5(lex, vec)
       // brute-force audit: q232's corpus-wide lists, fused, cut to 5
       val pairs = corpus.crossJoin(broadcast(qs))
-      val lexB = pairs
-        .withColumn("c", expr("sorted_intersect_count(th, qth)"))
-        .withColumn("jac",
-          round(col("c") / (size(col("th")) + size(col("qth")) - col("c")), 6))
-        .withColumn("r", row_number().over(
-          w.orderBy(col("jac").desc, col("doc_id"))))
-        .filter(col("r") <= 100)
-        .select(col("query_id"), col("doc_id"), col("r").as("r_lex"))
-      val vecB = pairs
-        .withColumn("cos",
-          round(V.dot("embedding", "qe") / (col("nrm") * col("qn")), 6))
-        .withColumn("r", row_number().over(
-          w.orderBy(col("cos").desc, col("doc_id"))))
-        .filter(col("r") <= 100)
-        .select(col("query_id"), col("doc_id"), col("r").as("r_vec"))
-      val bruteTop = fuse(lexB, vecB).select("query_id", "doc_id")
+      val bruteTop = CorpusOps4.rrfTop5(CorpusOps4.lexRanks(pairs),
+        CorpusOps4.vecRanks(pairs)).select("query_id", "doc_id")
       val recall = fused.select("query_id", "doc_id")
         .join(bruteTop, Seq("query_id", "doc_id"), "left_semi")
         .groupBy("query_id")
@@ -179,40 +141,14 @@ object SearchOps2 {
       |    JOIN qs q ON lc.query_id = q.query_id) WHERE r <= 100),
       |fused AS (
       |  SELECT query_id, doc_id, r_lex, r_vec, rrf, CAST(rank AS INTEGER) AS rank
-      |  FROM (
-      |    SELECT query_id, doc_id, r_lex, r_vec,
-      |      round(coalesce(1.0 / (60 + r_lex), 0) +
-      |            coalesce(1.0 / (60 + r_vec), 0), 6) AS rrf,
-      |      row_number() OVER (PARTITION BY query_id ORDER BY
-      |        round(coalesce(1.0 / (60 + r_lex), 0) +
-      |              coalesce(1.0 / (60 + r_vec), 0), 6) DESC, doc_id) AS rank
-      |    FROM lex FULL OUTER JOIN vec USING (query_id, doc_id))
+      |  FROM (${CorpusOps4.rrfSql("lex", "vec")})
       |  WHERE rank <= 5),
       |pairs AS MATERIALIZED (
       |  SELECT c.doc_id, c.th, c.embedding, c.nrm, q.*
       |  FROM corpus c CROSS JOIN qs q),
-      |lexb AS (
-      |  SELECT query_id, doc_id, CAST(r AS INTEGER) AS r_lex FROM (
-      |    SELECT query_id, doc_id, row_number() OVER (
-      |      PARTITION BY query_id ORDER BY
-      |        round(len(list_intersect(th, qth)) /
-      |          (len(th) + len(qth) - len(list_intersect(th, qth))), 6) DESC,
-      |        doc_id) AS r
-      |    FROM pairs) WHERE r <= 100),
-      |vecb AS (
-      |  SELECT query_id, doc_id, CAST(r AS INTEGER) AS r_vec FROM (
-      |    SELECT query_id, doc_id, row_number() OVER (
-      |      PARTITION BY query_id ORDER BY
-      |        round(${V.dotSql("embedding", "qe")} / (nrm * qn), 6) DESC,
-      |        doc_id) AS r
-      |    FROM pairs) WHERE r <= 100),
+      |${CorpusOps4.ranksSql("lexb", "vecb")},
       |fusedb AS (
-      |  SELECT query_id, doc_id FROM (
-      |    SELECT query_id, doc_id,
-      |      row_number() OVER (PARTITION BY query_id ORDER BY
-      |        round(coalesce(1.0 / (60 + r_lex), 0) +
-      |              coalesce(1.0 / (60 + r_vec), 0), 6) DESC, doc_id) AS rank
-      |    FROM lexb FULL OUTER JOIN vecb USING (query_id, doc_id))
+      |  SELECT query_id, doc_id FROM (${CorpusOps4.rrfSql("lexb", "vecb")})
       |  WHERE rank <= 5),
       |rec AS (
       |  SELECT f.query_id, CAST(count(b.doc_id) AS DOUBLE) / 5.0 AS recall5

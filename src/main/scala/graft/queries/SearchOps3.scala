@@ -57,6 +57,187 @@ object SearchOps3 {
       .groupBy("query_id", "doc_id")
       .agg(sum(col("m6")).as("maxsim_e6"))
 
+  /** Token rows of the 8 probe vectors (vec_id < 8) of `vecs`. */
+  private def maxsimProbeToks(vecs: DataFrame): DataFrame =
+    maxsimToks(vecs.filter(col("vec_id") < 8), "query_id", "qt", "qsv", "qn")
+
+  /** Exact MaxSim of every (probe, doc ≠ probe) pair: the probe tokens
+    * broadcast against the corpus tokens.
+    */
+  private def maxsimExact(corpusToks: DataFrame, probeToks: DataFrame): DataFrame =
+    maxsimScore(corpusToks.crossJoin(broadcast(probeToks))
+      .filter(col("doc_id") =!= col("query_id")))
+
+  /** Each probe's 5 best docs, `rank` 1..5 by maxsim desc then doc. */
+  private def maxsimTop5(scored: DataFrame): DataFrame =
+    scored.withColumn("rank", row_number().over(Window.partitionBy("query_id")
+        .orderBy(col("maxsim_e6").desc, col("doc_id"))))
+      .filter(col("rank") <= 5)
+
+  /** DuckDB twins: CTEs `pt` (probe tokens) and `ct` (corpus tokens). */
+  private def maxsimToksCtesSql: String =
+    s"""pt AS (
+       |  SELECT vec_id AS query_id, t AS qt, sv AS qsv,
+       |    ${V.normSql("sv")} AS qn
+       |  FROM (${maxsimToksSql("SELECT vec_id, embedding FROM embeddings WHERE vec_id < 8")})),
+       |ct AS (
+       |  SELECT vec_id AS doc_id, t AS dt, sv AS dsv,
+       |    ${V.normSql("sv")} AS dn
+       |  FROM (${maxsimToksSql("SELECT vec_id, embedding FROM embeddings")}))""".stripMargin
+
+  /** [[maxsimExact]] as CTE `name(query_id, doc_id, maxsim_e6)`. */
+  private def maxsimExactSql(name: String): String =
+    s"""$name AS MATERIALIZED (
+       |  SELECT query_id, doc_id,
+       |    CAST(sum(m6) AS BIGINT) AS maxsim_e6
+       |  FROM (
+       |    SELECT query_id, doc_id, qt,
+       |      max(CAST(round(round(${V.dotSql("qsv", "dsv")} / (qn * dn), 6)
+       |        * 1000000, 0) AS BIGINT)) AS m6
+       |    FROM ct CROSS JOIN pt
+       |    WHERE doc_id <> query_id
+       |    GROUP BY 1, 2, 3)
+       |  GROUP BY 1, 2)""".stripMargin
+
+  /** kNN-graph building blocks shared by q244 and q254, over the
+    * pinned `vecs(vec_id, embedding, nrm)`.
+    */
+  private def knnScore(vecs: DataFrame, pairs: DataFrame): DataFrame =
+    pairs
+      .join(vecs.select(col("vec_id").as("node"), col("embedding").as("ea"),
+        col("nrm").as("na")), "node")
+      .join(vecs.select(col("vec_id").as("nbr"), col("embedding").as("eb"),
+        col("nrm").as("nb")), "nbr")
+      .withColumn("cos", round(V.dot("ea", "eb") / (col("na") * col("nb")), 6))
+      .select("node", "nbr", "cos")
+
+  /** Each node's best 5 (node, nbr, cos) rows, cos desc then nbr. */
+  private def knnTop5(scored: DataFrame): DataFrame =
+    scored.withColumn("r", row_number().over(
+        Window.partitionBy("node").orderBy(col("cos").desc, col("nbr"))))
+      .filter(col("r") <= 5).select("node", "nbr", "cos")
+
+  /** Seed pairs (node < nbr) inside blocks of 64 nodes ranked by the
+    * portable hash of "<salt>:<vec_id>".
+    */
+  private def knnBlockPairs(vecs: DataFrame, salt: String): DataFrame = {
+    val b = Dist.globalRank(
+        vecs.select(col("vec_id"),
+          P.md5Long(concat(lit(salt + ":"), col("vec_id").cast("string")))
+            .as("hk")),
+        Seq(col("hk"), col("vec_id")), "rnk", 32)
+      .select(col("vec_id"), expr("(rnk - 1) div 64").as("blk"))
+    b.alias("a").join(b.alias("b"),
+        col("a.blk") === col("b.blk") && col("a.vec_id") < col("b.vec_id"))
+      .select(col("a.vec_id").as("node"), col("b.vec_id").as("nbr"))
+  }
+
+  /** The seed graph: each node's top 5 over both directions of the
+    * once-scored half pairs.
+    */
+  private def knnSeed(halfScored: DataFrame): DataFrame =
+    knnTop5(halfScored.unionByName(
+      halfScored.select(col("nbr").as("node"), col("node").as("nbr"),
+        col("cos"))))
+
+  /** NN-descent candidates: distinct 2-hop (node, nbr) of the
+    * undirected graph, self-pairs dropped.
+    */
+  private def knnTwoHop(graph: DataFrame): DataFrame = {
+    val undirected = graph.select("node", "nbr")
+      .unionByName(graph.select(col("nbr").as("node"), col("node").as("nbr")))
+      .distinct()
+    undirected.alias("x").join(undirected.alias("y"),
+        col("x.nbr") === col("y.node"))
+      .select(col("x.node").as("node"), col("y.nbr").as("nbr"))
+      .filter(col("node") =!= col("nbr"))
+      .distinct()
+  }
+
+  /** The 40 fixed probe nodes `(node, ea, na)` and their brute-force
+    * top-5 `(node, nbr)`.
+    */
+  private def knnProbes(vecs: DataFrame): (DataFrame, DataFrame) = {
+    val probes = vecs.filter(col("vec_id") < 40)
+      .select(col("vec_id").as("node"), col("embedding").as("ea"),
+        col("nrm").as("na"))
+    val gt = knnTop5(probes.crossJoin(
+        vecs.select(col("vec_id").as("nbr"), col("embedding").as("eb"),
+          col("nrm").as("nb")))
+      .filter(col("node") =!= col("nbr"))
+      .withColumn("cos", round(V.dot("ea", "eb") / (col("na") * col("nb")), 6)))
+      .select("node", "nbr")
+    (probes, gt)
+  }
+
+  /** One row (h, np, n_edges): the graph's probe hits against `gt`,
+    * the probe count and the graph's edge count.
+    */
+  private def knnProbeHits(graph: DataFrame, probes: DataFrame,
+      gt: DataFrame): DataFrame = {
+    val hits = graph.select("node", "nbr")
+      .join(broadcast(probes.select("node")), Seq("node"), "left_semi")
+      .join(gt, Seq("node", "nbr"), "left_semi")
+      .groupBy("node").agg(count(lit(1)).as("hits"))
+    probes.select("node").join(hits, Seq("node"), "left")
+      .agg(sum(coalesce(col("hits"), lit(0L))).as("h"),
+        count(lit(1)).as("np"))
+      .crossJoin(graph.agg(count(lit(1)).as("n_edges")))
+  }
+
+  private val meanRecall5 =
+    round(col("h").cast("double") / (lit(5) * col("np")), 4).as("mean_recall5")
+
+  /** DuckDB twins of the kNN building blocks. CTE `vecs(vec_id,
+    * embedding, nrm)`.
+    */
+  private def knnVecsSql: String =
+    s"""vecs AS (
+       |  SELECT vec_id, embedding, ${V.normSql("embedding")} AS nrm
+       |  FROM embeddings)""".stripMargin
+
+  /** [[knnBlockPairs]]: CTEs `blocks_<salt>` and `half_<salt>(node, nbr)`. */
+  private def knnBlockPairsSql(salt: String): String =
+    s"""blocks_$salt AS (
+       |  SELECT vec_id, (row_number() OVER (ORDER BY
+       |      ${P.md5LongSql(s"concat('$salt:', vec_id)")}, vec_id) - 1) // 64
+       |    AS blk
+       |  FROM vecs),
+       |half_$salt AS (
+       |  SELECT a.vec_id AS node, b.vec_id AS nbr
+       |  FROM blocks_$salt a JOIN blocks_$salt b
+       |    ON a.blk = b.blk AND a.vec_id < b.vec_id)""".stripMargin
+
+  /** [[knnSeed]] over `half(node, nbr)`: CTEs `halfscored` and `seed`. */
+  private def knnSeedSql(half: String, seed: String): String =
+    s"""halfscored AS MATERIALIZED (
+       |  SELECT node, nbr,
+       |    round(${V.dotSql("va.embedding", "vb.embedding")} /
+       |      (va.nrm * vb.nrm), 6) AS cos
+       |  FROM $half JOIN vecs va ON va.vec_id = node
+       |  JOIN vecs vb ON vb.vec_id = nbr),
+       |$seed AS MATERIALIZED (
+       |  SELECT node, nbr, cos FROM (
+       |    SELECT node, nbr, cos, row_number() OVER (
+       |      PARTITION BY node ORDER BY cos DESC, nbr) AS r
+       |    FROM (SELECT node, nbr, cos FROM halfscored
+       |          UNION ALL
+       |          SELECT nbr, node, cos FROM halfscored))
+       |  WHERE r <= 5)""".stripMargin
+
+  /** [[knnProbes]]: CTEs `probes(node)` and `gt(node, nbr)`. */
+  private def knnProbesSql: String =
+    s"""probes AS (SELECT vec_id AS node FROM vecs WHERE vec_id < 40),
+       |gt AS MATERIALIZED (
+       |  SELECT node, nbr FROM (
+       |    SELECT p.node, v.vec_id AS nbr, row_number() OVER (
+       |      PARTITION BY p.node ORDER BY
+       |        round(${V.dotSql("pv.embedding", "v.embedding")} /
+       |          (pv.nrm * v.nrm), 6) DESC, v.vec_id) AS r
+       |    FROM probes p JOIN vecs pv ON pv.vec_id = p.node
+       |    CROSS JOIN vecs v WHERE v.vec_id <> p.node)
+       |  WHERE r <= 5)""".stripMargin
+
   /** One NN-descent refinement round over a random-block kNN seed
     * graph (Dong et al., WWW'11 — the construction step behind
     * graph ANN indexes like HNSW/NSG, here in its
@@ -82,97 +263,21 @@ object SearchOps3 {
       // seeds blocks, scoring, and ground truth
       val vecs = Pins.pin(Tables.emb(s, dir)
         .select(col("vec_id"), col("embedding"), V.norm("embedding").as("nrm")))
-      val ranked = Dist.globalRank(
-        vecs.select(col("vec_id"),
-          P.md5Long(concat(lit("nnd:"), col("vec_id").cast("string")))
-            .as("hk")),
-        Seq(col("hk"), col("vec_id")), "rnk", 32)
-      val blocks = ranked.select(col("vec_id"),
-        expr("(rnk - 1) div 64").as("blk"))
-      def score(pairs: DataFrame): DataFrame =
-        pairs
-          .join(vecs.select(col("vec_id").as("node"), col("embedding").as("ea"),
-            col("nrm").as("na")), "node")
-          .join(vecs.select(col("vec_id").as("nbr"), col("embedding").as("eb"),
-            col("nrm").as("nb")), "nbr")
-          .withColumn("cos", round(V.dot("ea", "eb") / (col("na") * col("nb")), 6))
-          .select("node", "nbr", "cos")
-      def topk(scored: DataFrame): DataFrame =
-        scored.withColumn("r", row_number().over(
-            Window.partitionBy("node").orderBy(col("cos").desc, col("nbr"))))
-          .filter(col("r") <= 5).select("node", "nbr", "cos")
-      val half = blocks.alias("a").join(blocks.alias("b"),
-          col("a.blk") === col("b.blk") && col("a.vec_id") < col("b.vec_id"))
-        .select(col("a.vec_id").as("node"), col("b.vec_id").as("nbr"))
       // score each a<b pair once, then mirror — never score twice
-      val halfScored = Pins.pin(score(half))
-      val init = Pins.pin(topk(halfScored.unionByName(
-        halfScored.select(col("nbr").as("node"), col("node").as("nbr"),
-          col("cos")))))
-      val undirected = init.select("node", "nbr")
-        .unionByName(init.select(col("nbr").as("node"), col("node").as("nbr")))
-        .distinct()
-      val twoHop = undirected.alias("x").join(undirected.alias("y"),
-          col("x.nbr") === col("y.node"))
-        .select(col("x.node").as("node"), col("y.nbr").as("nbr"))
-        .filter(col("node") =!= col("nbr"))
-        .distinct()
-      val refined = topk(score(twoHop)
+      val halfScored = Pins.pin(knnScore(vecs, knnBlockPairs(vecs, "nnd")))
+      val init = Pins.pin(knnSeed(halfScored))
+      val refined = knnTop5(knnScore(vecs, knnTwoHop(init))
         .unionByName(init.select("node", "nbr", "cos")).distinct())
-      val probes = vecs.filter(col("vec_id") < 40)
-        .select(col("vec_id").as("node"), col("embedding").as("ea"),
-          col("nrm").as("na"))
-      val gt = probes.crossJoin(
-          vecs.select(col("vec_id").as("nbr"), col("embedding").as("eb"),
-            col("nrm").as("nb")))
-        .filter(col("node") =!= col("nbr"))
-        .withColumn("cos", round(V.dot("ea", "eb") / (col("na") * col("nb")), 6))
-        .withColumn("r", row_number().over(
-          Window.partitionBy("node").orderBy(col("cos").desc, col("nbr"))))
-        .filter(col("r") <= 5).select("node", "nbr")
-      def recall(graph: DataFrame, phase: String): DataFrame = {
-        val hits = graph.select("node", "nbr")
-          .join(broadcast(probes.select("node")), Seq("node"), "left_semi")
-          .join(gt, Seq("node", "nbr"), "left_semi")
-          .groupBy("node").agg(count(lit(1)).as("hits"))
-        val nEdges = graph.agg(count(lit(1)).as("n_edges"))
-        probes.select("node").join(hits, Seq("node"), "left")
-          .agg(sum(coalesce(col("hits"), lit(0L))).as("h"),
-            count(lit(1)).as("np"))
-          .crossJoin(nEdges)
-          .select(lit(phase).as("phase"), col("n_edges"),
-            round(col("h").cast("double") / (lit(5) * col("np")), 4)
-              .as("mean_recall5"))
-      }
+      val (probes, gt) = knnProbes(vecs)
+      def recall(graph: DataFrame, phase: String): DataFrame =
+        knnProbeHits(graph, probes, gt)
+          .select(lit(phase).as("phase"), col("n_edges"), meanRecall5)
       recall(init, "a_seed").unionByName(recall(refined, "b_refined"))
         .orderBy("phase")
     },
-    Some(s"""WITH vecs AS (
-      |  SELECT vec_id, embedding, ${V.normSql("embedding")} AS nrm
-      |  FROM embeddings),
-      |blocks AS (
-      |  SELECT vec_id, (row_number() OVER (ORDER BY
-      |      ${P.md5LongSql("concat('nnd:', vec_id)")}, vec_id) - 1) // 64
-      |    AS blk
-      |  FROM vecs),
-      |half AS (
-      |  SELECT a.vec_id AS node, b.vec_id AS nbr
-      |  FROM blocks a JOIN blocks b
-      |    ON a.blk = b.blk AND a.vec_id < b.vec_id),
-      |halfscored AS MATERIALIZED (
-      |  SELECT node, nbr,
-      |    round(${V.dotSql("va.embedding", "vb.embedding")} /
-      |      (va.nrm * vb.nrm), 6) AS cos
-      |  FROM half JOIN vecs va ON va.vec_id = node
-      |  JOIN vecs vb ON vb.vec_id = nbr),
-      |init AS MATERIALIZED (
-      |  SELECT node, nbr, cos FROM (
-      |    SELECT node, nbr, cos, row_number() OVER (
-      |      PARTITION BY node ORDER BY cos DESC, nbr) AS r
-      |    FROM (SELECT node, nbr, cos FROM halfscored
-      |          UNION ALL
-      |          SELECT nbr, node, cos FROM halfscored))
-      |  WHERE r <= 5),
+    Some(s"""WITH $knnVecsSql,
+      |${knnBlockPairsSql("nnd")},
+      |${knnSeedSql("half_nnd", "init")},
       |undirected AS (
       |  SELECT DISTINCT node, nbr FROM (
       |    SELECT node, nbr FROM init UNION ALL SELECT nbr, node FROM init)),
@@ -194,16 +299,7 @@ object SearchOps3 {
       |        UNION ALL
       |        SELECT node, nbr, cos FROM init)))
       |  WHERE r <= 5),
-      |probes AS (SELECT vec_id AS node FROM vecs WHERE vec_id < 40),
-      |gt AS MATERIALIZED (
-      |  SELECT node, nbr FROM (
-      |    SELECT p.node, v.vec_id AS nbr, row_number() OVER (
-      |      PARTITION BY p.node ORDER BY
-      |        round(${V.dotSql("pv.embedding", "v.embedding")} /
-      |          (pv.nrm * v.nrm), 6) DESC, v.vec_id) AS r
-      |    FROM probes p JOIN vecs pv ON pv.vec_id = p.node
-      |    CROSS JOIN vecs v WHERE v.vec_id <> p.node)
-      |  WHERE r <= 5),
+      |$knnProbesSql,
       |phases AS (
       |  SELECT 'a_seed' AS phase, (SELECT count(*) FROM init) AS n_edges,
       |    (SELECT count(*) FROM init g JOIN gt USING (node, nbr)) AS h
@@ -364,46 +460,12 @@ object SearchOps3 {
       // seeds blocks, scoring, and ground truth
       val vecs = Pins.pin(Tables.emb(s, dir)
         .select(col("vec_id"), col("embedding"), V.norm("embedding").as("nrm")))
-      def blocks(salt: String): DataFrame =
-        Dist.globalRank(
-          vecs.select(col("vec_id"),
-            P.md5Long(concat(lit(salt + ":"), col("vec_id").cast("string")))
-              .as("hk")),
-          Seq(col("hk"), col("vec_id")), "rnk", 32)
-          .select(col("vec_id"), expr("(rnk - 1) div 64").as("blk"))
-      def score(pairs: DataFrame): DataFrame =
-        pairs
-          .join(vecs.select(col("vec_id").as("node"), col("embedding").as("ea"),
-            col("nrm").as("na")), "node")
-          .join(vecs.select(col("vec_id").as("nbr"), col("embedding").as("eb"),
-            col("nrm").as("nb")), "nbr")
-          .withColumn("cos", round(V.dot("ea", "eb") / (col("na") * col("nb")), 6))
-          .select("node", "nbr", "cos")
-      def topk(scored: DataFrame): DataFrame =
-        scored.withColumn("rr", row_number().over(
-            Window.partitionBy("node").orderBy(col("cos").desc, col("nbr"))))
-          .filter(col("rr") <= 5).select("node", "nbr", "cos")
-      def half(salt: String): DataFrame = {
-        val b = blocks(salt)
-        b.alias("a").join(b.alias("b"),
-            col("a.blk") === col("b.blk") && col("a.vec_id") < col("b.vec_id"))
-          .select(col("a.vec_id").as("node"), col("b.vec_id").as("nbr"))
-      }
       // a pair inside the same block under BOTH salts would enter the
       // union twice with an identical cos — distinct before scoring
-      val halfScored = Pins.pin(score(
-        half("nnd1").unionByName(half("nnd2")).distinct()))
-      val probes = vecs.filter(col("vec_id") < 40)
-        .select(col("vec_id").as("node"), col("embedding").as("ea"),
-          col("nrm").as("na"))
-      val gt = Pins.pin(probes.crossJoin(
-          vecs.select(col("vec_id").as("nbr"), col("embedding").as("eb"),
-            col("nrm").as("nb")))
-        .filter(col("node") =!= col("nbr"))
-        .withColumn("cos", round(V.dot("ea", "eb") / (col("na") * col("nb")), 6))
-        .withColumn("rr", row_number().over(
-          Window.partitionBy("node").orderBy(col("cos").desc, col("nbr"))))
-        .filter(col("rr") <= 5).select("node", "nbr"))
+      val halfScored = Pins.pin(knnScore(vecs,
+        knnBlockPairs(vecs, "nnd1").unionByName(knnBlockPairs(vecs, "nnd2")).distinct()))
+      val (probes, gt0) = knnProbes(vecs)
+      val gt = Pins.pin(gt0)
       def phaseRow(graph: DataFrame, prev: Option[DataFrame],
           phase: String): DataFrame = {
         val nNew = prev match {
@@ -412,34 +474,15 @@ object SearchOps3 {
             .agg(count(lit(1)).as("n_new"))
           case None => graph.agg(count(lit(1)).as("n_new"))
         }
-        val hits = graph.select("node", "nbr")
-          .join(broadcast(probes.select("node")), Seq("node"), "left_semi")
-          .join(gt, Seq("node", "nbr"), "left_semi")
-          .groupBy("node").agg(count(lit(1)).as("hits"))
-        val nEdges = graph.agg(count(lit(1)).as("n_edges"))
-        probes.select("node").join(hits, Seq("node"), "left")
-          .agg(sum(coalesce(col("hits"), lit(0L))).as("h"),
-            count(lit(1)).as("np"))
-          .crossJoin(nEdges).crossJoin(nNew)
-          .select(lit(phase).as("phase"), col("n_edges"), col("n_new"),
-            round(col("h").cast("double") / (lit(5) * col("np")), 4)
-              .as("mean_recall5"))
+        knnProbeHits(graph, probes, gt).crossJoin(nNew)
+          .select(lit(phase).as("phase"), col("n_edges"), col("n_new"), meanRecall5)
       }
-      var cur = Pins.pin(topk(halfScored.unionByName(
-        halfScored.select(col("nbr").as("node"), col("node").as("nbr"),
-          col("cos")))))
+      var cur = Pins.pin(knnSeed(halfScored))
       var out = phaseRow(cur, None, "r0_seed")
       for (r <- 1 to 2) {
-        val undirected = cur.select("node", "nbr")
-          .unionByName(cur.select(col("nbr").as("node"), col("node").as("nbr")))
-          .distinct()
-        val fresh = undirected.alias("x").join(undirected.alias("y"),
-            col("x.nbr") === col("y.node"))
-          .select(col("x.node").as("node"), col("y.nbr").as("nbr"))
-          .filter(col("node") =!= col("nbr"))
-          .distinct()
+        val fresh = knnTwoHop(cur)
           .join(cur.select("node", "nbr"), Seq("node", "nbr"), "left_anti")
-        val next = Pins.pin(topk(score(fresh).unionByName(cur)))
+        val next = Pins.pin(knnTop5(knnScore(vecs, fresh).unionByName(cur)))
         out = out.unionByName(phaseRow(next, Some(cur), s"r${r}_descent"))
         cur = next
       }
@@ -481,49 +524,15 @@ object SearchOps3 {
            |    $nNew AS n_new,
            |    (SELECT count(*) FROM g$r g JOIN gt USING (node, nbr)) AS h""".stripMargin
       }
-      def blocksSql(salt: String): String =
-        s"""blocks_$salt AS (
-        |  SELECT vec_id, (row_number() OVER (ORDER BY
-        |      ${P.md5LongSql(s"concat('$salt:', vec_id)")}, vec_id) - 1) // 64
-        |    AS blk
-        |  FROM vecs),
-        |half_$salt AS (
-        |  SELECT a.vec_id AS node, b.vec_id AS nbr
-        |  FROM blocks_$salt a JOIN blocks_$salt b
-        |    ON a.blk = b.blk AND a.vec_id < b.vec_id),""".stripMargin
-      s"""WITH vecs AS (
-      |  SELECT vec_id, embedding, ${V.normSql("embedding")} AS nrm
-      |  FROM embeddings),
-      |${blocksSql("nnd1")}
-      |${blocksSql("nnd2")}
+      s"""WITH $knnVecsSql,
+      |${knnBlockPairsSql("nnd1")},
+      |${knnBlockPairsSql("nnd2")},
       |half AS (
       |  SELECT DISTINCT node, nbr FROM (
       |    SELECT node, nbr FROM half_nnd1
       |    UNION ALL SELECT node, nbr FROM half_nnd2)),
-      |halfscored AS MATERIALIZED (
-      |  SELECT node, nbr,
-      |    round(${V.dotSql("va.embedding", "vb.embedding")} /
-      |      (va.nrm * vb.nrm), 6) AS cos
-      |  FROM half JOIN vecs va ON va.vec_id = node
-      |  JOIN vecs vb ON vb.vec_id = nbr),
-      |g0 AS MATERIALIZED (
-      |  SELECT node, nbr, cos FROM (
-      |    SELECT node, nbr, cos, row_number() OVER (
-      |      PARTITION BY node ORDER BY cos DESC, nbr) AS rr
-      |    FROM (SELECT node, nbr, cos FROM halfscored
-      |          UNION ALL
-      |          SELECT nbr, node, cos FROM halfscored))
-      |  WHERE rr <= 5),${roundCtes(1)}${roundCtes(2)}
-      |probes AS (SELECT vec_id AS node FROM vecs WHERE vec_id < 40),
-      |gt AS MATERIALIZED (
-      |  SELECT node, nbr FROM (
-      |    SELECT p.node, v.vec_id AS nbr, row_number() OVER (
-      |      PARTITION BY p.node ORDER BY
-      |        round(${V.dotSql("pv.embedding", "v.embedding")} /
-      |          (pv.nrm * v.nrm), 6) DESC, v.vec_id) AS rr
-      |    FROM probes p JOIN vecs pv ON pv.vec_id = p.node
-      |    CROSS JOIN vecs v WHERE v.vec_id <> p.node)
-      |  WHERE rr <= 5),
+      |${knnSeedSql("half", "g0")},${roundCtes(1)}${roundCtes(2)}
+      |$knnProbesSql,
       |phases AS (
       |  ${phaseSql(0, "r0_seed")}
       |  UNION ALL
@@ -651,15 +660,8 @@ object SearchOps3 {
     (s, dir) => {
       // feeds tokens + the pooled audit
       val vecs = Pins.pin(Tables.emb(s, dir).select("vec_id", "embedding"))
-      val probeToks = maxsimToks(vecs.filter(col("vec_id") < 8),
-        "query_id", "qt", "qsv", "qn")
-      val corpusToks = maxsimToks(vecs, "doc_id", "dt", "dsv", "dn")
-      val scored = maxsimScore(corpusToks.crossJoin(broadcast(probeToks))
-        .filter(col("doc_id") =!= col("query_id")))
-      val top = scored.withColumn("rank", row_number().over(
-          Window.partitionBy("query_id")
-            .orderBy(col("maxsim_e6").desc, col("doc_id"))))
-        .filter(col("rank") <= 5)
+      val top = maxsimTop5(maxsimExact(
+        maxsimToks(vecs, "doc_id", "dt", "dsv", "dn"), maxsimProbeToks(vecs)))
       val pooled = vecs.filter(col("vec_id") < 8)
         .select(col("vec_id").as("query_id"), col("embedding").as("qe"),
           V.norm("qe").as("pqn"))
@@ -679,25 +681,8 @@ object SearchOps3 {
         .orderBy("query_id", "rank")
     },
     Some {
-      s"""WITH pt AS (
-      |  SELECT vec_id AS query_id, t AS qt, sv AS qsv,
-      |    ${V.normSql("sv")} AS qn
-      |  FROM (${maxsimToksSql("SELECT vec_id, embedding FROM embeddings WHERE vec_id < 8")})),
-      |ct AS (
-      |  SELECT vec_id AS doc_id, t AS dt, sv AS dsv,
-      |    ${V.normSql("sv")} AS dn
-      |  FROM (${maxsimToksSql("SELECT vec_id, embedding FROM embeddings")})),
-      |scored AS MATERIALIZED (
-      |  SELECT query_id, doc_id,
-      |    CAST(sum(m6) AS BIGINT) AS maxsim_e6
-      |  FROM (
-      |    SELECT query_id, doc_id, qt,
-      |      max(CAST(round(round(${V.dotSql("qsv", "dsv")} / (qn * dn), 6)
-      |        * 1000000, 0) AS BIGINT)) AS m6
-      |    FROM ct CROSS JOIN pt
-      |    WHERE doc_id <> query_id
-      |    GROUP BY 1, 2, 3)
-      |  GROUP BY 1, 2),
+      s"""WITH $maxsimToksCtesSql,
+      |${maxsimExactSql("scored")},
       |top AS (
       |  SELECT query_id, doc_id, maxsim_e6,
       |    CAST(rnk AS INTEGER) AS rank FROM (
@@ -784,8 +769,7 @@ object SearchOps3 {
     (s, dir) => {
       // feeds token explode + audit
       val vecs = Pins.pin(Tables.emb(s, dir).select(col("vec_id"), col("embedding")))
-      val probeToks = maxsimToks(vecs.filter(col("vec_id") < 8),
-        "query_id", "qt", "qsv", "qn")
+      val probeToks = maxsimProbeToks(vecs)
       // feeds buckets, candidate scoring, audit
       val corpusToks = Pins.pin(maxsimToks(vecs, "doc_id", "dt", "dsv", "dn"))
       // token-level index: distinct (doc, bucket) posting pairs join
@@ -798,16 +782,10 @@ object SearchOps3 {
         .filter(col("doc_id") =!= col("query_id"))
         .select("query_id", "doc_id").distinct()
       val nCand = cand.groupBy("query_id").agg(count(lit(1)).as("n_cand"))
-      val w = Window.partitionBy("query_id")
-        .orderBy(col("maxsim_e6").desc, col("doc_id"))
-      val approxTop = maxsimScore(
-          cand.join(corpusToks, "doc_id").join(broadcast(probeToks), "query_id"))
-        .withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= 5)
-      val exactTop = maxsimScore(corpusToks.crossJoin(broadcast(probeToks))
-          .filter(col("doc_id") =!= col("query_id")))
-        .withColumn("r", row_number().over(w))
-        .filter(col("r") <= 5).select("query_id", "doc_id")
+      val approxTop = maxsimTop5(maxsimScore(
+          cand.join(corpusToks, "doc_id").join(broadcast(probeToks), "query_id")))
+      val exactTop = maxsimTop5(maxsimExact(corpusToks, probeToks))
+        .select("query_id", "doc_id")
       val recall = approxTop.select("query_id", "doc_id")
         .join(exactTop, Seq("query_id", "doc_id"), "left_semi")
         .groupBy("query_id")
@@ -821,14 +799,7 @@ object SearchOps3 {
         .orderBy("query_id", "rank")
     },
     Some {
-      s"""WITH pt AS (
-      |  SELECT vec_id AS query_id, t AS qt, sv AS qsv,
-      |    ${V.normSql("sv")} AS qn
-      |  FROM (${maxsimToksSql("SELECT vec_id, embedding FROM embeddings WHERE vec_id < 8")})),
-      |ct AS (
-      |  SELECT vec_id AS doc_id, t AS dt, sv AS dsv,
-      |    ${V.normSql("sv")} AS dn
-      |  FROM (${maxsimToksSql("SELECT vec_id, embedding FROM embeddings")})),
+      s"""WITH $maxsimToksCtesSql,
       |postings AS (
       |  SELECT DISTINCT doc_id, ${tokBucketSql("dsv")} AS bk FROM ct),
       |qprobes AS (
@@ -855,16 +826,7 @@ object SearchOps3 {
       |      PARTITION BY query_id ORDER BY maxsim_e6 DESC, doc_id) AS rnk
       |    FROM cscore)
       |  WHERE rnk <= 5),
-      |escore AS MATERIALIZED (
-      |  SELECT query_id, doc_id, CAST(sum(m6) AS BIGINT) AS maxsim_e6
-      |  FROM (
-      |    SELECT query_id, doc_id, qt,
-      |      max(CAST(round(round(${V.dotSql("qsv", "dsv")} / (qn * dn), 6)
-      |        * 1000000, 0) AS BIGINT)) AS m6
-      |    FROM ct CROSS JOIN pt
-      |    WHERE doc_id <> query_id
-      |    GROUP BY 1, 2, 3)
-      |  GROUP BY 1, 2),
+      |${maxsimExactSql("escore")},
       |etop AS (
       |  SELECT query_id, doc_id FROM (
       |    SELECT query_id, doc_id, row_number() OVER (

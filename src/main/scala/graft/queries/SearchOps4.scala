@@ -98,13 +98,7 @@ object SearchOps4 {
           when(col("xc").isNotNull, 1L).otherwise(0L).as("hits3"))
         .orderBy("query_id", "rn")
     },
-    Some(s"""WITH cent AS (
-      |  SELECT clabel, list(c ORDER BY pos) AS cvec FROM (
-      |    SELECT label AS clabel, i AS pos,
-      |      round(avg(CAST(embedding[i] AS DOUBLE)), 6) AS c
-      |    FROM embeddings, generate_series(1, 64) g(i)
-      |    GROUP BY 1, 2)
-      |  GROUP BY clabel),
+    Some(s"""WITH ${VectorOps.centroidsSql},
       |ranked AS MATERIALIZED (
       |  SELECT vec_id, embedding, lang, cell, crn,
       |    sqrt(${V.dotSql("embedding", "embedding")}) AS nrm

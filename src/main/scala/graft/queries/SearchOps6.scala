@@ -63,12 +63,7 @@ object SearchOps6 {
         .orderBy(col("knn_mean_d2").desc, col("vec_id"))
         .limit(20)
     },
-    Some(s"""WITH st AS (
-      |  SELECT greatest(16, CAST(ceil(sqrt(count(*))) AS BIGINT)) AS step
-      |  FROM embeddings),
-      |seeds AS MATERIALIZED (
-      |  SELECT vec_id AS seed_id, embedding AS svec
-      |  FROM embeddings CROSS JOIN st WHERE vec_id % st.step = 0),
+    Some(s"""WITH ${graft.pipeline.SemDeDup.seedsSql()},
       |assigned AS MATERIALIZED (
       |  SELECT vec_id, embedding, cell FROM (
       |    SELECT e.vec_id, e.embedding, s.seed_id AS cell,

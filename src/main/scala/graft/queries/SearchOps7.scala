@@ -67,12 +67,7 @@ object SearchOps7 {
     * far below it.
     */
   private def assignedSql: String =
-    s"""st AS (
-      |  SELECT greatest(16, CAST(ceil(sqrt(count(*))) AS BIGINT)) AS step
-      |  FROM embeddings),
-      |seeds AS MATERIALIZED (
-      |  SELECT vec_id AS seed_id, embedding AS svec
-      |  FROM embeddings CROSS JOIN st WHERE vec_id % st.step = 0),
+    s"""${graft.pipeline.SemDeDup.seedsSql()},
       |assigned AS MATERIALIZED (
       |  SELECT vec_id, embedding, cell, rn FROM (
       |    SELECT e.vec_id, e.embedding, s.seed_id AS cell,

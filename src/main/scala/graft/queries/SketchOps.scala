@@ -57,16 +57,10 @@ object SketchOps {
         .filter(col("o_orderpriority") < "4")
         .select(col("o_orderkey").as("dk"))
       def sketch(df: DataFrame, key: String, out: String): DataFrame =
-        df.select(explode(sequence(lit(0), lit(3))).as("seed"),
-            col(key).cast("long").as("k"))
-          .select(col("seed"),
-            pmod(P.md5Long(concat_ws(":", lit("cms"), col("seed").cast("string"),
-              col("k").cast("string"))), lit(1024)).as("cell"))
-          .groupBy("seed", "cell").agg(count(lit(1)).as(out))
+        WarehouseOps.cmsCounts(df.select(explode(sequence(lit(0), lit(3))).as("seed"),
+          col(key).cast("long").as("k")), out)
       def est(dim: DataFrame, name: String): DataFrame =
-        sketch(li, name, "ca").join(sketch(dim, "dk", "cb"), Seq("seed", "cell"))
-          .groupBy("seed").agg(sum(col("ca") * col("cb")).as("e"))
-          .agg(min("e").as(s"est_$name"))
+        WarehouseOps.cmsJoinSize(sketch(li, name, "ca"), sketch(dim, "dk", "cb"), s"est_$name")
       // ONE pass over the fact computes every exact intermediate size
       val flags = li
         .join(pKeys.withColumn("fp", lit(1L)), col("pk") === pKeys("dk"), "left")
@@ -114,17 +108,11 @@ object SketchOps {
         .orderBy("est_rank")
     },
     Some {
-      def sketchSql(src: String, key: String, out: String): String =
-        s"""SELECT seed,
-           |  ${P.md5LongSql(s"concat('cms:', seed, ':', $key)")} % 1024 AS cell,
-           |  count(*) AS $out
-           |FROM ($src) CROSS JOIN (SELECT unnest(range(4)) AS seed) seeds
-           |GROUP BY 1, 2""".stripMargin
       def estSql(dimSrc: String, liKey: String): String =
         s"""SELECT CAST(min(e) AS BIGINT) FROM (
            |  SELECT sa.seed, sum(sa.ca * sb.cb) AS e
-           |  FROM (${sketchSql("SELECT * FROM lineitem", liKey, "ca")}) sa
-           |  JOIN (${sketchSql(dimSrc, "dk", "cb")}) sb
+           |  FROM (${WarehouseOps.cmsCountsSql("SELECT * FROM lineitem", liKey, "ca")}) sa
+           |  JOIN (${WarehouseOps.cmsCountsSql(dimSrc, "dk", "cb")}) sb
            |    ON sa.seed = sb.seed AND sa.cell = sb.cell
            |  GROUP BY 1)""".stripMargin
       s"""WITH stats AS (
@@ -211,13 +199,7 @@ object SketchOps {
             greatest(round(col("exact_wau") * 0.05), lit(3.0))).as("est_ok"))
         .orderBy("day")
     },
-    Some("""WITH act AS (
-      |  SELECT DISTINCT user_id,
-      |    CAST(floor(epoch(ts) / 86400) AS BIGINT) AS day
-      |  FROM events),
-      |cov AS (
-      |  SELECT user_id, unnest(generate_series(day, day + 6)) AS d
-      |  FROM act)
+    Some(s"""WITH ${Analytics2.weekCoverSql}
       |SELECT d AS day, count(DISTINCT user_id) AS exact_wau, TRUE AS est_ok
       |FROM cov WHERE d IN (SELECT day FROM act)
       |GROUP BY d ORDER BY day""".stripMargin))

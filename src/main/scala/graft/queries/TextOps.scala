@@ -168,15 +168,7 @@ object TextOps {
     Some(s"""WITH toks AS (
       |  SELECT doc_id, ${Portable.tokenSetSql("text")} AS toks
       |  FROM documents WHERE lang = 'en'),
-      |ex AS (SELECT doc_id, unnest(toks) AS tok FROM toks),
-      |mh AS (
-      |  SELECT doc_id, seed, min(${Portable.md5LongSql("concat(seed, ':', tok)")}) AS minh
-      |  FROM ex CROSS JOIN (SELECT unnest(range(16)) AS seed) seeds
-      |  GROUP BY 1, 2),
-      |sigs AS (
-      |  SELECT doc_id, seed // 8 AS band,
-      |    string_agg(concat(seed, ':', minh), ',' ORDER BY concat(seed, ':', minh)) AS sig
-      |  FROM mh GROUP BY 1, 2),
+      |${graft.functions.MinHashBands.sigsSql("toks")},
       |cand AS (
       |  SELECT DISTINCT sa.doc_id AS doc_a, sb.doc_id AS doc_b
       |  FROM sigs sa JOIN sigs sb

@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.{Pins, Q, Tables}
 import graft.functions.{Portable, VectorFunctions => V}
+import graft.pipeline.SemDeDup
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -29,6 +30,28 @@ object VectorOps {
       .agg(round(avg(col("v").cast("double")), 6).as("c"))
       .groupBy("clabel")
       .agg(expr("transform(array_sort(collect_list(struct(pos, c))), x -> x.c)").as("cvec"))
+
+  /** DuckDB twin of [[centroidVectors]]: CTE `cent(clabel, cvec)`. */
+  private[queries] def centroidsSql: String =
+    """cent AS (
+      |  SELECT clabel, list(c ORDER BY pos) AS cvec FROM (
+      |    SELECT label AS clabel, i AS pos,
+      |      round(avg(CAST(embedding[i] AS DOUBLE)), 6) AS c
+      |    FROM embeddings, generate_series(1, 64) g(i)
+      |    GROUP BY 1, 2)
+      |  GROUP BY clabel)""".stripMargin
+
+  /** Every embedding against every broadcast label centroid, with
+    * `d2` = round(d², 6) (q50, q66, q139, q146).
+    */
+  private def centroidD2(s: SparkSession, dir: String): DataFrame =
+    SemDeDup.withD2(Tables.emb(s, dir).crossJoin(broadcast(centroidVectors(s, dir))), "cvec")
+
+  /** Each embedding's nearest label centroid as its IVF cell:
+    * (vec_id, embedding, cell, nrm) (q66, q139).
+    */
+  private def centroidCells(s: SparkSession, dir: String): DataFrame =
+    SemDeDup.nearestCell(centroidD2(s, dir), "clabel")
 
   /** Rank (query, candidate) pairs by rounded cosine and keep top-k.
     * `pairs` must carry (query_id, qe, qn) and (cand_id, ce, cn).
@@ -104,21 +127,14 @@ object VectorOps {
   val q50 = Q(
     "q50_nearest_centroid_confusion",
     (s, dir) => {
-      Tables.emb(s, dir).crossJoin(broadcast(centroidVectors(s, dir)))
-        .withColumn("d2", round(V.dist2("embedding", "cvec"), 6))
+      centroidD2(s, dir)
         .groupBy("vec_id", "label")
         .agg(min(struct(col("d2"), col("clabel"))).as("best"))
         .groupBy(col("label"), col("best.clabel").as("assigned"))
         .agg(count(lit(1)).as("n"))
         .orderBy("label", "assigned")
     },
-    Some(s"""WITH cent AS (
-      |  SELECT clabel, list(c ORDER BY pos) AS cvec FROM (
-      |    SELECT label AS clabel, i AS pos,
-      |      round(avg(CAST(embedding[i] AS DOUBLE)), 6) AS c
-      |    FROM embeddings, generate_series(1, 64) g(i)
-      |    GROUP BY 1, 2)
-      |  GROUP BY clabel),
+    Some(s"""WITH $centroidsSql,
       |assigned AS MATERIALIZED (
       |  SELECT label, clabel FROM (
       |    SELECT e.label, c.clabel,
@@ -236,13 +252,7 @@ object VectorOps {
     (s, dir) => {
       // same map-side argmin as q50: (d2, clabel) decides before the
       // embedding field is ever compared (clabel is unique per cell)
-      val assigned = Tables.emb(s, dir).crossJoin(broadcast(centroidVectors(s, dir)))
-        .withColumn("d2", round(V.dist2("embedding", "cvec"), 6))
-        .groupBy("vec_id")
-        .agg(min(struct(col("d2"), col("clabel"), col("embedding"))).as("best"))
-        .select(col("vec_id"), col("best.embedding").as("embedding"),
-          col("best.clabel").as("cell"))
-        .withColumn("nrm", V.norm("embedding"))
+      val assigned = centroidCells(s, dir)
       val qs = assigned.filter(col("vec_id") < 20).select(
         col("vec_id").as("query_id"), col("embedding").as("qe"),
         col("nrm").as("qn"), col("cell").as("qcell"))
@@ -254,22 +264,8 @@ object VectorOps {
           col("cell") === col("qcell") && col("cand_id") =!= col("query_id")),
         k = 3)
     },
-    Some(s"""WITH cent AS (
-      |  SELECT clabel, list(c ORDER BY pos) AS cvec FROM (
-      |    SELECT label AS clabel, i AS pos,
-      |      round(avg(CAST(embedding[i] AS DOUBLE)), 6) AS c
-      |    FROM embeddings, generate_series(1, 64) g(i)
-      |    GROUP BY 1, 2)
-      |  GROUP BY clabel),
-      |assigned AS MATERIALIZED (
-      |  SELECT vec_id, embedding, cell,
-      |    sqrt(${V.dotSql("embedding", "embedding")}) AS nrm
-      |  FROM (
-      |    SELECT e.vec_id, e.embedding, c.clabel AS cell,
-      |      row_number() OVER (PARTITION BY e.vec_id
-      |        ORDER BY round(${V.dist2Sql("e.embedding", "c.cvec")}, 6), c.clabel) AS rn
-      |    FROM embeddings e CROSS JOIN cent c)
-      |  WHERE rn = 1)
+    Some(s"""WITH $centroidsSql,
+      |${SemDeDup.nearestCellSql("cent", "clabel", "cvec")}
       |SELECT query_id, cand_id, cos, CAST(rn AS INTEGER) AS rn FROM (
       |  SELECT q.vec_id AS query_id, c.vec_id AS cand_id,
       |    round(${V.dotSql("q.embedding", "c.embedding")} / (q.nrm * c.nrm), 6) AS cos,
@@ -334,53 +330,10 @@ object VectorOps {
     */
   val q139 = Q(
     "q139_semdedup_cells",
-    (s, dir) => {
-      val assigned = Tables.emb(s, dir).crossJoin(broadcast(centroidVectors(s, dir)))
-        .withColumn("d2", round(V.dist2("embedding", "cvec"), 6))
-        .groupBy("vec_id")
-        .agg(min(struct(col("d2"), col("clabel"), col("embedding"))).as("best"))
-        .select(col("vec_id"), col("best.embedding").as("embedding"),
-          col("best.clabel").as("cell"))
-        .withColumn("nrm", V.norm("embedding"))
-      val a = assigned.select(col("vec_id").as("keeper_cand"), col("cell"),
-        col("embedding").as("ea"), col("nrm").as("na"))
-      val b = assigned.select(col("vec_id").as("dropped"), col("cell").as("cellb"),
-        col("embedding").as("eb"), col("nrm").as("nb"))
-      a.join(b, col("cell") === col("cellb") && col("keeper_cand") < col("dropped"))
-        .withColumn("cos", round(V.dot("ea", "eb") / (col("na") * col("nb")), 6))
-        .filter(col("cos") >= 0.35)
-        .groupBy("dropped")
-        .agg(
-          min("keeper_cand").as("keeper"),
-          max("cos").as("max_cos"),
-          count(lit(1)).as("n_dups"))
-        .orderBy("dropped")
-    },
-    Some(s"""WITH cent AS (
-      |  SELECT clabel, list(c ORDER BY pos) AS cvec FROM (
-      |    SELECT label AS clabel, i AS pos,
-      |      round(avg(CAST(embedding[i] AS DOUBLE)), 6) AS c
-      |    FROM embeddings, generate_series(1, 64) g(i)
-      |    GROUP BY 1, 2)
-      |  GROUP BY clabel),
-      |assigned AS MATERIALIZED (
-      |  SELECT vec_id, embedding, cell,
-      |    sqrt(${V.dotSql("embedding", "embedding")}) AS nrm
-      |  FROM (
-      |    SELECT e.vec_id, e.embedding, c.clabel AS cell,
-      |      row_number() OVER (PARTITION BY e.vec_id
-      |        ORDER BY round(${V.dist2Sql("e.embedding", "c.cvec")}, 6), c.clabel) AS rn
-      |    FROM embeddings e CROSS JOIN cent c)
-      |  WHERE rn = 1),
-      |pairs AS (
-      |  SELECT a.vec_id AS keeper_cand, b.vec_id AS dropped,
-      |    round(${V.dotSql("a.embedding", "b.embedding")} / (a.nrm * b.nrm), 6) AS cos
-      |  FROM assigned a JOIN assigned b
-      |    ON a.cell = b.cell AND a.vec_id < b.vec_id)
-      |SELECT dropped, min(keeper_cand) AS keeper, max(cos) AS max_cos,
-      |  count(*) AS n_dups
-      |FROM pairs WHERE cos >= 0.35
-      |GROUP BY dropped ORDER BY dropped""".stripMargin))
+    (s, dir) => SemDeDup.dedupReport(centroidCells(s, dir), 0.35),
+    Some(s"""WITH $centroidsSql,
+      |${SemDeDup.nearestCellSql("cent", "clabel", "cvec")},
+      |${SemDeDup.dedupReportSql(0.35)}""".stripMargin))
 
   /** IVF with nprobe=2 + recall audit: each query probes its TWO
     * nearest cells (q66 is nprobe=1) and the probe result is scored
@@ -400,8 +353,7 @@ object VectorOps {
       // without the checkpoint each one re-runs the n×k assignment
       // window AND the centroid aggregation (measured ~2× the whole
       // query's cost at sf0.1)
-      val ranked = Pins.pin(Tables.emb(s, dir).crossJoin(broadcast(centroidVectors(s, dir)))
-        .withColumn("d2", round(V.dist2("embedding", "cvec"), 6))
+      val ranked = Pins.pin(centroidD2(s, dir)
         .withColumn("crn", row_number().over(byDist))
         .filter(col("crn") <= 2)
         .select(col("vec_id"), col("embedding"), col("clabel").as("cell"),
@@ -438,13 +390,7 @@ object VectorOps {
         .agg((sum(when(col("pc").isNotNull, 1).otherwise(0)) / 10.0).as("recall10"))
         .orderBy("query_id")
     },
-    Some(s"""WITH cent AS (
-      |  SELECT clabel, list(c ORDER BY pos) AS cvec FROM (
-      |    SELECT label AS clabel, i AS pos,
-      |      round(avg(CAST(embedding[i] AS DOUBLE)), 6) AS c
-      |    FROM embeddings, generate_series(1, 64) g(i)
-      |    GROUP BY 1, 2)
-      |  GROUP BY clabel),
+    Some(s"""WITH $centroidsSql,
       |ranked AS (
       |  SELECT vec_id, embedding, cell, crn,
       |    sqrt(${V.dotSql("embedding", "embedding")}) AS nrm
@@ -511,32 +457,10 @@ object VectorOps {
   val q180 = Q(
     "q180_semdedup_scaled",
     (s, dir) =>
-      graft.pipeline.SemDeDup.dedupReport(
-        graft.pipeline.SemDeDup.cellAssign(Tables.emb(s, dir)), 0.35),
-    Some(s"""WITH st AS (
-      |  SELECT greatest(16, CAST(ceil(sqrt(count(*))) AS BIGINT)) AS step
-      |  FROM embeddings),
-      |seeds AS MATERIALIZED (
-      |  SELECT vec_id AS seed_id, embedding AS svec
-      |  FROM embeddings CROSS JOIN st WHERE vec_id % st.step = 0),
-      |assigned AS MATERIALIZED (
-      |  SELECT vec_id, embedding, cell,
-      |    sqrt(${V.dotSql("embedding", "embedding")}) AS nrm
-      |  FROM (
-      |    SELECT e.vec_id, e.embedding, s.seed_id AS cell,
-      |      row_number() OVER (PARTITION BY e.vec_id
-      |        ORDER BY round(${V.dist2Sql("e.embedding", "s.svec")}, 6), s.seed_id) AS rn
-      |    FROM embeddings e CROSS JOIN seeds s)
-      |  WHERE rn = 1),
-      |pairs AS (
-      |  SELECT a.vec_id AS keeper_cand, b.vec_id AS dropped,
-      |    round(${V.dotSql("a.embedding", "b.embedding")} / (a.nrm * b.nrm), 6) AS cos
-      |  FROM assigned a JOIN assigned b
-      |    ON a.cell = b.cell AND a.vec_id < b.vec_id)
-      |SELECT dropped, min(keeper_cand) AS keeper, max(cos) AS max_cos,
-      |  count(*) AS n_dups
-      |FROM pairs WHERE cos >= 0.35
-      |GROUP BY dropped ORDER BY dropped""".stripMargin))
+      SemDeDup.dedupReport(SemDeDup.cellAssign(Tables.emb(s, dir)), 0.35),
+    Some(s"""WITH ${SemDeDup.seedsSql()},
+      |${SemDeDup.nearestCellSql("seeds", "seed_id", "svec")},
+      |${SemDeDup.dedupReportSql(0.35)}""".stripMargin))
 
   /** q180's two-level quantizer regime, pinned as its own registry
     * entry. Past n ≈ 10⁹ the √n seed set itself outgrows broadcast
@@ -556,55 +480,10 @@ object VectorOps {
     "q181_semdedup_2level",
     (s, dir) => {
       val e = Tables.emb(s, dir)
-      graft.pipeline.SemDeDup.dedupReport(
-        graft.pipeline.SemDeDup.cellAssignTwoLevel(
-          e, graft.pipeline.SemDeDup.steps(e)), 0.35)
+      SemDeDup.dedupReport(SemDeDup.cellAssignTwoLevel(e, SemDeDup.steps(e)), 0.35)
     },
-    Some(s"""WITH st AS (
-      |  SELECT greatest(16, CAST(ceil(sqrt(count(*))) AS BIGINT)) AS step
-      |  FROM embeddings),
-      |seeds AS MATERIALIZED (
-      |  SELECT vec_id AS seed_id, embedding AS svec
-      |  FROM embeddings CROSS JOIN st WHERE vec_id % st.step = 0),
-      |kc AS (
-      |  SELECT greatest(2, CAST(ceil(sqrt(count(*))) AS BIGINT)) AS m
-      |  FROM seeds),
-      |ss AS (
-      |  SELECT seed_id AS ss_id, svec AS ssvec
-      |  FROM seeds CROSS JOIN st CROSS JOIN kc
-      |  WHERE seed_id % (st.step * kc.m) = 0),
-      |seedcell AS MATERIALIZED (
-      |  SELECT scell, seed_id, svec FROM (
-      |    SELECT s.seed_id, s.svec, x.ss_id AS scell,
-      |      row_number() OVER (PARTITION BY s.seed_id
-      |        ORDER BY round(${V.dist2Sql("s.svec", "x.ssvec")}, 6), x.ss_id) AS rn
-      |    FROM seeds s CROSS JOIN ss x)
-      |  WHERE rn = 1),
-      |vecsuper AS MATERIALIZED (
-      |  SELECT vec_id, embedding, scell FROM (
-      |    SELECT e.vec_id, e.embedding, x.ss_id AS scell,
-      |      row_number() OVER (PARTITION BY e.vec_id
-      |        ORDER BY round(${V.dist2Sql("e.embedding", "x.ssvec")}, 6), x.ss_id) AS rn
-      |    FROM embeddings e CROSS JOIN ss x)
-      |  WHERE rn = 1),
-      |assigned AS MATERIALIZED (
-      |  SELECT vec_id, embedding, cell,
-      |    sqrt(${V.dotSql("embedding", "embedding")}) AS nrm
-      |  FROM (
-      |    SELECT v.vec_id, v.embedding, c.seed_id AS cell,
-      |      row_number() OVER (PARTITION BY v.vec_id
-      |        ORDER BY round(${V.dist2Sql("v.embedding", "c.svec")}, 6), c.seed_id) AS rn
-      |    FROM vecsuper v JOIN seedcell c ON v.scell = c.scell)
-      |  WHERE rn = 1),
-      |pairs AS (
-      |  SELECT a.vec_id AS keeper_cand, b.vec_id AS dropped,
-      |    round(${V.dotSql("a.embedding", "b.embedding")} / (a.nrm * b.nrm), 6) AS cos
-      |  FROM assigned a JOIN assigned b
-      |    ON a.cell = b.cell AND a.vec_id < b.vec_id)
-      |SELECT dropped, min(keeper_cand) AS keeper, max(cos) AS max_cos,
-      |  count(*) AS n_dups
-      |FROM pairs WHERE cos >= 0.35
-      |GROUP BY dropped ORDER BY dropped""".stripMargin))
+    Some(s"""WITH ${SemDeDup.twoLevelSql},
+      |${SemDeDup.dedupReportSql(0.35)}""".stripMargin))
 
   // q67/q139 are demoted quadratic baselines (see Q.baselines) —
   // q180 holds the embedding near-dup registry slot, q181 pins its

@@ -201,6 +201,32 @@ object WarehouseOps {
       |   WHERE l_orderkey NOT IN (SELECT o_orderkey FROM orders))
       |ORDER BY table_name""".stripMargin))
 
+  /** Count-min counters of `(seed, k)` rows: the portable md5 cell of
+    * "cms:<seed>:<k>" in 1024 cells, counted per (seed, cell) as `out`.
+    */
+  private[queries] def cmsCounts(seeded: DataFrame, out: String): DataFrame =
+    seeded
+      .select(col("seed"),
+        pmod(P.md5Long(concat_ws(":", lit("cms"), col("seed").cast("string"),
+          col("k").cast("string"))), lit(1024)).as("cell"))
+      .groupBy("seed", "cell").agg(count(lit(1)).as(out))
+
+  /** The join-size estimate of two sketches: the minimum over seeds of
+    * the counters' inner product, one row `est`.
+    */
+  private[queries] def cmsJoinSize(ca: DataFrame, cb: DataFrame, est: String): DataFrame =
+    ca.join(cb, Seq("seed", "cell"))
+      .groupBy("seed").agg(sum(col("ca") * col("cb")).as("est_d"))
+      .agg(min("est_d").as(est))
+
+  /** DuckDB twin of [[cmsCounts]] over query `src`'s column `key`. */
+  private[queries] def cmsCountsSql(src: String, key: String, out: String): String =
+    s"""SELECT seed,
+       |  ${P.md5LongSql(s"concat('cms:', seed, ':', $key)")} % 1024 AS cell,
+       |  count(*) AS $out
+       |FROM ($src) CROSS JOIN (SELECT unnest(range(4)) AS seed) seeds
+       |GROUP BY 1, 2""".stripMargin
+
   /** Count-min-sketch join cardinality estimation. A distributed
     * optimizer deciding join order / broadcast eligibility needs
     * |A ⋈ B| BEFORE running the join; per-key histograms are
@@ -220,19 +246,13 @@ object WarehouseOps {
     "q245_join_size_sketch",
     (s, dir) => {
       import s.implicits._
-      val D = 4
-      val W = 1024
       def sketch(df: DataFrame, key: String, out: String): DataFrame =
         // spread before the 4x explode: the md5 cell per exploded row
         // dominates and the key projection shuffles for ~nothing
         // (Tables.docs rule; the sf0.1 scans are one split)
-        df.select(col(key).cast("long").as("k"))
+        cmsCounts(df.select(col(key).cast("long").as("k"))
           .repartition(df.sparkSession.sparkContext.defaultParallelism)
-          .select(explode(sequence(lit(0), lit(D - 1))).as("seed"), col("k"))
-          .select(col("seed"),
-            pmod(P.md5Long(concat_ws(":", lit("cms"), col("seed").cast("string"),
-              col("k").cast("string"))), lit(W)).as("cell"))
-          .groupBy("seed", "cell").agg(count(lit(1)).as(out))
+          .select(explode(sequence(lit(0), lit(3))).as("seed"), col("k")), out)
       def exact(a: DataFrame, ka: String, b: DataFrame, kb: String): DataFrame = {
         val ca = a.groupBy(col(ka).as("k")).agg(count(lit(1)).as("ca"))
         val cb = b.groupBy(col(kb).as("k")).agg(count(lit(1)).as("cb"))
@@ -240,11 +260,7 @@ object WarehouseOps {
       }
       def one(name: String, a: DataFrame, ka: String,
               b: DataFrame, kb: String): DataFrame = {
-        val est = sketch(a, ka, "ca").join(sketch(b, kb, "cb"),
-            Seq("seed", "cell"))
-          .groupBy("seed").agg(sum(col("ca") * col("cb")).as("est_d"))
-          .agg(min("est_d").as("est"))
-        est.crossJoin(exact(a, ka, b, kb))
+        cmsJoinSize(sketch(a, ka, "ca"), sketch(b, kb, "cb"), "est").crossJoin(exact(a, ka, b, kb))
           .select(lit(name).as("join_name"), col("est"), col("exact"),
             round((col("est") - col("exact")).cast("double") /
               col("exact"), 4).as("rel_err"))
@@ -260,12 +276,6 @@ object WarehouseOps {
         .orderBy("join_name")
     },
     Some {
-      def sketchSql(table: String, key: String, out: String): String =
-        s"""SELECT seed,
-           |  ${P.md5LongSql(s"concat('cms:', seed, ':', $key)")} % 1024 AS cell,
-           |  count(*) AS $out
-           |FROM $table CROSS JOIN (SELECT unnest(range(4)) AS seed) seeds
-           |GROUP BY 1, 2""".stripMargin
       def oneSql(name: String, ta: String, ka: String,
                  tb: String, kb: String): String =
         s"""SELECT '$name' AS join_name, est, exact,
@@ -273,8 +283,8 @@ object WarehouseOps {
            |FROM (
            |  SELECT CAST(min(est_d) AS BIGINT) AS est FROM (
            |    SELECT sa.seed, CAST(sum(sa.ca * sb.cb) AS BIGINT) AS est_d
-           |    FROM (${sketchSql(ta, ka, "ca")}) sa
-           |    JOIN (${sketchSql(tb, kb, "cb")}) sb
+           |    FROM (${cmsCountsSql(s"SELECT * FROM $ta", ka, "ca")}) sa
+           |    JOIN (${cmsCountsSql(s"SELECT * FROM $tb", kb, "cb")}) sb
            |      ON sa.seed = sb.seed AND sa.cell = sb.cell
            |    GROUP BY 1))
            |CROSS JOIN (

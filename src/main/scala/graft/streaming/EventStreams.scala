@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, KeyValueGroupedDataset, SparkSession}
 import graft.functions.{Portable => P}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -349,19 +349,17 @@ object EventStreams {
   def statefulSessionsTws(events: DataFrame): Dataset[Session] = {
     val spark = events.sparkSession
     import spark.implicits._
-    events
-      .withWatermark("ts", "30 minutes")
-      .select(col("user_id"), col("ts"), unix_micros(col("ts")).as("us"), col("value"))
-      .as[SessEvent]
-      .groupByKey(_.user_id)
+    sessionEvents(events)
       .transformWithState(
         new TwsSessionizer,
         org.apache.spark.sql.streaming.TimeMode.EventTime(),
         OutputMode.Append())
   }
 
-  /** Run the custom-state sessionizer over an event stream. */
-  def statefulSessions(events: DataFrame): Dataset[Session] = {
+  /** `events` under a 30-minute watermark, as [[SessEvent]]s keyed by
+    * user: the input of both sessionizers.
+    */
+  private def sessionEvents(events: DataFrame): KeyValueGroupedDataset[Long, SessEvent] = {
     val spark = events.sparkSession
     import spark.implicits._
     events
@@ -369,6 +367,13 @@ object EventStreams {
       .select(col("user_id"), col("ts"), unix_micros(col("ts")).as("us"), col("value"))
       .as[SessEvent]
       .groupByKey(_.user_id)
+  }
+
+  /** Run the custom-state sessionizer over an event stream. */
+  def statefulSessions(events: DataFrame): Dataset[Session] = {
+    val spark = events.sparkSession
+    import spark.implicits._
+    sessionEvents(events)
       .flatMapGroupsWithState(
         OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(sessionizeFn)
   }

@@ -1,11 +1,8 @@
 package graft
 
 import java.nio.file.Files
-import java.util.concurrent.atomic.AtomicInteger
 
 import graft.ingest.CsvIngest
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.GraftSqlBridge
 import org.apache.spark.sql.types._
 
 class CsvIngestSpec extends SparkSpec {
@@ -23,22 +20,6 @@ class CsvIngestSpec extends SparkSpec {
     out.write(content.getBytes("UTF-8"))
     out.close()
     f.toString
-  }
-
-  /** The Spark jobs `body` submits, counted from the listener bus. */
-  private def jobsOf(body: => Any): Int = {
-    val sc = spark.sparkContext
-    val jobs = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
-    GraftSqlBridge.drainListenerBus(sc)
-    sc.addSparkListener(listener)
-    try {
-      body
-      GraftSqlBridge.drainListenerBus(sc)
-      jobs.get
-    } finally sc.removeSparkListener(listener)
   }
 
   test("sniffs comma, semicolon, tab and pipe; comma fallback") {

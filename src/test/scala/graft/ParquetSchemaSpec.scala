@@ -2,7 +2,6 @@ package graft
 
 import java.io.File
 import java.nio.file.{Files, Paths}
-import java.util.concurrent.atomic.AtomicInteger
 
 import scala.jdk.CollectionConverters._
 
@@ -15,8 +14,7 @@ import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupWriteSupport}
 import org.apache.parquet.hadoop.util.HadoopOutputFile
 import org.apache.parquet.schema.MessageTypeParser
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.{AnalysisException, GraftSqlBridge, SparkSession}
+import org.apache.spark.sql.{AnalysisException, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -32,22 +30,6 @@ class ParquetSchemaSpec extends SparkSpec {
 
   private def sameSchema(s: SparkSession, path: String): Unit =
     assert(Tables.parquet(s, path).schema == s.read.parquet(path).schema, path)
-
-  /** The Spark jobs `body` submits, counted from the listener bus. */
-  private def jobsOf(body: => Any): Int = {
-    val sc = spark.sparkContext
-    val jobs = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
-    GraftSqlBridge.drainListenerBus(sc)
-    sc.addSparkListener(listener)
-    try {
-      body
-      GraftSqlBridge.drainListenerBus(sc)
-      jobs.get
-    } finally sc.removeSparkListener(listener)
-  }
 
   /** An events file with a TIMESTAMP(NANOS) `ts`, as non-Spark writers
     * (pandas, DuckDB) produce it; Spark cannot write this type.

@@ -1,6 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{GraftSqlBridge, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for suites (one per suite via lazy val), with
@@ -23,4 +26,20 @@ trait SparkSpec extends AnyFunSuite {
   }
 
   def sf(dir: String = "sf0.001"): String = s"/root/testdata/$dir"
+
+  /** The Spark jobs `body` submits, counted from the listener bus. */
+  def jobsOf(body: => Any): Int = {
+    val sc = spark.sparkContext
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    GraftSqlBridge.drainListenerBus(sc)
+    sc.addSparkListener(listener)
+    try {
+      body
+      GraftSqlBridge.drainListenerBus(sc)
+      jobs.get
+    } finally sc.removeSparkListener(listener)
+  }
 }
