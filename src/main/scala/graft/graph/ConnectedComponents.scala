@@ -1,6 +1,6 @@
 package graft.graph
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import graft.Pins
 
@@ -109,8 +109,11 @@ object ConnectedComponents {
       .agg(count(lit(1)), sum(col("b").cast("decimal(38,0)"))).head
     val nodeCnt = seed.getLong(0)
     if (nodeCnt == 0L) {
+      // the empty result must not read the pin it releases: a pin of an
+      // exchanged plan has partitions even when every one is empty
+      val schema = symCaller.select(col("b").as("node"), col("b").as("component")).schema
       org.apache.spark.sql.GraftSqlBridge.unpersistCheckpoint(symCaller)
-      return symCaller.select(col("b").as("node"), col("b").as("component"))
+      return spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
     }
     val sum0 = seed.getDecimal(1)
     val sp0 = spark.conf.get("spark.sql.shuffle.partitions")

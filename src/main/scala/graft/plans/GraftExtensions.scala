@@ -7,23 +7,30 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 /** SparkSessionExtensions entry point (SURVEY.md §4): injects every row
   * of [[GraftExtensions.kernels]], the engine's codegen'd Catalyst
-  * expressions, so any session configured with
-  * `spark.sql.extensions=graft.plans.GraftExtensions` (or
-  * `builder.withExtensions(new GraftExtensions)`) gets them in SQL.
+  * expressions, and the one planner rule, [[SmallInputs]], so any
+  * session configured with `spark.sql.extensions=graft.plans.GraftExtensions`
+  * (or `builder.withExtensions(new GraftExtensions)`) gets both.
   *
-  * No custom Rule/SparkStrategy is injected — SURVEY §4's analysis
-  * holds: Catalyst's built-ins cover the whole §2 inventory; the only
-  * custom pieces we measured a need for are the expressions below.
+  * Catalyst's built-ins cover the rest of SURVEY §2's inventory; the
+  * custom pieces are the ones a measured need asked for: the kernels
+  * below, and [[SmallInputs]], which runs a query over small inputs as
+  * one stage. The rule is injected as a pre-CBO rule, which runs once
+  * after the operator-optimization batches: inside their fixed point
+  * `PushDownLeftSemiAntiJoin` moves an anti join below the rule's
+  * coalesce and the rule adds another (q08 stacked two).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(e: SparkSessionExtensions): Unit =
+  override def apply(e: SparkSessionExtensions): Unit = {
     GraftExtensions.kernels.foreach(k => e.injectFunction((k.id, k.info, k.build)))
+    e.injectPreCBORule(_ => SmallInputs)
+  }
 }
 
-/** The one table of SQL kernels. [[GraftExtensions]] injects it into
-  * sessions built with the extension; [[register]] installs it on any
-  * other session, and `Q` calls that for every registry query, so a
-  * query runs on whatever session it is given. A new kernel is one row.
+/** The one table of SQL kernels, and the rule. [[GraftExtensions]]
+  * injects both into sessions built with the extension; [[register]]
+  * installs them on any other session, and `Q` calls that for every
+  * registry query, so a query runs on whatever session it is given, and
+  * plans alike on all of them. A new kernel is one row.
   */
 object GraftExtensions {
 
@@ -71,12 +78,22 @@ object GraftExtensions {
       x => InterleaveBits(x.head, intLit(x(1)))))
 
   /** Install every kernel the session's registry lacks, as the
-    * extension injects it. Idempotent: a session built with the
-    * extension, or registered before, is left as it is.
+    * extension injects it, and [[SmallInputs]] as the session's last
+    * optimizer rule (`spark.experimental.extraOptimizations`, which
+    * runs after the batch the extension injects into; `ExtensionsSpec`
+    * holds the two placements to the same plans). Idempotent and
+    * safe from many threads: a session built with the extension, or
+    * registered before, is left as it is.
     */
   def register(spark: SparkSession): Unit = {
     val registry = spark.sessionState.functionRegistry
     kernels.filterNot(k => registry.functionExists(k.id))
       .foreach(k => registry.registerFunction(k.id, k.info, k.build))
+    val exp = spark.experimental
+    exp.synchronized {
+      if (!exp.extraOptimizations.contains(SmallInputs) &&
+          !spark.sessionState.optimizer.preCBORules.contains(SmallInputs))
+        exp.extraOptimizations :+= SmallInputs
+    }
   }
 }

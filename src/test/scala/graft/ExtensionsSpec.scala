@@ -2,18 +2,20 @@ package graft
 
 import java.io.File
 import java.nio.file.Files
+import java.util.concurrent.{Callable, Executors}
 
 import scala.jdk.CollectionConverters._
 
-import graft.plans.GraftExtensions
+import graft.plans.{GraftExtensions, SmallInputs}
 import org.apache.spark.sql.{AnalysisException, Row, SparkSession}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 
-/** The one SQL kernel table (`GraftExtensions.kernels`) and its two
-  * consumers: a session built with `withExtensions(new GraftExtensions)`
-  * gets every kernel by injection, any other session gets them from
-  * `Q`, which registers the table on the session a query runs on. A
-  * source guard keeps the table the only place a kernel is declared.
+/** The one SQL kernel table (`GraftExtensions.kernels`), the one
+  * planner rule ([[SmallInputs]]) and their two consumers: a session
+  * built with `withExtensions(new GraftExtensions)` gets both by
+  * injection, any other session gets them from `Q`, which registers
+  * them on the session a query runs on. A source guard keeps the table
+  * the only place a kernel is declared.
   */
 class ExtensionsSpec extends SparkSpec {
 
@@ -92,6 +94,34 @@ class ExtensionsSpec extends SparkSpec {
     intercept[AnalysisException](fresh.sql("SELECT simhash32(array('x'))").collect())
     Seq("q42_dedup_simhash", "q194_jl_projection_recall", "q291_span_excision")
       .foreach(n => assert(Q.byName(n).fn(fresh, sf()).collect().nonEmpty, n))
+  }
+
+  test("registering from four threads at once installs the rule once") {
+    val fresh = spark.newSession()
+    assert(fresh.experimental.extraOptimizations.isEmpty)
+    val pool = Executors.newFixedThreadPool(4)
+    try {
+      (1 to 4).map(_ => pool.submit(new Callable[Unit] {
+        def call(): Unit = (1 to 25).foreach(_ =>
+          Q.byName("q03_join_orders_customers").fn(fresh, sf()))
+      })).foreach(_.get())
+    } finally pool.shutdown()
+    assert(fresh.experimental.extraOptimizations == Seq(SmallInputs))
+  }
+
+  test("the injected rule and the registered one make the same plans") {
+    // the injected rule runs before the late batches (distinct
+    // rewrite, subquery rewrite), extraOptimizations after all of
+    // them: on the HiveQL queries the two must agree
+    val ext = SparkSession.builder().withExtensions(new GraftExtensions).create()
+    val reg = spark.newSession()
+    hiveQl.foreach { n =>
+      def plan(s: SparkSession) = planText(Q.byName(n).fn(s, sf()).queryExecution.optimizedPlan)
+      val injected = plan(ext)
+      assert(injected.contains("Repartition 1, false"), s"$n:\n$injected")
+      assert(injected == plan(reg), n)
+    }
+    assert(ext.experimental.extraOptimizations.isEmpty, "an injected session registers no copy")
   }
 
   test("kernels are declared and registered only through the table") {

@@ -41,6 +41,14 @@ class GraphDistSpec extends SparkSpec {
     assert(ConnectedComponents.run(edges).count() == 0)
   }
 
+  test("connected components: an empty edge scan returns an empty table") {
+    // unlike an empty local relation, the scan's pin has partitions,
+    // so a result read from the released pin would fail
+    val edges = Tables.t(spark, sf(), "orders").filter(col("o_totalprice") < 0)
+      .select(col("o_orderkey").as("a"), col("o_custkey").as("b"))
+    assert(ConnectedComponents.run(edges).count() == 0)
+  }
+
   test("BandCluster.assign: bypass-eligible docs, chains and band collisions") {
     import spark.implicits._
     // docs 1,2 share band 100 (direct dup pair, 1 is head);

@@ -1,5 +1,6 @@
 package graft
 
+import graft.plans.SmallInputs
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
@@ -9,6 +10,10 @@ import org.apache.spark.sql.functions.{col, explode, expr}
   * scale-up" checks: filters reach the parquet scan, projections
   * prune the read schema, small dims broadcast, top-k avoids a full
   * sort, identical self-join sides reuse one exchange.
+  *
+  * The fixtures are below the small-input gate ([[SmallInputs]]), so
+  * each scale-up pin plans with the rule taken out (`scaleTest`); the
+  * pins at the end hold the single-stage plans below the gate.
   */
 class PlanSpec extends SparkSpec {
 
@@ -20,16 +25,16 @@ class PlanSpec extends SparkSpec {
   }
 
   private def q(name: String): DataFrame =
-    Q.byName(name).fn(spark, sf())
+    Q.byName(name).build(spark, sf())
 
-  test("q01: filter is pushed to the parquet scan and columns are pruned") {
+  scaleTest("q01: filter is pushed to the parquet scan and columns are pruned") {
     val s = q("q01_pricing_summary").queryExecution.executedPlan.toString
     assert(s.contains("PushedFilters: [IsNotNull(l_shipdate), LessThanOrEqual(l_shipdate"),
       "shipdate filter must reach the scan")
     assert(!s.contains("l_orderkey"), "unused columns must not be read")
   }
 
-  test("q04: both small dims join as broadcasts") {
+  scaleTest("q04: both small dims join as broadcasts") {
     val df = q("q04_revenue_by_nation")
     df.collect() // finalize AQE
     val s = planString(df)
@@ -37,12 +42,12 @@ class PlanSpec extends SparkSpec {
       s"expected >=2 broadcast joins, plan:\n${s.take(2000)}")
   }
 
-  test("q25: global top-k plans as TakeOrderedAndProject (no full sort)") {
+  scaleTest("q25: global top-k plans as TakeOrderedAndProject (no full sort)") {
     val s = q("q25_topk_orders").queryExecution.executedPlan.toString
     assert(s.contains("TakeOrderedAndProject"), s.take(1000))
   }
 
-  test("q46: stop-list top-10 plans as TakeOrderedAndProject, no rank window") {
+  scaleTest("q46: stop-list top-10 plans as TakeOrderedAndProject, no rank window") {
     // the stop-list input is the corpus VOCABULARY — a partition-less
     // rank window here funnels it through one task at scale
     val s = q("q46_quality_score").queryExecution.executedPlan.toString
@@ -51,7 +56,7 @@ class PlanSpec extends SparkSpec {
       s"q46 must not plan a window:\n${s.take(2000)}")
   }
 
-  test("q40: self-join sides reuse one shuffle exchange") {
+  scaleTest("q40: self-join sides reuse one shuffle exchange") {
     val df = q("q40_dedup_jaccard_blocked")
     df.collect()
     val s = planString(df)
@@ -59,20 +64,20 @@ class PlanSpec extends SparkSpec {
       s"identical join sides should share an exchange:\n${s.take(2000)}")
   }
 
-  test("q34: window aggregation keeps partial aggregation map-side") {
+  scaleTest("q34: window aggregation keeps partial aggregation map-side") {
     val s = q("q34_tumbling_window").queryExecution.executedPlan.toString
     assert("HashAggregate".r.findAllIn(s).size >= 2,
       "expected partial+final HashAggregate pair")
   }
 
-  test("q76: salted aggregation plans as two HashAggregate phases") {
+  scaleTest("q76: salted aggregation plans as two HashAggregate phases") {
     val s = q("q76_salted_topk_suppliers").queryExecution.executedPlan.toString
     // (key,salt) partial+final then key partial+final = 4 HashAggregates
     assert("HashAggregate".r.findAllIn(s).size >= 4,
       s"expected two two-phase aggregations, plan:\n${s.take(2000)}")
   }
 
-  test("q71: generated date spine joins without shuffling the spine globally") {
+  scaleTest("q71: generated date spine joins without shuffling the spine globally") {
     val df = q("q71_date_spine")
     df.collect()
     val s = planString(df)
@@ -80,14 +85,14 @@ class PlanSpec extends SparkSpec {
       s"31-row spine should broadcast:\n${s.take(2000)}")
   }
 
-  test("q50: nearest-centroid argmin aggregates map-side (no window sort)") {
+  scaleTest("q50: nearest-centroid argmin aggregates map-side (no window sort)") {
     val s = q("q50_nearest_centroid_confusion").queryExecution.executedPlan.toString
     assert(!s.contains("RunningWindowFunction") && !s.contains("Window"),
       "argmin must be min(struct(...)), not a row_number window")
     assert(s.contains("vecdist2"), "distance must be the codegen'd expression")
   }
 
-  test("q41: verify stage uses the codegen'd merge-scan intersect") {
+  scaleTest("q41: verify stage uses the codegen'd merge-scan intersect") {
     val s = q("q41_dedup_minhash_lsh").queryExecution.executedPlan.toString
     assert(s.contains("sorted_intersect_count"), s.take(2000))
   }
@@ -133,15 +138,15 @@ class PlanSpec extends SparkSpec {
     } finally spark.listenerManager.unregister(listener)
   }
 
-  test("q42: every executed plan keeps simhash32 inside codegen") {
+  scaleTest("q42: every executed plan keeps simhash32 inside codegen") {
     assertKernelCodegenAcrossActions("q42_dedup_simhash", "simhash32")
   }
 
-  test("q47: every executed plan keeps shingle_fingerprint inside codegen") {
+  scaleTest("q47: every executed plan keeps shingle_fingerprint inside codegen") {
     assertKernelCodegenAcrossActions("q47_fingerprint_shingles", "shingle_fingerprint")
   }
 
-  test("q291: every executed plan keeps anchor_shingle_pos inside codegen") {
+  scaleTest("q291: every executed plan keeps anchor_shingle_pos inside codegen") {
     // the excision pipeline's kernel runs in both the spans-pin
     // materialization and the dup groupBy — the listener capture
     // covers both (the checkpointed pass would be invisible to a
@@ -149,13 +154,13 @@ class PlanSpec extends SparkSpec {
     assertKernelCodegenAcrossActions("q291_span_excision", "anchor_shingle_pos")
   }
 
-  test("q100: the checkpointed band pipeline keeps minhash_bands inside codegen") {
+  scaleTest("q100: the checkpointed band pipeline keeps minhash_bands inside codegen") {
     // q100's bands materialize inside BandCluster's checkpoint — the
     // exact blind spot the listener pin exists for
     assertKernelCodegenAcrossActions("q100_dedup_cc_clusters", "minhash_bands")
   }
 
-  test("q41: checkpoint-materialization plan runs minhash_bands inside codegen") {
+  scaleTest("q41: checkpoint-materialization plan runs minhash_bands inside codegen") {
     // q41's signature frame is localCheckpointed since r10, so the
     // kernel runs inside the checkpoint materialization and is
     // invisible in the FINAL plan. Capture the plans of every action
@@ -193,7 +198,7 @@ class PlanSpec extends SparkSpec {
     } finally spark.listenerManager.unregister(listener)
   }
 
-  test("q41/q42: signature kernels run inside whole-stage codegen") {
+  scaleTest("q41/q42: signature kernels run inside whole-stage codegen") {
     // the kernels exist to replace interpreted HOF lambdas — if a
     // plan change ever pushes them out of a WholeStageCodegen span
     // (e.g. behind a CodegenFallback wrapper) the win silently
@@ -218,7 +223,7 @@ class PlanSpec extends SparkSpec {
     }
   }
 
-  test("q101: packing cumsum windows are bucket-partitioned, never global") {
+  scaleTest("q101: packing cumsum windows are bucket-partitioned, never global") {
     val s = q("q101_pack_sequences").queryExecution.executedPlan.toString
     // every Window operator must carry a partition spec (__bkt);
     // an empty partitionBy would funnel the corpus through one task
@@ -229,7 +234,7 @@ class PlanSpec extends SparkSpec {
       s"no stage may collapse to a single partition:\n${s.take(2000)}")
   }
 
-  test("q103: benchmark fingerprint set probes as a broadcast join") {
+  scaleTest("q103: benchmark fingerprint set probes as a broadcast join") {
     val df = q("q103_contamination_check")
     df.collect()
     val s = planString(df)
@@ -237,7 +242,7 @@ class PlanSpec extends SparkSpec {
       s"tiny bench-shingle side must broadcast:\n${s.take(2000)}")
   }
 
-  test("q110: every dimension of the snowflake joins as a broadcast, part filter pushed") {
+  scaleTest("q110: every dimension of the snowflake joins as a broadcast, part filter pushed") {
     val df = q("q110_profit_by_nation_year")
     df.collect()
     val s = planString(df)
@@ -248,7 +253,7 @@ class PlanSpec extends SparkSpec {
       "part filter must reach the parquet scan")
   }
 
-  test("q113: bloom prescreen filters the fact scan BEFORE the semi join") {
+  scaleTest("q113: bloom prescreen filters the fact scan BEFORE the semi join") {
     val s = q("q113_bloom_join_prescreen").queryExecution.executedPlan.toString
     // the UDF filter must sit under the join, directly over the
     // lineitem scan — that is the entire point of the prescreen
@@ -258,7 +263,7 @@ class PlanSpec extends SparkSpec {
       s"bloom UDF filter must appear below the semi join:\n${s.take(2000)}")
   }
 
-  test("q116: kNN candidate pass broadcasts the query set (no candidate shuffle)") {
+  scaleTest("q116: kNN candidate pass broadcasts the query set (no candidate shuffle)") {
     val df = q("q116_knn_classify")
     df.collect()
     val s = planString(df)
@@ -266,7 +271,7 @@ class PlanSpec extends SparkSpec {
       s"query side must broadcast:\n${s.take(2000)}")
   }
 
-  test("q126: BM25 is one-pass — a single token explode, stats broadcast, no SMJ") {
+  scaleTest("q126: BM25 is one-pass — a single token explode, stats broadcast, no SMJ") {
     val df = q("q126_bm25_search")
     df.collect()
     val s = planString(df)
@@ -281,7 +286,7 @@ class PlanSpec extends SparkSpec {
       s"BM25 must not shuffle-join the corpus:\n${s.take(2000)}")
   }
 
-  test("q182: k-means assignment broadcasts centroids, never shuffle-joins vectors") {
+  scaleTest("q182: k-means assignment broadcasts centroids, never shuffle-joins vectors") {
     val df = q("q182_kmeans_lloyd")
     df.collect()
     val s = planString(df)
@@ -291,7 +296,7 @@ class PlanSpec extends SparkSpec {
       s"no vectors-side shuffle join in Lloyd assignment:\n${s.take(2000)}")
   }
 
-  test("q183: temperature-mix rate table broadcasts; the corpus never shuffle-joins") {
+  scaleTest("q183: temperature-mix rate table broadcasts; the corpus never shuffle-joins") {
     val df = q("q183_temperature_mix")
     df.collect()
     val s = planString(df)
@@ -299,7 +304,7 @@ class PlanSpec extends SparkSpec {
       s"per-language rates are O(#langs) rows and must broadcast:\n${s.take(2000)}")
   }
 
-  test("q130: DSIR ratio table joins as a broadcast (fixed 64 rows at any scale)") {
+  scaleTest("q130: DSIR ratio table joins as a broadcast (fixed 64 rows at any scale)") {
     val df = q("q130_dsir_importance")
     df.collect()
     val s = planString(df)
@@ -314,7 +319,7 @@ class PlanSpec extends SparkSpec {
   // overhead — there is no batch plan to pin; StreamingSpec covers
   // their results.)
 
-  test("q88: both snapshot windows share ONE user_id shuffle, no global sort spill") {
+  scaleTest("q88: both snapshot windows share ONE user_id shuffle, no global sort spill") {
     val df = q("q88_latest_snapshot")
     df.collect()
     val s = planString(df)
@@ -322,7 +327,7 @@ class PlanSpec extends SparkSpec {
       s"row_number and count windows must reuse one user_id exchange:\n${s.take(2500)}")
   }
 
-  test("q86: per-order algebraization holds — one window, broadcast supplier, top-k") {
+  scaleTest("q86: per-order algebraization holds — one window, broadcast supplier, top-k") {
     val df = q("q86_waiting_suppliers")
     df.collect()
     val s = planString(df)
@@ -339,14 +344,14 @@ class PlanSpec extends SparkSpec {
       s"LIMIT 10 must plan as top-k, not a full sort:\n${s.take(2500)}")
   }
 
-  test("q89: rollup plans as Expand + partial/final aggregate pair") {
+  scaleTest("q89: rollup plans as Expand + partial/final aggregate pair") {
     val s = q("q89_grouping_flags").queryExecution.executedPlan.toString
     assert(s.contains("Expand"), "rollup grouping sets must use Expand")
     assert("HashAggregate".r.findAllIn(s).size >= 2,
       s"expected partial+final HashAggregate:\n${s.take(2000)}")
   }
 
-  test("q66: IVF search broadcasts centroids and query set; distance is codegen'd") {
+  scaleTest("q66: IVF search broadcasts centroids and query set; distance is codegen'd") {
     val df = q("q66_ivf_search")
     df.collect()
     val s = planString(df)
@@ -355,7 +360,7 @@ class PlanSpec extends SparkSpec {
     assert(s.contains("vecdist2"), "distance must be the codegen'd kernel")
   }
 
-  test("q60: sketch aggregate never sees a multi-distinct Expand") {
+  scaleTest("q60: sketch aggregate never sees a multi-distinct Expand") {
     val df = q("q60_approx_aggregates")
     df.collect()
     val s = planString(df)
@@ -370,7 +375,7 @@ class PlanSpec extends SparkSpec {
       s"3-row aggregate joins must broadcast:\n${s.take(2500)}")
   }
 
-  test("q137: HAVING scalar subquery decorrelates (no per-group re-execution)") {
+  scaleTest("q137: HAVING scalar subquery decorrelates (no per-group re-execution)") {
     val df = q("q137_group_share_threshold")
     df.collect()
     val s = planString(df)
@@ -380,7 +385,7 @@ class PlanSpec extends SparkSpec {
       s"expected decorrelated aggregate pair:\n${s.take(2000)}")
   }
 
-  test("q205/q207: cut-point and centroid frames broadcast into the fact pass") {
+  scaleTest("q205/q207: cut-point and centroid frames broadcast into the fact pass") {
     for (name <- Seq("q205_label_outliers", "q207_winsorized_stats")) {
       val df = q(name)
       df.collect()
@@ -392,7 +397,7 @@ class PlanSpec extends SparkSpec {
     }
   }
 
-  test("q214: sweep-line cumsum plans with NO partition-less window over the data") {
+  scaleTest("q214: sweep-line cumsum plans with NO partition-less window over the data") {
     val df = q("q214_concurrency_sweep")
     df.collect()
     val s = planString(df)
@@ -404,7 +409,7 @@ class PlanSpec extends SparkSpec {
       s"q214 must not plan a partition-less window:\n${s.take(2500)}")
   }
 
-  test("q216: each BPE round applies its merge as a broadcast, never a shuffle join") {
+  scaleTest("q216: each BPE round applies its merge as a broadcast, never a shuffle join") {
     // the returned frame is five pinned 1-row rules (checkpoint
     // rotation — CorpusOps3.scala), so the plan to pin is the
     // in-round building block: the 1-row merge rule must reach the
@@ -429,7 +434,7 @@ class PlanSpec extends SparkSpec {
       full.take(2500))
   }
 
-  test("q199: exact top-20 inside the sketch audit plans as TakeOrdered, panel is bounded") {
+  scaleTest("q199: exact top-20 inside the sketch audit plans as TakeOrdered, panel is bounded") {
     // the returned frame is the 20-row driver-built panel — it must
     // be a LocalTableScan (nothing data-proportional flows out) …
     val s = q("q199_heavy_hitters_cms").queryExecution.executedPlan.toString
@@ -445,7 +450,7 @@ class PlanSpec extends SparkSpec {
       top.queryExecution.executedPlan.toString.take(1500))
   }
 
-  test("q232: top-100 rank windows run under WindowGroupLimit (partial top-k before the sort)") {
+  scaleTest("q232: top-100 rank windows run under WindowGroupLimit (partial top-k before the sort)") {
     // the per-query rank windows would be the scale hazard of RRF —
     // InferWindowGroupLimit turns the rn <= 100 filter into a
     // per-partition partial top-k BEFORE the window sort, so each
@@ -458,7 +463,7 @@ class PlanSpec extends SparkSpec {
       s"rank filters must push a group limit under the window:\n${s.take(3000)}")
   }
 
-  test("q142: each PageRank round is ONE edge-sized equi-join plus one node-sized contrib join") {
+  scaleTest("q142: each PageRank round is ONE edge-sized equi-join plus one node-sized contrib join") {
     // the r10 rework keeps the pinned edge table at two LONG columns
     // (no strings, no deg) and folds pr/deg into a node-sized contrib
     // table per round: the unrolled 3-round plan must contain exactly
@@ -528,7 +533,7 @@ class PlanSpec extends SparkSpec {
     }
   }
 
-  test("q235: multi-probe LSH candidates join on bucket EQUALITY (hash join, no nested loop)") {
+  scaleTest("q235: multi-probe LSH candidates join on bucket EQUALITY (hash join, no nested loop)") {
     // the multi-probe expansion lives on the TINY query side exactly
     // so the corpus-side candidate join stays a broadcast HASH join
     // on the bucket key — a hamming-distance join predicate would
@@ -546,7 +551,7 @@ class PlanSpec extends SparkSpec {
       s"candidate rank filters must push a group limit under the window:\n${s.take(3000)}")
   }
 
-  test("q229: bucketed tables join with ZERO exchanges (SMB co-location)") {
+  scaleTest("q229: bucketed tables join with ZERO exchanges (SMB co-location)") {
     // run the operator once so both bucketed tables exist, then pin
     // the join plan with broadcast disabled: bucket specs must match
     // and neither side may shuffle — the entire point of paying the
@@ -569,7 +574,7 @@ class PlanSpec extends SparkSpec {
     } finally conf.set("spark.sql.autoBroadcastJoinThreshold", saved)
   }
 
-  test("C9: ANALYZE column stats flip a shuffle join to broadcast (CBO in the plan)") {
+  scaleTest("C9: ANALYZE column stats flip a shuffle join to broadcast (CBO in the plan)") {
     // the (D)-surface promise of Warehouse.analyze is not "stats are
     // recorded" but "the optimizer USES them": without stats the
     // filtered dimension's size estimate is its on-disk bytes (281 KB
@@ -609,7 +614,7 @@ class PlanSpec extends SparkSpec {
     } finally saved.foreach { case (k, v) => conf.set(k, v) }
   }
 
-  test("q246: the hot-key frame is a TakeOrdered — bounded broadcast by construction") {
+  scaleTest("q246: the hot-key frame is a TakeOrdered — bounded broadcast by construction") {
     // ADVICE r7 #2: an absolute count cut grows with the key space;
     // the top-K form plans as TakeOrderedAndProject, so the broadcast
     // side is <= K rows at ANY corpus size — visible in the plan
@@ -620,7 +625,7 @@ class PlanSpec extends SparkSpec {
       "hot route must broadcast the bounded dim")
   }
 
-  test("q258: all four prefix cosines come from ONE probe-corpus scoring pass") {
+  scaleTest("q258: all four prefix cosines come from ONE probe-corpus scoring pass") {
     // the audit's cost model: prefix dots share the scan — a plan
     // with one join per prefix length would scale 4x worse
     val s = planString(q("q258_matryoshka_prefix_recall"))
@@ -636,7 +641,7 @@ class PlanSpec extends SparkSpec {
       s"all four prefix audits must read the checkpointed scoring pass, found $rddScans scans")
   }
 
-  test("q266: CDC chunking generates BEFORE any exchange (no token-level shuffle)") {
+  scaleTest("q266: CDC chunking generates BEFORE any exchange (no token-level shuffle)") {
     // the whole point of row-local HOF chunking: the only rows that
     // ever shuffle are (lang, 60-bit hash, nc) chunk rows, never
     // token-level rows. In the plan: the Generate (explode of the
@@ -661,7 +666,7 @@ class PlanSpec extends SparkSpec {
       s"expected partial+final HashAggregate pairs:\n${s.take(1500)}")
   }
 
-  test("q267: the top-k merge never joins — two window passes, no fact re-scan") {
+  scaleTest("q267: the top-k merge never joins — two window passes, no fact re-scan") {
     val s = planString(q("q267_topk_view_maintenance"))
     assert(!s.contains("Join"), // refresh = union + re-rank, join-free
       s"top-k IVM must not join:\n${s.take(1500)}")
@@ -671,7 +676,7 @@ class PlanSpec extends SparkSpec {
       s"rank filter must push down as WindowGroupLimit:\n${s.take(1500)}")
   }
 
-  test("q268: probe joins broadcast the 20-query side; posting list never re-shuffles") {
+  scaleTest("q268: probe joins broadcast the 20-query side; posting list never re-shuffles") {
     val df = q("q268_filtered_ivf_search")
     df.collect()
     val s = planString(df)
@@ -684,7 +689,7 @@ class PlanSpec extends SparkSpec {
       s"posting list/probe/exact sides must share the checkpointed index:\n${s.take(1500)}")
   }
 
-  test("q269: the stored session view materializes once and feeds both refresh paths") {
+  scaleTest("q269: the stored session view materializes once and feeds both refresh paths") {
     val df = q("q269_session_view_maintenance")
     df.collect()
     val s = planString(df)
@@ -694,5 +699,43 @@ class PlanSpec extends SparkSpec {
       s"both refresh branches must read the stored view:\n${s.take(1500)}")
     assert(!s.contains("SortMergeJoin"),
       s"affected-user routing must stay broadcast-sized:\n${s.take(1500)}")
+  }
+
+  // --- below the gate: every fixture is, so these run with the rule
+
+  test("below the gate the eight HiveQL queries plan with no exchange and no broadcast") {
+    hiveQl.foreach { n =>
+      val df = Q.byName(n).fn(spark, sf("sf0.01"))
+      df.collect() // finalize AQE
+      val s = planString(df)
+      assert(!s.contains("Exchange") && !s.contains("Broadcast"), s"$n:\n${s.take(3000)}")
+      assert(s.contains("Coalesce 1"), s"$n:\n${s.take(3000)}")
+    }
+  }
+
+  test("below the gate q02's scan keeps its pushed filters and pruned read schema") {
+    val df = Q.byName("q02_filter_predicates").fn(spark, sf("sf0.01"))
+    df.collect()
+    val s = planString(df)
+    assert(s.contains("PushedFilters: [Or(And(And(And(In(o_orderstatus, [F,O])"),
+      s"the predicate must reach the scan:\n$s")
+    assert(s.contains("ReadSchema: struct<o_orderkey:bigint,o_orderstatus:string," +
+      "o_totalprice:double,o_orderpriority:string>"), s"only the four read columns:\n$s")
+  }
+
+  test("above the gate the rule leaves the plan as it is (sf0.1 lineitem)") {
+    // what withoutSmallInputs stands in for: a query over an input the
+    // gate keeps out plans the same with the rule and without it
+    def plans(df: => DataFrame) = {
+      val qe = df.queryExecution
+      (planText(qe.optimizedPlan), planText(qe.sparkPlan))
+    }
+    Seq("q01_pricing_summary", "q16_distinct_aggregates").foreach { n =>
+      val build = Q.byName(n).build
+      val on = plans(build(spark, sf("sf0.1")))
+      val off = withoutSmallInputs(plans(build(spark, sf("sf0.1"))))
+      assert(on == off, n)
+      assert(!on._1.contains("Repartition 1, false"), s"$n:\n${on._1}")
+    }
   }
 }

@@ -4,11 +4,13 @@ import graft.functions.Skew
 import org.apache.spark.sql.functions._
 
 /** Scale-path mechanics: bucketed co-located joins (no shuffle at
-  * join time) and salted aggregation for skewed keys.
+  * join time) and salted aggregation for skewed keys. The plan checks
+  * plan with the small-input rule out (`scaleTest`): the fixtures are
+  * below its gate.
   */
 class ScaleSpec extends SparkSpec {
 
-  test("bucketed tables join without a shuffle exchange") {
+  scaleTest("bucketed tables join without a shuffle exchange") {
     val o = Tables.t(spark, sf(), "orders")
     val c = Tables.t(spark, sf(), "customer")
     spark.sql("DROP TABLE IF EXISTS orders_b")
@@ -37,7 +39,7 @@ class ScaleSpec extends SparkSpec {
     }
   }
 
-  test("AQE coalesces undersized shuffle partitions at runtime") {
+  scaleTest("AQE coalesces undersized shuffle partitions at runtime") {
     val df = Tables.t(spark, sf(), "orders")
       .groupBy("o_orderstatus").agg(count(lit(1)).as("n"))
     df.collect() // finalize the adaptive plan
@@ -73,7 +75,7 @@ class ScaleSpec extends SparkSpec {
     assert(salted == plain)
   }
 
-  test("AQE skew-join actually splits a skewed partition (plan-level proof)") {
+  scaleTest("AQE skew-join actually splits a skewed partition (plan-level proof)") {
     // a 90%-hot key: once shuffled for a sort-merge join, one reducer
     // partition is ~180k rows while the median is ~20 — exactly the
     // shape OptimizeSkewedJoin exists for. Thresholds are lowered to
@@ -117,8 +119,8 @@ class ScaleSpec extends SparkSpec {
     }
   }
 
-  test("binned interval join is an equi-join (no nested-loop) and equals the theta join") {
-    val binned = queries.Relational5.q135.fn(spark, sf())
+  scaleTest("binned interval join is an equi-join (no nested-loop) and equals the theta join") {
+    val binned = queries.Relational5.q135.build(spark, sf())
     val plan = binned.queryExecution.executedPlan.toString
     assert(!plan.contains("BroadcastNestedLoopJoin"),
       s"binned interval join fell back to a nested loop:\n$plan")
@@ -180,7 +182,7 @@ class ScaleSpec extends SparkSpec {
         s"copy 64 must be the NEGATED base vector (cosine -1) at $i")
   }
 
-  test("SemDeDup.cellAssign switches to the two-level quantizer above the seed cap") {
+  scaleTest("SemDeDup.cellAssign switches to the two-level quantizer above the seed cap") {
     import graft.pipeline.SemDeDup
     val e = Tables.t(spark, sf(), "embeddings").select("vec_id", "embedding")
     val st = SemDeDup.steps(e)

@@ -94,7 +94,7 @@ class WarehouseSpec extends SparkSpec {
     assert(!wh.exists("cache-dash"))
   }
 
-  test("createBucketed tables join with no shuffle on the bucket key") {
+  scaleTest("createBucketed tables join with no shuffle on the bucket key") {
     val o = Tables.t(spark, sf(), "orders")
     val c = Tables.t(spark, sf(), "customer")
     wh.drop("orders_wb"); wh.drop("customer_wb")
@@ -339,7 +339,7 @@ class WarehouseSpec extends SparkSpec {
     * runtime re-planning (at 100 TB the compile-time choice is what
     * saves the doomed shuffle from ever starting).
     */
-  test("ANALYZE column stats flip a filtered-dim join from shuffle to broadcast") {
+  scaleTest("ANALYZE column stats flip a filtered-dim join from shuffle to broadcast") {
     val dir = Files.createTempDirectory("graft-cbo").toFile.getAbsolutePath
     // ~2000 rows of incompressible 32-char payload → parquet well
     // above the 32 KB threshold below
