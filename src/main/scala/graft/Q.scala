@@ -68,8 +68,8 @@ object Q {
     * stays tested.
     */
   def baselines: Vector[Q] = Vector(
-    queries.TextOps.q40, queries.VectorOps.q67, queries.VectorOps.q139,
-    queries.CurationOps8.q237)
+    queries.TextDedup.q40, queries.Vectors.q67, queries.Vectors.q139,
+    queries.Aggregates.q237)
 
   /** Lookup across registry + demoted baselines (specs use this). */
   def byName(name: String): Q =
@@ -79,63 +79,21 @@ object Q {
   /** All query modules, in SURVEY.md §2 category order. */
   def registry: Vector[Q] =
     queries.Relational.all ++
-      queries.Relational2.all ++
-      queries.Relational3.all ++
       queries.Aggregates.all ++
-      queries.Analytics.all ++
       queries.Scalars.all ++
       queries.Events.all ++
-      queries.TextOps.all ++
-      queries.VectorOps.all ++
-      queries.MultimodalOps.all ++
-      queries.StreamingOps.all ++
-      queries.Extended.all ++
-      queries.PipelineOps.all ++
-      queries.CorpusOps.all ++
-      queries.Relational4.all ++
-      queries.CorpusOps2.all ++
-      queries.SearchOps.all ++
-      queries.Relational5.all ++
-      queries.GraphOps.all ++
-      queries.PipelineOps2.all ++
-      queries.Analytics2.all ++
-      queries.Scalars2.all ++
-      queries.CurationOps.all ++
-      queries.CurationOps2.all ++
-      queries.CurationOps3.all ++
-      queries.CurationOps4.all ++
-      queries.CurationOps5.all ++
-      queries.CurationOps6.all ++
-      queries.Analytics3.all ++
-      queries.CorpusOps3.all ++
-      queries.PipelineOps3.all ++
-      queries.StreamingOps2.all ++
-      queries.GraphOps2.all ++
-      queries.Analytics4.all ++
-      queries.CurationOps7.all ++
-      queries.StorageOps.all ++
-      queries.CorpusOps4.all ++
-      queries.SearchOps2.all ++
-      queries.CurationOps8.all ++
-      queries.CurationOps9.all ++
-      queries.WarehouseOps.all ++
-      queries.SearchOps3.all ++
-      queries.Analytics5.all ++
-      queries.SketchOps.all ++
-      queries.ReleaseOps.all ++
-      queries.CorpusOps5.all ++
-      queries.IvmOps.all ++
-      queries.SearchOps4.all ++
-      queries.StorageOps2.all ++
-      queries.GraphOps3.all ++
-      queries.CurationOps10.all ++
-      queries.SearchOps5.all ++
-      queries.StorageOps3.all ++
-      queries.CurationOps11.all ++
-      queries.SearchOps6.all ++
-      queries.GraphOps4.all ++
-      queries.SearchOps7.all ++
-      queries.CurationOps12.all ++
-      queries.CurationOps13.all ++
-      queries.CurationOps14.all
+      queries.Storage.all ++
+      queries.Sketches.all ++
+      queries.Analytics.all ++
+      queries.Statistics.all ++
+      queries.Graph.all ++
+      queries.TextDedup.all ++
+      queries.Vectors.all ++
+      queries.Embeddings.all ++
+      queries.Retrieval.all ++
+      queries.Tokenizers.all ++
+      queries.Multimodal.all ++
+      queries.Pipeline.all ++
+      queries.Quality.all ++
+      queries.Privacy.all
 }

@@ -1,15 +1,227 @@
 package graft.queries
 
 import graft.{Q, Tables}
-import graft.functions.{Portable => P}
+import graft.functions.{Dist, GeoMean, Portable => P, VectorFunctions => V}
 import graft.stats.SchemaPreview
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
 
-/** SURVEY.md §2.4 — grouped aggregation, enhanced aggregates
-  * (ROLLUP/CUBE/GROUPING SETS), HAVING, distinct aggregates,
-  * collect_set, percentiles, and the schema-preview column stats.
+/** Aggregates and windows (SURVEY.md §2.4 aggregation, §2.5 window
+  * functions, §2.6 sorts and top-k): rollup, cube and grouping sets,
+  * distinct and ordered-set aggregates, percentiles and modes, window
+  * frames (rows, range, interval), ranks and shares, approximate
+  * aggregates, and the demoted decimal-output canary (q237).
   */
 object Aggregates {
+
+  /** nth_value over a full frame + first/last in one window. */
+  val q69 = Q(
+    "q69_window_nth_value",
+    (s, dir) => {
+      val w = Window
+        .partitionBy(col("c_mktsegment"))
+        .orderBy(col("c_acctbal").desc, col("c_custkey"))
+        .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+      Tables.t(s, dir, "customer")
+        .select(col("c_mktsegment"), col("c_custkey"), col("c_acctbal"))
+        .withColumn("top1_bal", first(col("c_acctbal")).over(w))
+        .withColumn("top2_bal", nth_value(col("c_acctbal"), 2).over(w))
+        .withColumn("bottom_bal", last(col("c_acctbal")).over(w))
+        .filter(col("c_custkey") <= 200)
+        .orderBy("c_mktsegment", "c_custkey")
+    },
+    Some("""SELECT c_mktsegment, c_custkey, c_acctbal,
+      |  first_value(c_acctbal) OVER w AS top1_bal,
+      |  nth_value(c_acctbal, 2) OVER w AS top2_bal,
+      |  last_value(c_acctbal) OVER w AS bottom_bal
+      |FROM customer
+      |WINDOW w AS (PARTITION BY c_mktsegment
+      |  ORDER BY c_acctbal DESC, c_custkey
+      |  ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
+      |QUALIFY c_custkey <= 200
+      |ORDER BY c_mktsegment, c_custkey""".stripMargin))
+
+  /* Further (D)-surface OLAP idioms: generated date spines with
+    * zero-filled outer joins, skew-salted two-phase aggregation, and
+    * argmax/argmin (max_by/min_by) aggregates.
+    */
+
+  /** Skew-salted two-phase aggregation as a first-class query: phase 1
+    * aggregates (key, salt) so a hot supplier key spreads over 8
+    * reducers, phase 2 merges partials per key. The oracle is the
+    * PLAIN single-phase GROUP BY — proving salting is a pure execution
+    * strategy with identical semantics. Summed measures are
+    * integer-valued doubles, so re-associating the addition is exact.
+    */
+  val q76 = Q(
+    "q76_salted_topk_suppliers",
+    (s, dir) => {
+      Tables.t(s, dir, "lineitem")
+        .withColumn("salt", pmod(col("l_orderkey"), lit(8)))
+        .groupBy("l_suppkey", "salt")
+        .agg(sum("l_quantity").as("q"), count(lit(1)).as("c"))
+        .groupBy("l_suppkey")
+        .agg(round(sum("q"), 2).as("sum_qty"), sum("c").cast("long").as("n_items"))
+        .orderBy(col("sum_qty").desc, col("l_suppkey"))
+        .limit(25)
+    },
+    Some("""SELECT l_suppkey, round(sum(l_quantity), 2) AS sum_qty,
+      |  count(*) AS n_items
+      |FROM lineitem
+      |GROUP BY l_suppkey
+      |ORDER BY sum_qty DESC, l_suppkey
+      |LIMIT 25""".stripMargin))
+
+  /** Argmax/argmin aggregates (max_by/min_by ≡ DuckDB arg_max/arg_min):
+    * richest and poorest customer per nation in ONE aggregation pass —
+    * no row_number window, no self-join. Ties are broken by packing
+    * (balance, custkey) into a single ordered key: acctbal has 2
+    * decimals, so balance*100 is integral and the pack is lossless.
+    */
+  val q77 = Q(
+    "q77_argmax_customer",
+    (s, dir) => {
+      val ord = (expr("CAST(round(c_acctbal * 100) AS BIGINT)") * lit(100000L)
+        + col("c_custkey")).as("ord")
+      Tables.t(s, dir, "customer")
+        .select(col("c_nationkey"), col("c_name"), col("c_acctbal"), ord)
+        .groupBy("c_nationkey")
+        .agg(
+          max_by(col("c_name"), col("ord")).as("richest"),
+          round(max(col("c_acctbal")), 2).as("max_bal"),
+          min_by(col("c_name"), col("ord")).as("poorest"),
+          round(min(col("c_acctbal")), 2).as("min_bal"))
+        .orderBy("c_nationkey")
+    },
+    Some("""SELECT c_nationkey,
+      |  arg_max(c_name, ord) AS richest, round(max(c_acctbal), 2) AS max_bal,
+      |  arg_min(c_name, ord) AS poorest, round(min(c_acctbal), 2) AS min_bal
+      |FROM (SELECT c_nationkey, c_name, c_acctbal,
+      |        CAST(round(c_acctbal * 100) AS BIGINT) * 100000 + c_custkey AS ord
+      |      FROM customer)
+      |GROUP BY c_nationkey
+      |ORDER BY c_nationkey""".stripMargin))
+
+  /** Ratio-to-report: each nation's share of global revenue via a
+    * whole-frame window sum OVER the 25-row aggregate — the window
+    * runs over the tiny rollup, never the fact table.
+    */
+  val q87 = Q(
+    "q87_revenue_share",
+    (s, dir) => {
+      Tables.t(s, dir, "orders")
+        .join(Tables.t(s, dir, "customer"), col("o_custkey") === col("c_custkey"))
+        .join(broadcast(Tables.t(s, dir, "nation")),
+          col("c_nationkey") === col("n_nationkey"))
+        .groupBy("n_name")
+        .agg(P.moneySum(col("o_totalprice")).as("rev"))
+        .withColumn("share",
+          round(col("rev") / sum("rev").over(Window.partitionBy()), 6))
+        .orderBy("n_name")
+    },
+    Some(s"""SELECT n_name, rev, round(rev / sum(rev) OVER (), 6) AS share
+      |FROM (
+      |  SELECT n_name, ${P.moneySumSql("o_totalprice")} AS rev
+      |  FROM orders
+      |  JOIN customer ON o_custkey = c_custkey
+      |  JOIN nation ON c_nationkey = n_nationkey
+      |  GROUP BY n_name)
+      |ORDER BY n_name""".stripMargin))
+
+  /** grouping() markers on a ROLLUP — Hive's grouping__id surface:
+    * subtotal rows are distinguishable from genuine NULL group keys
+    * by the flag, not by guessing.
+    */
+  val q89 = Q(
+    "q89_grouping_flags",
+    (s, dir) => {
+      Tables.t(s, dir, "lineitem")
+        .rollup("l_returnflag", "l_linestatus")
+        .agg(
+          round(sum("l_quantity"), 2).as("sum_qty"),
+          count(lit(1)).as("n"),
+          grouping(col("l_returnflag")).cast("int").as("g_flag"),
+          grouping(col("l_linestatus")).cast("int").as("g_status"))
+        .orderBy(col("g_flag"), col("g_status"),
+          col("l_returnflag"), col("l_linestatus"))
+    },
+    Some("""SELECT l_returnflag, l_linestatus,
+      |  round(sum(l_quantity), 2) AS sum_qty, count(*) AS n,
+      |  CAST(GROUPING(l_returnflag) AS INTEGER) AS g_flag,
+      |  CAST(GROUPING(l_linestatus) AS INTEGER) AS g_status
+      |FROM lineitem
+      |GROUP BY ROLLUP (l_returnflag, l_linestatus)
+      |ORDER BY g_flag, g_status,
+      |  l_returnflag NULLS FIRST, l_linestatus NULLS FIRST""".stripMargin))
+
+  /** Month-over-month revenue growth: lag over the monthly rollup —
+    * the reporting staple where the window runs over the aggregated
+    * series (84 rows), never the fact table. Growth divides two
+    * already-rounded month totals, so it's deterministic.
+    */
+  val q95 = Q(
+    "q95_monthly_growth",
+    (s, dir) => {
+      Tables.t(s, dir, "orders")
+        .groupBy(
+          year(col("o_orderdate")).cast("int").as("y"),
+          month(col("o_orderdate")).cast("int").as("m"))
+        .agg(P.moneySum(col("o_totalprice")).as("rev"))
+        .withColumn("prev", lag("rev", 1).over(
+          Window.orderBy(col("y"), col("m"))))
+        .withColumn("growth",
+          round((col("rev") - col("prev")) / col("prev"), 6))
+        .orderBy("y", "m")
+    },
+    Some(s"""SELECT y, m, rev,
+      |  lag(rev, 1) OVER (ORDER BY y, m) AS prev,
+      |  round((rev - lag(rev, 1) OVER (ORDER BY y, m)) /
+      |        lag(rev, 1) OVER (ORDER BY y, m), 6) AS growth
+      |FROM (
+      |  SELECT CAST(year(o_orderdate) AS INTEGER) AS y,
+      |    CAST(month(o_orderdate) AS INTEGER) AS m,
+      |    ${P.moneySumSql("o_totalprice")} AS rev
+      |  FROM orders GROUP BY 1, 2)
+      |ORDER BY y, m""".stripMargin))
+
+  /** Global ORDER BY rank over every customer's lifetime spend —
+    * the full-table ranking a leaderboard/export needs. Ranks come
+    * from [[graft.functions.Dist.globalRank]]: range-bucketed
+    * two-phase ranking (per-bucket row_number + broadcast prefix
+    * offsets), because the naive `row_number() OVER (ORDER BY …)`
+    * with no partition key funnels the whole table through one task —
+    * the q101 cumsum trap in rank form.
+    */
+  val q106 = Q(
+    "q106_global_spend_rank",
+    (s, dir) => {
+      // Sum in decimal so customers with identical order multisets
+      // (guaranteed by the key-shifted sf1 shards) are EXACT ties that
+      // the custkey tie-break resolves identically in both engines; a
+      // double sum's fold order decides such near-ties differently in
+      // Spark vs the oracle.
+      val spend = Tables.t(s, dir, "orders")
+        .groupBy(col("o_custkey").as("custkey"))
+        .agg(sum(col("o_totalprice").cast("decimal(18,2)")).as("total"))
+      graft.functions.Dist.globalRank(
+          spend, Seq(col("total").desc, col("custkey")), "rnk",
+          s.sparkContext.defaultParallelism)
+        .select(col("custkey"), col("total").cast("double").as("total"), col("rnk"))
+        .orderBy("rnk")
+    },
+    Some("""SELECT o_custkey AS custkey, CAST(total AS DOUBLE) AS total,
+      |  CAST(row_number() OVER (ORDER BY total DESC, o_custkey) AS BIGINT) AS rnk
+      |FROM (
+      |  SELECT o_custkey, sum(CAST(o_totalprice AS DECIMAL(18,2))) AS total
+      |  FROM orders GROUP BY 1)
+      |ORDER BY rnk""".stripMargin))
+
+  /* SURVEY.md §2.4 — grouped aggregation, enhanced aggregates
+    * (ROLLUP/CUBE/GROUPING SETS), HAVING, distinct aggregates,
+    * collect_set, percentiles, and the schema-preview column stats.
+    */
 
   /** ROLLUP with grouping id. Catalyst plans this as Expand + one
     * hash aggregate — the rollup does NOT rescan the input.
@@ -189,5 +401,454 @@ object Aggregates {
       |GROUP BY r_name
       |ORDER BY r_name""".stripMargin))
 
-  val all: Vector[Q] = Vector(q13, q14, q15, q16, q17, q18, q19, q20, q96b)
+  /* SURVEY.md §2.5 (window functions) + §2.6 (sorts/limits/top-k).
+    *
+    * Every window has a total tiebreaker in its ORDER BY so ranks and
+    * frame contents are deterministic (oracle requirement). Global
+    * top-k deliberately goes through orderBy(...).limit(k) so Catalyst
+    * plans TakeOrderedAndProject — no full sort at scale.
+    */
+
+  /** Ranking trio per group, top-3 rows kept. */
+  val q21 = Q(
+    "q21_window_rank_top_customers",
+    (s, dir) => {
+      val w = Window.partitionBy(col("c_nationkey"))
+        .orderBy(col("c_acctbal").desc, col("c_custkey"))
+      Tables.t(s, dir, "customer")
+        .select(col("c_nationkey"), col("c_custkey"), col("c_acctbal"))
+        .withColumn("rn", row_number().over(w))
+        .withColumn("rnk", rank().over(w))
+        .withColumn("drnk", dense_rank().over(w))
+        .filter(col("rn") <= 3)
+        .orderBy("c_nationkey", "rn")
+    },
+    Some("""SELECT c_nationkey, c_custkey, c_acctbal,
+      |  CAST(rn AS INTEGER) AS rn, CAST(rnk AS INTEGER) AS rnk,
+      |  CAST(drnk AS INTEGER) AS drnk
+      |FROM (
+      |  SELECT c_nationkey, c_custkey, c_acctbal,
+      |    row_number() OVER w AS rn, rank() OVER w AS rnk,
+      |    dense_rank() OVER w AS drnk
+      |  FROM customer
+      |  WINDOW w AS (PARTITION BY c_nationkey ORDER BY c_acctbal DESC, c_custkey))
+      |WHERE rn <= 3
+      |ORDER BY c_nationkey, rn""".stripMargin))
+
+  /** lag / lead / first_value + day gaps between consecutive orders. */
+  val q22 = Q(
+    "q22_window_lag_order_gaps",
+    (s, dir) => {
+      val w = Window.partitionBy(col("o_custkey"))
+        .orderBy(col("o_orderdate"), col("o_orderkey"))
+      Tables.t(s, dir, "orders")
+        .select(col("o_custkey"), col("o_orderkey"), col("o_orderdate"), col("o_totalprice"))
+        .withColumn("prev_price", lag("o_totalprice", 1).over(w))
+        .withColumn("next_price", lead("o_totalprice", 1).over(w))
+        .withColumn("first_price", first("o_totalprice").over(w))
+        .withColumn("gap_days", datediff(col("o_orderdate"), lag("o_orderdate", 1).over(w)))
+        .select(
+          col("o_custkey"), col("o_orderkey"), col("o_totalprice"),
+          col("prev_price"), col("next_price"), col("first_price"), col("gap_days"))
+        .orderBy("o_custkey", "o_orderkey")
+    },
+    Some("""SELECT o_custkey, o_orderkey, o_totalprice,
+      |  lag(o_totalprice, 1) OVER w AS prev_price,
+      |  lead(o_totalprice, 1) OVER w AS next_price,
+      |  first_value(o_totalprice) OVER w AS first_price,
+      |  CAST(date_diff('day', lag(o_orderdate, 1) OVER w, o_orderdate) AS INTEGER) AS gap_days
+      |FROM orders
+      |WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
+      |ORDER BY o_custkey, o_orderkey""".stripMargin))
+
+  /** ROWS frames: running total + 3-row moving average per supplier. */
+  val q23 = Q(
+    "q23_window_frames_running",
+    (s, dir) => {
+      val w = Window.partitionBy(col("l_suppkey"))
+        .orderBy(col("l_shipdate"), col("l_orderkey"), col("l_linenumber"))
+      Tables.t(s, dir, "lineitem")
+        .filter(col("l_suppkey") <= 20)
+        .withColumn("running_qty",
+          sum("l_quantity").over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+        .withColumn("avg3",
+          round(avg("l_quantity").over(w.rowsBetween(-2, 0)), 6))
+        .select(
+          col("l_suppkey"), col("l_orderkey"), col("l_linenumber"),
+          date_format(col("l_shipdate"), "yyyy-MM-dd").as("ship_day"),
+          col("l_quantity"), col("running_qty"), col("avg3"))
+        .orderBy("l_suppkey", "ship_day", "l_orderkey", "l_linenumber")
+    },
+    Some("""SELECT l_suppkey, l_orderkey, l_linenumber,
+      |  strftime(l_shipdate, '%Y-%m-%d') AS ship_day, l_quantity,
+      |  sum(l_quantity) OVER (w ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS running_qty,
+      |  round(avg(l_quantity) OVER (w ROWS BETWEEN 2 PRECEDING AND CURRENT ROW), 6) AS avg3
+      |FROM lineitem
+      |WHERE l_suppkey <= 20
+      |WINDOW w AS (PARTITION BY l_suppkey ORDER BY l_shipdate, l_orderkey, l_linenumber)
+      |ORDER BY l_suppkey, ship_day, l_orderkey, l_linenumber""".stripMargin))
+
+  /** RANGE frame over a numeric ordering: count of orders priced
+    * within $1000 below each order, per status.
+    */
+  val q24 = Q(
+    "q24_window_range_frame",
+    (s, dir) => {
+      val w = Window.partitionBy(col("o_orderstatus"))
+        .orderBy(col("price_floor"))
+        .rangeBetween(-1000L, 0L)
+      Tables.t(s, dir, "orders")
+        .withColumn("price_floor", floor(col("o_totalprice")))
+        .withColumn("n_similar", count(lit(1)).over(w))
+        .select(col("o_orderkey"), col("o_orderstatus"), col("price_floor"), col("n_similar"))
+        .orderBy("o_orderkey")
+    },
+    Some("""SELECT o_orderkey, o_orderstatus, price_floor, count(*) OVER (
+      |    PARTITION BY o_orderstatus ORDER BY price_floor
+      |    RANGE BETWEEN 1000 PRECEDING AND CURRENT ROW) AS n_similar
+      |FROM (SELECT o_orderkey, o_orderstatus,
+      |        CAST(floor(o_totalprice) AS BIGINT) AS price_floor FROM orders)
+      |ORDER BY o_orderkey""".stripMargin))
+
+  /** Global top-k — plans as TakeOrderedAndProject (no full sort). */
+  val q25 = Q(
+    "q25_topk_orders",
+    (s, dir) => {
+      Tables.t(s, dir, "orders")
+        .orderBy(col("o_totalprice").desc, col("o_orderkey"))
+        .limit(20)
+        .select("o_orderkey", "o_custkey", "o_totalprice")
+    },
+    Some("""SELECT o_orderkey, o_custkey, o_totalprice
+      |FROM orders
+      |ORDER BY o_totalprice DESC, o_orderkey
+      |LIMIT 20""".stripMargin))
+
+  /** Per-group top-k via row_number — the scalable pattern (single
+    * shuffle on the group key, no global sort).
+    */
+  val q26 = Q(
+    "q26_topk_parts_per_brand",
+    (s, dir) => {
+      val w = Window.partitionBy(col("p_brand"))
+        .orderBy(col("p_retailprice").desc, col("p_partkey"))
+      Tables.t(s, dir, "part")
+        .select(col("p_brand"), col("p_partkey"), col("p_retailprice"))
+        .withColumn("rn", row_number().over(w))
+        .filter(col("rn") <= 2)
+        .orderBy("p_brand", "rn")
+    },
+    Some("""SELECT p_brand, p_partkey, p_retailprice, CAST(rn AS INTEGER) AS rn
+      |FROM (SELECT p_brand, p_partkey, p_retailprice,
+      |        row_number() OVER (PARTITION BY p_brand
+      |          ORDER BY p_retailprice DESC, p_partkey) AS rn
+      |      FROM part)
+      |WHERE rn <= 2
+      |ORDER BY p_brand, rn""".stripMargin))
+
+  /** ntile / percent_rank / cume_dist distribution functions. */
+  val q27 = Q(
+    "q27_window_distribution",
+    (s, dir) => {
+      val w = Window.partitionBy(col("c_mktsegment"))
+        .orderBy(col("c_acctbal").desc, col("c_custkey"))
+      Tables.t(s, dir, "customer")
+        .select(col("c_mktsegment"), col("c_custkey"), col("c_acctbal"))
+        .withColumn("quartile", ntile(4).over(w))
+        .withColumn("pct_rank", round(percent_rank().over(w), 6))
+        .withColumn("cume", round(cume_dist().over(w), 6))
+        .orderBy("c_mktsegment", "c_custkey")
+    },
+    Some("""SELECT c_mktsegment, c_custkey, c_acctbal,
+      |  CAST(ntile(4) OVER w AS INTEGER) AS quartile,
+      |  round(percent_rank() OVER w, 6) AS pct_rank,
+      |  round(cume_dist() OVER w, 6) AS cume
+      |FROM customer
+      |WINDOW w AS (PARTITION BY c_mktsegment ORDER BY c_acctbal DESC, c_custkey)
+      |ORDER BY c_mktsegment, c_custkey""".stripMargin))
+
+  /** Per-group top-k WITH ties: rank() keeps every part tied at the
+    * boundary price (vs q26's row_number, which arbitrarily-but-
+    * deterministically cuts ties) — SQL's two top-k semantics side by
+    * side.
+    */
+  val q93 = Q(
+    "q93_topk_with_ties",
+    (s, dir) => {
+      import org.apache.spark.sql.expressions.Window
+      Tables.t(s, dir, "part")
+        .withColumn("rk", rank().over(
+          Window.partitionBy("p_brand").orderBy(col("p_retailprice").desc)))
+        .filter(col("rk") <= 3)
+        .select(col("p_brand"), col("p_name"),
+          round(col("p_retailprice"), 2).as("price"), col("rk"))
+        .orderBy("p_brand", "rk", "p_name")
+    },
+    Some("""SELECT p_brand, p_name, round(p_retailprice, 2) AS price,
+      |  CAST(rk AS INTEGER) AS rk
+      |FROM (
+      |  SELECT p_brand, p_name, p_retailprice,
+      |    rank() OVER (PARTITION BY p_brand ORDER BY p_retailprice DESC) AS rk
+      |  FROM part)
+      |WHERE rk <= 3
+      |ORDER BY p_brand, rk, p_name""".stripMargin))
+
+  /** Approximate aggregates for the 100 TB path: HyperLogLog distinct
+    * counts and quantile sketches. Sketch internals are
+    * engine-specific, so the query is SELF-AUDITING: it computes both
+    * the sketch and the exact aggregate and emits the exact values
+    * plus within-bound verdicts, which DuckDB CAN hash-match (its
+    * side asserts TRUE). Bounds: HLL default rsd is 0.05, verdict
+    * allows 3σ = 15%; percentile_approx with accuracy 10000 has rank
+    * error ≤ 1e-4, verdict allows a ±0.05-rank envelope from an
+    * INDEPENDENT source (exact histogram for the bounded quantity
+    * domain, a second sketch at accuracy 2000 for the continuous
+    * price) — orders of magnitude looser than observed error yet
+    * tight enough that a broken sketch fails the hash compare.
+    * ApproxSpec additionally bounds both raw sketches' error.
+    */
+  val q60 = Q(
+    "q60_approx_aggregates",
+    (s, dir) => {
+      val li = Tables.t(s, dir, "lineitem")
+      // No aggregate here buffers raw values: exact percentile over
+      // the raw column would buffer every value per group (it cost
+      // 8x the whole query at sf0.1), so everything below is a
+      // sketch or a constant-size histogram — mergeable/streaming.
+      // Two structural choices, measured at sf0.1, 6x combined:
+      // one sketch per column (the array form) instead of one per
+      // percentile, and the exact COUNT(DISTINCT)s as their own
+      // two-level aggregates rather than in the sketch aggregate —
+      // multiple-distinct triggers Catalyst's Expand (3x every row)
+      // and drags every sketch buffer through the widened shuffle.
+      // The audited sketch must NOT supply its own band: a single
+      // percentile_approx array is monotone by construction, so
+      // "p50 within [p45, p55] of the same sketch" can never fail.
+      // Each band therefore comes from an INDEPENDENT source:
+      //  - l_quantity has a bounded integer domain, so its p45/p55
+      //    band is EXACT via the (value, freq)-histogram percentile
+      //    (the q19 pattern — constant-size buffers, streams fine);
+      //  - l_extendedprice is continuous, so its band is a SECOND
+      //    sketch at accuracy 2000 (a separate aggregate buffer:
+      //    rank error ≤ 5e-4 against a ±0.05 rank envelope, so the
+      //    verdict is still a guarantee, but a broken p90 sketch
+      //    now fails it).
+      val sketches = li.groupBy("l_returnflag").agg(
+        approx_count_distinct(col("l_partkey")).as("ap"),
+        approx_count_distinct(col("l_suppkey")).as("asu"),
+        percentile_approx(col("l_quantity"), lit(0.5), lit(10000)).as("p50q"),
+        percentile_approx(col("l_extendedprice"), lit(0.9), lit(10000))
+          .as("p90e"),
+        percentile_approx(col("l_extendedprice"),
+          array(lit(0.85), lit(0.95)), lit(2000)).as("bande"))
+      val bandQ = li.groupBy(col("l_returnflag"), col("l_quantity"))
+        .agg(count(lit(1)).as("freq"))
+        .groupBy("l_returnflag")
+        .agg(expr("percentile(l_quantity, array(0.45, 0.55), freq)")
+          .as("bandq"))
+      def exactDistinct(key: String, as: String) =
+        li.select(col("l_returnflag"), col(key)).distinct
+          .groupBy("l_returnflag").agg(count(lit(1)).as(as))
+      sketches
+        .join(bandQ, "l_returnflag")
+        .join(exactDistinct("l_partkey", "exact_parts"), "l_returnflag")
+        .join(exactDistinct("l_suppkey", "exact_supps"), "l_returnflag")
+        .select(
+          col("l_returnflag"), col("exact_parts"), col("exact_supps"),
+          (abs(col("ap") - col("exact_parts")) <= col("exact_parts") * 0.15)
+            .as("parts_ok"),
+          (abs(col("asu") - col("exact_supps")) <= col("exact_supps") * 0.15)
+            .as("supps_ok"),
+          col("p50q").between(col("bandq")(0), col("bandq")(1)).as("p50_ok"),
+          col("p90e").between(col("bande")(0), col("bande")(1)).as("p90_ok"))
+        .orderBy("l_returnflag")
+    },
+    Some("""SELECT l_returnflag,
+      |  count(DISTINCT l_partkey) AS exact_parts,
+      |  count(DISTINCT l_suppkey) AS exact_supps,
+      |  TRUE AS parts_ok, TRUE AS supps_ok, TRUE AS p50_ok, TRUE AS p90_ok
+      |FROM lineitem GROUP BY 1 ORDER BY 1""".stripMargin))
+
+  /** Calendar-interval RANGE frame: 7-day trailing average of daily
+    * revenue — `RANGE BETWEEN INTERVAL 6 DAYS PRECEDING AND CURRENT
+    * ROW` over a DATE order column (q24 covers the numeric-RANGE
+    * form; the interval form is its own parser/exec path). The
+    * window's input is the DAILY aggregate — O(#days), not
+    * O(orders) — so the unpartitioned window is fine at any corpus
+    * scale; the heavy lifting happened in the groupBy.
+    */
+  val q136 = Q(
+    "q136_interval_range_frame",
+    (s, dir) =>
+      // the daily rev is a decimal sum in BOTH texts (same fold-order
+      // rationale as Portable.moneySum); the 7-day window then
+      // averages ≤7 identical exact doubles — deterministic, and /7
+      // can't land on a rounding half-boundary
+      Tables.sql(s, dir, s"""WITH d AS (
+        SELECT CAST(o_orderdate AS DATE) AS day,
+          ${P.moneySumSql("o_totalprice")} AS rev, count(*) AS n
+        FROM orders GROUP BY 1)
+      SELECT day, n, rev,
+        round(avg(rev) OVER (ORDER BY day
+          RANGE BETWEEN INTERVAL 6 DAYS PRECEDING AND CURRENT ROW), 2)
+          AS avg_7d
+      FROM d ORDER BY day"""),
+    Some(s"""WITH d AS (
+      |  SELECT CAST(o_orderdate AS DATE) AS day,
+      |    ${P.moneySumSql("o_totalprice")} AS rev, count(*) AS n
+      |  FROM orders GROUP BY 1)
+      |SELECT day, n, rev,
+      |  round(avg(rev) OVER (ORDER BY day
+      |    RANGE BETWEEN INTERVAL 6 DAYS PRECEDING AND CURRENT ROW), 2)
+      |    AS avg_7d
+      |FROM d ORDER BY day""".stripMargin))
+
+  /** TPC-H Q11 shape: part values above a fraction of the GLOBAL
+    * total — a scalar subquery inside HAVING, decorrelated by
+    * Catalyst into an aggregate + broadcast cross join. The 0.00058
+    * fraction sits ≥5e-5 relative distance from every group sum in
+    * the fixtures, 7 orders of magnitude above float-sum jitter, so
+    * the cut is reproducible cross-engine.
+    */
+  val q137 = Q(
+    "q137_group_share_threshold",
+    (s, dir) =>
+      Tables.sql(s, dir, s"""SELECT l_partkey,
+        ${P.moneySumSql("l_extendedprice * l_quantity")} AS val
+      FROM lineitem
+      GROUP BY l_partkey
+      HAVING sum(l_extendedprice * l_quantity) >
+        (SELECT sum(l_extendedprice * l_quantity) * 0.00058 FROM lineitem)
+      ORDER BY val DESC, l_partkey"""),
+    Some(s"""SELECT l_partkey,
+      |  ${P.moneySumSql("l_extendedprice * l_quantity")} AS val
+      |FROM lineitem
+      |GROUP BY l_partkey
+      |HAVING sum(l_extendedprice * l_quantity) >
+      |  (SELECT sum(l_extendedprice * l_quantity) * 0.00058 FROM lineitem)
+      |ORDER BY val DESC, l_partkey""".stripMargin))
+
+  /** Named-aggregate gap-fill: mode() and median() (exact
+    * interpolating), per event type — the Hive/DuckDB scalar-agg
+    * surface beyond q19/q20's percentiles. The fixture's per-type
+    * user mode is tie-free is NOT assumed: mode is taken over
+    * event_type globally (signup wins 2017 vs 2014) and medians are
+    * per-type over `value`.
+    */
+  val q138 = Q(
+    "q138_mode_median",
+    (s, dir) => {
+      val ev = Tables.events(s, dir)
+      val m = ev.agg(mode(col("event_type")).as("modal_type"))
+      ev.groupBy("event_type")
+        .agg(
+          round(median(col("value")), 4).as("med_value"),
+          count(lit(1)).as("n"))
+        .crossJoin(broadcast(m))
+        .orderBy("event_type")
+    },
+    Some("""WITH m AS (SELECT mode(event_type) AS modal_type FROM events)
+      |SELECT event_type, round(median(value), 4) AS med_value,
+      |  count(*) AS n, modal_type
+      |FROM events CROSS JOIN m
+      |GROUP BY event_type, modal_type
+      |ORDER BY event_type""".stripMargin))
+
+  /** Incremental aggregate maintenance — the warehouse ETL pattern
+    * that replaces full recomputes: the standing per-customer rollup
+    * (orders before 2000-01-01) is updated with a new batch (orders
+    * from 2000 on) by aggregating ONLY the batch and full-outer
+    * merging the two small aggregate tables. The oracle is the full
+    * recompute over all orders — incremental == full is exactly the
+    * invariant an incremental pipeline must prove. At 100 TB the
+    * batch-side cost is O(batch), not O(corpus); the merge shuffles
+    * two aggregate tables, never the facts.
+    */
+  val q144 = Q(
+    "q144_incremental_rollup",
+    (s, dir) => {
+      val o = Tables.t(s, dir, "orders")
+      // accumulate in decimal(18,2), not double: the incremental path
+      // folds in a different order than the oracle's full scan, and
+      // float partial sums could land on opposite sides of a half-cent
+      // rounding boundary — decimal makes incremental == full exact
+      // rather than coincidental
+      def agg(df: org.apache.spark.sql.DataFrame) =
+        df.groupBy("o_custkey")
+          .agg(count(lit(1)).as("n"),
+            sum(col("o_totalprice").cast("decimal(18,2)")).as("tot"))
+      val standing = agg(o.filter(col("o_orderdate") < "2000-01-01"))
+        .select(col("o_custkey").as("k1"), col("n").as("n1"), col("tot").as("t1"))
+      val batch = agg(o.filter(col("o_orderdate") >= "2000-01-01"))
+        .select(col("o_custkey").as("k2"), col("n").as("n2"), col("tot").as("t2"))
+      val zero = lit(0).cast("decimal(18,2)")
+      standing.join(batch, col("k1") === col("k2"), "full_outer")
+        .select(
+          coalesce(col("k1"), col("k2")).as("o_custkey"),
+          (coalesce(col("n1"), lit(0L)) + coalesce(col("n2"), lit(0L))).as("n_orders"),
+          round((coalesce(col("t1"), zero) + coalesce(col("t2"), zero))
+            .cast("double"), 2).as("total"))
+        .orderBy("o_custkey")
+    },
+    Some("""SELECT o_custkey, count(*) AS n_orders,
+      |  round(CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE), 2) AS total
+      |FROM orders GROUP BY 1 ORDER BY 1""".stripMargin))
+
+  /** GROUP BY ALL / ORDER BY ALL — the modern SQL shorthand (DuckDB
+    * popularized it; Spark supports both since 3.4/4.0): every
+    * non-aggregate select item groups, the full select list orders.
+    * Parser parity matters for users porting ad-hoc warehouse SQL.
+    */
+  val q148 = Q(
+    "q148_group_order_by_all",
+    (s, dir) =>
+      Tables.sql(s, dir, """SELECT lang, source, count(*) AS n,
+        sum(n_chars) AS chars
+      FROM documents GROUP BY ALL ORDER BY ALL"""),
+    Some("""SELECT lang, source, count(*) AS n,
+      |  CAST(sum(n_chars) AS BIGINT) AS chars
+      |FROM documents GROUP BY ALL ORDER BY ALL""".stripMargin))
+
+  /** Decimal-output canary (VERDICT r6 #8) — DEMOTED out of the
+    * registry in round 8 (VERDICT r7 #1), finding FINAL. The round-7
+    * run proved it red at the driver gate (rows/schema green, hash
+    * red) while value-correct locally; round 8 closed the question by
+    * probing the driver-side stack directly: duckdb's `.df()`
+    * converts EVERY decimal precision (38,0 / 18,0 / 15,2 / 12,2 —
+    * both parquet INT64- and FIXED_LEN_BYTE_ARRAY-backed) to pandas
+    * float64, while pyarrow's `to_pandas()` yields `decimal.Decimal`
+    * objects. Python's `Decimal('123') == 123.0` is True — so the
+    * driver's VALUE compare passes — but `str(Decimal('123'))` is
+    * "123" vs "123.0" for the float, so any stringify-then-hash
+    * canonicalization mismatches for EVERY decimal precision and
+    * scale. No decimal representation can hash green; re-pinning at
+    * precision ≤ 18 (the verdict's option (a)) cannot work. Gate
+    * rule, documented in README §correctness: REGISTRY QUERIES MUST
+    * CAST DECIMAL OUTPUT COLUMNS (to double after one final round,
+    * or to string) — decimals remain fine INSIDE a query (q241 keeps
+    * exact decimal sufficient statistics; q01 money sums are decimal
+    * until the last round). The canary itself survives as a demoted
+    * [[graft.Q.baselines]] entry pinned by BaselineSpec, so the
+    * decimal aggregation path stays exercised in `sbt test` without
+    * a permanently red gate row.
+    */
+  val q237 = Q(
+    "q237_decimal_output_canary",
+    (s, dir) =>
+      Tables.t(s, dir, "lineitem")
+        .groupBy("l_returnflag")
+        .agg(sum(col("l_orderkey")).cast("decimal(38,0)").as("dec_orderkeys"),
+          count(lit(1)).as("n_rows"))
+        .orderBy("l_returnflag"),
+    Some("""SELECT l_returnflag,
+      |  CAST(sum(l_orderkey) AS DECIMAL(38,0)) AS dec_orderkeys,
+      |  count(*) AS n_rows
+      |FROM lineitem
+      |GROUP BY 1
+      |ORDER BY l_returnflag""".stripMargin))
+
+  val all: Vector[Q] =
+    Vector(q69, q76, q77, q87, q89, q95, q106, q13, q14, q15, q16, q17, q18,
+      q19, q20, q96b, q21, q22, q23, q24, q25, q26, q27, q93, q60, q136,
+      q137, q138, q144, q148)
 }

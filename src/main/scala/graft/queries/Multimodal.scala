@@ -1,20 +1,48 @@
 package graft.queries
 
-import graft.{Q, Tables}
+import graft.{Pins, Q, Tables}
+import graft.functions.{Portable, VectorFunctions => V}
 import graft.multimodal.MediaPipeline
+import graft.pipeline.SemDeDup
 import graft.stats.SchemaPreview
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** SURVEY.md §2.13 L5 + §3.3 — schema preview on the documents table
-  * and the multimodal binary-column pipeline. q54/q54b/q55 keep
-  * Spark's side in real `binary` (unhex → BinaryType → hex) while
-  * the oracle mirrors the arithmetic in the hex-string domain
-  * (DuckDB 1.0 has no blob substring). The typed mapPartitions
-  * decode stub lives in MediaPipeline and is spec-pinned equal to
-  * the q55 expression form.
+/** Multimodal data (SURVEY.md §2.13 L5, §3.3): schema preview, media
+  * metadata and decode features, frame sampling, the text–vector
+  * join, and perceptual-hash near-dup over binary payloads.
   */
-object MultimodalOps {
+object Multimodal {
+
+  /** L5 multimodal row: text metadata ⋈ vector + derived features
+    * from both modalities in one result.
+    */
+  val q52 = Q(
+    "q52_multimodal_join",
+    (s, dir) => {
+      Tables.t(s, dir, "documents")
+        .join(Tables.emb(s, dir), col("doc_id") === col("vec_id"))
+        .select(
+          col("doc_id"), col("lang"), col("source"), col("n_chars"), col("label"),
+          round(V.norm("embedding"), 6).as("emb_norm"),
+          size(Portable.tokens(col("text"))).as("n_tokens"))
+        .orderBy("doc_id")
+    },
+    Some(s"""SELECT doc_id, lang, source, n_chars, label,
+      |  round(${V.normSql("embedding")}, 6) AS emb_norm,
+      |  CAST(len(${Portable.tokensSql("text")}) AS INTEGER) AS n_tokens
+      |FROM documents JOIN embeddings ON doc_id = vec_id
+      |ORDER BY doc_id""".stripMargin))
+
+  /* SURVEY.md §2.13 L5 + §3.3 — schema preview on the documents table
+    * and the multimodal binary-column pipeline. q54/q54b/q55 keep
+    * Spark's side in real `binary` (unhex → BinaryType → hex) while
+    * the oracle mirrors the arithmetic in the hex-string domain
+    * (DuckDB 1.0 has no blob substring). The typed mapPartitions
+    * decode stub lives in MediaPipeline and is spec-pinned equal to
+    * the q55 expression form.
+    */
 
   private val statCols = Seq("doc_id", "n_chars")
 
@@ -132,5 +160,69 @@ object MultimodalOps {
       |      FROM documents)
       |ORDER BY doc_id""".stripMargin))
 
-  val all: Vector[Q] = Vector(q53, q54, q54b, q55)
+  /** Perceptual-hash near-dup over the binary media payloads (aHash,
+    * the average-hash construction every image-dedup pipeline starts
+    * from): bit i of the 32-bit signature is set iff byte i is at or
+    * above the payload's own mean brightness — compared integer-exact
+    * as `byteᵢ·32 >= Σbytes`, so there is no float threshold to
+    * disagree on. Payload bytes ride the q54/q55 hex-domain bridge
+    * (real BinaryType on the Spark side, hex arithmetic in the
+    * oracle). Signatures then bucket by (kind, sig) — one groupBy +
+    * one join back, the exact-dedup shape (q39) applied to media: at
+    * 100 TB the signature is 4 bytes per asset and the shuffle keys
+    * are fixed-width, never the payloads.
+    */
+  val q198 = Q(
+    "q198_media_perceptual_dedup",
+    (s, dir) => {
+      // one codegen'd pass over the payload bytes ([[graft.functions
+      // .AHash32]]). The previous higher-order formulation computed
+      // bytesum as an aggregate HOF and referenced it inside the sig
+      // lambda; Catalyst's projection collapse inlined the whole
+      // 32-step bytesum into each of sig's 32 iterations — 32×32
+      // interpreted conv/substring per row, evaluated twice (groups +
+      // join) = 33 s of the sf0.1 bench for 5 000 rows. The kernel is
+      // bit-identical (KernelPropSpec) and leaves the scan inside
+      // whole-stage codegen.
+      val sigs = graft.multimodal.MediaPipeline
+        .withPayload(Tables.t(s, dir, "documents"))
+        .withColumn("sig", expr("ahash32(payload)"))
+        .select("doc_id", "kind", "sig")
+      val groups = sigs.groupBy("kind", "sig")
+        .agg(count(lit(1)).as("group_size"), min("doc_id").as("canonical"))
+        .filter(col("group_size") >= 2)
+      sigs.join(groups, Seq("kind", "sig"))
+        .select(col("doc_id"), col("kind"), col("group_size"), col("canonical"),
+          (col("doc_id") =!= col("canonical")).cast("int").as("is_dup"))
+        .orderBy("doc_id")
+    },
+    Some("""WITH p AS (
+      |  SELECT doc_id,
+      |    CASE WHEN n_chars % 3 = 0 THEN 'image'
+      |         WHEN n_chars % 3 = 1 THEN 'audio'
+      |         ELSE 'video' END AS kind,
+      |    upper(md5(text) || md5(text || '1')) AS hexp
+      |  FROM documents),
+      |b AS (
+      |  SELECT doc_id, kind,
+      |    [(instr('0123456789ABCDEF', substr(hexp, i*2-1, 1)) - 1) * 16
+      |     + instr('0123456789ABCDEF', substr(hexp, i*2, 1)) - 1
+      |     for i in generate_series(1, 32)] AS bytes
+      |  FROM p),
+      |s AS (
+      |  SELECT doc_id, kind,
+      |    CAST(list_sum([CASE WHEN bytes[i] * 32 >= list_sum(bytes)
+      |        THEN CAST(1 AS BIGINT) << (i - 1) ELSE 0 END
+      |      for i in generate_series(1, 32)]) AS BIGINT) AS sig
+      |  FROM b),
+      |g AS (
+      |  SELECT kind, sig, count(*) AS group_size, min(doc_id) AS canonical
+      |  FROM s GROUP BY 1, 2 HAVING count(*) >= 2)
+      |SELECT s.doc_id, s.kind, g.group_size, g.canonical,
+      |  CAST(s.doc_id <> g.canonical AS INTEGER) AS is_dup
+      |FROM s JOIN g ON g.kind = s.kind AND g.sig = s.sig
+      |ORDER BY doc_id""".stripMargin))
+
+  val all: Vector[Q] =
+    Vector(q52, q53, q54, q55, q54b, q198)
 }

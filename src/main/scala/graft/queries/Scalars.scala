@@ -1,18 +1,58 @@
 package graft.queries
 
 import graft.{Q, Tables}
-import graft.functions.Portable
+import graft.functions.{Dist, GeoMean, Portable}
+import graft.functions.{Portable => P}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** SURVEY.md §2.8 — the scalar function library (HiveQL ∩ Spark),
-  * exercised category by category: string, date/time, math,
-  * conditional, JSON, hash. All built-in codegen'd functions; no UDFs.
-  *
-  * Cross-dialect care: DuckDB widens length/strpos/year/... to BIGINT
-  * (Spark gives INT) — the oracle casts; dayofweek differs by one
-  * (DuckDB Sunday=0, Spark Sunday=1).
+/** Scalar functions (SURVEY.md §2.8) and the UDF surface (§2.10):
+  * string, date, math, conditional, JSON, hash, regex, interval,
+  * array, map and higher-order functions, edit distance, bitwise
+  * aggregates and table checksums.
   */
 object Scalars {
+
+  /** Basic array-function surface over token arrays (contains /
+    * position / min / max / overlap) — §2.8's non-higher-order array
+    * row, all per-row projections.
+    */
+  val q90 = Q(
+    "q90_array_basics",
+    (s, dir) => {
+      Tables.t(s, dir, "documents")
+        .select(col("doc_id"),
+          graft.functions.Portable.tokens(col("text")).as("toks"))
+        .select(
+          col("doc_id"),
+          size(col("toks")).as("n_toks"),
+          array_contains(col("toks"), "data").as("has_data"),
+          array_position(col("toks"), "data").as("pos_data"),
+          array_min(col("toks")).as("min_tok"),
+          array_max(col("toks")).as("max_tok"),
+          arrays_overlap(col("toks"), array(lit("data"), lit("model"))).as("overlaps"))
+        .orderBy("doc_id")
+    },
+    Some(s"""SELECT doc_id,
+      |  CAST(len(toks) AS INTEGER) AS n_toks,
+      |  list_contains(toks, 'data') AS has_data,
+      |  CAST(COALESCE(list_position(toks, 'data'), 0) AS BIGINT) AS pos_data,
+      |  list_min(toks) AS min_tok,
+      |  list_max(toks) AS max_tok,
+      |  len(list_intersect(toks, ['data', 'model'])) > 0 AS overlaps
+      |FROM (SELECT doc_id, ${graft.functions.Portable.tokensSql("text")} AS toks
+      |      FROM documents)
+      |ORDER BY doc_id""".stripMargin))
+
+  /* SURVEY.md §2.8 — the scalar function library (HiveQL ∩ Spark),
+    * exercised category by category: string, date/time, math,
+    * conditional, JSON, hash. All built-in codegen'd functions; no UDFs.
+    *
+    * Cross-dialect care: DuckDB widens length/strpos/year/... to BIGINT
+    * (Spark gives INT) — the oracle casts; dayofweek differs by one
+    * (DuckDB Sunday=0, Spark Sunday=1).
+    */
 
   val q28 = Q(
     "q28_string_functions",
@@ -316,6 +356,202 @@ object Scalars {
       |FROM events
       |ORDER BY event_id""".stripMargin))
 
+  /* Surface-completion queries: typed stateful sessionization, map
+    * functions, registered UDF + typed Aggregator UDAF, approximate
+    * aggregates, and LIMIT/OFFSET pagination.
+    */
+
+  /** Map type + map functions (str_to_map, map_keys, map_values,
+    * element access), rendered to deterministic strings so the oracle
+    * can mirror them without a MAP type.
+    */
+  val q58 = Q(
+    "q58_map_functions",
+    (s, dir) => {
+      Tables.events(s, dir).repartition(s.sparkContext.defaultParallelism)
+        .withColumn("k", get_json_object(col("props"), "$.k"))
+        // guard against props rows lacking '$.k' — the oracle emits
+        // constant mkeys/msize, so a NULL k would silently diverge
+        .filter(col("k").isNotNull)
+        .withColumn("m", expr("str_to_map(concat('type:', event_type, ',k:', k), ',', ':')"))
+        .select(
+          col("event_id"),
+          array_join(map_keys(col("m")), "|").as("mkeys"),
+          array_join(map_values(col("m")), "|").as("mvals"),
+          size(col("m")).as("msize"),
+          expr("m['type']").as("mtype"))
+        .orderBy("event_id")
+    },
+    Some("""SELECT event_id,
+      |  'type|k' AS mkeys,
+      |  event_type || '|' || json_extract_string(props, '$.k') AS mvals,
+      |  2 AS msize,
+      |  event_type AS mtype
+      |FROM events
+      |WHERE json_extract_string(props, '$.k') IS NOT NULL
+      |ORDER BY event_id""".stripMargin))
+
+  /** UDF/UDAF surface (SURVEY.md §2.10): a registered scalar Scala
+    * UDF and a typed Aggregator registered through udaf(). Kept OUT
+    * of other queries — built-ins codegen, UDFs don't — but the
+    * registration surface itself is part of the warehouse contract
+    * (Hive CREATE FUNCTION).
+    */
+  val q59 = Q(
+    "q59_udf_udaf",
+    (s, dir) => {
+      s.udf.register("vowel_count", (t: String) => t.count("aeiouAEIOU".contains(_)))
+      s.udf.register("geo_mean", udaf(GeoMean))
+      Tables.t(s, dir, "lineitem")
+        .groupBy("l_returnflag")
+        .agg(
+          count(lit(1)).as("n"),
+          round(expr("geo_mean(l_extendedprice)"), 4).as("geomean_price"),
+          sum(expr("vowel_count(l_linestatus)")).cast("long").as("status_vowels"))
+        .orderBy("l_returnflag")
+    },
+    Some("""SELECT l_returnflag, count(*) AS n,
+      |  round(exp(avg(ln(l_extendedprice))), 4) AS geomean_price,
+      |  CAST(sum(length(regexp_replace(lower(l_linestatus), '[^aeiou]', '', 'g'))) AS BIGINT)
+      |    AS status_vowels
+      |FROM lineitem
+      |GROUP BY l_returnflag
+      |ORDER BY l_returnflag""".stripMargin))
+
+  /** Higher-order-function surface beyond transform/filter (q43-q51):
+    * exists, forall, aggregate with a FINISH lambda, and the
+    * index-carrying filter form — all codegen-adjacent array ops, no
+    * UDF. DuckDB mirrors with list_bool_or/and and a 1-based lambda
+    * index.
+    */
+  val q141 = Q(
+    "q141_hof_exists_forall",
+    (s, dir) => {
+      Tables.t(s, dir, "documents")
+        .withColumn("toks", graft.functions.Portable.tokens(col("text")))
+        .select(
+          col("doc_id"),
+          expr("exists(toks, t -> t = 'join')").as("has_join"),
+          expr("forall(toks, t -> length(t) >= 2)").as("all_ge2"),
+          round(expr(
+            "aggregate(toks, 0L, (acc, t) -> acc + length(t), acc -> CAST(acc AS DOUBLE) / size(toks))"),
+            5).as("avg_tok_len"),
+          expr("size(filter(toks, (t, i) -> i % 2 = 0))").as("n_even_pos"))
+        .orderBy("doc_id")
+    },
+    Some(s"""SELECT doc_id,
+      |  list_bool_or(list_transform(toks, t -> t = 'join')) AS has_join,
+      |  list_bool_and(list_transform(toks, t -> length(t) >= 2)) AS all_ge2,
+      |  round(CAST(list_sum(list_transform(toks, t -> length(t))) AS DOUBLE)
+      |    / len(toks), 5) AS avg_tok_len,
+      |  CAST(len(list_filter(toks, (t, i) -> (i - 1) % 2 = 0)) AS INTEGER)
+      |    AS n_even_pos
+      |FROM (SELECT doc_id,
+      |        ${graft.functions.Portable.tokensSql("text")} AS toks
+      |      FROM documents)
+      |ORDER BY doc_id""".stripMargin))
+
+  /* Round-3 scalar/integrity tail: edit-distance fuzzy matching,
+    * bitwise aggregates, and whole-table checksums — the remaining
+    * named-function families both engines share.
+    */
+
+  /** Levenshtein nearest-neighbour: for the first 20 documents, the
+    * closest other document by edit distance over the 60-char prefix
+    * — the fuzzy-match primitive for entity resolution when token
+    * methods are too coarse. Probe side broadcasts; distance is an
+    * exact integer so the argmin needs no rounding.
+    */
+  val q168 = Q(
+    "q168_levenshtein_nearest",
+    (s, dir) => {
+      val d = Tables.docs(s, dir)
+        .select(col("doc_id"), substring(col("text"), 1, 60).as("prefix"))
+      val probes = d.filter(col("doc_id") < 20)
+        .select(col("doc_id").as("query_id"), col("prefix").as("qp"))
+      d.crossJoin(broadcast(probes))
+        .filter(col("doc_id") =!= col("query_id"))
+        .select(col("query_id"), col("doc_id"),
+          levenshtein(col("qp"), col("prefix")).as("dist"))
+        .groupBy("query_id")
+        .agg(min(struct(col("dist"), col("doc_id"))).as("best"))
+        .select(col("query_id"), col("best.doc_id").as("nearest_id"),
+          col("best.dist").cast("long").as("dist")) // duck levenshtein is BIGINT
+        .orderBy("query_id")
+    },
+    Some("""WITH d AS (
+      |  SELECT doc_id, substr(text, 1, 60) AS prefix FROM documents),
+      |pairs AS (
+      |  SELECT q.doc_id AS query_id, c.doc_id AS doc_id,
+      |    levenshtein(q.prefix, c.prefix) AS dist
+      |  FROM d q JOIN d c ON q.doc_id < 20 AND c.doc_id <> q.doc_id),
+      |ranked AS (
+      |  SELECT query_id, doc_id, dist,
+      |    row_number() OVER (PARTITION BY query_id
+      |      ORDER BY dist, doc_id) AS rn
+      |  FROM pairs)
+      |SELECT query_id, doc_id AS nearest_id, dist
+      |FROM ranked WHERE rn = 1 ORDER BY query_id""".stripMargin))
+
+  /** Bitwise aggregates (bit_and / bit_or / bit_xor) over the event
+    * ids per type — the named-aggregate family q13-q20 didn't cover.
+    */
+  val q169 = Q(
+    "q169_bitwise_aggs",
+    (s, dir) => {
+      Tables.events(s, dir)
+        .groupBy("event_type")
+        .agg(
+          bit_and(col("event_id")).as("band"),
+          bit_or(col("event_id")).as("bor"),
+          bit_xor(col("event_id")).as("bxor"),
+          count(lit(1)).as("n"))
+        .orderBy("event_type")
+    },
+    Some("""SELECT event_type,
+      |  bit_and(event_id) AS band, bit_or(event_id) AS bor,
+      |  bit_xor(event_id) AS bxor, count(*) AS n
+      |FROM events GROUP BY 1 ORDER BY event_type""".stripMargin))
+
+  /** Whole-table content checksum: xor of per-row portable hashes —
+    * order-independent, so two replicas (or two engines) can compare
+    * a 100 TB table with one scan each and exchange ONE number. The
+    * row hash covers every column through a canonical string render;
+    * xor's commutativity is what makes the aggregate shuffle-free
+    * beyond the final combine.
+    */
+  val q170 = Q(
+    "q170_table_checksum",
+    (s, dir) => {
+      def sig(table: String, cols: Seq[String]) = {
+        val rendered = concat_ws("|", cols.map(c => col(c).cast("string")): _*)
+        Tables.t(s, dir, table)
+          .select(Portable.md5Long(rendered).as("h"))
+          .agg(bit_xor(col("h")).as("checksum"), count(lit(1)).as("n_rows"))
+          .select(lit(table).as("tbl"), col("checksum"), col("n_rows"))
+      }
+      sig("region", Seq("r_regionkey", "r_name"))
+        .union(sig("nation", Seq("n_nationkey", "n_name", "n_regionkey")))
+        .union(sig("supplier", Seq("s_suppkey", "s_name", "s_nationkey", "s_acctbal")))
+        .orderBy("tbl")
+    },
+    Some(s"""SELECT 'region' AS tbl,
+      |  bit_xor(${Portable.md5LongSql("concat_ws('|', r_regionkey, r_name)")}) AS checksum,
+      |  count(*) AS n_rows
+      |FROM region
+      |UNION ALL
+      |SELECT 'nation',
+      |  bit_xor(${Portable.md5LongSql("concat_ws('|', n_nationkey, n_name, n_regionkey)")}),
+      |  count(*)
+      |FROM nation
+      |UNION ALL
+      |SELECT 'supplier',
+      |  bit_xor(${Portable.md5LongSql("concat_ws('|', s_suppkey, s_name, s_nationkey, s_acctbal)")}),
+      |  count(*)
+      |FROM supplier
+      |ORDER BY tbl""".stripMargin))
+
   val all: Vector[Q] =
-    Vector(q28, q29, q30, q31, q32, q33, q96, q97, q108, q109)
+    Vector(q90, q28, q29, q30, q31, q32, q33, q96, q97, q108, q109, q58,
+      q59, q141, q168, q169, q170)
 }

@@ -1,21 +1,234 @@
 package graft.queries
 
 import graft.{Pins, Q, Tables}
+import graft.functions.{Dist, Portable, VectorFunctions => V}
 import graft.functions.{Portable => P}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.queries.{Analytics => Analytics2}
+import graft.queries.{Sketches => WarehouseOps}
 
-/** Round-7 sixth wave: sketches doing the jobs they exist for at
-  * 100 TB — driving the optimizer (join-order selection from
-  * count-min sketches), answering windowed distincts from mergeable
-  * daily HLL sketches without rescanning events, and estimating
-  * pairwise set overlaps from per-source sketches without pairwise
-  * scans. Each output audits the sketch against an exact value
-  * computed scale-safely (the q60 pattern: the oracle pins the exact
-  * side and the sketch must land inside a bound that a broken sketch
-  * fails).
+/** Sketches doing the jobs they exist for: count-min heavy hitters
+  * and join-size estimates, a hybrid skew join on the heaviest keys,
+  * join-order selection from sketches, and HyperLogLog rolling,
+  * overlap and view-maintenance counts, each audited against the exact
+  * answer in its output. The count-min helpers (`cms…`) live here.
   */
-object SketchOps {
+object Sketches {
+
+  /** Count-min-sketch heavy hitters, self-audited (the q60 sketch
+    * pattern): the exact top-20 token panel is recomputed alongside a
+    * CMS over the full token stream, and each panel row carries a
+    * verdict that the sketch estimate sits inside the CMS guarantee
+    * band [exact, exact + eps·N]. The sketch is the 100 TB shape —
+    * mergeable, map-side-combining, constant size — while the exact
+    * top-20 is one (token) shuffle; only the 20-row panel and the one
+    * sketch row ever reach the driver. CMS adds are commutative
+    * integer cell sums, so the estimate is fold-order-free.
+    * Reference scope: SURVEY §2.13 L4 (frequency analysis) — the
+    * reference delegates all frequency work to full GROUP BYs.
+    */
+  val q199 = Q(
+    "q199_heavy_hitters_cms",
+    (s, dir) => {
+      val eps = 0.001
+      val toks = Tables.docs(s, dir)
+        .select(explode(Portable.tokens(col("text"))).as("token"))
+      val exact = toks.groupBy("token").agg(count(lit(1)).as("cnt"))
+        .orderBy(col("cnt").desc, col("token")).limit(20)
+      // one row: (sketch bytes, total occurrences) — bounded collect
+      val row = toks.agg(
+        expr(s"count_min_sketch(token, ${eps}d, 0.99d, 42)").as("cms"),
+        count(lit(1)).as("n")).head()
+      val cms = org.apache.spark.util.sketch.CountMinSketch.readFrom(
+        new java.io.ByteArrayInputStream(row.getAs[Array[Byte]]("cms")))
+      val n = row.getAs[Long]("n")
+      val bound = math.ceil(eps * n).toLong
+      val panel = exact.collect().toSeq.map { r =>
+        val t = r.getAs[String]("token"); val c = r.getAs[Long]("cnt")
+        val est = cms.estimateCount(t)
+        (t, c, est >= c && est <= c + bound)
+      }
+      import s.implicits._
+      panel.toDF("token", "cnt", "est_ok")
+        .orderBy(col("cnt").desc, col("token"))
+    },
+    Some(s"""WITH toks AS (
+      |  SELECT unnest(${Portable.tokensSql("text")}) AS token FROM documents)
+      |SELECT token, count(*) AS cnt, TRUE AS est_ok
+      |FROM toks GROUP BY 1
+      |ORDER BY cnt DESC, token LIMIT 20""".stripMargin))
+
+  /** Count-min counters of `(seed, k)` rows: the portable md5 cell of
+    * "cms:<seed>:<k>" in 1024 cells, counted per (seed, cell) as `out`.
+    */
+  private[queries] def cmsCounts(seeded: DataFrame, out: String): DataFrame =
+    seeded
+      .select(col("seed"),
+        pmod(P.md5Long(concat_ws(":", lit("cms"), col("seed").cast("string"),
+          col("k").cast("string"))), lit(1024)).as("cell"))
+      .groupBy("seed", "cell").agg(count(lit(1)).as(out))
+
+  /** The join-size estimate of two sketches: the minimum over seeds of
+    * the counters' inner product, one row `est`.
+    */
+  private[queries] def cmsJoinSize(ca: DataFrame, cb: DataFrame, est: String): DataFrame =
+    ca.join(cb, Seq("seed", "cell"))
+      .groupBy("seed").agg(sum(col("ca") * col("cb")).as("est_d"))
+      .agg(min("est_d").as(est))
+
+  /** DuckDB twin of [[cmsCounts]] over query `src`'s column `key`. */
+  private[queries] def cmsCountsSql(src: String, key: String, out: String): String =
+    s"""SELECT seed,
+       |  ${P.md5LongSql(s"concat('cms:', seed, ':', $key)")} % 1024 AS cell,
+       |  count(*) AS $out
+       |FROM ($src) CROSS JOIN (SELECT unnest(range(4)) AS seed) seeds
+       |GROUP BY 1, 2""".stripMargin
+
+  /** Count-min-sketch join cardinality estimation. A distributed
+    * optimizer deciding join order / broadcast eligibility needs
+    * |A ⋈ B| BEFORE running the join; per-key histograms are
+    * Θ(distinct keys) and unshippable at warehouse scale, but a
+    * count-min sketch is 4×1024 counters per side REGARDLESS of
+    * table size, mergeable map-side, and its inner product
+    * min_d Σ_w a[d][w]·b[d][w] upper-bounds the true join size
+    * (Cormode & Muthukrishnan 2005). This operator sketches both
+    * sides of three TPC-H joins (portable md5-derived cells, pure
+    * integer arithmetic throughout), estimates each join size from
+    * the sketches alone, and audits against the exact size — which
+    * is itself computed scale-safely as Σ_k cnt_A(k)·cnt_B(k) over
+    * the per-key aggregates, never by materializing the join.
+    * Guarantee in the output: est ≥ exact always (one-sided error).
+    */
+  val q245 = Q(
+    "q245_join_size_sketch",
+    (s, dir) => {
+      import s.implicits._
+      def sketch(df: DataFrame, key: String, out: String): DataFrame =
+        // spread before the 4x explode: the md5 cell per exploded row
+        // dominates and the key projection shuffles for ~nothing
+        // (Tables.docs rule; the sf0.1 scans are one split)
+        cmsCounts(df.select(col(key).cast("long").as("k"))
+          .repartition(df.sparkSession.sparkContext.defaultParallelism)
+          .select(explode(sequence(lit(0), lit(3))).as("seed"), col("k")), out)
+      def exact(a: DataFrame, ka: String, b: DataFrame, kb: String): DataFrame = {
+        val ca = a.groupBy(col(ka).as("k")).agg(count(lit(1)).as("ca"))
+        val cb = b.groupBy(col(kb).as("k")).agg(count(lit(1)).as("cb"))
+        ca.join(cb, "k").agg(sum(col("ca") * col("cb")).as("exact"))
+      }
+      def one(name: String, a: DataFrame, ka: String,
+              b: DataFrame, kb: String): DataFrame = {
+        cmsJoinSize(sketch(a, ka, "ca"), sketch(b, kb, "cb"), "est").crossJoin(exact(a, ka, b, kb))
+          .select(lit(name).as("join_name"), col("est"), col("exact"),
+            round((col("est") - col("exact")).cast("double") /
+              col("exact"), 4).as("rel_err"))
+      }
+      val o = Tables.t(s, dir, "orders")
+      val c = Tables.t(s, dir, "customer")
+      val li = Tables.t(s, dir, "lineitem")
+      val p = Tables.t(s, dir, "part")
+      val su = Tables.t(s, dir, "supplier")
+      one("lineitem_part", li, "l_partkey", p, "p_partkey")
+        .unionByName(one("lineitem_supplier", li, "l_suppkey", su, "s_suppkey"))
+        .unionByName(one("orders_customer", o, "o_custkey", c, "c_custkey"))
+        .orderBy("join_name")
+    },
+    Some {
+      def oneSql(name: String, ta: String, ka: String,
+                 tb: String, kb: String): String =
+        s"""SELECT '$name' AS join_name, est, exact,
+           |  round(CAST(est - exact AS DOUBLE) / exact, 4) AS rel_err
+           |FROM (
+           |  SELECT CAST(min(est_d) AS BIGINT) AS est FROM (
+           |    SELECT sa.seed, CAST(sum(sa.ca * sb.cb) AS BIGINT) AS est_d
+           |    FROM (${cmsCountsSql(s"SELECT * FROM $ta", ka, "ca")}) sa
+           |    JOIN (${cmsCountsSql(s"SELECT * FROM $tb", kb, "cb")}) sb
+           |      ON sa.seed = sb.seed AND sa.cell = sb.cell
+           |    GROUP BY 1))
+           |CROSS JOIN (
+           |  SELECT CAST(sum(ca * cb) AS BIGINT) AS exact FROM
+           |    (SELECT $ka AS k, count(*) AS ca FROM $ta GROUP BY 1) xa
+           |    JOIN (SELECT $kb AS k, count(*) AS cb FROM $tb GROUP BY 1) xb
+           |    USING (k))""".stripMargin
+      s"""${oneSql("lineitem_part", "lineitem", "l_partkey", "part", "p_partkey")}
+         |UNION ALL
+         |${oneSql("lineitem_supplier", "lineitem", "l_suppkey", "supplier", "s_suppkey")}
+         |UNION ALL
+         |${oneSql("orders_customer", "orders", "o_custkey", "customer", "c_custkey")}
+         |ORDER BY join_name""".stripMargin
+    })
+
+  /** Hybrid hot/cold skew join. AQE's skew handling splits oversized
+    * SHUFFLE partitions, but when a handful of keys each carry far
+    * more fact rows than the rest, the scale-robust plan is
+    * key-level routing: detect the hot keys as the TOP-K heaviest
+    * (K = 100, count-desc with key tie-break — one per-key count pass
+    * ending in a TakeOrdered, so the hot frame is ≤ K rows BY
+    * CONSTRUCTION at any corpus size; round 7 used an absolute
+    * `cnt ≥ 20` cut, which under TPC-H's ~15-orders-per-customer
+    * density admitted 10–15% of all keys and grew linearly with the
+    * key space — ADVICE r7 #2), broadcast ONLY
+    * those keys' dimension rows to the hot fact rows, and let the
+    * long tail keep the plain shuffle join — no salting replication
+    * cost on 99% of the data, no straggler reducer on the hot 1%.
+    * Output keeps per-route attribution (`hot`/`cold` row and money
+    * totals per market segment) so the routing is auditable, and the
+    * oracle is the PLAIN join with the same routing label — layout
+    * and routing must never change answers. Complements
+    * [[graft.functions.Skew.saltedJoin]] (which replicates the dim
+    * across all salts) and q76's salted aggregate.
+    */
+  val q246 = Q(
+    "q246_hybrid_skew_join",
+    (s, dir) => {
+      val o = Tables.t(s, dir, "orders")
+        .select("o_custkey", "o_totalprice")
+      val c = Tables.t(s, dir, "customer")
+        .select("c_custkey", "c_mktsegment")
+      val hot = o.groupBy("o_custkey").agg(count(lit(1)).as("cnt"))
+        .orderBy(col("cnt").desc, col("o_custkey"))
+        .limit(100)
+        .select(col("o_custkey").as("hk"))
+      val factHot = o.join(broadcast(hot),
+        col("o_custkey") === col("hk"), "left_semi")
+      val factCold = o.join(broadcast(hot),
+        col("o_custkey") === col("hk"), "left_anti")
+      val dimHot = c.join(hot, col("c_custkey") === col("hk"), "left_semi")
+      val routed = factHot
+        .join(broadcast(dimHot), col("o_custkey") === col("c_custkey"))
+        .withColumn("route", lit("hot"))
+        .unionByName(
+          factCold.join(c, col("o_custkey") === col("c_custkey"))
+            .withColumn("route", lit("cold")))
+      routed.groupBy("c_mktsegment", "route")
+        .agg(count(lit(1)).as("n_orders"),
+          P.moneySum(col("o_totalprice")).as("spend"))
+        .orderBy("c_mktsegment", "route")
+    },
+    Some(s"""WITH hot AS (
+      |  SELECT o_custkey AS hk FROM (
+      |    SELECT o_custkey, count(*) AS cnt FROM orders
+      |    GROUP BY 1 ORDER BY cnt DESC, o_custkey LIMIT 100))
+      |SELECT c_mktsegment,
+      |  CASE WHEN o_custkey IN (SELECT hk FROM hot)
+      |       THEN 'hot' ELSE 'cold' END AS route,
+      |  count(*) AS n_orders,
+      |  ${P.moneySumSql("o_totalprice")} AS spend
+      |FROM orders JOIN customer ON o_custkey = c_custkey
+      |GROUP BY 1, 2
+      |ORDER BY c_mktsegment, route""".stripMargin))
+
+  /* Round-7 sixth wave: sketches doing the jobs they exist for at
+    * 100 TB — driving the optimizer (join-order selection from
+    * count-min sketches), answering windowed distincts from mergeable
+    * daily HLL sketches without rescanning events, and estimating
+    * pairwise set overlaps from per-source sketches without pairwise
+    * scans. Each output audits the sketch against an exact value
+    * computed scale-safely (the q60 pattern: the oracle pins the exact
+    * side and the sketch must land inside a bound that a broken sketch
+    * fails).
+    */
 
   /** Sketch-driven star-join ORDER selection — what a distributed CBO
     * does with shipped statistics. Three filtered dimensions hang off
@@ -349,5 +562,6 @@ object SketchOps {
       |FROM k GROUP BY 1, 2
       |ORDER BY n_name, o_year""".stripMargin))
 
-  val all: Vector[Q] = Vector(q250, q251, q252, q255)
+  val all: Vector[Q] =
+    Vector(q199, q245, q246, q250, q251, q252, q255)
 }

@@ -515,7 +515,7 @@ object EventStreams {
     * late-arriving micro-batches. Each batch's events enter as
     * single-point session hulls; the stored sessions of AFFECTED
     * users only are island-merged with those points (the same
-    * [[graft.queries.IvmOps.mergeSessions]] kernel the batch query
+    * [[graft.queries.Events.mergeSessions]] kernel the batch query
     * uses — a late event can extend a session, open one, or BRIDGE
     * two stored sessions), and every untouched user's rows pass
     * through verbatim. Θ(batch + affected users' sessions) per
@@ -532,7 +532,7 @@ object EventStreams {
       StructField("n_events", LongType)))) { (stored, batch) =>
       val pts = batch.select(col("user_id"), col("us").as("s_start"),
         col("us").as("s_end"), lit(1L).as("n_events"))
-      val merged = graft.queries.IvmOps.mergeSessions(stored, pts, gapUs)
+      val merged = graft.queries.Events.mergeSessions(stored, pts, gapUs)
       val untouched = stored.join(
         pts.select("user_id").distinct(), Seq("user_id"), "left_anti")
       untouched.unionByName(merged)

@@ -78,7 +78,7 @@ class BaselineSpec extends SparkSpec {
   }
 
   // q237 (demoted in round 8 — decimal outputs can never hash green at
-  // the driver gate, see CurationOps8.q237) keeps its driver-recompute
+  // the driver gate, see Aggregates.q237) keeps its driver-recompute
   // value pin in SearchOps2Spec; the registry-exclusion test below now
   // covers it automatically via Q.baselines.
 

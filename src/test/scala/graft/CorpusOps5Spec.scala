@@ -9,8 +9,8 @@ class CorpusOps5Spec extends SparkSpec {
   private def cdcHashes(text: String): Seq[Long] = {
     Seq(text).toDF("text")
       .select(functions.Portable.tokens(col("text")).as("toks"))
-      .withColumn("bnds", expr(queries.CorpusOps5.cdcBoundsExpr("toks")))
-      .select(explode(expr(queries.CorpusOps5.cdcChunksExpr("toks", "bnds")))
+      .withColumn("bnds", expr(queries.Storage.cdcBoundsExpr("toks")))
+      .select(explode(expr(queries.Storage.cdcChunksExpr("toks", "bnds")))
         .as("c"))
       .select(col("c.h")).as[Long].collect().toSeq
   }
@@ -72,7 +72,7 @@ class CorpusOps5Spec extends SparkSpec {
   }
 
   test("q266 report is internally consistent on fixtures") {
-    val rows = queries.CorpusOps5.q266.fn(spark, sf()).collect()
+    val rows = queries.Storage.q266.fn(spark, sf()).collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
       val (nChunks, nDistinct, dup, chars, dupChars, bp) =

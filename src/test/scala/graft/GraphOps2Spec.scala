@@ -38,7 +38,7 @@ class GraphOps2Spec extends SparkSpec {
     assert(want > BigInt(Long.MaxValue),
       "fixture must actually exceed int64 by round 3")
     val e = spark.range(n).select(col("id").as("u"), lit(1L).as("p"))
-    val out = queries.GraphOps2.hits(e, 3).collect()
+    val out = queries.Graph.hits(e, 3).collect()
     assert(out.length == 1)
     assert(BigInt(out(0).getDecimal(1).toBigInteger) == want,
       s"got ${out(0).getDecimal(1)}, want $want")
@@ -55,7 +55,7 @@ class GraphOps2Spec extends SparkSpec {
     assert(BigInt(n).pow(7) > BigInt(10).pow(38))
     val e = spark.range(n).select(col("id").as("u"), lit(1L).as("p"))
     val ex = intercept[Exception] {
-      queries.GraphOps2.hits(e, 7).collect()
+      queries.Graph.hits(e, 7).collect()
     }
     def messages(t: Throwable): Seq[String] =
       Option(t).toSeq.flatMap(x => Option(x.getMessage).toSeq ++ messages(x.getCause))
@@ -67,7 +67,7 @@ class GraphOps2Spec extends SparkSpec {
     try {
       spark.conf.set("spark.sql.ansi.enabled", "false")
       val ex2 = intercept[Exception] {
-        queries.GraphOps2.hits(e, 7).collect()
+        queries.Graph.hits(e, 7).collect()
       }
       assert(messages(ex2).exists(_.contains("decimal(38,0) overflow")),
         s"expected the hits raise-on-null guard to fire with ANSI off, got: $ex2")

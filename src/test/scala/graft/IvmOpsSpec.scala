@@ -7,7 +7,7 @@ class IvmOpsSpec extends SparkSpec {
   import spark.implicits._
 
   test("q267: merged top-k view equals the from-scratch top-k") {
-    val got = queries.IvmOps.q267.fn(spark, sf()).collect()
+    val got = queries.Events.q267.fn(spark, sf()).collect()
     // from-scratch recompute over ALL orders, same tie order
     val full = Tables.t(spark, sf(), "orders")
       .select(col("o_orderpriority").as("pr"), col("o_orderkey"),
@@ -28,7 +28,7 @@ class IvmOpsSpec extends SparkSpec {
   }
 
   test("q269: incremental sessions equal full resessionization") {
-    val got = queries.IvmOps.q269.fn(spark, sf()).collect()
+    val got = queries.Events.q269.fn(spark, sf()).collect()
     // from-scratch: sessionize ALL events, ignore the snapshot split
     val wo = Window.partitionBy("user_id").orderBy(col("us"), col("event_id"))
     val ev = Tables.t(spark, sf(), "events")
@@ -58,7 +58,7 @@ class IvmOpsSpec extends SparkSpec {
     ).toDF("user_id", "s_start", "s_end", "n_events")
     val late = Seq((1L, 130L, 130L, 1L)) // within gap of BOTH hulls
       .toDF("user_id", "s_start", "s_end", "n_events")
-    val merged = queries.IvmOps.mergeSessions(stored, late, gap)
+    val merged = queries.Events.mergeSessions(stored, late, gap)
       .orderBy("user_id", "s_start").collect()
     // user 1 collapses to ONE session spanning both + the point
     assert(merged.length == 1) // mergeSessions returns affected users only
@@ -76,7 +76,7 @@ class IvmOpsSpec extends SparkSpec {
       (1L, 500L, 500L, 1L),  // opens a NEW session (380 > gap)
       (4L, 7L, 7L, 1L)       // brand-new user
     ).toDF("user_id", "s_start", "s_end", "n_events")
-    val got = queries.IvmOps.mergeSessions(stored, late, gap)
+    val got = queries.Events.mergeSessions(stored, late, gap)
       .orderBy("user_id", "s_start")
       .as[(Long, Long, Long, Long)].collect().toSeq
     assert(got == Seq(

@@ -120,7 +120,7 @@ class ScaleSpec extends SparkSpec {
   }
 
   scaleTest("binned interval join is an equi-join (no nested-loop) and equals the theta join") {
-    val binned = queries.Relational5.q135.build(spark, sf())
+    val binned = queries.Relational.q135.build(spark, sf())
     val plan = binned.queryExecution.executedPlan.toString
     assert(!plan.contains("BroadcastNestedLoopJoin"),
       s"binned interval join fell back to a nested loop:\n$plan")

@@ -77,11 +77,11 @@ class SearchOps2Spec extends SparkSpec {
     def flagTotal(i: Int): Long =
       out.filter(_.getInt(i) == 1).map(_.getLong(5)).sum
     // each attribution column totals to its source operator's verdict
-    val mhWant = queries.TextOps.q41.fn(spark, sf())
+    val mhWant = queries.TextDedup.q41.fn(spark, sf())
       .select("doc_b").distinct().count()
-    val sdWant = queries.VectorOps.q181.fn(spark, sf())
+    val sdWant = queries.Vectors.q181.fn(spark, sf())
       .select("dropped").distinct().count()
-    val ctWant = queries.CorpusOps4.q234.fn(spark, sf())
+    val ctWant = queries.TextDedup.q234.fn(spark, sf())
       .select("doc_b").distinct().count()
     val exWant = {
       val texts = Tables.docs(spark, sf()).select("doc_id", "text").collect()

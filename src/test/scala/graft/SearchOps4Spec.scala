@@ -8,7 +8,7 @@ class SearchOps4Spec extends SparkSpec {
   import spark.implicits._
 
   test("q268: every retrieved row is admissible (same lang as its query)") {
-    val got = queries.SearchOps4.q268.fn(spark, sf())
+    val got = queries.Vectors.q268.fn(spark, sf())
     val langs = Tables.docs(spark, sf()).select(col("doc_id"), col("lang"))
     val bad = got
       .join(langs.select(col("doc_id").as("query_id"), col("lang").as("ql")),
@@ -27,7 +27,7 @@ class SearchOps4Spec extends SparkSpec {
   }
 
   test("q268: pre-filtering recalls at least as much as post-filtering") {
-    val ranked = queries.SearchOps4.rankedIndex(spark, sf())
+    val ranked = queries.Vectors.rankedIndex(spark, sf())
     val cand = ranked.filter(col("crn") === 1).select(
       col("vec_id").as("cand_id"), col("embedding").as("ce"),
       col("nrm").as("cn"), col("lang").as("clang"), col("cell"))

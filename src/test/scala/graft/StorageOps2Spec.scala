@@ -3,7 +3,7 @@ package graft
 class StorageOps2Spec extends SparkSpec {
 
   test("q270: bloom bits prune where zone maps cannot, with zero false negatives") {
-    val rows = queries.StorageOps2.q270.fn(spark, sf()).collect()
+    val rows = queries.Storage.q270.fn(spark, sf()).collect()
     assert(rows.length == 20)
     val zone = rows.map(_.getLong(1))
     val bloom = rows.map(_.getLong(2))
