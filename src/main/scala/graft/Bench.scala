@@ -3,9 +3,9 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-/** Benchmark main (driver contract): runs every registry query on
-  * SPARK_GRAFT_SF_DIR and prints ONE JSON line with per-query wall
-  * seconds.
+/** Benchmark main (driver contract): runs every registry query (or
+  * the queries named as arguments) on SPARK_GRAFT_SF_DIR and prints
+  * ONE JSON line with per-query wall seconds.
   *
   * Methodology: a warmup pass (cheap scan + one full query) absorbs
   * JVM/codegen/session start-up so per-query numbers measure the
@@ -106,30 +106,14 @@ object Bench {
     math.min(math.max(bytes / 64, 65536L), 1048576L).toString
   }
 
+  /** Times the named queries (trailing arguments), or every registry
+    * query when none is named.
+    */
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = Session.builder(sfDir).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-
-    // build and write inside the timer: eager queries (the CC loop,
-    // the streaming twins) do their work while they are built
-    def timed(name: String): Double = {
-      val t0 = System.nanoTime()
-      Q.byName(name).run(spark, sfDir) { df =>
-        df.write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
-      }
-    }
-
-    // Warmup: touch every fixture file + run one representative query.
-    // Guarded: a broken fixture must not prevent the contract JSON
-    // line from being printed.
-    try {
-      Tables.all.foreach(n => Tables.t(spark, sfDir, n).count())
-      timed("q01_pricing_summary")
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] warmup failed: ${e.getMessage}")
-    }
+    warmUp(spark, sfDir)
 
     // Best of 2 runs per query: single-JVM timings on a shared host
     // carry scheduler/GC jitter; the min reflects steady-state cost.
@@ -141,19 +125,11 @@ object Bench {
     // fixtures, where a second pass of an hour-long sweep buys little.
     val runs = sys.env.get("SPARK_GRAFT_BENCH_RUNS")
       .flatMap(_.toIntOption).filter(_ >= 1).getOrElse(2)
-    // SPARK_GRAFT_ONLY (comma-separated names): time a targeted subset
-    // — e.g. re-measuring two iterative graph queries at sf10 without
-    // paying the full registry sweep. The driver never sets it.
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(',').toSet)
-    val names = Q.registry.map(_.name)
-      .filter(n => only.forall(_.contains(n))).sorted
+    val names = (if (args.nonEmpty) args.toVector else Q.registry.map(_.name)).sorted
     val failed = scala.collection.mutable.LinkedHashSet.empty[String]
     val results = names.map { name =>
       val times = (1 to runs).map { _ =>
-        // the time stops when the write ends, so the release of the
-        // query's pins by Q.run falls outside it: block bookkeeping
-        // isn't query cost
-        try timed(name)
+        try timed(spark, sfDir, name)
         catch { case e: Throwable =>
           if (failed.add(name))
             System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
@@ -188,15 +164,34 @@ object Bench {
     catch { case e: Exception =>
       System.err.println(s"[bench] could not write $outPath: ${e.getMessage}")
     }
-    // Streaming twins leave active queries + state-store maintenance
-    // threads behind; stopping them before spark.stop() keeps the tail
-    // free of the shutdown "SparkEnv not active" IllegalStateException
-    // (VERDICT r13 #5 — harmless, but the artifact should be clean).
-    spark.streams.active.foreach(q => try q.stop() catch { case _: Exception => () })
-    // The maintenance thread outlives the queries; shut the state-store
-    // coordinator down while SparkEnv is still alive.
-    try org.apache.spark.sql.execution.streaming.state.StateStore.stop()
-    catch { case _: Throwable => () }
-    spark.stop()
+    Session.stop(spark)
   }
+
+  /** Build `name` over `sfDir`, write it to the noop sink and return
+    * the wall seconds. The build is inside the timer: eager queries (the
+    * CC loop, the streaming twins) do their work while they are built.
+    * The timer stops when the write ends, so the release of the query's
+    * pins by [[Q.run]] falls outside it: block bookkeeping isn't query
+    * cost.
+    */
+  def timed(spark: SparkSession, sfDir: String, name: String): Double = {
+    val t0 = System.nanoTime()
+    Q.byName(name).run(spark, sfDir) { df =>
+      df.write.format("noop").mode("overwrite").save()
+      (System.nanoTime() - t0) / 1e9
+    }
+  }
+
+  /** Touch every fixture file and run one representative query, so the
+    * timed runs don't pay JVM, codegen and session start-up. A broken
+    * fixture is reported, not fatal: the caller's output must still be
+    * printed.
+    */
+  def warmUp(spark: SparkSession, sfDir: String): Unit =
+    try {
+      Tables.all.foreach(n => Tables.t(spark, sfDir, n).count())
+      timed(spark, sfDir, "q01_pricing_summary")
+    } catch { case e: Throwable =>
+      System.err.println(s"[warmup] failed: ${e.getMessage}")
+    }
 }

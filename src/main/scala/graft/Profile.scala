@@ -8,10 +8,11 @@ import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import scala.collection.mutable
 
 /** The profiling CLI: time named registry queries (all if no names)
-  * after a warmup, on Bench's session settings. The last timed run of
-  * each query prints its per-job breakdown — wall, driver-side gap
-  * before the job, tasks and stage names — so an iterative operator
-  * (CC loop, peel, MMR rounds) decomposes into per-action costs.
+  * with Bench's warm-up and timer, on Bench's session settings. The
+  * last timed run of each query prints its per-job breakdown — wall,
+  * driver-side gap before the job, tasks and stage names — so an
+  * iterative operator (CC loop, peel, MMR rounds) decomposes into
+  * per-action costs.
   * `--explain` then runs the query once more, untimed, and prints its
   * AQE-final executed plan.
   *
@@ -24,7 +25,7 @@ object Profile {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = Session.builder(sfDir).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    try run(spark, args.toSeq, sfDir) finally spark.stop()
+    try run(spark, args.toSeq, sfDir) finally Session.stop(spark)
   }
 
   /** Profile on a caller's session. Every run goes through [[Q.run]],
@@ -42,19 +43,8 @@ object Profile {
     }.getOrElse(2)
     val names0 = args.filterNot(_.startsWith("--"))
     val names = if (names0.nonEmpty) names0 else Q.registry.map(_.name).sorted
-    // build INSIDE the timer: eager queries (the CC loop, the
-    // streaming twins) do their work during construction, so timing
-    // only the final write would understate them wildly
-    def timed(name: String): Double = {
-      val t0 = System.nanoTime()
-      Q.byName(name).run(spark, sfDir) { df =>
-        df.write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
-      }
-    }
-
-    Tables.all.foreach(n => Tables.t(spark, sfDir, n).count())
-    timed("q01_pricing_summary")
+    Bench.warmUp(spark, sfDir)
+    def timed(name: String): Double = Bench.timed(spark, sfDir, name)
 
     names.foreach { name =>
       val jobs = new JobLog

@@ -29,4 +29,16 @@ object Session {
       .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
         Bench.coalesceFloor(inputDir))
       .config("spark.ui.enabled", "false")
+
+  /** Stop `spark` as every main ends. Active streams stop first, then
+    * the state-store coordinator while SparkEnv is still alive (its
+    * maintenance thread outlives the queries and would otherwise throw
+    * "SparkEnv not active" at shutdown), then the session.
+    */
+  def stop(spark: SparkSession): Unit = {
+    spark.streams.active.foreach(q => try q.stop() catch { case _: Exception => () })
+    try org.apache.spark.sql.execution.streaming.state.StateStore.stop()
+    catch { case _: Throwable => () }
+    spark.stop()
+  }
 }

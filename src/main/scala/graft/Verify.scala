@@ -8,13 +8,13 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val outDir = args(1)
-    // optional 3rd arg: comma-separated query names — dump only those
-    // (local iteration; the driver always passes 2 args = full dump)
-    val only = args.lift(2).map(_.split(',').toSet)
+    // optional trailing args: query names to dump; with none, every
+    // registry query is dumped
+    val only = args.drop(2).toSet
     val spark = Session.builder(sfDir).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    Q.registry.filter(q => only.forall(_.contains(q.name))).foreach { q =>
+    Q.registry.filter(q => only.isEmpty || only(q.name)).foreach { q =>
       try q.run(spark, sfDir)(_.coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/${q.name}"))
       catch { case e: Throwable =>
@@ -36,6 +36,6 @@ object Verify {
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    spark.stop()
+    Session.stop(spark)
   }
 }

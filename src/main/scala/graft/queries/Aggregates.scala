@@ -1,12 +1,10 @@
 package graft.queries
 
 import graft.{Q, Tables}
-import graft.functions.{Dist, GeoMean, Portable => P, VectorFunctions => V}
+import graft.functions.{Portable => P}
 import graft.stats.SchemaPreview
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
 
 /** Aggregates and windows (SURVEY.md §2.4 aggregation, §2.5 window
   * functions, §2.6 sorts and top-k): rollup, cube and grouping sets,
@@ -42,11 +40,6 @@ object Aggregates {
       |  ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
       |QUALIFY c_custkey <= 200
       |ORDER BY c_mktsegment, c_custkey""".stripMargin))
-
-  /* Further (D)-surface OLAP idioms: generated date spines with
-    * zero-filled outer joins, skew-salted two-phase aggregation, and
-    * argmax/argmin (max_by/min_by) aggregates.
-    */
 
   /** Skew-salted two-phase aggregation as a first-class query: phase 1
     * aggregates (key, salt) so a hot supplier key spreads over 8

@@ -1,10 +1,8 @@
 package graft.queries
 
-import graft.{Pins, Q, Tables}
+import graft.{Q, Tables}
 import graft.functions.{Dist, Portable}
 import graft.functions.{Portable => P}
-import graft.graph.Baskets
-import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -118,11 +116,9 @@ object Analytics {
       |FROM events
       |ORDER BY event_id""".stripMargin))
 
-  /* Round-3 behavioral/eval analytics wave: event-transition matrix
-    * (sequence mining), weighted median on distributed CDFs, and a
-    * score-decile lift table — each reusing the scale utilities
-    * (per-user windows, Dist.globalCumsumBy, Dist.globalRank) instead
-    * of single-partition shortcuts.
+  /* Behavioral and evaluation analytics over orders and events, each
+    * reusing the scale utilities (per-user windows, Dist.globalCumsumBy,
+    * Dist.globalRank) instead of single-partition shortcuts.
     */
 
   /** First-order transition matrix over per-user event sequences:
@@ -838,10 +834,6 @@ object Analytics {
       |GROUP BY 1
       |ORDER BY n_name""".stripMargin))
 
-  /* Analytics additions, third batch: sweep-line interval concurrency
-    * and market-basket association rules.
-    */
-
   /** Peak concurrent sessions per day by sweep line: sessionized
     * events become ±1 boundary deltas, the running concurrency is a
     * GLOBAL cumulative sum over (t, delta) — [[Dist.globalCumsumBy]]
@@ -902,13 +894,11 @@ object Analytics {
       |  CAST(max(conc) AS BIGINT) AS peak_concurrency
       |FROM run GROUP BY 1 ORDER BY day""".stripMargin))
 
-  /* Round-6 experimentation / governance analytics: A/B lift with a
-    * Welch z-statistic over hash-assigned arms, a Benford first-digit
-    * audit, a k-anonymity risk report over quasi-identifiers, and
-    * expanding-window time-series CV folds. Each is one or two
-    * aggregations over the fact table — the per-group frames they
-    * window over are bounded by arm/digit/band/year cardinality, never
-    * by corpus size.
+  /* Experimentation analytics: A/B lift with a Welch z-statistic over
+    * hash-assigned arms, and expanding-window time-series CV folds.
+    * Each is one or two aggregations over the fact table — the
+    * per-group frames they window over are bounded by arm/band/year
+    * cardinality, never by corpus size.
     */
 
   /** A/B experiment readout: users are split into two arms by the

@@ -1,12 +1,10 @@
 package graft.queries
 
 import graft.{Pins, Q, Tables}
-import graft.functions.{Dist, Portable, VectorFunctions => V}
-import graft.functions.{Portable => P}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.functions.{Portable, VectorFunctions => V}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.queries.{Vectors => VectorOps}
 
 /** Embedding analytics: Lloyd k-means and cluster purity, product
   * quantization with ADC scoring, incremental ANN maintenance,
@@ -106,17 +104,6 @@ object Embeddings {
       |FROM feats JOIN stats USING (pos)
       |WHERE vec_id < 3
       |ORDER BY vec_id, pos""".stripMargin))
-
-  /* Round-5 curation tail — the remaining large-corpus preparation
-    * operators a training-data pipeline runs between ingest and export:
-    * k-means clustering of embeddings (q182), temperature-based
-    * multilingual mixture sampling (q183), learned linear quality
-    * scoring with hashed features (q184), and corpus snapshot diffing
-    * (q185). Reference scope: the (N) pipeline surface of SURVEY.md
-    * §2.13 (the reference delegates analytics to its Hive binary and
-    * has no native counterparts; these are the standard published
-    * constructions re-expressed Spark-first).
-    */
 
   private val dim = 64
 
@@ -628,7 +615,7 @@ object Embeddings {
         .select("label", "vec_id", "d2", "rn")
         .orderBy("label", "rn")
     },
-    Some(s"""WITH ${VectorOps.centroidsSql},
+    Some(s"""WITH ${Vectors.centroidsSql},
       |d AS (
       |  SELECT e.label, e.vec_id,
       |    round(${V.dist2Sql("e.embedding", "cent.cvec")}, 6) AS d2
@@ -774,7 +761,7 @@ object Embeddings {
       |FROM drift JOIN disp USING (source)
       |ORDER BY source""".stripMargin))
 
-  /* Round-11 retrieval wave: embedding-space outlier detection — the
+  /* Embedding-space outlier detection — the
     * curation read that runs BEFORE dedup/selection on a new embedding
     * batch: "which vectors sit far from everything in their own
     * region?" (mislabeled points, garbage decodes, off-distribution

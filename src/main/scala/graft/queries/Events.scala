@@ -1,11 +1,9 @@
 package graft.queries
 
 import graft.{Pins, Q, Tables}
-import graft.functions.{Dist, GeoMean, Portable}
+import graft.functions.Portable
 import graft.functions.{Portable => P}
-import graft.graph.Baskets
 import graft.streaming.EventStreams
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -21,7 +19,7 @@ object Events {
     * stateful-style dedup (T5), all in their batch form so the DuckDB
     * oracle can check them. The same groupBy(window(...)) /
     * session_window expressions run unchanged under Structured Streaming
-    * with a watermark — see graft.streaming and StreamingOps.
+    * with a watermark — see graft.streaming and the streaming twins below.
     *
     * Window starts are emitted as epoch seconds (unix_timestamp floors
     * to the second, matching DuckDB floor(epoch(...))) to keep raw
@@ -216,7 +214,7 @@ object Events {
       EventStreams.tumblingCounts(s, dir)
         .orderBy("wstart", "event_type"),
     // the batch tumbling oracle IS the streaming oracle — unified model
-    Events.q34.oracle)
+    q34.oracle)
 
   /** Sliding windows (T2) through the streaming engine: overlapping
     * windows mean every event feeds two state rows; the watermark
@@ -227,7 +225,7 @@ object Events {
     (s, dir) =>
       EventStreams.slidingCounts(s, dir)
         .orderBy("wstart"),
-    Events.q35.oracle)
+    q35.oracle)
 
   /** Stream-static enrichment join through the streaming engine: the
     * stream joins a broadcast static dimension inside each
@@ -307,7 +305,7 @@ object Events {
         .orderBy("user_id", "sstart")
     },
     // same answer as q36 (session_window) — shared oracle
-    Events.q36.oracle)
+    q36.oracle)
 
   /** FORWARD as-of: each purchase joined to the FIRST error at or
     * after it for the same user (q37/q92 cover the backward
@@ -340,8 +338,6 @@ object Events {
       |  FROM events WHERE event_type IN ('purchase', 'error'))
       |WHERE event_type = 'purchase'
       |ORDER BY p_id""".stripMargin))
-
-  /* Streaming additions, second batch. */
 
   /** Heavy hitters over the STREAM: a count-min sketch aggregated
     * through Structured Streaming (complete mode — the sketch buffer
@@ -409,9 +405,9 @@ object Events {
       |  AS n_exact, TRUE AS stream_eq_batch, TRUE AS within_5pct
       |FROM events""".stripMargin))
 
-  /* Incremental view maintenance, round 9: two NEW state shapes join
-    * the family (q241 algebraic sums, q255 HLL distinct sketches, q260
-    * holistic-median histograms, q262/q264 graph labels):
+  /* Incremental view maintenance of two state shapes beside the
+    * family's others (q241 algebraic sums, q255 HLL distinct sketches,
+    * q260 holistic-median histograms, q262/q264 graph labels):
     *
     *   - q267 ORDERED state — a per-key top-k. Top-k under insert-only
     *     deltas is a bounded join-semilattice: union the stored top-k

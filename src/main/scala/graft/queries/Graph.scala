@@ -1,12 +1,11 @@
 package graft.queries
 
 import graft.{Pins, Q, Tables}
-import graft.functions.{Dist, Portable, VectorFunctions => V}
+import graft.functions.Portable
 import graft.functions.{Portable => P}
 import graft.graph.Baskets
 import graft.graph.PackedEdge
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Graph analytics over warehouse relations: co-purchase basket
@@ -426,7 +425,7 @@ object Graph {
       |CROSS JOIN n
       |ORDER BY lift DESC, part_a, part_b LIMIT 10""".stripMargin))
 
-  /* Graph analytics, second batch: HITS hub/authority scoring on the
+  /* HITS hub/authority scoring on the
     * bipartite customer→part purchase graph and bounded-round k-core
     * peeling on the co-purchase graph. Both follow the q201/q142
     * iterative contract: a FIXED unrolled round count, one aggregation
@@ -854,12 +853,6 @@ object Graph {
       |ORDER BY cluster""".stripMargin
     })
 
-  /* Round-6 second wave: Apriori-pruned frequent triples, reciprocal-
-    * rank fusion of lexical + vector retrieval, BPE encoding with the
-    * q216-trained merge table, and containment (quote/subset) dedup
-    * with rare-anchor blocking.
-    */
-
   /** Frequent 3-itemsets with the Apriori prune: only items in ≥4
     * orders (L1) enter the basket-local triple enumeration, and
     * every candidate triple must have all three of its pairs in the
@@ -928,7 +921,7 @@ object Graph {
       |FROM triples GROUP BY 1, 2, 3
       |ORDER BY support DESC, pa, pb, pc LIMIT 10""".stripMargin))
 
-  /* Graph analytics, third batch (round 10): partition-quality scoring
+  /* Partition-quality scoring
     * and link prediction over the co-purchase graph — the two
     * read-side graph ops a dedup/curation warehouse runs AFTER the
     * clustering family (q100 CC, q201 label propagation, q221 k-core)
@@ -1074,7 +1067,7 @@ object Graph {
       |  ORDER BY aa DESC, x, y LIMIT 20)
       |ORDER BY aa DESC, x, y""".stripMargin))
 
-  /* Round-12 graph wave: personalized (seeded) PageRank — the graph
+  /* Personalized (seeded) PageRank — the graph
     * family's data-SELECTION read. Global PageRank (q142) ranks nodes
     * by overall centrality; PPR ranks them by proximity to a SEED SET,
     * the primitive behind "expand this curated seed corpus along the

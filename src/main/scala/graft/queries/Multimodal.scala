@@ -1,12 +1,9 @@
 package graft.queries
 
-import graft.{Pins, Q, Tables}
+import graft.{Q, Tables}
 import graft.functions.{Portable, VectorFunctions => V}
 import graft.multimodal.MediaPipeline
-import graft.pipeline.SemDeDup
 import graft.stats.SchemaPreview
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Multimodal data (SURVEY.md §2.13 L5, §3.3): schema preview, media

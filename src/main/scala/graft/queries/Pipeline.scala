@@ -1,13 +1,11 @@
 package graft.queries
 
 import graft.{Pins, Q, Tables}
-import graft.functions.{Dist, Portable, VectorFunctions => V}
+import graft.functions.{Portable, VectorFunctions => V}
 import graft.functions.{Portable => P}
-import graft.graph.ConnectedComponents
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.queries.{Pipeline => PipelineOps}
 
 /** The corpus pipeline from split to release: hash splits, stratified
   * and k-fold splits, priority, quota and temperature sampling,
@@ -18,10 +16,9 @@ import graft.queries.{Pipeline => PipelineOps}
   */
 object Pipeline {
 
-  /* Training-data pipeline operators beyond the q39-q55 set (SURVEY.md
-    * §2.13 / BASELINE north-star): deterministic dataset splitting,
-    * cohort retention, TF-IDF term extraction, token-window chunking,
-    * keeper-policy dedup, stratified sampling, and funnel analysis.
+  /* Training-data pipeline operators (SURVEY.md §2.13 / BASELINE
+    * north-star): deterministic dataset splitting and stratified
+    * sampling.
     *
     * Scale notes: every operator is a constant number of shuffles over
     * key-partitioned data — no driver-side collection, no O(n²) pair
@@ -283,11 +280,6 @@ object Pipeline {
       |GROUP BY source
       |ORDER BY source""".stripMargin))
 
-  /* Round-3 pipeline-observability wave: feature standardization for
-    * model input, train/test leakage audit over the q70 hash split, and
-    * the gate-funnel telemetry every filtering pipeline reports.
-    */
-
   /** Train/test leakage audit over the q70 hash split: documents
     * whose exact content appears in BOTH the train and test slices —
     * the check that must run before any eval number is trusted.
@@ -502,20 +494,6 @@ object Pipeline {
       |  FROM v1 FULL OUTER JOIN v2 ON id1 = id2) t
       |GROUP BY 1 ORDER BY 1""".stripMargin))
 
-  /* Corpus-curation operators, fourth batch (SURVEY.md §2.13 (N)):
-    * sketch-audited heavy hitters, character-class QC, bounded-round
-    * community detection, curriculum scheduling, shard-balance
-    * planning, stratified k-fold splitting, and per-label embedding
-    * outliers.
-    *
-    * Scale design: each operator is a constant number of shuffles on
-    * its natural key; the only driver-side work is O(k) rows (the
-    * 20-token heavy-hitter panel), never data-proportional. Hashing is
-    * the cross-engine [[Portable.md5Long]]; double aggregation either
-    * sums integers/decimals exactly or rounds a per-row in-order fold
-    * (the q49/q50 centroid pattern).
-    */
-
   /** Curriculum schedule: documents ranked by lexical diversity
     * (distinct/total token ratio — a per-row exact division), cut
     * into deciles, grouped into the three training phases. Deciles
@@ -605,7 +583,7 @@ object Pipeline {
       |    / min(n_docs) OVER (PARTITION BY lang), 6) AS balance
       |FROM agg ORDER BY lang, fold""".stripMargin))
 
-  /* Pipeline compositions, third batch: the corpus RELEASE pipeline —
+  /* The corpus RELEASE pipeline —
     * the other end-to-end flow next to q107's prep pipeline. A release
     * run must (1) split deterministically, (2) decontaminate train
     * against the held-out splits, (3) dedup train (keep-best), and
@@ -613,7 +591,7 @@ object Pipeline {
     */
 
   /** Train/eval release manifest. Stages:
-    *  - hash split 80/10/10 ([[PipelineOps.q70]] semantics — stable
+    *  - hash split 80/10/10 ([[q70]] semantics — stable
     *    under re-partitioning and across engines);
     *  - decontamination: train docs sharing ≥ 60% of their 24-char
     *    shingle hashes with ANY eval doc are dropped (q103's
@@ -718,12 +696,6 @@ object Pipeline {
       |  FROM base WHERE split <> 'train' GROUP BY split)
       |SELECT * FROM train_row UNION ALL SELECT * FROM eval_rows
       |ORDER BY split""".stripMargin))
-
-  /* Round-6 curation wave: MMR diversity-aware selection, per-source
-    * embedding drift against the corpus centroid, and bloom-filter
-    * decontamination — the constant-size-broadcast variant of q103's
-    * exact-set screen.
-    */
 
   /** Greedy maximal-marginal-relevance selection: five rounds of
     * argmax λ·rel(c) − (1−λ)·max_{s∈selected} cos(c, s) for the
@@ -898,7 +870,7 @@ object Pipeline {
       .replace("MD5LONG_PLACEHOLDER",
         P.md5LongSql("concat('quota:', CAST(doc_id AS VARCHAR))"))))
 
-  /* Round-8 release-management wave: the diff between two corpus
+  /* Release management: the diff between two corpus
     * releases — the artifact a training-data org reviews before
     * shipping snapshot N+1 (what entered, what left, what silently
     * changed, per source). Complements q217's release manifest (one

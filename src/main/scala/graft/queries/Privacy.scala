@@ -130,31 +130,19 @@ object Privacy {
       |GROUP BY 1, 2
       |ORDER BY nation, segment""".stripMargin))
 
-  /* Round-11 curation wave — completing two op families the earlier
-    * rounds opened:
+  /* The privacy-audit triad over quasi-identifier (QI) groups: q224's
+    * k-anonymity bounds group SIZE; q272's l-diversity bounds in-group
+    * sensitive VARIETY (group size is not enough when every member
+    * shares the sensitive value), in distinct-count and entropy forms;
+    * q282's t-closeness bounds how far each group's sensitive
+    * DISTRIBUTION sits from the corpus-wide one (ordered-attribute
+    * Earth Mover's Distance) — the audit that catches a group whose
+    * values are diverse but skewed toward the revealing end.
     *
-    *   - q282 t-closeness: the third leg of the privacy-audit triad.
-    *     q224's k-anonymity bounds group SIZE, q272's l-diversity
-    *     bounds in-group sensitive VARIETY; t-closeness bounds how far
-    *     each group's sensitive DISTRIBUTION sits from the corpus-wide
-    *     one (ordered-attribute Earth Mover's Distance) — the audit
-    *     that catches a group whose values are diverse but skewed
-    *     toward the revealing end.
-    *   - q283 ECE/reliability: the calibration metric next to q191's
-    *     ROC-AUC — a ranker can have perfect AUC and useless
-    *     probabilities; ECE is what a downstream
-    *     filter-by-threshold pipeline actually depends on.
-    *   - q285 tokenizer fertility: per-language tokens-per-word and
-    *     bytes-per-token — the corpus-costing numbers a training run
-    *     budgets with (token counts by source/lang exist since q44;
-    *     fertility is the RATIO surface that says which languages the
-    *     tokenizer serves badly).
-    *
-    * Same scale contract as CurationOps10: each operator reads its
-    * fact table ONCE, and all the math runs on frames bounded by group
-    * cardinality (QI groups × 5 priorities / 10 probability bins /
-    * #langs). Exact integer (or DECIMAL(38,0)) sums feed every
-    * division; doubles appear only in final rounded columns.
+    * Each audit reads its fact table ONCE, and all the math runs on
+    * frames bounded by group cardinality (QI groups × 5 priorities).
+    * Exact integer (or DECIMAL(38,0)) sums feed every division; doubles
+    * appear only in final rounded columns.
     */
 
   /** t-closeness audit over QI = (nation, market segment), sensitive

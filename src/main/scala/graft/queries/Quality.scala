@@ -3,11 +3,9 @@ package graft.queries
 import graft.{Pins, Q, Tables}
 import graft.functions.{Dist, Portable, VectorFunctions => V}
 import graft.functions.{Portable => P}
-import graft.graph.ConnectedComponents
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.queries.{Quality => CurationOps}
 
 /** Data quality: language ID, heuristic, classifier and
   * trained quality scores (`qualityScore` is the shared hashed-feature
@@ -146,13 +144,6 @@ object Quality {
       |        0.3 * least(1.0, nt / 50), 6) AS score
       |FROM per_doc
       |ORDER BY doc_id""".stripMargin))
-
-  /* Corpus-preparation operators closing the loop from candidate
-    * generation to training batches: dedup-cluster merging (connected
-    * components over LSH buckets), GPT-style sequence packing,
-    * intra-document repetition metrics (Gopher-style quality rules),
-    * and benchmark-contamination screening.
-    */
 
   /** Intra-document repetition metrics (the Gopher/MassiveText
     * quality rules): duplicate-token ratio, most-frequent-token
@@ -310,13 +301,6 @@ object Quality {
       |GROUP BY lang
       |ORDER BY lang""".stripMargin))
 
-  /* Round-3 LLM-pipeline wave (SURVEY §2.13 extensions): deterministic
-    * weighted sampling, kNN label voting, bigram-LM fluency scoring,
-    * sketch-accuracy audit, shingle novelty, vocabulary coverage,
-    * per-language score calibration, source capping, and BPE-style
-    * first-merge pair mining.
-    */
-
   /** L4+ bigram-LM fluency score (the cheap perplexity-filter proxy):
     * corpus bigram/unigram counts with add-one smoothing, each doc
     * scored by its mean conditional probability. Both count tables
@@ -434,7 +418,7 @@ object Quality {
   /** q184's per-doc score `(doc_id, lang, n_toks, wsum, score)`, which
     * q191 grades by AUC and q283 by calibration.
     */
-  private[queries] def qualityScore(s: SparkSession, dir: String): DataFrame =
+  private def qualityScore(s: SparkSession, dir: String): DataFrame =
     Tables.docs(s, dir)
       .select(col("doc_id"), col("lang"),
         explode(Portable.tokens(col("text"))).as("tok"))
@@ -448,7 +432,7 @@ object Quality {
   /** DuckDB twin of [[qualityScore]] before the score: CTEs `toks` and
     * `scored(doc_id, lang, n_toks, wsum)`.
     */
-  private[queries] def qualityScoreSql: String =
+  private def qualityScoreSql: String =
     s"""toks AS (
        |  SELECT doc_id, lang, unnest(${Portable.tokensSql("text")}) AS tok
        |  FROM documents),
@@ -504,7 +488,7 @@ object Quality {
   val q191 = Q(
     "q191_classifier_auc",
     (s, dir) => {
-      val scored = CurationOps.qualityScore(s, dir)
+      val scored = qualityScore(s, dir)
         .withColumn("pos", (col("lang") === "en").cast("long"))
       val byScore = scored.groupBy("score")
         .agg(sum(col("pos")).as("n_pos"),
@@ -522,7 +506,7 @@ object Quality {
             (lit(2.0) * col("np") * col("nn")), 6).as("auc"))
         .withColumn("gini", round(col("auc") * 2 - 1, 6))
     },
-    Some(s"""WITH ${CurationOps.qualityScoreSql},
+    Some(s"""WITH ${qualityScoreSql},
       |sc AS (
       |  SELECT round(CAST(wsum AS DOUBLE) / (CAST(n_toks AS DOUBLE) * 97.0), 6) AS score,
       |    CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS pos
@@ -683,13 +667,6 @@ object Quality {
       |GROUP BY t.doc_id
       |ORDER BY t.doc_id""".stripMargin))
 
-  /* Round-7 second wave: the release-gate audits a training-data
-    * pipeline runs AFTER the splits and batches exist — cross-split
-    * near-dup contamination (the q150 exact-leakage audit's fuzzy
-    * sibling), padding-waste accounting for length-bucketed batching,
-    * and exact largest-remainder quota sampling per source.
-    */
-
   /** Cross-split NEAR-dup contamination audit. q150 catches exact
     * duplicate text straddling the q70 train/valid/test hash split;
     * real eval contamination is mostly near-duplicates, which is why
@@ -777,11 +754,6 @@ object Quality {
       |  count(DISTINCT CASE WHEN st_a > st_b THEN doc_a ELSE doc_b END) AS n_contaminated
       |FROM ver GROUP BY 1, 2
       |ORDER BY split_lo, split_hi""".stripMargin))
-
-  /* Round-7 fifth wave: classic analytics operators the registry still
-    * lacked — the skyline (Pareto frontier) query, entity-resolution
-    * golden-record linkage, and split-conformal calibration.
-    */
 
   /** Skyline / Pareto frontier (Börzsönyi et al., ICDE'01): documents
     * not dominated in (type-token ratio ↑, length ↑) — the corpus-
@@ -919,7 +891,7 @@ object Quality {
     (s, dir) => {
       val s2 = s
       import s2.implicits._
-      val scored = CurationOps.qualityScore(s, dir)
+      val scored = qualityScore(s, dir)
         .select(
           (round(col("score") * 1e6, 0).cast("long") + 500000L).as("pm"),
           (col("lang") === "en").cast("long").as("pos"))
@@ -947,7 +919,7 @@ object Quality {
             / (col("big_n").cast("double") * 1e6), 8).as("ece_contrib"))
         .orderBy("bin")
     },
-    Some(s"""WITH ${CurationOps.qualityScoreSql},
+    Some(s"""WITH ${qualityScoreSql},
       |pm AS (
       |  SELECT CAST(round(round(CAST(wsum AS DOUBLE)
       |      / (CAST(n_toks AS DOUBLE) * 97.0), 6) * 1e6) AS BIGINT) + 500000 AS pm,
@@ -973,7 +945,7 @@ object Quality {
       |FROM spine LEFT JOIN binned ON spine.bin = binned.bin
       |ORDER BY bin""".stripMargin))
 
-  /* Round-12 curation wave: skyline / Pareto-frontier selection — the
+  /* Skyline / Pareto-frontier selection — the
     * multi-criteria preference query. Curation rules that cut on one
     * score (q105's gate, q226's MMR) answer "best by THIS metric";
     * the skyline answers "not beaten on ALL metrics at once" — the

@@ -1,9 +1,9 @@
 package graft.queries
 
 import graft.{Pins, Q, Tables}
-import graft.functions.{Dist, GeoMean, Portable}
+import graft.functions.Portable
 import graft.functions.{Portable => P}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
@@ -309,11 +309,6 @@ object Relational {
       |SELECT 'except' AS op, k FROM
       |  (SELECT c_nationkey AS k FROM customer EXCEPT SELECT s_nationkey FROM supplier)
       |ORDER BY op, k""".stripMargin))
-
-  /* Second relational batch: JSON→struct parsing, PIVOT, correlated
-    * subqueries (Catalyst decorrelates to joins), and the HiveQL
-    * LATERAL VIEW explode idiom.
-    */
 
   /** from_json with an explicit schema → typed struct access (the
     * schema-on-read path for events.props at scale; get_json_object
@@ -627,12 +622,6 @@ object Relational {
       |WHERE rn = 1
       |ORDER BY user_id""".stripMargin))
 
-  /* Round-3 (D)-surface wave: the deep multi-join rollup, MERGE
-    * (Hive ACID `MERGE INTO`) expressed as a full-outer combine, SCD-2
-    * history construction, a Bloom-filter join prescreen (the 100 TB
-    * semi-join pruning pattern), and z-score outlier screening.
-    */
-
   /** TPC-H Q9-style profit rollup: the 5-table snowflake join
     * (lineitem → part/supplier/nation + orders) grouped by supplier
     * nation × order year. Scale shape: the three dimensions are
@@ -830,8 +819,7 @@ object Relational {
       |  round(CAST(max(n) AS DOUBLE) / avg(n), 4) AS skew_factor
       |FROM c""".stripMargin))
 
-  /* Round-3 relational wave: two-sample distribution drift (KS
-    * statistic over range-bucketed global CDFs), NOT IN null-semantics
+  /* SQL semantics both engines must agree on: NOT IN null semantics
     * (the null-aware anti join), the HiveQL text surface (CTE + window +
     * multi-join issued as SQL text, the way the reference's users
     * actually query — PyHive sends SQL strings,

@@ -3,11 +3,9 @@ package graft.queries
 import graft.{Pins, Q, Tables}
 import graft.functions.{Dist, Portable, VectorFunctions => V}
 import graft.functions.{Portable => P}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.queries.{Retrieval => CorpusOps4}
-import graft.queries.{Vectors => VectorOps}
 
 /** Retrieval: BM25 and inverted indexes, TF-IDF terms, corpus
   * entropy and Zipf slope, DSIR importance weights, reciprocal-rank
@@ -68,11 +66,10 @@ object Retrieval {
       |WHERE rnk <= 3
       |ORDER BY doc_id, rnk""".stripMargin))
 
-  /* Round-3 search/retrieval wave (SURVEY §2.13 extensions): full-text
-    * relevance scoring (BM25), inverted-index construction, corpus
-    * information-theory stats (entropy, Zipf), DSIR-style importance
-    * weighting for domain-targeted sampling, and int8 embedding
-    * quantization with a recall audit — the retrieval-side operators a
+  /* Search (SURVEY §2.13 extensions): full-text relevance scoring
+    * (BM25), inverted-index construction, corpus information-theory
+    * stats (entropy, Zipf), and DSIR-style importance weighting for
+    * domain-targeted sampling — the retrieval-side operators a
     * training-data warehouse serves (reference delegates all query
     * capability to HiveQL, `backend/hive_manager.py:24-29`; these extend
     * that surface the same way the L-series does).
@@ -344,7 +341,7 @@ object Retrieval {
     * token hashes `th`/`qth`: each query's top 100 by rounded Jaccard,
     * `(query_id, doc_id, r_lex)`.
     */
-  private[queries] def lexRanks(pairs: DataFrame): DataFrame =
+  private def lexRanks(pairs: DataFrame): DataFrame =
     pairs
       .withColumn("c", expr("sorted_intersect_count(th, qth)"))
       .withColumn("jac",
@@ -357,7 +354,7 @@ object Retrieval {
   /** q232's vector list over pairs carrying (embedding, nrm) and
     * (qe, qn): each query's top 100 by rounded cosine, `r_vec`.
     */
-  private[queries] def vecRanks(pairs: DataFrame): DataFrame =
+  private def vecRanks(pairs: DataFrame): DataFrame =
     pairs
       .withColumn("cos",
         round(V.dot("embedding", "qe") / (col("nrm") * col("qn")), 6))
@@ -369,7 +366,7 @@ object Retrieval {
   /** Reciprocal-rank fusion of the two lists, Σ 1/(60 + rank): each
     * query's top 5 by `rrf`, with its `rank`.
     */
-  private[queries] def rrfTop5(lex: DataFrame, vec: DataFrame): DataFrame =
+  private def rrfTop5(lex: DataFrame, vec: DataFrame): DataFrame =
     lex.join(vec, Seq("query_id", "doc_id"), "full_outer")
       .withColumn("rrf", round(
         coalesce(lit(1.0) / (lit(60) + col("r_lex")), lit(0.0)) +
@@ -381,7 +378,7 @@ object Retrieval {
   /** DuckDB twins of [[lexRanks]] and [[vecRanks]] over CTE `pairs`:
     * CTEs `lex` and `vec`.
     */
-  private[queries] def ranksSql(lex: String, vec: String): String =
+  private def ranksSql(lex: String, vec: String): String =
     s"""$lex AS (
        |  SELECT query_id, doc_id, CAST(r AS INTEGER) AS r_lex FROM (
        |    SELECT query_id, doc_id, row_number() OVER (
@@ -401,7 +398,7 @@ object Retrieval {
   /** DuckDB twin of [[rrfTop5]] before the cut: every fused row of
     * `lex` ⟗ `vec` with its `rrf` and `rank`.
     */
-  private[queries] def rrfSql(lex: String, vec: String): String =
+  private def rrfSql(lex: String, vec: String): String =
     s"""SELECT query_id, doc_id, r_lex, r_vec,
        |    round(coalesce(1.0 / (60 + r_lex), 0) +
        |          coalesce(1.0 / (60 + r_vec), 0), 6) AS rrf,
@@ -457,10 +454,6 @@ object Retrieval {
       |WHERE rank <= 5
       |ORDER BY query_id, rank""".stripMargin))
 
-  /* Round-7 retrieval wave: index-backed hybrid fusion (VERDICT r6
-    * #4) — the production-path counterpart of q232's brute-force RRF.
-    */
-
   /** Index-backed RRF hybrid retrieval with an in-result recall
     * audit. q232 proves the fusion math on brute-force top-100
     * lists; THIS is the operator a 100 TB retrieval actually runs:
@@ -504,7 +497,7 @@ object Retrieval {
         .join(Tables.emb(s, dir), col("doc_id") === col("vec_id"))
         .select(col("doc_id"), P.md5Sorted(P.tokenSet(col("text"))).as("th"),
           col("embedding"), V.norm("embedding").as("nrm"),
-          VectorOps.hyperplaneBucket("embedding").as("bucket")))
+          Vectors.hyperplaneBucket("embedding").as("bucket")))
       val qs = d.filter(col("doc_id") < 5).select(
         col("doc_id").as("query_id"), col("th").as("qth"),
         col("embedding").as("qe"), col("nrm").as("qn"),
@@ -517,7 +510,7 @@ object Retrieval {
         explode(array(
           (col("qb") +: (0 to 7).map(b =>
             col("qb").bitwiseXOR(lit(1L << b)))): _*)).as("pb"))
-      val vec = CorpusOps4.vecRanks(corpus.join(broadcast(probes),
+      val vec = vecRanks(corpus.join(broadcast(probes),
           col("bucket") === col("pb")))
       // lexical candidates off the rare-shingle posting lists
       val sh = Tables.docs(s, dir).filter(length(col("text")) >= 8)
@@ -530,14 +523,14 @@ object Retrieval {
         .join(anchored.filter(col("doc_id") < 5)
           .select(col("doc_id").as("query_id"), col("h")), "h")
         .select(col("query_id"), col("doc_id")).distinct()
-      val lex = CorpusOps4.lexRanks(lexCand
+      val lex = lexRanks(lexCand
         .join(corpus.select(col("doc_id"), col("th")), "doc_id")
         .join(broadcast(qs.select(col("query_id"), col("qth"))), "query_id"))
-      val fused = CorpusOps4.rrfTop5(lex, vec)
+      val fused = rrfTop5(lex, vec)
       // brute-force audit: q232's corpus-wide lists, fused, cut to 5
       val pairs = corpus.crossJoin(broadcast(qs))
-      val bruteTop = CorpusOps4.rrfTop5(CorpusOps4.lexRanks(pairs),
-        CorpusOps4.vecRanks(pairs)).select("query_id", "doc_id")
+      val bruteTop = rrfTop5(lexRanks(pairs),
+        vecRanks(pairs)).select("query_id", "doc_id")
       val recall = fused.select("query_id", "doc_id")
         .join(bruteTop, Seq("query_id", "doc_id"), "left_semi")
         .groupBy("query_id")
@@ -553,7 +546,7 @@ object Retrieval {
       |  SELECT doc_id, list_sort(list_transform(${P.tokenSetSql("text")},
       |    t -> ${P.md5LongSql("t")})) AS th,
       |    embedding, ${V.normSql("embedding")} AS nrm,
-      |    ${VectorOps.hyperplaneBucketSql("embedding")} AS bucket
+      |    ${Vectors.hyperplaneBucketSql("embedding")} AS bucket
       |  FROM documents JOIN embeddings ON doc_id = vec_id),
       |qs AS (SELECT doc_id AS query_id, th AS qth, embedding AS qe,
       |       nrm AS qn, bucket AS qb FROM d WHERE doc_id < 5),
@@ -593,14 +586,14 @@ object Retrieval {
       |    JOIN qs q ON lc.query_id = q.query_id) WHERE r <= 100),
       |fused AS (
       |  SELECT query_id, doc_id, r_lex, r_vec, rrf, CAST(rank AS INTEGER) AS rank
-      |  FROM (${CorpusOps4.rrfSql("lex", "vec")})
+      |  FROM (${rrfSql("lex", "vec")})
       |  WHERE rank <= 5),
       |pairs AS MATERIALIZED (
       |  SELECT c.doc_id, c.th, c.embedding, c.nrm, q.*
       |  FROM corpus c CROSS JOIN qs q),
-      |${CorpusOps4.ranksSql("lexb", "vecb")},
+      |${ranksSql("lexb", "vecb")},
       |fusedb AS (
-      |  SELECT query_id, doc_id FROM (${CorpusOps4.rrfSql("lexb", "vecb")})
+      |  SELECT query_id, doc_id FROM (${rrfSql("lexb", "vecb")})
       |  WHERE rank <= 5),
       |rec AS (
       |  SELECT f.query_id, CAST(count(b.doc_id) AS DOUBLE) / 5.0 AS recall5
@@ -898,7 +891,7 @@ object Retrieval {
       |ORDER BY a.query_id, a.rank""".stripMargin
     })
 
-  /* Round-10 retrieval-evaluation wave: the metric a retrieval stack
+  /* Retrieval evaluation: the metric a retrieval stack
     * is actually graded by. The engine already ships the indexes
     * (IVF/LSH/PQ/NN-descent) with recall@k audits riding in their
     * outputs; nDCG adds the GRADED-relevance ranking metric those
@@ -1010,7 +1003,7 @@ object Retrieval {
       |FROM dcg JOIN idcg USING (query_id)
       |ORDER BY query_id""".stripMargin))
 
-  /* Round-12 retrieval wave: SEMANTIC cross-split contamination — the
+  /* SEMANTIC cross-split contamination — the
     * embedding-space counterpart of q238's fingerprint-based
     * train/eval check. Fingerprint contamination catches verbatim
     * leakage; an eval example that was paraphrased or lightly
@@ -1019,9 +1012,8 @@ object Retrieval {
     * exactly what eval decontamination pipelines screen for before a
     * benchmark run.
     *
-    * Round 13 upgraded the screen to eval-side MULTI-PROBE and added
-    * q292, the measured-recall audit the r12 verdict asked for. What
-    * the measurement showed (brute-force sweep over the fixtures):
+    * The screen probes several eval-side cells, and q292 measures its
+    * recall. What the measurement showed (brute-force sweep over the fixtures):
     * every true sub-1.15 pair sits at d² in [0.94, 1.15] — the
     * threshold marks the 5th-percentile NATURAL neighborhood, with no
     * clone-level pairs across the split — and probe-count recall
@@ -1044,10 +1036,10 @@ object Retrieval {
     * natural nearest-neighbor neighborhood. Shared by q287 (the
     * screen) and q292 (its measured-recall audit).
     */
-  private[queries] val ContaminationD2i = 1150000L
+  private val ContaminationD2i = 1150000L
 
   /** Eval probes per q287/q292: top-2 nearest quantizer cells. */
-  private[queries] val EvalProbes = 2
+  private val EvalProbes = 2
 
   /** One multi-probe quantizer pass over the FULL embedding set
     * (seeds must come from the shared corpus, never one split):
@@ -1057,7 +1049,7 @@ object Retrieval {
     * for the eval side's second probe. Checkpointed: read as both
     * split sides by both queries.
     */
-  private[queries] def probed(s: org.apache.spark.sql.SparkSession,
+  private def probed(s: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame =
     Pins.pin(graft.pipeline.SemDeDup.cellProbes(Tables.emb(s, dir), EvalProbes))
 

@@ -1,10 +1,7 @@
 package graft.queries
 
 import graft.{Q, Tables}
-import graft.functions.{Dist, GeoMean, Portable}
-import graft.functions.{Portable => P}
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import graft.functions.{GeoMean, Portable}
 import org.apache.spark.sql.functions._
 
 /** Scalar functions (SURVEY.md §2.8) and the UDF surface (§2.10):
@@ -356,11 +353,6 @@ object Scalars {
       |FROM events
       |ORDER BY event_id""".stripMargin))
 
-  /* Surface-completion queries: typed stateful sessionization, map
-    * functions, registered UDF + typed Aggregator UDAF, approximate
-    * aggregates, and LIMIT/OFFSET pagination.
-    */
-
   /** Map type + map functions (str_to_map, map_keys, map_values,
     * element access), rendered to deterministic strings so the oracle
     * can mirror them without a MAP type.
@@ -450,11 +442,6 @@ object Scalars {
       |        ${graft.functions.Portable.tokensSql("text")} AS toks
       |      FROM documents)
       |ORDER BY doc_id""".stripMargin))
-
-  /* Round-3 scalar/integrity tail: edit-distance fuzzy matching,
-    * bitwise aggregates, and whole-table checksums — the remaining
-    * named-function families both engines share.
-    */
 
   /** Levenshtein nearest-neighbour: for the first 20 documents, the
     * closest other document by edit distance over the 60-char prefix

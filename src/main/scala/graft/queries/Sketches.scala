@@ -1,13 +1,10 @@
 package graft.queries
 
 import graft.{Pins, Q, Tables}
-import graft.functions.{Dist, Portable, VectorFunctions => V}
+import graft.functions.Portable
 import graft.functions.{Portable => P}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.queries.{Analytics => Analytics2}
-import graft.queries.{Sketches => WarehouseOps}
 
 /** Sketches doing the jobs they exist for: count-min heavy hitters
   * and join-size estimates, a hybrid skew join on the heaviest keys,
@@ -63,7 +60,7 @@ object Sketches {
   /** Count-min counters of `(seed, k)` rows: the portable md5 cell of
     * "cms:<seed>:<k>" in 1024 cells, counted per (seed, cell) as `out`.
     */
-  private[queries] def cmsCounts(seeded: DataFrame, out: String): DataFrame =
+  private def cmsCounts(seeded: DataFrame, out: String): DataFrame =
     seeded
       .select(col("seed"),
         pmod(P.md5Long(concat_ws(":", lit("cms"), col("seed").cast("string"),
@@ -73,13 +70,13 @@ object Sketches {
   /** The join-size estimate of two sketches: the minimum over seeds of
     * the counters' inner product, one row `est`.
     */
-  private[queries] def cmsJoinSize(ca: DataFrame, cb: DataFrame, est: String): DataFrame =
+  private def cmsJoinSize(ca: DataFrame, cb: DataFrame, est: String): DataFrame =
     ca.join(cb, Seq("seed", "cell"))
       .groupBy("seed").agg(sum(col("ca") * col("cb")).as("est_d"))
       .agg(min("est_d").as(est))
 
   /** DuckDB twin of [[cmsCounts]] over query `src`'s column `key`. */
-  private[queries] def cmsCountsSql(src: String, key: String, out: String): String =
+  private def cmsCountsSql(src: String, key: String, out: String): String =
     s"""SELECT seed,
        |  ${P.md5LongSql(s"concat('cms:', seed, ':', $key)")} % 1024 AS cell,
        |  count(*) AS $out
@@ -219,7 +216,7 @@ object Sketches {
       |GROUP BY 1, 2
       |ORDER BY c_mktsegment, route""".stripMargin))
 
-  /* Round-7 sixth wave: sketches doing the jobs they exist for at
+  /* Sketches doing the jobs they exist for at
     * 100 TB — driving the optimizer (join-order selection from
     * count-min sketches), answering windowed distincts from mergeable
     * daily HLL sketches without rescanning events, and estimating
@@ -270,10 +267,10 @@ object Sketches {
         .filter(col("o_orderpriority") < "4")
         .select(col("o_orderkey").as("dk"))
       def sketch(df: DataFrame, key: String, out: String): DataFrame =
-        WarehouseOps.cmsCounts(df.select(explode(sequence(lit(0), lit(3))).as("seed"),
+        cmsCounts(df.select(explode(sequence(lit(0), lit(3))).as("seed"),
           col(key).cast("long").as("k")), out)
       def est(dim: DataFrame, name: String): DataFrame =
-        WarehouseOps.cmsJoinSize(sketch(li, name, "ca"), sketch(dim, "dk", "cb"), s"est_$name")
+        cmsJoinSize(sketch(li, name, "ca"), sketch(dim, "dk", "cb"), s"est_$name")
       // ONE pass over the fact computes every exact intermediate size
       val flags = li
         .join(pKeys.withColumn("fp", lit(1L)), col("pk") === pKeys("dk"), "left")
@@ -324,8 +321,8 @@ object Sketches {
       def estSql(dimSrc: String, liKey: String): String =
         s"""SELECT CAST(min(e) AS BIGINT) FROM (
            |  SELECT sa.seed, sum(sa.ca * sb.cb) AS e
-           |  FROM (${WarehouseOps.cmsCountsSql("SELECT * FROM lineitem", liKey, "ca")}) sa
-           |  JOIN (${WarehouseOps.cmsCountsSql(dimSrc, "dk", "cb")}) sb
+           |  FROM (${cmsCountsSql("SELECT * FROM lineitem", liKey, "ca")}) sa
+           |  JOIN (${cmsCountsSql(dimSrc, "dk", "cb")}) sb
            |    ON sa.seed = sb.seed AND sa.cell = sb.cell
            |  GROUP BY 1)""".stripMargin
       s"""WITH stats AS (
@@ -412,7 +409,7 @@ object Sketches {
             greatest(round(col("exact_wau") * 0.05), lit(3.0))).as("est_ok"))
         .orderBy("day")
     },
-    Some(s"""WITH ${Analytics2.weekCoverSql}
+    Some(s"""WITH ${Analytics.weekCoverSql}
       |SELECT d AS day, count(DISTINCT user_id) AS exact_wau, TRUE AS est_ok
       |FROM cov WHERE d IN (SELECT day FROM act)
       |GROUP BY d ORDER BY day""".stripMargin))

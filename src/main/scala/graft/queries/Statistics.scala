@@ -1,9 +1,9 @@
 package graft.queries
 
 import graft.{Pins, Q, Tables}
-import graft.functions.{Dist, Portable, VectorFunctions => V}
+import graft.functions.{Dist, Portable}
 import graft.functions.{Portable => P}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -401,18 +401,16 @@ object Statistics {
       |FROM sc CROSS JOIN generate_series(1, $dim) g(i)
       |ORDER BY dim""".stripMargin))
 
-  /* Corpus-curation operators, fifth batch: distribution-free
-    * uncertainty (Poisson bootstrap), robust statistics (winsorized /
-    * trimmed means), diverse core-set selection (greedy k-center), and
-    * a dedup-method agreement report.
+  /* Distribution-free uncertainty (Poisson bootstrap), robust
+    * statistics (winsorized / trimmed means), and a dedup-method
+    * agreement report.
     *
     * Scale design notes: the bootstrap replicates are a CONSTANT 32×
     * row expansion folded into one aggregation (no resampling shuffle,
     * no driver randomness — weights are the portable md5 hash, so the
-    * "resample" is reproducible on any cluster). k-center does k−1
-    * bounded single-row collects (the Dist/k-means pattern); the
-    * method-overlap report reuses the bucket-local LSH/SimHash pair
-    * machinery, so its cost is the q41+q42 cost, never a cross join.
+    * "resample" is reproducible on any cluster). The method-overlap
+    * report reuses the bucket-local LSH/SimHash pair machinery, so its
+    * cost is the q41+q42 cost, never a cross join.
     */
 
   /** Poisson(1) CDF steps, hard-coded so both engines branch on
@@ -673,9 +671,8 @@ object Statistics {
       |GROUP BY 1, 2, 3
       |ORDER BY exact_dup, minhash_dup, simhash_dup""".stripMargin))
 
-  /* Corpus-profiling operators, sixth batch: per-source keyword
-    * signatures (chi-square), cross-source duplication matrix, robust
-    * MAD-based length gating, and ANALYZE-style equi-depth column
+  /* Corpus profiling: per-source keyword signatures (chi-square),
+    * robust MAD-based length gating, and ANALYZE-style equi-depth column
     * statistics (the Hive `ANALYZE TABLE ... FOR COLUMNS` surface,
     * reference backend/hive_manager.py — re-expressed as a query over
     * bounded (value, freq) histograms instead of a metastore write).
@@ -987,30 +984,6 @@ object Statistics {
       |WHERE NOT is_cal
       |GROUP BY seg, n_cal, qhat
       |ORDER BY seg""".stripMargin))
-
-  /* Round-10 curation wave: the three governance/monitoring ops a
-    * training-data warehouse runs between builds —
-    *
-    *   - q272 l-diversity: the privacy audit one step past q224's
-    *     k-anonymity (group SIZE is not enough when every member shares
-    *     the sensitive value; the audit needs the sensitive column's
-    *     in-group diversity, both distinct-count and entropy forms).
-    *   - q273 PSI: the population-stability index between a release's
-    *     snapshot and its delta — the industry drift monitor next to
-    *     q131's KS statistic, binned so the number is attributable to
-    *     WHERE the distribution moved.
-    *   - q274 water-filling: the closed-form token-budget allocator —
-    *     given per-source availability and a total budget, the max-min
-    *     fair allocation min(availᵢ, t) with Σ = B. The standard
-    *     answer to "cap the big sources, fund the small ones fully"
-    *     that q122's fixed per-source cap approximates by hand.
-    *
-    * All three aggregate the fact table once and then do their math on
-    * frames bounded by GROUP cardinality (QI groups / 12 bins /
-    * #sources), so the post-aggregate windows are driver-class small at
-    * any corpus size. Exact integer counts feed every division; doubles
-    * appear only in final rounded columns.
-    */
 
   /** Freedman–Diaconis auto-binned price histogram: bin width
     * 2·IQR/n^(1/3) — the distribution-aware binning q94/q213's fixed

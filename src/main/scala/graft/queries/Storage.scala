@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.{Pins, Q, Tables}
-import graft.functions.{Dist, Portable, VectorFunctions => V}
+import graft.functions.{Dist, Portable}
 import graft.functions.{Portable => P}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -321,14 +321,10 @@ object Storage {
       |FROM lo JOIN hi USING (pr) JOIN ex USING (pr) JOIN tot USING (pr)
       |ORDER BY o_orderpriority""".stripMargin))
 
-  /* Round-7 third wave: warehouse-internals operators — the machinery
-    * a 100 TB deployment runs around its queries rather than inside
-    * them. Zone-map pruning quantifies what sort-clustered layout buys
-    * a scan before anyone rewrites files; count-min join-size sketches
-    * are the constant-size statistics a distributed optimizer trades
-    * instead of shuffling per-key histograms; and the hybrid hot/cold
-    * join is the skew mitigation that broadcasts ONLY the hot keys'
-    * dimension rows while the long tail keeps the plain shuffle join.
+  /* Warehouse internals — the machinery a 100 TB deployment runs
+    * around its queries rather than inside them. Zone-map pruning
+    * quantifies what sort-clustered layout buys a scan before anyone
+    * rewrites files.
     */
 
   /** Zone-map (data-skipping) pruning audit. Columnar warehouses
@@ -705,7 +701,7 @@ object Storage {
       |FROM g GROUP BY lang
       |ORDER BY lang""".stripMargin))
 
-  /* Scan-pruning indexes, part two. Zone maps (q242) prune predicates
+  /* Scan-pruning indexes beyond zone maps. Zone maps (q242) prune predicates
     * CORRELATED with the layout order — ranges over a sort key. They
     * are useless for point lookups on an uncorrelated column: when
     * shards are laid out by doc_id, every shard's (min, max) envelope
@@ -796,8 +792,8 @@ object Storage {
       |LEFT JOIN bk ON p.probe_id = bk.probe_id
       |ORDER BY p.probe_id""".stripMargin))
 
-  /* Round-10 storage/layout wave 5 — the two shard-management ops a
-    * 100 TB corpus store runs between releases:
+  /* Shard management — the two ops a 100 TB corpus store runs
+    * between releases:
     *
     *   - q280: the SEEDED GLOBAL SHUFFLE that training exports need
     *     (decorrelate document order from ingest order, reproducibly)

@@ -1,15 +1,12 @@
 package graft.queries
 
 import graft.{Pins, Q, Tables}
-import graft.functions.{Dist, Portable, VectorFunctions => V}
+import graft.functions.{Portable, VectorFunctions => V}
 import graft.functions.{Portable => P}
 import graft.graph.ConnectedComponents
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.queries.{TextDedup => CorpusOps4}
-import graft.queries.{TextDedup => TextOps}
-import graft.queries.{Vectors => VectorOps}
 
 /** Text dedup (SURVEY.md §2.13 L1/L2): exact, blocked-Jaccard,
   * MinHash-LSH, SimHash and containment near-dup detection, dedup
@@ -20,10 +17,9 @@ import graft.queries.{Vectors => VectorOps}
   */
 object TextDedup {
 
-  /* SURVEY.md §2.13 / BASELINE north-star: training-data pipeline text
-    * operators — exact + near dedup (token Jaccard, MinHash-LSH,
-    * SimHash), n-gram Jaccard, token statistics, heuristic language ID,
-    * quality scoring, shingle fingerprinting.
+  /* SURVEY.md §2.13 / BASELINE north-star: training-data text dedup —
+    * exact + near dedup (token Jaccard, MinHash-LSH, SimHash), n-gram
+    * Jaccard and shingle fingerprinting.
     *
     * Scale design: no operator ever materializes the O(n²) pair space.
     * Pair generation is always blocked — by (lang, source) for Jaccard,
@@ -575,19 +571,6 @@ object TextDedup {
       s"$mh\n$per\nORDER BY bands"
     })
 
-  /* Round-5 curation additions — evaluation and hygiene operators a
-    * training-data pipeline runs alongside the q182-q190 set: rank-based
-    * classifier AUC (q191), cross-document duplicated-span mass (q192,
-    * the exact-substring dedup report), a streaming first-writer-wins
-    * near-dup filter (q193), Johnson-Lindenstrauss random-projection
-    * search with a recall audit (q194), and per-dimension embedding
-    * health diagnostics (q195). Reference scope: the (N) pipeline
-    * surface of SURVEY.md §2.13 (the reference delegates analytics to
-    * its Hive binary, `/root/reference/backend/hive_manager.py:24-29`,
-    * and has no native counterparts; these are standard published
-    * constructions re-expressed Spark-first).
-    */
-
   /** Cross-document duplicated-span mass (the exact-substring dedup
     * report of Lee et al., "Deduplicating Training Data Makes
     * Language Models Better"): 40-char windows are fingerprinted and
@@ -794,12 +777,6 @@ object TextDedup {
       |      least(len(ta.toks), len(tb.toks)) >= 0.7
       |ORDER BY doc_a, doc_b""".stripMargin))
 
-  /* Round-7/8 curation wave: the consensus keeper (the dedup
-    * capstone, VERDICT r6 #6), its round-8 cross-modal extension
-    * (VERDICT r7 #7), and the demoted decimal-output canary
-    * (VERDICT r6 #8 / r7 #1).
-    */
-
   /** Oracle CTE chain for the four text-side verdict channels
     * (exact / minhash / semdedup / containment) — shared by q236
     * (text-only consensus) and q256 (cross-modal consensus).
@@ -859,11 +836,11 @@ object TextDedup {
     * q41/q181/q234 query functions, not re-implementations.
     */
   private def textDrops(s: SparkSession, dir: String): Seq[() => DataFrame] = Seq(
-        () => TextOps.q41.fn(s, dir)
+        () => q41.fn(s, dir)
           .select(col("doc_b").as("doc_id")).distinct(),
-        () => VectorOps.q181.fn(s, dir)
+        () => Vectors.q181.fn(s, dir)
           .select(col("dropped").as("doc_id")).distinct(),
-        () => CorpusOps4.q234.fn(s, dir)
+        () => q234.fn(s, dir)
           .select(col("doc_b").as("doc_id")).distinct())
 
   /** The consensus vote over `docs(doc_id, text)`: one 0/1 flag column
@@ -1048,20 +1025,11 @@ object TextDedup {
       |GROUP BY 1, 2, 3, 4, 5
       |ORDER BY exact, minhash, semdedup, containment, media""".stripMargin))
 
-  /* Round-12 second wave — two warehouse-operations reads the earlier
-    * waves stop short of:
-    *
-    *   - q289 survivorship: near-dup CLUSTERING (q100) answers "which
-    *     docs are copies"; the MDM question a warehouse then faces is
-    *     "which copy do we KEEP, and what provenance does the merged
-    *     record carry" — deterministic survivorship rules + lineage
-    *     aggregation per cluster.
-    *   - q290 reshard audit: adding one shard to a corpus layout moves
-    *     data; HOW MUCH depends on the assignment function. The audit
-    *     measures both answers on the actual corpus — consistent-hash
-    *     ring (8 vnodes/shard) vs naive modulo — the number that
-    *     decides whether a 100 TB rebalance is a ~6% move or a ~94%
-    *     rewrite.
+  /* Survivorship: near-dup CLUSTERING (q100) answers "which docs are
+    * copies"; the MDM question a warehouse then faces is "which copy do
+    * we KEEP, and what provenance does the merged record carry" —
+    * deterministic survivorship rules + lineage aggregation per
+    * cluster.
     */
 
   /** Survivorship selection over the q100 near-dup clusters: per
@@ -1136,10 +1104,10 @@ object TextDedup {
       |WHERE n_docs >= 2
       |ORDER BY cluster""".stripMargin))
 
-  /* Round-13 wave: the WRITE side of exact-substring dedup. q192
-    * (CurationOps2) audits cross-document duplicated-span mass and
-    * labels each document keep/trim/drop — but nothing EXECUTES the
-    * trim (VERDICT r12 missing #3). q291 is the operator a corpus
+  /* The WRITE side of exact-substring dedup. q192 audits
+    * cross-document duplicated-span mass and labels each document
+    * keep/trim/drop — but nothing EXECUTES the trim. q291 is the
+    * operator a corpus
     * pipeline runs next: per document, the retained character ranges
     * after every cross-document duplicated span is excised — the
     * byte-range form of Lee et al.'s exact-substring dedup output,

@@ -3,11 +3,9 @@ package graft.queries
 import graft.{Pins, Q, Tables}
 import graft.functions.{Dist, Portable, VectorFunctions => V}
 import graft.functions.{Portable => P}
-import graft.graph.ConnectedComponents
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.queries.{Tokenizers => CorpusOps3}
 
 /** Tokenizers and vocabulary (SURVEY.md §2.13 L4): token statistics,
   * chunking and sequence packing, BPE pair mining, training and
@@ -399,12 +397,6 @@ object Tokenizers {
       |  CAST(min(CASE WHEN ccum * 1000 >= ltot * 990 THEN vrank END) AS BIGINT) AS v99
       |FROM w GROUP BY lang ORDER BY lang""".stripMargin))
 
-  /* Corpus operators, third batch: a real iterative BPE merge-rule
-    * trainer (q123 mines the FIRST merge candidates; this trains five
-    * successive rules where each round's pair statistics reflect all
-    * earlier merges — the actual Sennrich et al. training loop).
-    */
-
   /** Five BPE merge rounds over the corpus. Symbols live in a
     * space-separated string per token; each round is (1) one
     * map-side pair count over current symbols, (2) a 1-row top-pair
@@ -420,7 +412,7 @@ object Tokenizers {
   /** " d a t a " — sentinel spaces so a pair match is always
     * space-delimited on both sides.
     */
-  private[queries] def spaced(c: Column): Column =
+  private def spaced(c: Column): Column =
     concat(lit(" "), regexp_replace(c, "(.)", "$1 "))
 
   /** The Sennrich training loop shared by q216 (emit the merge
@@ -458,7 +450,7 @@ object Tokenizers {
     * mode has no encoded corpus to hand back; `None` makes that
     * contract explicit at compile time, ADVICE r6).
     */
-  private[queries] def bpeRounds(
+  private def bpeRounds(
       s: SparkSession, corpus0: DataFrame, rounds: Int,
       applyLast: Boolean): (DataFrame, Option[DataFrame]) = {
     def pairCounts(c: DataFrame): DataFrame = c
@@ -528,7 +520,7 @@ object Tokenizers {
     })
 
   /** BPE encode with the trained merge table: the q216 trainer's five
-    * rules (recomputed by the shared [[CorpusOps3.bpeRounds]] loop,
+    * rules (recomputed by the shared [[bpeRounds]] loop,
     * final rule APPLIED this time) encode the corpus, and the
     * per-language report gives symbols-per-char — the compression a
     * tokenizer buys, the train→apply loop closed. Exact integer
@@ -540,8 +532,8 @@ object Tokenizers {
       val corpus0 = Tables.docs(s, dir)
         .select(col("lang"), explode(P.tokens(col("text"))).as("tok"))
         .select(col("lang"), length(col("tok")).as("chars"),
-          CorpusOps3.spaced(col("tok")).as("sy"))
-      val (_, encodedOpt) = CorpusOps3.bpeRounds(s, corpus0, 5, applyLast = true)
+          spaced(col("tok")).as("sy"))
+      val (_, encodedOpt) = bpeRounds(s, corpus0, 5, applyLast = true)
       encodedOpt.get
         .select(col("lang"), col("chars"),
           size(P.tokens(col("sy"))).as("symbols"))

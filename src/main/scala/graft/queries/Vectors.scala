@@ -7,7 +7,6 @@ import graft.pipeline.SemDeDup
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.queries.{Vectors => VectorOps}
 
 /** Vector similarity search (SURVEY.md §2.13 L3): brute-force and
   * LSH top-k, label centroids, IVF search and its recall audits,
@@ -17,8 +16,8 @@ import graft.queries.{Vectors => VectorOps}
   */
 object Vectors {
 
-  /* SURVEY.md §2.13 L3/L5 — similarity search over `array<float>`
-    * embeddings and the multimodal join.
+  /* SURVEY.md §2.13 L3 — similarity search over `array<float>`
+    * embeddings.
     *
     * Scale design: the brute-force top-k broadcasts the (tiny) query
     * set against the big side — no shuffle of the candidate table; the
@@ -31,7 +30,7 @@ object Vectors {
   /** Per-label centroid vectors as rounded arrays (shared by q50 and
     * q66; q49 keeps the long format as its output contract).
     */
-  private[queries] def centroidVectors(s: SparkSession, dir: String): DataFrame =
+  private def centroidVectors(s: SparkSession, dir: String): DataFrame =
     Tables.emb(s, dir)
       .select(col("label"), posexplode(col("embedding")))
       .toDF("label", "pos0", "v")
@@ -540,7 +539,7 @@ object Vectors {
       |FROM ranked WHERE rne <= 10
       |GROUP BY query_id ORDER BY query_id""".stripMargin))
 
-  /* Round-7 fourth wave: ANN index CONSTRUCTION and compression —
+  /* ANN index CONSTRUCTION and compression —
     * NN-descent graph refinement (the distributed step that builds
     * HNSW-class graph indexes) and 1-bit sign quantization with
     * hamming pre-ranking (the cheapest vector compression that still
@@ -1132,7 +1131,7 @@ object Vectors {
     Pins.pin(Tables.emb(s, dir)
       .join(Tables.docs(s, dir).select(col("doc_id"), col("lang")),
         col("doc_id") === col("vec_id"))
-      .crossJoin(broadcast(VectorOps.centroidVectors(s, dir)))
+      .crossJoin(broadcast(centroidVectors(s, dir)))
       .withColumn("d2", round(V.dist2("embedding", "cvec"), 6))
       .withColumn("crn", row_number().over(byDist))
       .filter(col("crn") <= 2)
@@ -1184,7 +1183,7 @@ object Vectors {
           when(col("xc").isNotNull, 1L).otherwise(0L).as("hits3"))
         .orderBy("query_id", "rn")
     },
-    Some(s"""WITH ${VectorOps.centroidsSql},
+    Some(s"""WITH ${centroidsSql},
       |ranked AS MATERIALIZED (
       |  SELECT vec_id, embedding, lang, cell, crn,
       |    sqrt(${V.dotSql("embedding", "embedding")}) AS nrm

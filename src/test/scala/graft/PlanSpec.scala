@@ -411,7 +411,7 @@ class PlanSpec extends SparkSpec {
 
   scaleTest("q216: each BPE round applies its merge as a broadcast, never a shuffle join") {
     // the returned frame is five pinned 1-row rules (checkpoint
-    // rotation — CorpusOps3.scala), so the plan to pin is the
+    // rotation — Tokenizers.scala), so the plan to pin is the
     // in-round building block: the 1-row merge rule must reach the
     // corpus-wide replace pass as a broadcast, never a shuffle
     import org.apache.spark.sql.functions._

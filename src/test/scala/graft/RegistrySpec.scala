@@ -1,11 +1,40 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
+
 class RegistrySpec extends SparkSpec {
 
   test("registry names are unique and oracle keys are a subset") {
     val names = Q.registry.map(_.name)
     assert(names.distinct.size == names.size)
     assert(SparkEntry.oracleSql.keySet.subsetOf(SparkEntry.queries.keySet))
+  }
+
+  test("every query module is listed in Q.registry once and every query it declares is registered") {
+    // a query lost in a move between modules would otherwise vanish
+    // from Verify, Bench and the oracle gate without failing anything
+    val sources = Files.list(Paths.get("src/main/scala/graft/queries")).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).map(Files.readString(_)).toVector
+    val modules = sources.flatMap("""(?m)^object (\w+)""".r.findAllMatchIn(_).map(_.group(1)))
+    assert(modules.nonEmpty)
+    val registrySrc = Files.readString(Paths.get("src/main/scala/graft/Q.scala"))
+    val listings = modules.map(m => m -> s"""\\bqueries\\.$m\\.all\\b""".r.findAllIn(registrySrc).size)
+    assert(listings.forall(_._2 == 1),
+      s"modules not listed exactly once in Q.registry: ${listings.filter(_._2 != 1)}")
+    // the Q-typed vals of each module object, private ones included
+    val declared = modules.flatMap { m =>
+      val cls = Class.forName(s"graft.queries.$m$$")
+      val module = cls.getField("MODULE$").get(null)
+      cls.getDeclaredMethods.toVector
+        .filter(f => f.getParameterCount == 0 && f.getReturnType == classOf[Q])
+        .map { f => f.setAccessible(true); f.invoke(module).asInstanceOf[Q].name }
+    }
+    val known = (Q.registry ++ Q.baselines).map(_.name)
+    assert(declared.filterNot(known.toSet).isEmpty,
+      s"queries in neither Q.registry nor Q.baselines: ${declared.filterNot(known.toSet)}")
+    assert(declared.sorted == known.sorted, "a registered query is declared twice or not at all")
   }
 
   test("the frozen headline-68 envelope set stays resolvable in the registry") {

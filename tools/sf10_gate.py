@@ -27,7 +27,7 @@ TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
 # risk classes instead of re-proving settled ones).
 #
 # r7 -> r8 diff: q237 dropped (demoted from the registry — decimal
-# outputs can never hash green at the driver; see CurationOps8.q237);
+# outputs can never hash green at the driver; see Aggregates.q237);
 # q248-q253 added (ADVICE r7 #3 — the round-7 fifth/sixth waves never
 # got a 100x check); q254-q256 and q257-q260 added (the round-8
 # waves). Everything in the r7 subset is retained, so this run also
@@ -87,7 +87,7 @@ DEFAULT_SUBSET = [
     "q234_containment_dedup",
     # round-7 additions (q237 demoted out of the registry in r8:
     # decimal outputs can never hash green at the driver — see
-    # CurationOps8.q237 scaladoc for the probe evidence)
+    # Aggregates.q237 scaladoc for the probe evidence)
     "q235_fused_retrieval_indexed", "q236_consensus_keeper",
     # round-7 second wave (cross-split LSH / Dist-ranked batching /
     # integer apportionment — each a fresh arithmetic class at 100x)
